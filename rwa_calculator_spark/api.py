@@ -98,18 +98,10 @@ class CreditRiskCalc:
         cache_dir: str | None = None,
         audit_cache_dir: str | None = None,
         audit_cache_max_runs: int = 20,
-        enforce_schemas: bool = False,
     ):
+        """`bundle` runs as given. Callers loading file-based vendor
+        extracts conform it first with `contracts.schemas.seal_bundle`."""
         self.spark = spark
-        if enforce_schemas:
-            # declared-dictionary sealing (contracts/schemas.py; ref
-            # engine/loader.py:77-105 — the reference DEFAULTS to enforcing
-            # and env-gates the off switch "because it silently changes
-            # RWA"; here programmatic bundles are the norm, so sealing is
-            # the opt-in for file-loaded vendor extracts)
-            from rwa_calculator_spark.contracts.schemas import seal_bundle
-
-            bundle = seal_bundle(bundle)
         self.bundle = bundle
         self.pack = pack
         self.cache_dir = cache_dir or os.path.join("/tmp", "rwa_results_cache", str(os.getpid()))
@@ -147,7 +139,6 @@ class CreditRiskCalc:
 
     def calculate(
         self,
-        persist_edges: bool = True,
         validation: str = "merged",
         reporting_entity: str | None = None,
         reporting_basis: str = "consolidated",
@@ -178,7 +169,6 @@ class CreditRiskCalc:
                 self.bundle,
                 PipelineConfig(
                     pack=self.pack,
-                    persist_edges=persist_edges,
                     validation=validation,
                     reporting_entity=reporting_entity,
                     reporting_basis=reporting_basis,

@@ -4,9 +4,10 @@ to the columns this engine consumes — and engine/loader.py:108-196: column
 NAME NORMALISATION (lowercase, trimmed, separators unified) plus ALIAS
 TRANSLATION, cast-to-declared-type, typed-default injection for absent
 optional columns, and required-column enforcement. The reference guards
-`enforce_schemas=False` behind an env var "because it silently changes RWA"
-— sealing is the contract that a migrating user's CSV/parquet extracts,
-whatever their vendor headers, land in the engine with one meaning).
+its schema-enforcement off switch behind an env var "because it silently
+changes RWA" — sealing is the contract that a migrating user's CSV/parquet
+extracts, whatever their vendor headers, land in the engine with one
+meaning).
 
 Sealing is OPT-IN at the bundle boundary: `seal_bundle(raw)` conforms every
 present frame and leaves the engine's column-gated plans untouched for

@@ -2,10 +2,10 @@
 RawDataBundle and friends — frozen dataclasses of frames; the pattern is
 engine-agnostic and ports verbatim to Spark DataFrames).
 
-Every frame is lazy; bundles carry no data, only plans. `persist_edges`
-in the pipeline reproduces the reference's stage-edge materialisation as
-localCheckpoint/persist (SURVEY §4: re-computation avoidance, lineage
-truncation under 960-deep when-chains).
+Every frame is lazy; bundles carry no data, only plans. The pipeline
+reproduces the reference's stage-edge materialisation by localCheckpointing
+the CRM edge before the calculators (SURVEY §4: re-computation avoidance,
+lineage truncation under 960-deep when-chains).
 """
 
 from __future__ import annotations

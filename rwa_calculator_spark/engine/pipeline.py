@@ -2,15 +2,16 @@
 fold a context through the fixed stage list, materialising each edge).
 
 Spark differences, deliberately (SURVEY §4):
-- no eager stage-edge collect — Spark has no plan-depth crash; instead
-  `persist_edges` optionally localCheckpoints the two reused edges
-  (classified exposures feed both calculators; results feed the floor's
-  scalar agg AND the uplift join), reproducing the reference's
-  re-computation-avoidance win (−31.5% runtime, docs/perf/baseline) without
-  serialising anything to the driver;
-- the SA/IRB branch split is two filters over one persisted parent — the
-  reference's collect_all([sa, irb, slotting]) becomes 'persist the parent,
-  let both branches read it'.
+- no eager stage-edge collect — Spark has no plan-depth crash. The one
+  reused edge, the post-CRM / RE-split exposures that feed every
+  calculator branch, always goes through a width-aware localCheckpoint
+  (``localcheckpoint_folded``). That reproduces the reference's
+  re-computation-avoidance win (−31.5% runtime, docs/perf/baseline)
+  without serialising anything to the driver, and is timed as its own
+  ``barrier`` stage;
+- the SA/IRB branch split is two filters over one checkpointed parent —
+  the reference's collect_all([sa, irb, slotting]) becomes 'checkpoint the
+  parent, let every branch read it'.
 """
 
 from __future__ import annotations
@@ -21,7 +22,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from rwa_calculator_spark.engine.bundles import AggregatedOutput, RawBundle
+from rwa_calculator_spark.engine.bundles import AggregatedOutput, CRMOutput, RawBundle
 from rwa_calculator_spark.engine.rulepack import CRR_PACK, RulePack
 from rwa_calculator_spark.engine.stages.aggregate import run_aggregate
 from rwa_calculator_spark.engine.stages.calculators import (
@@ -33,12 +34,12 @@ from rwa_calculator_spark.engine.stages.calculators import (
 from rwa_calculator_spark.engine.stages.classify import run_classify
 from rwa_calculator_spark.engine.stages.crm import run_crm
 from rwa_calculator_spark.engine.stages.hierarchy import convert_monetary, run_hierarchy
+from rwa_calculator_spark.operators import checkpoint
 
 
 @dataclass(frozen=True)
 class PipelineConfig:
     pack: RulePack = CRR_PACK
-    persist_edges: bool = False  # True on large runs: checkpoint reused edges
     # Multi-entity scope (ref engine/stages/scope/resolver.py): when set and
     # the bundle carries reporting_entities + book_entity_mappings, the
     # pipeline filters every exposure frame to the entity's membership set
@@ -55,11 +56,6 @@ class PipelineConfig:
     # collateral method): "comprehensive" = FCCM EAD reduction (default);
     # "simple" = Art.222 FCSM risk-weight substitution, no EAD reduction.
     collateral_method: str = "comprehensive"
-    # Dictionary-evaluate the IRB K kernel on distinct (PD, LGD, M) combos.
-    # Right when parameters are banded (rating master scales — the usual
-    # case); switch off for continuous parameters, where distinct ≈ rows
-    # and per-row evaluation is cheaper.
-    irb_dictionary: bool = True
     # PS1/26 Art.153(5A)/154(4A)/158(6A) post-model adjustment ELECTIONS
     # (ref contracts/config.py PostModelAdjustmentsConfig): additive
     # fractions of post-mortgage-floor RWEA (general PMA, unrecognised
@@ -271,20 +267,16 @@ def run_pipeline(raw: RawBundle, config: PipelineConfig | None = None) -> Aggreg
     crm = run_re_split(crm, raw, config.pack)
     _mark("re_split", _t)
 
-    exposures = crm.exposures
-    if config.persist_edges:
-        # width-aware barrier: constant contract carriers (lit-fills for
-        # absent CRM frames) don't transit the checkpoint — they re-attach
-        # as literals so Catalyst folds them into BOTH calculator branches
-        # (a book with no guarantees pays zero guarantee-pricing work)
-        from rwa_calculator_spark.operators.checkpoint import (
-            localcheckpoint_folded,
-        )
-
-        exposures = localcheckpoint_folded(exposures, eager=False)
-        from rwa_calculator_spark.engine.bundles import CRMOutput
-
-        crm = CRMOutput(exposures=exposures)
+    # width-aware barrier: constant contract carriers (lit-fills for absent
+    # CRM frames) don't transit the checkpoint — they re-attach as literals
+    # so Catalyst folds them into every calculator branch (a book with no
+    # guarantees pays zero guarantee-pricing work). Looked up through the
+    # module so a tracer that wraps the attribute sees the barrier.
+    _t = _time.perf_counter()
+    crm = CRMOutput(
+        exposures=checkpoint.localcheckpoint_folded(crm.exposures, eager=False)
+    )
+    _mark("barrier", _t)
 
     _t = _time.perf_counter()
     branches = [
@@ -297,7 +289,6 @@ def run_pipeline(raw: RawBundle, config: PipelineConfig | None = None) -> Aggreg
         run_irb(
             crm,
             config.pack,
-            dictionary=config.irb_dictionary,
             pma=(
                 config.pma_rwa_scalar,
                 config.pma_el_scalar,

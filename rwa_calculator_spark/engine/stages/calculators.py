@@ -45,10 +45,12 @@ from rwa_calculator_spark.operators.dictionary import dictionary_apply
 def _colset(df: DataFrame) -> frozenset:
     """ONE schema fetch for a stage's carrier-presence probes.
 
-    Each ``df.columns`` access is a py4j schema call (~10-15 ms on a
-    ~160-column frame: the full schema JSON crosses the gateway); the
-    calculator stages probe optional INPUT carriers ~50 times per branch,
-    so they snapshot once at entry. Only valid while the probed names are
+    The first ``df.columns`` access on each DataFrame object is a py4j
+    schema call (~10-15 ms on a ~160-column frame: the full schema JSON
+    crosses the gateway); pyspark caches it per object, but every
+    withColumns/select returns a new one. The calculator stages probe
+    optional INPUT carriers ~50 times per branch across such rewrites, so
+    they snapshot once at entry. Only valid while the probed names are
     input-level (the stage itself never adds or drops a probed name
     between snapshot and probe) — stage-internal columns (_dd_elig) are
     tracked with local flags instead."""
@@ -405,9 +407,8 @@ def _provenance_cols(exp: DataFrame, default_risk_type: str = "CREDIT") -> DataF
     built outside the hierarchy union (equity, CIU, settlement) pass their
     own default. `class_reason` defaults to the branch marker when the frame
     never went through run_classify."""
-    # one JVM schema fetch: each `df.columns` access is a py4j schema
-    # call (~3.5 ms on a wide frame); this helper makes ~115 membership
-    # checks, so probe a local set instead
+    # ~115 membership checks: probe a set, not the column list that
+    # `df.columns` rebuilds on every access
     cols = set(exp.columns)
     # ONE batched withColumns call: a per-column withColumn chain copies
     # and re-analyses the (wide) plan once per column — at 70+ fill
@@ -711,9 +712,10 @@ def _param_cols(
 def _crm_carry(exp: DataFrame) -> DataFrame:
     """Ensure the CRM component columns exist (zero when the branch input
     never went through run_crm, e.g. equity)."""
+    cols = _colset(exp)
     exp = exp.withColumns(
         {
-            c: (F.coalesce(c, F.lit(0.0)) if c in exp.columns else F.lit(0.0))
+            c: (F.coalesce(c, F.lit(0.0)) if c in cols else F.lit(0.0))
             for c in (
                 "provision_allocated",
                 "collateral_value",
@@ -2817,7 +2819,6 @@ def _apply_pma(df: DataFrame, pack: RulePack, pma, cols=None) -> DataFrame:
 def run_irb(
     crm: CRMOutput,
     pack: RulePack,
-    dictionary: bool = True,
     pma: tuple = (0.0, 0.0, 0.0),
     firb_fixed_maturity: bool = False,
     reporting_date: str | None = None,
@@ -3048,16 +3049,14 @@ def run_irb(
     # flag) — sales is continuous, so a dictionary keyed on R would grow
     # toward row-count and its broadcast-back would melt at scale. Split
     # the kernel instead: Φ⁻¹(PD) — the widest expression — still
-    # dictionary-evaluates on the banded PD master scale alone; Φ (K) and
-    # the maturity adjustment run per-row inside whole-stage codegen.
-    if dictionary:
-        perf = dictionary_apply(
-            perf,
-            ["pd_floored"],
-            lambda d: with_normal_ppf(d, "pd_floored", "g_pd"),
-        )
-    else:
-        perf = with_normal_ppf(perf, "pd_floored", "g_pd")
+    # dictionary-evaluates on the banded PD master scale alone (PDs come
+    # off rating grades, so distinct PDs ≪ rows); Φ (K) and the maturity
+    # adjustment run per-row inside whole-stage codegen.
+    perf = dictionary_apply(
+        perf,
+        ["pd_floored"],
+        lambda d: with_normal_ppf(d, "pd_floored", "g_pd"),
+    )
     perf = with_irb_k_r(perf, "pd_floored", "lgd_floored", "g_pd", "_irb_r_in", "k")
     # IRB parameter decomposition carriers (ref CALCULATION_OUTPUT_SCHEMA
     # :3030-3041): the routed correlation and the Art.153(1) maturity

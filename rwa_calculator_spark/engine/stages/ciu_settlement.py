@@ -50,13 +50,17 @@ def _ledger(df: DataFrame, risk_type: str = "CREDIT") -> DataFrame:
         _provenance_cols,
     )
 
-    for c, v in _ZERO_LEDGER.items():
-        df = df.withColumn(c, F.lit(v))
-    df = _provenance_cols(df.withColumn("rwa_sa_equivalent", F.col("rwa")), risk_type)
-    for c in _RESULT_COLS:
-        if c not in df.columns:
-            df = df.withColumn(c, F.lit(None).cast("double"))
-    return df.select(*_RESULT_COLS)
+    fills = {c: F.lit(v) for c, v in _ZERO_LEDGER.items()}
+    fills["rwa_sa_equivalent"] = F.col("rwa")
+    df = _provenance_cols(df.withColumns(fills), risk_type)
+    # one schema fetch; every ledger column still absent is a null double
+    cols = set(df.columns)
+    return df.select(
+        *(
+            c if c in cols else F.lit(None).cast("double").alias(c)
+            for c in _RESULT_COLS
+        )
+    )
 
 
 def run_ciu(ciu_holdings: DataFrame, pack: RulePack) -> CalcOutput:

@@ -25,13 +25,11 @@ def dictionary_apply(
     df: DataFrame,
     keys: Sequence[str],
     transform: Callable[[DataFrame], DataFrame],
-    broadcast: bool = True,
 ) -> DataFrame:
     """Apply `transform` (adds derived columns) to the distinct key combos,
-    then join the derived columns back onto `df`.
+    then broadcast-join the derived columns back onto `df`.
 
     Join keys may be doubles: both sides carry the *same* computed values,
     so equality is exact. Keys must be non-null (guard upstream)."""
     dims = transform(df.select(*keys).distinct())
-    dims = F.broadcast(dims) if broadcast else dims
-    return df.join(dims, on=list(keys), how="left")
+    return df.join(F.broadcast(dims), on=list(keys), how="left")

@@ -520,7 +520,7 @@ def corep_c08_06(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("slot_category"),
     )
     bundle = dc_replace(bundle, specialised_lending=sl)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     r = out.results.where(F.col("approach") == "SLOTTING")
     band = F.when(
         F.coalesce(F.col("maturity_used") < 2.5, F.lit(False)), "short"
@@ -689,7 +689,7 @@ def pillar3_cr10_1(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("slot_category"),
     )
     bundle = dc_replace(bundle, specialised_lending=sl)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     r = out.results.where(F.col("approach") == "SLOTTING")
     band = F.when(
         F.coalesce(F.col("maturity_used") < 2.5, F.lit(False)), "short"
@@ -985,7 +985,7 @@ def corep_c02(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     release_cached_blocks(spark)
     bundle = _star_bundle(spark, sf_dir, irb=True)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     values = c02_row_values(out.results)
     rows = [
         (ref, name, float(values.get(ref, 0.0))) for ref, name in _C02_ROWS

@@ -786,7 +786,7 @@ def sa_covered_bond_rw(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     return out.results.groupBy("rw_source", "risk_weight").agg(
         F.count("*").alias("n_exposures"),
@@ -901,7 +901,7 @@ def sa_rgla_treatment(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     return out.results.groupBy("exposure_class", "risk_weight").agg(
         F.count("*").alias("n_exposures"),
@@ -983,7 +983,7 @@ def sa_sovereign_derived_unrated(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     return out.results.groupBy("rw_source", "risk_weight").agg(
         F.count("*").alias("n_exposures"),
@@ -1380,7 +1380,7 @@ def sa_b31_rw_adjustments(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=B31_PACK, persist_edges=True),
+        PipelineConfig(pack=B31_PACK),
     )
     return out.results.groupBy("rw_source", "risk_weight").agg(
         F.count("*").alias("n_exposures"),
@@ -1596,7 +1596,7 @@ def ccf_firb_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, contingents=conts),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     return out.results.groupBy("approach", "ccf").agg(
         F.count("*").alias("n_exposures"),
@@ -1777,7 +1777,7 @@ def sa_b31_re_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=B31_PACK, persist_edges=True),
+        PipelineConfig(pack=B31_PACK),
     )
     return out.results.groupBy("rw_source").agg(
         F.count("*").alias("n_exposures"),
@@ -1904,7 +1904,7 @@ def sa_b31_sl_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, specialised_lending=sl),
-        PipelineConfig(pack=B31_PACK, persist_edges=True),
+        PipelineConfig(pack=B31_PACK),
     )
     return out.results.groupBy("rw_source").agg(
         F.count("*").alias("n_exposures"),
@@ -2088,7 +2088,7 @@ def sa_b31_re_art124l(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=B31_PACK, persist_edges=True),
+        PipelineConfig(pack=B31_PACK),
     )
     return out.results.groupBy("rw_source").agg(
         F.count("*").alias("n_exposures"),
@@ -2260,7 +2260,7 @@ def crm_collateral_type_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
         RawBundle(
             counterparties=cps, loans=loans, collateral=coll, collateral_links=links
         ),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     return out.results.groupBy("exposure_class").agg(
         F.count("*").alias("n_rows"),
@@ -2412,7 +2412,7 @@ def crm_guarantee_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, guarantees=gtees),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     def fsum(col):
         # floor(x*100 + 0.5) half-up fixed point — both engines agree on
@@ -2549,7 +2549,7 @@ def crm_provision_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     provisions = direct.unionByName(cp_pots)
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, provisions=provisions),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
 
     def fsum(col):
@@ -2680,7 +2680,6 @@ def irb_pma_adjustments(spark: SparkSession, sf_dir: str) -> DataFrame:
         RawBundle(counterparties=cps, loans=loans),
         PipelineConfig(
             pack=B31_PACK,
-            persist_edges=True,
             pma_rwa_scalar=0.05,
             pma_el_scalar=0.10,
             pma_unrecognised_scalar=0.02,
@@ -3002,7 +3001,7 @@ def crm_provenance_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
             guarantees=gtees,
             facility_mappings=fmap,
         ),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
 
     def fsum(col):
@@ -3140,7 +3139,7 @@ def equity_net_short(spark: SparkSession, sf_dir: str) -> DataFrame:
             loans=loans,
             equity_exposures=longs.unionByName(shorts),
         ),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
 
     def fsum(col):
@@ -3272,7 +3271,7 @@ def equity_transitional(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, equity_exposures=equity),
         PipelineConfig(
-            pack=B31_PACK, persist_edges=True, reporting_date="2028-06-30"
+            pack=B31_PACK, reporting_date="2028-06-30"
         ),
     )
 
@@ -3381,7 +3380,7 @@ def sa_supporting_factor_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
 
     def fsum(col, scale=100.0):
@@ -3542,7 +3541,7 @@ def onbal_netting_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
 
     def fsum(col):
@@ -3719,7 +3718,7 @@ def crm_multi_guarantee(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, guarantees=gtees),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
 
     def fsum(col, scale=100.0):
@@ -3978,7 +3977,7 @@ def irb_multi_guarantee(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, guarantees=gtees),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     keys = o.select(
         F.concat(F.lit("L"), F.col("o_orderkey")).alias("exposure_reference"),
@@ -4146,7 +4145,7 @@ def irb_floor_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=B31_PACK, persist_edges=True),
+        PipelineConfig(pack=B31_PACK),
     )
     _km = (F.col("o_custkey") % 4).cast("int")
     keys = o.select(
@@ -4318,7 +4317,7 @@ def irb_class_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     _k7 = (F.col("o_custkey") % 7).cast("int")
     keys = o.select(
@@ -4462,7 +4461,7 @@ def irb_purchased_receivables(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     keys = o.select(
         F.concat(F.lit("L"), F.col("o_orderkey")).alias("exposure_reference"),
@@ -4680,7 +4679,7 @@ def slotting_infra_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, specialised_lending=sl),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     r = out.results.where(F.col("approach") == "SLOTTING")
     return r.groupBy(
@@ -4809,7 +4808,7 @@ def crm_domestic_guarantor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, guarantees=gtees),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     return out.results.groupBy(
         "rw_source", F.round("risk_weight", 8).alias("rw")
@@ -4900,7 +4899,7 @@ def sa_qccp_trade_exposures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     return out.results.groupBy(
         "rw_source", F.col("sa_cqs").alias("cqs"), F.col("risk_weight").alias("rw")
@@ -5016,7 +5015,7 @@ def sa_b31_ccf_overrides(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, contingents=cont),
-        PipelineConfig(pack=B31_PACK, persist_edges=True),
+        PipelineConfig(pack=B31_PACK),
     )
     return out.results.groupBy("ccf_source", F.col("ccf")).agg(
         F.count("*").alias("n_exposures"),
@@ -5143,7 +5142,7 @@ def irb_maturity_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, guarantees=gtees),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     keys = o.select(
         F.concat(F.lit("L"), F.col("o_orderkey")).alias("exposure_reference"),
@@ -5237,7 +5236,7 @@ def irb_portfolio_lgd_floor_check(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     bucket = F.when(
         F.coalesce("is_commercial_re", F.lit(False)), "commercial"
@@ -5457,7 +5456,7 @@ def crm_guarantee_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             facility_mappings=fmap,
             guarantees=fac_g.unionByName(cp_g).unionByName(d_g),
         ),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     from rwa_calculator_spark.functions.exact import scaled_sum
 
@@ -5633,7 +5632,6 @@ def sa_b31_rw_branches(spark: SparkSession, sf_dir: str) -> DataFrame:
         RawBundle(counterparties=cps, loans=loans),
         PipelineConfig(
             pack=B31_PACK,
-            persist_edges=True,
             use_investment_grade_assessment=True,
         ),
     )
@@ -5727,7 +5725,7 @@ def sa_defaulted_provisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans, provisions=provisions),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     return out.results.groupBy("rw_source").agg(
         F.count("*").alias("n_exposures"),
@@ -5878,7 +5876,7 @@ def sa_sovereign_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
-        PipelineConfig(pack=B31_PACK, persist_edges=True),
+        PipelineConfig(pack=B31_PACK),
     )
     return out.results.groupBy("exposure_class", "rw_source").agg(
         F.count("*").alias("n_exposures"),
@@ -5972,7 +5970,7 @@ def sa_retail_granularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = run_pipeline(
         RawBundle(counterparties=cps, loans=loans),
         PipelineConfig(
-            pack=B31_PACK, persist_edges=True, enforce_retail_granularity=True
+            pack=B31_PACK, enforce_retail_granularity=True
         ),
     )
     return out.results.groupBy("exposure_class", "class_reason").agg(

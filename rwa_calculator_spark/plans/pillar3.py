@@ -43,7 +43,7 @@ _CCR_RISK_TYPES = ("CCR_DERIVATIVE", "CCR_SFT", "CCR_DEFAULT_FUND")
 def _irb_run(spark: SparkSession, sf_dir: str, pack=CRR_PACK):
     release_cached_blocks(spark)
     bundle = _star_bundle(spark, sf_dir, irb=True)
-    return run_pipeline(bundle, PipelineConfig(pack=pack, persist_edges=True))
+    return run_pipeline(bundle, PipelineConfig(pack=pack))
 
 
 # ---------------------------------------------------------------------------
@@ -139,7 +139,7 @@ def pillar3_cr7(spark: SparkSession, sf_dir: str) -> DataFrame:
     release_cached_blocks(spark)
     bundle = _star_bundle(spark, sf_dir, irb=True)
     bundle = dc_replace(bundle, guarantees=_star_gtees(load_table(spark, sf_dir, "orders")))
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     r = out.results.where(F.col("approach") == "IRB")
     pre = scaled_sum(F.col("rwa_pre_crm_substitution"), 2)
     post = scaled_sum(F.col("rwa"), 2)
@@ -747,7 +747,7 @@ def pillar3_cr7a(spark: SparkSession, sf_dir: str) -> DataFrame:
     bundle = dc_replace(
         bundle, collateral=coll, collateral_links=links, guarantees=_star_gtees(o)
     )
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     r = out.results
     ead = scaled_sum(F.col("ead_after_crm"), 2)
     return r.groupBy("exposure_class").agg(
@@ -848,7 +848,7 @@ def corep_crm_substitution(spark: SparkSession, sf_dir: str) -> DataFrame:
     bundle = dc_replace(
         bundle, guarantees=_star_gtees(load_table(spark, sf_dir, "orders"))
     )
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     r = out.results
     covered = F.col("g_coverage") * F.col("ead_after_crm")
     beneficial = F.col("rw_source").contains("+guarantee")
@@ -941,7 +941,7 @@ def corep_c09(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ country sheets ≡ TOTAL bit-for-bit, the v8732_m identity."""
     release_cached_blocks(spark)
     bundle = _star_bundle(spark, sf_dir, irb=False)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     r = out.results
     aggs = [
         F.count("*").alias("n_exposures"),

@@ -244,7 +244,7 @@ def rwa_pipeline_sa(spark: SparkSession, sf_dir: str) -> DataFrame:
     SA RW chain → summaries), oracle re-derived end-to-end in DuckDB."""
     release_cached_blocks(spark)  # bound the one-session cached footprint
     bundle = _star_bundle(spark, sf_dir, irb=False)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     return out.summary_by_class
 
 
@@ -339,7 +339,7 @@ def rwa_pipeline_irb(spark: SparkSession, sf_dir: str) -> DataFrame:
     formula, summarised by approach; oracle mirrors every stage in SQL."""
     release_cached_blocks(spark)  # bound the one-session cached footprint
     bundle = _star_bundle(spark, sf_dir, irb=True)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     return out.summary_by_approach
 
 
@@ -366,7 +366,7 @@ def pillar3_ov1(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline ledger the COREP cells read — one source of truth."""
     release_cached_blocks(spark)  # bound the one-session cached footprint
     bundle = _star_bundle(spark, sf_dir, irb=True)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     by_app = out.summary_by_approach.select(
         F.when(F.col("approach") == "SA", "credit_risk_sa")
         .otherwise("credit_risk_irb")
@@ -592,7 +592,7 @@ def _ccr_sft_pipeline(spark: SparkSession, sf_dir: str):
         sft_trades=lent_leg.unionByName(coll_leg),
         securitisation_allocations=allocs,
     )
-    return run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    return run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
 
 
 @query(
@@ -674,13 +674,13 @@ def dual_framework_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # holds one checkpointed pipeline, not two. The B31 plan is built only
     # AFTER the release: unpersisting a checkpoint-marked-but-
     # unmaterialised RDD truncates its lineage irrecoverably.
-    crr = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    crr = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     c = crr.summary_by_class.select(
         "exposure_class", F.col("total_rwa").alias("rwa_crr")
     )
     c_rows = c.collect()
     release_cached_blocks(spark)
-    b31 = run_pipeline(bundle, PipelineConfig(pack=B31_PACK, persist_edges=True))
+    b31 = run_pipeline(bundle, PipelineConfig(pack=B31_PACK))
     b = b31.summary_by_class.select(
         F.col("exposure_class").alias("b_class"), F.col("total_rwa").alias("rwa_b31")
     )
@@ -895,8 +895,8 @@ def capital_attribution_waterfall(spark: SparkSession, sf_dir: str) -> DataFrame
     # peak heap holds ONE checkpointed pipeline, not two (a 1g-heap
     # session OOMed here when both lineages stayed live)
     return capital_attribution(
-        lambda: run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True)),
-        lambda: run_pipeline(bundle, PipelineConfig(pack=B31_PACK, persist_edges=True)),
+        lambda: run_pipeline(bundle, PipelineConfig(pack=CRR_PACK)),
+        lambda: run_pipeline(bundle, PipelineConfig(pack=B31_PACK)),
         sequential=True,
     )
 
@@ -929,7 +929,7 @@ def floor_transition_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
     from rwa_calculator_spark.engine.rulepack import B31_PACK
 
     bundle = _star_bundle(spark, sf_dir, irb=True)
-    b31 = run_pipeline(bundle, PipelineConfig(pack=B31_PACK, persist_edges=True))
+    b31 = run_pipeline(bundle, PipelineConfig(pack=B31_PACK))
     return fts(spark, b31, sequential=True)
 
 
@@ -971,7 +971,7 @@ def pillar3_cr4(spark: SparkSession, sf_dir: str) -> DataFrame:
     the REAL SA pipeline and aggregates the audit ledger."""
     release_cached_blocks(spark)
     bundle = _star_bundle(spark, sf_dir, irb=False)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     r = out.results
     rwea = scaled_sum(F.col("rwa"), 2)
     ead_post = scaled_sum(F.col("ead_after_crm"), 2)
@@ -1007,7 +1007,7 @@ def pillar3_cr5(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pre-multiplier RW."""
     release_cached_blocks(spark)
     bundle = _star_bundle(spark, sf_dir, irb=False)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     r = out.results
     band = (
         F.when(F.round(F.col("risk_weight") * 100.0, 0) == 0, "rw_0")
@@ -1098,7 +1098,7 @@ def pillar3_cr6(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually consumed; defaulted obligors band to 'pd_default')."""
     release_cached_blocks(spark)
     bundle = _star_bundle(spark, sf_dir, irb=True)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     r = out.results.where(F.col("approach") == "IRB")
     ead = scaled_sum(F.col("ead_after_crm"), 2)
     rwea = scaled_sum(F.col("rwa"), 2)
@@ -1235,7 +1235,7 @@ def report_tieouts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     release_cached_blocks(spark)
     bundle = _star_bundle(spark, sf_dir, irb=True)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     # Three independently-generated template aggregates (all driver-sized
     # by design — O(#classes) scalars, never exposure rows):
     total = out.portfolio.collect()[0]["total_rwa"]  # C 02.00 [0010]
@@ -1395,7 +1395,7 @@ def parallel_run_recon(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     release_cached_blocks(spark)
     bundle = _star_bundle(spark, sf_dir, irb=False)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     ours = out.results
     keyn = F.substring(F.col("exposure_reference"), 2, 18).cast("long")
     legacy = ours.where(keyn % 97 != 0).select(
@@ -1482,7 +1482,7 @@ def pillar3_cr9(spark: SparkSession, sf_dir: str) -> DataFrame:
     when no prior-period carriers are supplied."""
     release_cached_blocks(spark)
     bundle = _star_bundle(spark, sf_dir, irb=True)
-    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK, persist_edges=True))
+    out = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK))
     r = out.results.where(F.col("approach") == "IRB")
     ead = scaled_sum(F.col("ead_after_crm"), 2)
     n_def = F.countDistinct(
@@ -1620,7 +1620,7 @@ def pillar3_cr10(spark: SparkSession, sf_dir: str) -> DataFrame:
             counterparties=cps, loans=loans, specialised_lending=sl,
             equity_exposures=eq,
         ),
-        PipelineConfig(pack=CRR_PACK, persist_edges=True),
+        PipelineConfig(pack=CRR_PACK),
     )
     r = out.results
     short = F.col("maturity_used") < 2.5

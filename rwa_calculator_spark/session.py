@@ -24,21 +24,20 @@ def default_parallelism() -> int:
 def build_session(
     app_name: str = "rwa_calculator_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     driver_memory: str | None = None,
 ) -> SparkSession:
     """Local-mode session tuned for the test/bench harness.
 
     On a real cluster the same app code runs unchanged — only master/memory
-    configs differ; shuffle partitioning is AQE-coalesced either way.
+    configs differ; shuffle partitions start at the core count and are
+    AQE-coalesced either way.
     """
     cpus = default_parallelism()
     master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-    sp = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(sp))
+        .config("spark.sql.shuffle.partitions", str(cpus))
         .config("spark.default.parallelism", str(cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

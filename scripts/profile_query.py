@@ -4,11 +4,15 @@
 Usage: python scripts/profile_query.py <query> [query ...]
 Runs each query twice (warm, then timed with event log), then prints the
 timed run's stages: task count, total task wall, total CPU, shuffle bytes.
+The session is the engine's own `build_session()` (core count from
+SPARK_GRAFT_CPUS); the event log is switched on through
+PYSPARK_SUBMIT_ARGS before the JVM starts.
 """
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import time
 
@@ -23,44 +27,19 @@ EVDIR = "/tmp/spark-events-profile"
 def main() -> None:
     names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    import shutil
-
     shutil.rmtree(EVDIR, ignore_errors=True)
     os.makedirs(EVDIR, exist_ok=True)
     registry = load_all()
-    import pyspark
-
-    builder_patch = {
-        "spark.eventLog.enabled": "true",
-        "spark.eventLog.dir": EVDIR,
-        "spark.eventLog.compress": "false",
-        "spark.eventLog.rolling.enabled": "false",
-    }
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    os.environ["PYSPARK_SUBMIT_ARGS"] = " ".join(
+        [
+            "--conf spark.eventLog.enabled=true",
+            f"--conf spark.eventLog.dir=file://{EVDIR}",
+            "--conf spark.eventLog.compress=false",
+            "--conf spark.eventLog.rolling.enabled=false",
+            "pyspark-shell",
+        ]
+    )
     spark = build_session(app_name="profile-query")
-    # need event log: rebuild session with logging (build_session has no kwarg)
-    spark.stop()
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ["SPARK_GRAFT_CPUS"]
-    b = SparkSession.builder.master(f"local[{cpus}]").appName("profile-query")
-    # mirror session.py
-    for k, v in {
-        "spark.sql.shuffle.partitions": cpus,
-        "spark.default.parallelism": cpus,
-        "spark.sql.adaptive.enabled": "true",
-        "spark.sql.adaptive.coalescePartitions.enabled": "true",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m",
-        "spark.sql.adaptive.skewJoin.enabled": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.execution.arrow.pyspark.enabled": "true",
-        "spark.driver.memory": "8g",
-        "spark.ui.enabled": "false",
-        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        **builder_patch,
-    }.items():
-        b = b.config(k, str(v))
-    spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     for name in names:

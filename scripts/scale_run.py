@@ -110,7 +110,7 @@ def main() -> None:
     )
     for attempt in range(2):
         t0 = time.perf_counter()
-        result = run_pipeline(bundle, PipelineConfig(persist_edges=True))
+        result = run_pipeline(bundle, PipelineConfig())
         agg = result.results.agg(
             F.count("*").alias("n"), scaled_sum(F.col("rwa"), 2).alias("rwa")
         ).collect()[0]

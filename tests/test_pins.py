@@ -1,5 +1,6 @@
-"""Pin the two pyspark internals the session tuning relies on, so an
-environment bump fails loudly instead of silently re-inflating cost
+"""Pin the pyspark internals and engine invariants the session tuning and
+the ledger rely on, so an environment bump or a refactor fails loudly
+instead of silently re-inflating cost or reshaping output
 (VERDICT r09 "What's wrong" item 2 / "Next round" item 7).
 
 - ``utils.disable_dataframe_debugging`` pre-seeds the documented
@@ -10,6 +11,13 @@ environment bump fails loudly instead of silently re-inflating cost
   ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning`` is a
   RUNTIME conf (settable per session); if it became static the guarded
   conf.set would raise and the except would hide the regression.
+- ``session.build_session`` floors AQE's coalesced width at the core
+  count through the deprecated
+  ``spark.sql.adaptive.coalescePartitions.minPartitionNum``; if Spark
+  stops honouring it, post-shuffle engine stages shrink to a handful of
+  tasks again.
+- Every calculator branch emits the ledger columns with the ledger's own
+  dtypes, so the aggregate's ``unionByName`` never has to widen a type.
 """
 
 from __future__ import annotations
@@ -35,3 +43,98 @@ def test_cached_plan_repartitioning_conf_is_runtime_settable(spark):
     finally:
         if original is not None:
             spark.conf.set(key, original)
+
+
+def test_aqe_coalesced_width_floored_at_core_count(spark):
+    from rwa_calculator_spark.session import default_parallelism
+
+    cpus = default_parallelism()
+    key = "spark.sql.adaptive.coalescePartitions.minPartitionNum"
+    assert spark.conf.get(key) == str(cpus)
+    original = spark.conf.get("spark.sql.shuffle.partitions")
+    # enough shuffle bytes per core to clear the 1 MB minimum partition
+    # size, far below the 8m advisory target: with minPartitionNum=1, AQE
+    # coalesces these 8×cpus reducers into one or two partitions
+    try:
+        spark.conf.set("spark.sql.shuffle.partitions", str(cpus * 8))
+        df = (
+            spark.range(0, cpus * 250_000, numPartitions=cpus)
+            .selectExpr("(id * 7919) % 1000000007 AS k")
+            .groupBy("k")
+            .count()
+        )
+        width = df.rdd.getNumPartitions()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", original)
+    assert cpus <= width < cpus * 8
+
+
+def test_every_calculator_branch_matches_ledger_dtypes(spark, monkeypatch):
+    from rwa_calculator_spark.engine import pipeline
+    from rwa_calculator_spark.engine.bundles import RawBundle
+    from rwa_calculator_spark.engine.rulepack import CRR_PACK
+    from rwa_calculator_spark.engine.stages.calculators import _RESULT_COLS
+
+    branches = []
+    real_aggregate = pipeline.run_aggregate
+
+    def capture(*outs, **kwargs):
+        branches.extend(outs)
+        return real_aggregate(*outs, **kwargs)
+
+    monkeypatch.setattr(pipeline, "run_aggregate", capture)
+
+    df = spark.createDataFrame
+
+    bundle = RawBundle(
+        counterparties=df(
+            [
+                ("CP1", "corporate", 2, False, 0.0, False),
+                ("CP2", "corporate", 2, False, 0.0, True),
+                ("CP3", "corporate", 2, False, 0.0, False),
+            ],
+            "counterparty_reference string, entity_type string, cqs int, "
+            "is_managed_as_retail boolean, annual_revenue double, "
+            "has_irb_permission boolean",
+        ),
+        loans=df(
+            [
+                ("L1", "CP1", 1000.0, False, None, None, None),
+                ("L2", "CP2", 1000.0, False, 0.01, 0.45, 2.5),
+                ("L3", "CP3", 1000.0, False, None, None, None),
+            ],
+            "loan_reference string, counterparty_reference string, "
+            "drawn_amount double, is_defaulted boolean, pd double, lgd double, "
+            "effective_maturity double",
+        ),
+        specialised_lending=df(
+            [("CP3", "good")], "counterparty_reference string, slot_category string"
+        ),
+        equity_exposures=df(
+            [("E1", "CP1", 500.0, True)],
+            "exposure_reference string, counterparty_reference string, "
+            "market_value double, is_exchange_traded boolean",
+        ),
+        ciu_holdings=df(
+            [("FUND1", "H1", "corporate", 1000.0, 3)],
+            "fund_reference string, holding_reference string, "
+            "underlying_class string, value double, holding_cqs int",
+        ),
+        failed_trades=df(
+            [("T1", "CP1", 1000.0, 10)],
+            "trade_reference string, counterparty_reference string, "
+            "amount double, days_late int",
+        ),
+        securitisation_allocations=df(
+            [("L1", "P1", 0.3)],
+            "exposure_reference string, pool_reference string, "
+            "allocation_pct double",
+        ),
+    )
+    out = pipeline.run_pipeline(bundle, pipeline.PipelineConfig(pack=CRR_PACK))
+    # SA, IRB, SEC-SA, slotting, equity, CIU, settlement
+    assert len(branches) == 7
+    ledger = out.results.dtypes[: len(_RESULT_COLS)]
+    assert [c for c, _ in ledger] == _RESULT_COLS
+    for branch in branches:
+        assert branch.results.dtypes == ledger

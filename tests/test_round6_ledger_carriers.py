@@ -164,10 +164,10 @@ def test_manifest_records_per_stage_wall_ms(spark, tmp_path):
         spark, RawBundle(counterparties=cps, loans=loans), pack=CRR_PACK,
         cache_dir=str(tmp_path / "cache"),
     )
-    resp = calc.calculate(persist_edges=False)
+    resp = calc.calculate()
     stages = resp.run_manifest["stages"]
-    for name in ("hierarchy", "classify", "crm", "re_split", "calculators",
-                 "aggregate"):
+    for name in ("hierarchy", "classify", "crm", "re_split", "barrier",
+                 "calculators", "aggregate"):
         assert name in stages and stages[name] >= 0.0
 
 
