@@ -8,6 +8,12 @@ the reference's pattern: results persist as columnar files, every downstream
 consumer (REST layer, reconciliation, exports) re-scans lazily rather than
 holding frames in memory — on a cluster the cache directory is object
 storage and nothing ever passes through the driver.
+
+Sealing follows the same rule. The calculator DAG runs once, to write the
+ledger; the summaries and the ledger-derived warnings on the error channel
+are then computed from a re-scan of the sealed ledger
+(`aggregate.summarise_ledger`, the function plan queries apply in flight).
+Each edge's row count is observed on its own write.
 """
 
 from __future__ import annotations
@@ -20,11 +26,14 @@ from dataclasses import dataclass
 from datetime import datetime, timezone
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F  # noqa: N812
 
 from rwa_calculator_spark.engine.bundles import RawBundle
 from rwa_calculator_spark.engine.pipeline import PipelineConfig, run_pipeline
 from rwa_calculator_spark.engine.rulepack import CRR_PACK, RulePack
+from rwa_calculator_spark.engine.stages.aggregate import summarise_ledger
+from rwa_calculator_spark.session import codegen_compiles
 
 
 @dataclass(frozen=True)
@@ -51,7 +60,6 @@ class CalculationResponse:
         audit carriers (collateral_references/types) flatten to
         ';'-delimited strings — the CSV datasource cannot carry arrays,
         and the reference's CSV exporter does the same join-on-export."""
-        from pyspark.sql import functions as F  # noqa: N812
         from pyspark.sql import types as T
 
         df = self.scan_results()
@@ -122,8 +130,6 @@ class CreditRiskCalc:
         machinery: current-only keys are new business, prior-only keys
         disposals, matched-key deltas parameter drift. Requires
         ``calculate()`` to have sealed THIS run's cache first."""
-        from pyspark.sql import functions as F
-
         from rwa_calculator_spark.functions.exact import scaled_sum
         from rwa_calculator_spark.reporting_flow import rwa_flow_statement
 
@@ -151,6 +157,7 @@ class CreditRiskCalc:
         from rwa_calculator_spark.observability import run_context
 
         t0 = time.perf_counter()
+        compiles0 = codegen_compiles(self.spark)
         run_id = f"run_{uuid.uuid4().hex[:12]}"
         audit_sink = None
         if self.audit_cache_dir is not None:
@@ -186,13 +193,17 @@ class CreditRiskCalc:
         sc = self.spark.sparkContext
         edges: dict[str, dict] = {}
 
-        def _seal(df: DataFrame, name: str) -> None:
+        def _seal(df: DataFrame, name: str) -> str:
             te = time.perf_counter()
             sc.setJobGroup(f"edge:{name}", f"seal {name} to results cache")
             try:
                 path = os.path.join(self.cache_dir, name)
-                df.write.mode("overwrite").parquet(path)
-                rows = self.spark.read.parquet(path).count()  # footer-count, no recompute
+                # the row count rides on the write itself: no second scan
+                seen = Observation()
+                df.observe(seen, F.count(F.lit(1)).alias("rows")).write.mode(
+                    "overwrite"
+                ).parquet(path)
+                rows = seen.get["rows"]
             finally:
                 sc.setJobGroup("", "")
             edges[name] = {"rows": rows, "wall_ms": round((time.perf_counter() - te) * 1e3, 1)}
@@ -203,17 +214,23 @@ class CreditRiskCalc:
                     )
                 except Exception:  # noqa: BLE001 — observability, never fatal
                     pass
+            return path
 
         # run identity rides per-row from the aggregate stage (ref
         # CALCULATION_OUTPUT_SCHEMA cols 1-2, data/schemas.py:2877),
         # supplied through PipelineConfig above: a multi-run store
         # concatenating sealed caches keeps row→run lineage without
         # joining back to manifests.
-        _seal(out.results, "results")
-        _seal(out.summary_by_class, "summary_class")
-        _seal(out.summary_by_approach, "summary_approach")
-        if out.errors is not None:
-            _seal(out.errors, "errors")
+        #
+        # Only the ledger write runs the calculator DAG. `out`'s summaries
+        # and its errors (whose IRB007 check reads the ledger) would each
+        # recompute it, so they are derived again from the sealed ledger.
+        ledger = self.spark.read.parquet(_seal(out.results, "results"))
+        sealed = summarise_ledger(ledger, self.pack, out.upstream_errors)
+        _seal(sealed.summary_by_class, "summary_class")
+        _seal(sealed.summary_by_approach, "summary_approach")
+        if sealed.errors is not None:
+            _seal(sealed.errors, "errors")
         manifest = {
             "run_id": run_id,
             "regime": self.pack.regime,
@@ -225,6 +242,10 @@ class CreditRiskCalc:
             # reference's per-stage EdgeEvent timings) — execution cost is
             # on the seal edges above
             "stages": out.stage_wall_ms or {},
+            # Janino compiles during this run. The counter is per JVM, so
+            # runs executing concurrently in one process (REST jobs) each
+            # count the other's compiles too.
+            "codegen_compiles": codegen_compiles(self.spark) - compiles0,
             "wall_sec": round(time.perf_counter() - t0, 3),
         }
         with open(os.path.join(self.cache_dir, "manifest.json"), "w") as f:

@@ -129,6 +129,10 @@ class AggregatedOutput:
     # every stage (ref engine/pipeline.py:337-370 error-channel merge;
     # schema at stages/scope.py ERRORS_SCHEMA). None when no stage emitted.
     errors: Optional[DataFrame] = None
+    # the error rows of the stages before the ledger (validation, scope,
+    # WWR gate, model permissions): `errors` minus the ledger-derived
+    # warnings, which the results cache re-derives from the sealed ledger
+    upstream_errors: Optional[DataFrame] = None
     # per-stage PLAN-BUILD wall-ms (ref engine/materialise.py:74-98
     # EdgeEvent wall-ms per stage edge). Spark's fold is lazy, so this
     # records driver-side Catalyst construction/analysis cost per stage —

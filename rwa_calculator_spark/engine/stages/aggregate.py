@@ -5,6 +5,12 @@ The floor is the reference's exact shape: portfolio scalar agg → cross-join
 (broadcast, 1 row) back onto every exposure → pro-rata uplift. Summaries are
 plain grouped sums; conservation (each summary partitions the ledger total)
 is pinned by tests.
+
+Everything downstream of the ledger — the summaries and the ledger-derived
+IRB007 warning — is one function of a ledger frame, `summarise_ledger`.
+`run_aggregate` applies it to the in-flight ledger, so plan queries keep
+their lazy summaries; the results cache (api.py) applies it to the sealed
+ledger's parquet re-scan, so sealing computes the calculator DAG once.
 """
 
 from __future__ import annotations
@@ -110,6 +116,15 @@ def run_aggregate(
             "calculation_timestamp": F.lit(run_timestamp).cast("timestamp"),
         }
     )
+    return summarise_ledger(results, pack, errors)
+
+
+def summarise_ledger(results, pack: RulePack, errors=None) -> AggregatedOutput:
+    """Summaries, portfolio total and ledger-derived warnings over a ledger
+    frame — the in-flight one (`run_aggregate`) or a re-scan of a sealed
+    one (api.py). `errors` are the rows of the stages before the ledger;
+    the returned `errors` adds the IRB007 warnings to them."""
+    upstream_errors = errors
 
     # CRR Art.164(4) retail-RE PORTFOLIO LGD floor check (ref
     # engine/aggregator/_lgd_floor_check.py check_retail_re_portfolio_lgd_
@@ -230,4 +245,5 @@ def run_aggregate(
         summary_by_approach=by_approach,
         portfolio=portfolio,
         errors=errors,
+        upstream_errors=upstream_errors,
     )

@@ -192,14 +192,16 @@ class RwaApi:
                     on_event=lambda msg: self.jobs.event(job, msg),
                 )
                 job["manifest"] = resp.run_manifest
-                job["status"] = "done"
                 # only SUCCESSFUL runs register for reuse
                 self.run_index.register(fingerprint, {"job_id": job["job_id"]})
+                # the terminal event lands before the status flips, so a
+                # poller that sees the job finished has every event
                 self.jobs.event(job, f"pipeline done in {resp.run_manifest['wall_sec']}s")
+                job["status"] = "done"
             except Exception as e:  # surfaced via the job, never swallowed
-                job["status"] = "failed"
                 job["error"] = str(e)
                 self.jobs.event(job, f"pipeline failed: {e}")
+                job["status"] = "failed"
 
         threading.Thread(target=run, daemon=True).start()
         return 202, {"job_id": job["job_id"], "status": job["status"]}
@@ -225,8 +227,10 @@ class RwaApi:
             return 404, {"error": f"no such job {job_id!r}"}
         deadline = time.time() + max(0.0, min(wait, 30.0))
         while True:
-            events = self.jobs.events_since(job, since)
+            # status before events: a job's last event precedes its status
+            # change, so a finished job's snapshot is complete
             finished = job["status"] != "running"
+            events = self.jobs.events_since(job, since)
             if events or finished or time.time() >= deadline:
                 return 200, {
                     "job_id": job_id,

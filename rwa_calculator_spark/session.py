@@ -13,12 +13,21 @@ import os
 
 from pyspark.sql import SparkSession
 
-
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     if cpus and cpus.isdigit():
         return int(cpus)
     return os.cpu_count() or 8
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Whole-stage and expression classes Janino has compiled so far in
+    this JVM (Spark's ``CodegenMetrics`` compilation-time histogram count).
+    The counter is process-wide: every session and every concurrent job in
+    the JVM adds to it, so a delta taken around one call is exact only when
+    nothing else runs beside it."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
 def build_session(
@@ -71,6 +80,15 @@ def build_session(
         # stages cache dimension-sized frames) — see
         # utils.allow_cached_plan_repartitioning for the measurement.
         .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
+        # Generated Java classes live in an LRU cache of this many entries
+        # (a static conf, default 100). A cold sealed engine run compiles
+        # ~139 classes and a cold pass over the 12 bench queries ~160, so at
+        # 100 every repeat evicts its own classes and Janino compiles them
+        # again: 128-131 compiles per repeated sealed run, ~147 per
+        # repeated query pass. At 1000 a repeated sealed run compiles 3-25
+        # and a warm query pass 0; JVM metaspace was 166 MiB after five
+        # sealed runs at either size (4 cores, sf~0.004 star book).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     spark = builder.getOrCreate()
     from rwa_calculator_spark.utils import disable_dataframe_debugging

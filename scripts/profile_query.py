@@ -2,8 +2,10 @@
 """Profile registry queries: per-stage task wall/CPU from the event log.
 
 Usage: python scripts/profile_query.py <query> [query ...]
-Runs each query twice (warm, then timed with event log), then prints the
-timed run's stages: task count, total task wall, total CPU, shuffle bytes.
+Runs each query twice (warm, then timed with event log) and prints each
+run's Janino compile count (process-wide `CodegenMetrics` delta, as in the
+run manifest's `codegen_compiles`), then the timed run's stages: task
+count, total task wall, total CPU, shuffle bytes.
 The session is the engine's own `build_session()` (core count from
 SPARK_GRAFT_CPUS); the event log is switched on through
 PYSPARK_SUBMIT_ARGS before the JVM starts.
@@ -19,7 +21,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from rwa_calculator_spark.plans import load_all
-from rwa_calculator_spark.session import build_session
+from rwa_calculator_spark.session import build_session, codegen_compiles
 
 EVDIR = "/tmp/spark-events-profile"
 
@@ -45,14 +47,17 @@ def main() -> None:
     for name in names:
         spec = registry[name]
         # warm (codegen, file listing)
+        c0 = codegen_compiles(spark)
         spec.fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        c1 = codegen_compiles(spark)
         spark.sparkContext.setJobDescription(f"TIMED:{name}")
         df = spec.fn(spark, sf_dir)
         t0 = time.perf_counter()
         df.write.mode("overwrite").format("noop").save()
         wall = time.perf_counter() - t0
         spark.sparkContext.setJobDescription(None)
-        print(f"\n=== {name}: wall {wall:.3f}s")
+        compiles = f"compiles warm {c1 - c0}, timed {codegen_compiles(spark) - c1}"
+        print(f"\n=== {name}: wall {wall:.3f}s, {compiles}")
     sc_app = spark.sparkContext.applicationId
     spark.stop()
 

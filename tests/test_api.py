@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from rwa_calculator_spark.api import CreditRiskCalc
 from rwa_calculator_spark.engine.rulepack import CRR_PACK
+from rwa_calculator_spark.functions.exact import scaled_sum
 
 
 def test_calculate_cache_scan_export(spark, tmp_path):
@@ -28,16 +29,25 @@ def test_calculate_cache_scan_export(spark, tmp_path):
     n = results.count()
     assert n == bundle.loans.count() + bundle.contingents.count()
 
-    # cached summary equals re-derivation from the cached ledger
-    cached = {r.exposure_class: r.total_rwa for r in resp.scan_summary("class").collect()}
-    rederived = {
-        r.exposure_class: round(r.s, 2)
-        for r in results.groupBy("exposure_class")
-        .agg((F.sum(F.round(F.col("rwa") * 100.0, 0).cast("long")) / 100.0).alias("s"))
-        .collect()
-    }
-    for k, v in rederived.items():
-        assert abs(cached[k] - v) < 0.011, k
+    # each sealed summary equals the same fixed-point groupBy over the
+    # sealed ledger, exactly (the cache derives them from that ledger)
+    for dim, key in (("class", "exposure_class"), ("approach", "approach")):
+        rederived = results.groupBy(key).agg(
+            F.count("*").alias("n_exposures"),
+            scaled_sum(F.col("ead_after_crm"), 2).alias("total_ead"),
+            scaled_sum(F.col("rwa"), 2).alias("total_rwa"),
+        )
+        assert sorted(map(tuple, resp.scan_summary(dim).collect())) == sorted(
+            map(tuple, rederived.collect())
+        ), dim
+
+    # each edge's observed row count is the row count of what was sealed
+    edges = resp.run_manifest["edges"]
+    assert set(edges) >= {"results", "summary_class", "summary_approach"}
+    for name, edge in edges.items():
+        sealed = spark.read.parquet(os.path.join(resp.cache_dir, name))
+        assert edge["rows"] == sealed.count(), name
+    assert resp.run_manifest["codegen_compiles"] >= 0
 
     # run identity stamped per-row at seal time (ref
     # CALCULATION_OUTPUT_SCHEMA cols 1-2): every sealed row carries THIS
@@ -159,3 +169,32 @@ def test_flow_statement_against_persisted_prior_run(spark, tmp_path):
     assert flow["3"] == pytest.approx(c["L_KEEP"] - p["L_KEEP"], abs=0.02)
     assert flow["3"] > 0  # PD 1% → 3% raised the matched-row charge
     assert flow["8"] == pytest.approx(0.0, abs=0.05)  # residual closes
+
+
+def test_sealed_errors_rederive_ledger_warnings(spark, tmp_path):
+    """The IRB007 portfolio-LGD warning reads the ledger; the results cache
+    derives it from the sealed ledger, and the sealed error channel holds
+    exactly the rows the in-flight pipeline reports."""
+    from rwa_calculator_spark.engine.pipeline import PipelineConfig, run_pipeline
+    from tests.test_round7_portfolio_lgd_floor import _bundle
+
+    # the below-floor residential book of
+    # test_round7_portfolio_lgd_floor::test_residential_portfolio_below_floor_warns
+    bundle = _bundle(
+        spark,
+        [
+            ("L1", "CP1", 1000.0, 0.01, 0.05, False),
+            ("L2", "CP1", 1000.0, 0.01, 0.09, False),
+        ],
+    )
+
+    in_flight = run_pipeline(bundle, PipelineConfig(pack=CRR_PACK)).errors
+    resp = CreditRiskCalc(
+        spark, bundle, CRR_PACK, cache_dir=str(tmp_path / "cache")
+    ).calculate()
+    sealed = resp.scan_errors()
+
+    want = sorted(map(tuple, in_flight.collect()))
+    assert ("IRB007", "residential") in {(r[0], r[3]) for r in want}
+    assert sorted(map(tuple, sealed.collect())) == want
+    assert resp.run_manifest["edges"]["errors"]["rows"] == len(want)

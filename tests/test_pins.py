@@ -18,6 +18,9 @@ instead of silently re-inflating cost or reshaping output
   tasks again.
 - Every calculator branch emits the ledger columns with the ledger's own
   dtypes, so the aggregate's ``unionByName`` never has to widen a type.
+- ``session.build_session`` sizes Spark's generated-class cache above the
+  engine's working set; at the default 100 entries every repeated run
+  evicts its own classes and Janino compiles them all again.
 """
 
 from __future__ import annotations
@@ -138,3 +141,28 @@ def test_every_calculator_branch_matches_ledger_dtypes(spark, monkeypatch):
     assert [c for c, _ in ledger] == _RESULT_COLS
     for branch in branches:
         assert branch.results.dtypes == ledger
+
+
+def test_codegen_cache_holds_the_query_working_set(spark, sf_dir):
+    """A cold pass over the 12 non-engine bench queries compiles ~160
+    classes (more than Spark's default cache of 100), one sealed engine
+    run ~139; the cache must hold both. Repeating the pass must hit the cache: the first two passes
+    warm it (the second also sees the frames the first left cached), and
+    the third compiles next to nothing. With the cache back at 100 the
+    third pass compiles ~147."""
+    from rwa_calculator_spark.plans import load_all
+    from rwa_calculator_spark.session import codegen_compiles
+
+    assert int(spark.conf.get("spark.sql.codegen.cache.maxEntries")) >= 139 + 160
+
+    registry = load_all()
+    engine = ("rwa_pipeline_irb", "rwa_pipeline_sa")
+    queries = sorted(n for n, s in registry.items() if s.bench and n not in engine)
+    assert len(queries) == 12
+    compiles = []
+    for _ in range(3):
+        before = codegen_compiles(spark)
+        for name in queries:
+            registry[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+        compiles.append(codegen_compiles(spark) - before)
+    assert compiles[2] <= 5, compiles

@@ -13,10 +13,12 @@ strategy at the same layer.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from rwa_calculator_spark.engine.bundles import RawBundle
@@ -201,11 +203,21 @@ def test_own_funds_monotonic_in_collateral(spark, seed):
 
 
 @given(seed=st.integers(0, 10_000))
+@example(seed=9903)
 @settings(**_SETTINGS)
 def test_homogeneity_on_threshold_free_book(spark, seed):
     """Scaling every amount by λ scales RWA by λ — on a corporate-only,
     over-revenue-cap book where no retail threshold or SME tier can bend
-    the line (they deliberately break homogeneity elsewhere)."""
+    the line (they deliberately break homogeneity elsewhere).
+
+    Compared on the unrounded ledger: ``portfolio.total_rwa`` sums
+    cent-rounded rows, and Σround(2x) ≠ 2·Σround(x) (seed 9903 misses
+    by rel 1.26e-9). Doubling every amount doubles each row's rwa exactly
+    in binary floating point, so the exactly rounded sums must agree."""
+
+    def _ledger_rwa(out) -> float:
+        return math.fsum(r.rwa for r in out.results.select("rwa").collect())
+
     base = run_pipeline(
         _bundle(spark, seed, corporate_only=True, amount_scale=1.0),
         PipelineConfig(pack=CRR_PACK),
@@ -214,9 +226,7 @@ def test_homogeneity_on_threshold_free_book(spark, seed):
         _bundle(spark, seed, corporate_only=True, amount_scale=2.0),
         PipelineConfig(pack=CRR_PACK),
     )
-    _, rwa_base = _totals(base)
-    _, rwa_doubled = _totals(doubled)
-    assert rwa_doubled == pytest.approx(2.0 * rwa_base, rel=1e-9)
+    assert _ledger_rwa(doubled) == pytest.approx(2.0 * _ledger_rwa(base), rel=1e-9)
 
 
 @given(seed=st.integers(0, 10_000))

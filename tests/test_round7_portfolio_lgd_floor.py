@@ -14,7 +14,7 @@ from rwa_calculator_spark.engine.pipeline import PipelineConfig, run_pipeline
 from rwa_calculator_spark.engine.rulepack import B31_PACK, CRR_PACK
 
 
-def _run(spark, loan_rows, pack=CRR_PACK, gtees=None):
+def _bundle(spark, loan_rows, gtees=None) -> RawBundle:
     cps = spark.createDataFrame(
         [("CP1", "individual", 0, True, 0.0, True, "mortgage")],
         "counterparty_reference string, entity_type string, cqs int, "
@@ -38,10 +38,11 @@ def _run(spark, loan_rows, pack=CRR_PACK, gtees=None):
             "guarantee_reference string, exposure_reference string, "
             "coverage_pct double, guarantor_class string, guarantor_cqs int",
         )
-    out = run_pipeline(
-        RawBundle(counterparties=cps, loans=loans, guarantees=g),
-        PipelineConfig(pack=pack),
-    )
+    return RawBundle(counterparties=cps, loans=loans, guarantees=g)
+
+
+def _run(spark, loan_rows, pack=CRR_PACK, gtees=None):
+    out = run_pipeline(_bundle(spark, loan_rows, gtees), PipelineConfig(pack=pack))
     return [
         (r.code, r.key)
         for r in (out.errors.collect() if out.errors is not None else [])
