@@ -11,8 +11,9 @@ storage and nothing ever passes through the driver.
 
 Sealing follows the same rule. The calculator DAG runs once, to write the
 ledger; the summaries and the ledger-derived warnings on the error channel
-are then computed from a re-scan of the sealed ledger
-(`aggregate.summarise_ledger`, the function plan queries apply in flight).
+are then computed from a re-scan of the sealed ledger (an
+`AggregatedOutput` over the scan: the same lazily built plans a plan query
+reads over its in-flight ledger).
 Each edge's row count is observed on its own write.
 """
 
@@ -29,10 +30,9 @@ from typing import Callable
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
-from rwa_calculator_spark.engine.bundles import RawBundle
+from rwa_calculator_spark.engine.bundles import AggregatedOutput, RawBundle
 from rwa_calculator_spark.engine.pipeline import PipelineConfig, run_pipeline
 from rwa_calculator_spark.engine.rulepack import CRR_PACK, RulePack
-from rwa_calculator_spark.engine.stages.aggregate import summarise_ledger
 from rwa_calculator_spark.session import codegen_compiles
 
 
@@ -224,9 +224,10 @@ class CreditRiskCalc:
         #
         # Only the ledger write runs the calculator DAG. `out`'s summaries
         # and its errors (whose IRB007 check reads the ledger) would each
-        # recompute it, so they are derived again from the sealed ledger.
+        # recompute it, so they are derived from the sealed ledger instead;
+        # `out` never builds them.
         ledger = self.spark.read.parquet(_seal(out.results, "results"))
-        sealed = summarise_ledger(ledger, self.pack, out.upstream_errors)
+        sealed = AggregatedOutput(ledger, self.pack, out.upstream_errors)
         _seal(sealed.summary_by_class, "summary_class")
         _seal(sealed.summary_by_approach, "summary_approach")
         if sealed.errors is not None:

@@ -11,9 +11,13 @@ lineage truncation under 960-deep when-chains).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional
+from functools import cached_property
+from typing import TYPE_CHECKING, Optional
 
 from pyspark.sql import DataFrame
+
+if TYPE_CHECKING:
+    from rwa_calculator_spark.engine.rulepack import RulePack
 
 
 @dataclass(frozen=True)
@@ -121,14 +125,14 @@ class CalcOutput:
 
 @dataclass(frozen=True)
 class AggregatedOutput:
+    """The per-exposure ledger and what derives from it. The summaries, the
+    portfolio total and the error channel are built from `results` on first
+    access (engine/stages/aggregate.py), so a caller that only seals the
+    ledger — the results cache re-derives the rest from its re-scan — never
+    builds their plans, and a plan query gets the plans it reads, once."""
+
     results: DataFrame
-    summary_by_class: DataFrame
-    summary_by_approach: DataFrame
-    portfolio: DataFrame
-    # error channel: (code, severity, stage, key, message) rows merged from
-    # every stage (ref engine/pipeline.py:337-370 error-channel merge;
-    # schema at stages/scope.py ERRORS_SCHEMA). None when no stage emitted.
-    errors: Optional[DataFrame] = None
+    pack: "RulePack"
     # the error rows of the stages before the ledger (validation, scope,
     # WWR gate, model permissions): `errors` minus the ledger-derived
     # warnings, which the results cache re-derives from the sealed ledger
@@ -139,3 +143,36 @@ class AggregatedOutput:
     # the real per-stage driver expense on 960-`when` plans; execution cost
     # lands on the seal-edge events in the run manifest (api.py _seal).
     stage_wall_ms: Optional[dict] = None
+
+    @cached_property
+    def summary_by_class(self) -> DataFrame:
+        from rwa_calculator_spark.engine.stages.aggregate import summary_by
+
+        return summary_by(self.results, "exposure_class")
+
+    @cached_property
+    def summary_by_approach(self) -> DataFrame:
+        from rwa_calculator_spark.engine.stages.aggregate import summary_by
+
+        return summary_by(self.results, "approach")
+
+    @cached_property
+    def portfolio(self) -> DataFrame:
+        from rwa_calculator_spark.engine.stages.aggregate import summary_by
+
+        return summary_by(self.results)
+
+    @cached_property
+    def errors(self) -> Optional[DataFrame]:
+        """Error channel: (code, severity, stage, key, message) rows merged
+        from every stage (ref engine/pipeline.py:337-370 error-channel merge;
+        schema at stages/scope.py ERRORS_SCHEMA) — `upstream_errors` plus the
+        ledger-derived warnings. None when no stage emitted."""
+        from rwa_calculator_spark.engine.stages.aggregate import ledger_warnings
+
+        warn = ledger_warnings(self.results, self.pack)
+        if warn is None:
+            return self.upstream_errors
+        if self.upstream_errors is None:
+            return warn
+        return self.upstream_errors.unionByName(warn)

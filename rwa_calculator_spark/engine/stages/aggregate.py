@@ -6,15 +6,17 @@ The floor is the reference's exact shape: portfolio scalar agg → cross-join
 plain grouped sums; conservation (each summary partitions the ledger total)
 is pinned by tests.
 
-Everything downstream of the ledger — the summaries and the ledger-derived
-IRB007 warning — is one function of a ledger frame, `summarise_ledger`.
-`run_aggregate` applies it to the in-flight ledger, so plan queries keep
-their lazy summaries; the results cache (api.py) applies it to the sealed
-ledger's parquet re-scan, so sealing computes the calculator DAG once.
+Everything downstream of the ledger — the summaries (`summary_by`) and the
+ledger-derived IRB007 warning (`ledger_warnings`) — is a function of a ledger
+frame that `AggregatedOutput` applies on first access: to the in-flight
+ledger for plan queries, to the sealed ledger's parquet re-scan in the
+results cache (api.py). `run_aggregate` itself builds only the ledger, so
+sealing builds and computes the calculator DAG once.
 """
 
 from __future__ import annotations
 
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rwa_calculator_spark.engine.bundles import AggregatedOutput, CalcOutput
@@ -116,16 +118,13 @@ def run_aggregate(
             "calculation_timestamp": F.lit(run_timestamp).cast("timestamp"),
         }
     )
-    return summarise_ledger(results, pack, errors)
+    return AggregatedOutput(results=results, pack=pack, upstream_errors=errors)
 
 
-def summarise_ledger(results, pack: RulePack, errors=None) -> AggregatedOutput:
-    """Summaries, portfolio total and ledger-derived warnings over a ledger
-    frame — the in-flight one (`run_aggregate`) or a re-scan of a sealed
-    one (api.py). `errors` are the rows of the stages before the ledger;
-    the returned `errors` adds the IRB007 warnings to them."""
-    upstream_errors = errors
-
+def ledger_warnings(results: DataFrame, pack: RulePack) -> DataFrame | None:
+    """The ledger-derived warnings (IRB007) over a ledger frame, in
+    ERRORS_SCHEMA; None when the pack or the ledger's columns rule the
+    check out."""
     # CRR Art.164(4) retail-RE PORTFOLIO LGD floor check (ref
     # engine/aggregator/_lgd_floor_check.py check_retail_re_portfolio_lgd_
     # floors): the A-IRB retail-mortgage book, minus central-government-
@@ -222,28 +221,16 @@ def summarise_ledger(results, pack: RulePack, errors=None) -> AggregatedOutput:
                 F.lit(")"),
             ).alias("message"),
         )
-        errors = _warn if errors is None else errors.unionByName(_warn)
+        return _warn
+    return None
 
-    by_class = results.groupBy("exposure_class").agg(
+
+def summary_by(results: DataFrame, key: str | None = None) -> DataFrame:
+    """Exposure count, EAD and RWA totals of a ledger frame per `key`, or
+    over the whole ledger (the portfolio total) when `key` is None."""
+    figures = (
         F.count("*").alias("n_exposures"),
         scaled_sum(F.col("ead_after_crm"), 2).alias("total_ead"),
         scaled_sum(F.col("rwa"), 2).alias("total_rwa"),
     )
-    by_approach = results.groupBy("approach").agg(
-        F.count("*").alias("n_exposures"),
-        scaled_sum(F.col("ead_after_crm"), 2).alias("total_ead"),
-        scaled_sum(F.col("rwa"), 2).alias("total_rwa"),
-    )
-    portfolio = results.agg(
-        F.count("*").alias("n_exposures"),
-        scaled_sum(F.col("ead_after_crm"), 2).alias("total_ead"),
-        scaled_sum(F.col("rwa"), 2).alias("total_rwa"),
-    )
-    return AggregatedOutput(
-        results=results,
-        summary_by_class=by_class,
-        summary_by_approach=by_approach,
-        portfolio=portfolio,
-        errors=errors,
-        upstream_errors=upstream_errors,
-    )
+    return results.agg(*figures) if key is None else results.groupBy(key).agg(*figures)

@@ -21,6 +21,9 @@ instead of silently re-inflating cost or reshaping output
 - ``session.build_session`` sizes Spark's generated-class cache above the
   engine's working set; at the default 100 entries every repeated run
   evicts its own classes and Janino compiles them all again.
+- Input validation evaluates its check registry in one pass per table, so
+  sealing the error channel runs a handful of Spark jobs, not one scan
+  per check.
 """
 
 from __future__ import annotations
@@ -166,3 +169,23 @@ def test_codegen_cache_holds_the_query_working_set(spark, sf_dir):
             registry[name].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         compiles.append(codegen_compiles(spark) - before)
     assert compiles[2] <= 5, compiles
+
+
+def test_sealed_error_edge_job_count(spark, sf_dir, tmp_path):
+    """Sealing the `errors` edge of the star book runs at most 8 Spark jobs:
+    one shuffle for every registry check, the broadcasts its scans and the
+    counterparty existence join need, and the DQ013 walk's. Validation
+    built as one scan per check, folded by one `unionByName` per check, ran
+    14 jobs here."""
+    from rwa_calculator_spark.api import CreditRiskCalc
+    from rwa_calculator_spark.plans import rwa
+
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup("edge:errors"))
+    bundle = rwa._star_bundle(spark, sf_dir, irb=True)
+    CreditRiskCalc(spark, bundle, cache_dir=str(tmp_path)).calculate()
+    bus.waitUntilEmpty()
+    jobs = set(tracker.getJobIdsForGroup("edge:errors")) - before
+    assert 0 < len(jobs) <= 8, sorted(jobs)
