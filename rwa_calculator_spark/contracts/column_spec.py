@@ -9,8 +9,12 @@ data/column_spec.py:33-126, contracts/edges.py) on Spark DataFrames:
 - `conform` projects to exactly the contract's columns (dropping scratch),
   which in Spark doubles as column pruning for everything upstream.
 
-All of this is pure `select`/`withColumn` — Catalyst folds the literals, so
-a contract costs nothing at 100 TB.
+All of this is pure `select` — Catalyst folds the literals, so a contract
+costs nothing at 100 TB. The projection is rendered as SQL text and
+applied as one `selectExpr`: building it from Column objects costs three
+to four py4j round trips per column (lit, cast, alias, list element),
+which on a ~200-carrier edge is hundreds of driver calls per use
+(`operators/localrel.py` applies the same idea to literal tables).
 """
 
 from __future__ import annotations
@@ -19,8 +23,9 @@ from dataclasses import dataclass
 from typing import Any, Mapping
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from rwa_calculator_spark.operators.localrel import _sql_literal
 
 
 @dataclass(frozen=True)
@@ -30,22 +35,42 @@ class ColumnSpec:
     required: bool = False
 
 
+def _quote(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _cast_sql(name: str, spec: ColumnSpec, present: bool) -> str:
+    value = _quote(name) if present else _sql_literal(spec.default)
+    if value is None:
+        raise ValueError(f"default of {name!r} has no SQL literal form: {spec.default!r}")
+    return f"CAST({value} AS {spec.dtype.simpleString()}) AS {_quote(name)}"
+
+
 def ensure_columns(df: DataFrame, specs: Mapping[str, ColumnSpec]) -> DataFrame:
     """Cast present columns; inject absent optional columns with their typed
     default; raise on absent required columns (reference
-    data/column_spec.py:51-67 semantics)."""
-    present = set(df.columns)
+    data/column_spec.py:51-67 semantics). Contract columns come first, in
+    contract order, then the frame's other columns."""
+    present = df.columns
     missing_required = [c for c, s in specs.items() if s.required and c not in present]
     if missing_required:
         raise ValueError(f"missing required columns: {missing_required}")
-    cols = []
-    for name, spec in specs.items():
-        if name in present:
-            cols.append(F.col(name).cast(spec.dtype).alias(name))
-        else:
-            cols.append(F.lit(spec.default).cast(spec.dtype).alias(name))
-    passthrough = [c for c in df.columns if c not in specs]
-    return df.select(*cols, *passthrough)
+    exprs = [_cast_sql(name, spec, name in present) for name, spec in specs.items()]
+    passthrough = [c for c in present if c not in specs]
+    if len(passthrough) == len(present):
+        return df.selectExpr(*exprs, "*")
+    return df.selectExpr(*exprs, *map(_quote, passthrough))
+
+
+def fill_absent(
+    df: DataFrame, specs: Mapping[str, ColumnSpec]
+) -> tuple[DataFrame, frozenset[str]]:
+    """Inject every absent spec column as its typed default and leave the
+    present ones untouched (no cast). Returns the frame and the set of
+    columns the input carried."""
+    carried = frozenset(df.columns)
+    absent = {n: s for n, s in specs.items() if n not in carried}
+    return (ensure_columns(df, absent) if absent else df), carried
 
 
 def conform(df: DataFrame, specs: Mapping[str, ColumnSpec]) -> DataFrame:

@@ -10,8 +10,12 @@ extracts, whatever their vendor headers, land in the engine with one
 meaning).
 
 Sealing is OPT-IN at the bundle boundary: `seal_bundle(raw)` conforms every
-present frame and leaves the engine's column-gated plans untouched for
-callers that build frames programmatically (tests, the driver queries).
+present frame; callers that build frames programmatically (tests, the
+driver queries) skip it. Inside the engine, the calculator input edge is
+declared once (`CALC_EDGE`, below): every calculator branch conforms its
+input to it, so an absent optional carrier arrives as its typed default,
+and only the few carriers whose absence selects a cheaper plan (a skipped
+join or array fold) are tested, against the set the input really carried.
 Cost at 100 TB: pure `select` + literal injection — Catalyst folds it into
 the scan projection; no shuffle, no UDF.
 """
@@ -20,18 +24,26 @@ from __future__ import annotations
 
 import re
 from dataclasses import replace as dc_replace
-from typing import Mapping
+from typing import TYPE_CHECKING, Mapping
 
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from rwa_calculator_spark.contracts.column_spec import ColumnSpec, ensure_columns
-from rwa_calculator_spark.engine.bundles import RawBundle
+from rwa_calculator_spark.contracts.column_spec import (
+    ColumnSpec,
+    ensure_columns,
+    fill_absent,
+)
+
+if TYPE_CHECKING:  # the engine package imports this module's CALC_EDGE
+    from rwa_calculator_spark.engine.bundles import RawBundle
 
 _S = T.StringType()
 _D = T.DoubleType()
 _I = T.IntegerType()
 _B = T.BooleanType()
+_DT = T.DateType()
+_AS = T.ArrayType(T.StringType())
 
 
 def _req(dtype) -> ColumnSpec:
@@ -320,6 +332,326 @@ INPUT_SCHEMAS: dict[str, Mapping[str, ColumnSpec]] = {
         "days_late": ColumnSpec(_I, 0),
     },
 }
+
+
+def _nulls(dtype: T.DataType, *names: str) -> dict[str, ColumnSpec]:
+    return {n: ColumnSpec(dtype) for n in names}
+
+
+def _falses(*names: str) -> dict[str, ColumnSpec]:
+    return {n: ColumnSpec(_B, False) for n in names}
+
+
+#: The CRM stage's multi-guarantee stack: one priority-ordered struct per
+#: guarantee leg (tranche slice, SA weight, modelled guarantor carriers).
+MG_STACK = T.ArrayType(
+    T.StructType(
+        [
+            T.StructField("slice", _D),
+            T.StructField("rw", _D),
+            T.StructField("pd", _D),
+            T.StructField("sen", _S),
+            T.StructField("fse", _B),
+            T.StructField("gclass", _S),
+            T.StructField("gcqs", _I),
+        ]
+    )
+)
+
+#: The calculator input edge: every optional carrier a calculator branch
+#: (SA, IRB, SEC-SA, slotting, equity, and the CIU/settlement ledger) reads
+#: and whose absent path is a default, with its dtype and that default.
+#: `conform_calc_edge` fills the absent ones in one projection, so branch
+#: code reads them directly. The carriers marked GATE select a cheaper plan
+#: when the input never carried them (no join, no array fold, no split);
+#: absent and default price the same there, and the calculators test them
+#: against the set the input really carried only to skip the build.
+CALC_EDGE: Mapping[str, ColumnSpec] = {
+    # CRM components; the branches read them as coalesce(c, 0.0)
+    **_nulls(
+        _D,
+        "provision_allocated",
+        "collateral_value",
+        "g_coverage",
+        "collateral_value_gross",
+        "haircut_quality",
+        "haircut_fx",
+        "haircut_maturity_mismatch",
+        "on_bs_netting_amount",
+    ),
+    "class_reason": ColumnSpec(_S, "CLS_BRANCH_DIRECT"),
+    # ledger provenance carriers: passed through as supplied, or written
+    # by the branch that computes them; null otherwise
+    **_nulls(_I, "hierarchy_depth", "facility_hierarchy_depth", "external_cqs", "sa_cqs"),
+    **_nulls(
+        _S,
+        "country",
+        "g_class",
+        "model_id",
+        "slot_category",
+        "lending_group_reference",
+        "retail_subtype",
+        "exposure_type",
+        "currency",
+        "parent_counterparty_reference",
+        "parent_facility_reference",
+        "root_facility_reference",
+        "collateral_source_level",
+        "collateral_inherited_from",
+        "collateral_allocation_method",
+        "guarantee_source_level",
+        "guarantee_inherited_from",
+        "provision_source_level",
+        "provision_inherited_from",
+        "crm_allocation_notes",
+        "ccf_source",
+        "guarantor_reference",
+        "approach_reason",
+        "book_code",
+        "approach_permitted",
+        "borrower_income_currency",
+        "netting_agreement_reference",
+        "sa_rating_source",
+        "sa_rw_adjustment_reason",
+        "sa_rw_regulatory_ref",
+        "protection_type",
+        "guarantee_status",
+        "guarantee_method_used",
+        "pre_crm_counterparty_reference",
+        "pre_crm_exposure_class",
+        "post_crm_counterparty_guaranteed",
+        "post_crm_exposure_class_guaranteed",
+        "ead_calculation_method",
+        "irb_lgd_type",
+        "property_type",
+        "ltv_band",
+        "sl_type",
+        "sl_project_phase",
+        "equity_type",
+        "equity_transitional_approach",
+    ),
+    **_nulls(
+        _D,
+        "ccf",
+        "fx_rate",
+        "group_exposure",
+        "sme_supporting_factor",
+        "infra_supporting_factor",
+        "supporting_factor_benefit",
+        "internal_pd",
+        "ava_amount",
+        "other_own_funds_reductions",
+        "collateral_financial_value",
+        "collateral_cash_value",
+        "collateral_re_value",
+        "collateral_receivables_value",
+        "collateral_other_physical_value",
+        "guarantee_fx_haircut",
+        "guarantee_restructuring_haircut",
+        "guarantor_risk_weight",
+        "guaranteed_portion",
+        "unguaranteed_portion",
+        "pre_crm_risk_weight",
+        "guarantee_benefit_rw",
+        "guarantee_benefit",
+        "scra_provision_amount",
+        "gcra_provision_amount",
+        "provision_capped_amount",
+        "converted_undrawn",
+        "gross_ead",
+        "ead_after_collateral",
+        "irb_pd_original",
+        "irb_pd_floor",
+        "irb_pd_floored",
+        "irb_lgd_original",
+        "irb_lgd_floor",
+        "irb_lgd_floored",
+        "irb_maturity_m",
+        "irb_correlation_r",
+        "irb_maturity_adj_b",
+        "irb_capital_k",
+        "irb_risk_weight",
+        "sa_base_risk_weight",
+        "sa_final_risk_weight",
+        "sa_rw_adjustment",
+        "risk_weight_pre_currency_mismatch",
+        "property_ltv",
+        "mortgage_risk_weight",
+        "rwa_pre_adjustments",
+        "mortgage_rw_floor_adjustment",
+        "post_model_adjustment_rwa",
+        "unrecognised_exposure_adjustment",
+        "el_pre_adjustment",
+        "post_model_adjustment_el",
+        "el_after_adjustment",
+        "fcsm_collateral_value",
+        "fcsm_collateral_rw",
+        "pre_fcsm_risk_weight",
+        "sl_risk_weight",
+        "equity_risk_weight",
+        "equity_transitional_rw",
+        "double_default_unfunded_protection",
+        "irb_lgd_double_default",
+    ),
+    **_nulls(
+        _B,
+        "retail_threshold_applied",
+        "is_commercial_re",
+        "is_defaulted",
+        "counterparty_has_parent",
+        "retail_eligible_via_group",
+        "exposure_has_parent",
+        "is_guaranteed",
+        "currency_mismatch_multiplier_applied",
+        "is_income_producing",
+        "is_adc",
+        "is_qualifying_re",
+        "materially_dependent_on_property",
+        "equity_higher_risk",
+        "is_double_default_eligible",
+    ),
+    **_nulls(
+        _AS,
+        "ancestor_facilities",
+        "facility_hierarchy_path",
+        "data_quality_flags",
+        "calculation_warnings",
+        "collateral_references",
+        "collateral_types",
+        "provision_references",
+    ),
+    "original_maturity_date": ColumnSpec(_DT),
+    # -- SA / IRB / slotting inputs read as values --------------------------
+    **_falses(
+        "is_qrre_transactor",
+        "is_junior_lien",
+        "is_presold",
+        "is_other_re",
+        "is_sme",
+        "qualifies_as_retail",
+        "is_social_housing",
+        "is_short_term_trade_lc",
+        "is_client_cleared",
+        "is_qccp",
+        "is_hedged",
+        "is_revolving",
+        "is_payroll_loan",
+        "intragroup_zero_rw_eligible",
+        "is_financial_sector_entity",
+        "has_one_day_maturity_floor",
+        "is_large_financial",
+        "is_hvcre",
+        "is_infrastructure",
+        "guarantor_is_fse",
+        "is_sts",
+    ),
+    # null-permissive flags (absent = no negative determination)
+    **_nulls(_B, "external_rating_is_issue_specific", "pse_jurisdiction_equivalent"),
+    **_nulls(
+        _D,
+        "prior_charge_ltv",
+        "facility_limit",
+        "due_diligence_override_rw",
+        "residual_maturity_years",
+        "el_be",
+        "w_delinquent",
+    ),
+    "qualifying_property_count": ColumnSpec(_I),
+    **_nulls(
+        _S,
+        "entity_type",
+        "group_reference",
+        "source_exposure_reference",
+        "parent_exposure_reference",
+        "guarantee_reference",
+        "seniority",
+        "purchased_receivables_subtype",
+        "irb_subapproach",
+        "guarantor_seniority",
+        "ppu_reason",
+        "permission_diagnostic",
+        "external_rating_agency",
+        "g_currency",
+        "funding_currency",
+    ),
+    "facility_termination_date": ColumnSpec(_DT),
+    "guarantor_references": ColumnSpec(_AS),
+    # -- GATE carriers: absent selects a cheaper plan ----------------------
+    # covered bonds (+ the bond's own CQS, emitted alongside by hierarchy)
+    "is_covered_bond": ColumnSpec(_B, False),
+    "cb_cqs": ColumnSpec(_I),
+    # sovereign-derived institution / PSE / RGLA ladders, ECA MEIP, SCRA
+    "sovereign_cqs": ColumnSpec(_I),
+    "eca_meip_score": ColumnSpec(_I),
+    "scra_grade": ColumnSpec(_S),
+    # short-term ECAI tables (original maturity also feeds value reads)
+    "has_short_term_ecai": ColumnSpec(_B, False),
+    "original_maturity_years": ColumnSpec(_D),
+    # Art.123B hedge waiver: no ratio, no coverage test
+    "hedge_coverage_ratio": ColumnSpec(_D),
+    # EU-domestic guarantor ladder
+    "g_country": ColumnSpec(_S),
+    # the CRM stage's multi-guarantee stack
+    "_mg": ColumnSpec(MG_STACK),
+    # supporting factors: no revenue carrier prices every factor at 1.0
+    # (the IRB SME correlation adjustment reads the 0.0 default)
+    "annual_revenue": ColumnSpec(_D, 0.0),
+    # SEC-SA tranche grain / SEC-IRBA pool parameters
+    **_nulls(_D, "attachment", "detachment", "k_irb", "pool_n", "pool_lgd", "pool_maturity"),
+    # -- equity holdings ----------------------------------------------------
+    **_falses(
+        "is_diversified_pe",
+        "has_default_definition_info",
+        "is_speculative",
+        "is_explicitly_hedged",
+    ),
+    "business_age_years": ColumnSpec(_D),
+    "equity_subtype": ColumnSpec(_S),
+    # GATE: the PD/LGD election splits the branch; net-short netting needs
+    # both the signed position and its issuer
+    "use_pd_lgd": ColumnSpec(_B, False),
+    "position_value": ColumnSpec(_D),
+    "issuer_reference": ColumnSpec(_S),
+}
+
+
+#: Optional calculator carriers with NO default: an absent one selects a
+#: different derivation than any value it could carry, so it is never
+#: filled, and the calculators read it only where `carried` holds it.
+#: Declared here for its dtype.
+CALC_EDGE_GATES: Mapping[str, T.DataType] = {
+    # B3.1 RE-LTV bands: an RE row with a null LTV still seals its
+    # Art.124A qualification carriers, an absent column seals null
+    "ltv": _D,
+    # Art.122(6)/(8): an absent grade is not "not investment grade"
+    "is_investment_grade": _B,
+    # the declared '% guaranteed'; absent, the coverage carrier reports
+    # the post-haircut figure
+    "g_coverage_declared": _D,
+    # the IRB guarantor-PD Vasicek leg: under CRR it seals the Art.202
+    # double-default eligibility (false) that an absent column leaves null
+    "guarantor_pd": _D,
+    # other funded protection: the CRM stage emits the three channels
+    # together; they seal the FCSM decomposition carriers
+    **{c: _D for c in ("li_value", "li_rw", "tpd_value", "tpd_rw", "fcsm_value", "fcsm_rw")},
+    # the SME factor's group aggregate: absent prices the factor at 1.0,
+    # a null aggregate at the tier-1 factor
+    "group_drawn": _D,
+    # model-permission routing (the three grants are emitted together);
+    # absent, approach_permitted comes from has_irb_permission
+    **{c: _B for c in ("model_airb_permitted", "model_firb_permitted", "model_slotting_permitted")},
+}
+
+
+def conform_calc_edge(
+    df: DataFrame, names: tuple[str, ...] | None = None
+) -> tuple[DataFrame, frozenset[str]]:
+    """Fill every absent `CALC_EDGE` carrier (or the `names` subset) with
+    its typed default in one projection. Returns the conformed frame and
+    the columns the input really carried — the only presence test the
+    calculators make."""
+    specs = CALC_EDGE if names is None else {n: CALC_EDGE[n] for n in names}
+    return fill_absent(df, specs)
 
 #: Vendor-header → canonical-name translation (ref engine/loader.py alias
 #: translation). Keys are POST-normalisation (lowercased, separators

@@ -114,13 +114,14 @@ def run_pipeline(raw: RawBundle, config: PipelineConfig | None = None) -> Aggreg
     # --- validation: non-finite scrub + orphan FKs (ref pipeline.py:255-269
     # DQ011, contracts/validation.py anti-join orphans) --------------------
     all_errors = None
+    walk = None  # the org walk, built once: by validation, else by hierarchy
     if config.validation != "off":
         from rwa_calculator_spark.engine.stages.validate import (
             PipelineHalt,
             run_validation,
         )
 
-        raw, all_errors = run_validation(raw)
+        raw, all_errors, walk = run_validation(raw)
         if config.validation == "immediate":
             first = all_errors.limit(1).collect()
             if first:
@@ -221,7 +222,7 @@ def run_pipeline(raw: RawBundle, config: PipelineConfig | None = None) -> Aggreg
                 pass  # never allowed to perturb a run
 
     _t = _time.perf_counter()
-    h = run_hierarchy(raw, config.pack, extra_exposures=extra or None)
+    h = run_hierarchy(raw, config.pack, extra_exposures=extra or None, org_walk=walk)
     _mark("hierarchy", _t)
     if config.audit_sink is not None:
         config.audit_sink("unified_exposures", h.exposures)

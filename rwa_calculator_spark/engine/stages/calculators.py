@@ -17,6 +17,24 @@ Every branch emits the same audit-ledger columns (_RESULT_COLS — the
 reference's 162-column CALCULATION_OUTPUT_SCHEMA distilled to its
 load-bearing component buckets: EAD pre/post CRM, provisions, collateral,
 guarantee coverage, RW provenance, EL decomposition).
+
+Input contract (ref contracts/edges.py EdgeContract.conform): every branch
+entry conforms its input to `contracts.schemas.CALC_EDGE`, which declares
+each optional carrier a calculator reads with its dtype and default. One
+projection fills the absent carriers with typed literals and reports the
+set the input really carried. Two kinds of carrier follow from that:
+
+- fills: a carrier whose absent path is its default is read directly
+  (``F.col(x)``); Catalyst folds the literal wherever the input lacked it.
+- gates: a carrier whose absence selects a cheaper plan (a broadcast join
+  not built, an array fold not run: covered bonds, the SCRA, sovereign-
+  derived and short-term tables, the ``_mg`` stack, SEC tranche grain) is
+  tested against that ``carried`` set, passed down explicitly. Absent and
+  default give the same ledger there too; the gate only saves the build.
+  The carriers of `CALC_EDGE_GATES` (RE-LTV bands, the guarantor-PD
+  Vasicek leg, the other-funded-protection channels, model-permission
+  routing, ...) have no default at all: they are never filled and are
+  read only where ``carried`` holds them.
 """
 
 from __future__ import annotations
@@ -25,6 +43,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from rwa_calculator_spark.contracts.schemas import conform_calc_edge
 from rwa_calculator_spark.engine.bundles import CalcOutput, CRMOutput
 from rwa_calculator_spark.engine.rulepack import RulePack
 from rwa_calculator_spark.functions.irb import (
@@ -41,20 +60,6 @@ from rwa_calculator_spark.functions.irb import (
 from rwa_calculator_spark.functions.stats import with_normal_ppf
 from rwa_calculator_spark.operators.dictionary import dictionary_apply
 
-
-def _colset(df: DataFrame) -> frozenset:
-    """ONE schema fetch for a stage's carrier-presence probes.
-
-    The first ``df.columns`` access on each DataFrame object is a py4j
-    schema call (~10-15 ms on a ~160-column frame: the full schema JSON
-    crosses the gateway); pyspark caches it per object, but every
-    withColumns/select returns a new one. The calculator stages probe
-    optional INPUT carriers ~50 times per branch across such rewrites, so
-    they snapshot once at entry. Only valid while the probed names are
-    input-level (the stage itself never adds or drops a probed name
-    between snapshot and probe) — stage-internal columns (_dd_elig) are
-    tracked with local flags instead."""
-    return frozenset(df.columns)
 
 # The audit ledger every calculator branch emits (ref CALCULATION_OUTPUT_
 # SCHEMA, data/schemas.py:2877 — distilled). Asserted by tests/test_contracts.
@@ -399,356 +404,151 @@ _RISK_TYPE_BY_ETYPE = {
 }
 
 
-def _provenance_cols(exp: DataFrame, default_risk_type: str = "CREDIT") -> DataFrame:
-    """Ensure the round-4 provenance carriers exist on a branch's frame.
+def _provenance(carried: frozenset, default_risk_type: str) -> dict[str, Column]:
+    """The provenance carriers a conformed branch frame derives from its
+    other columns (the null-default ones arrive from CALC_EDGE).
 
     `risk_type` derives from exposure_type where the unified ledger carries
     one (CCR/SFT synthetic netting-set rows, securitisation pools); branches
     built outside the hierarchy union (equity, CIU, settlement) pass their
-    own default. `class_reason` defaults to the branch marker when the frame
-    never went through run_classify."""
-    # ~115 membership checks: probe a set, not the column list that
-    # `df.columns` rebuilds on every access
-    cols = set(exp.columns)
-    # ONE batched withColumns call: a per-column withColumn chain copies
-    # and re-analyses the (wide) plan once per column — at 70+ fill
-    # candidates the driver-side analysis cost dominates small-SF runs
-    _fill: dict[str, Column] = {}
-    if "risk_type" not in cols:
-        if "exposure_type" in cols:
-            rt = F.lit(default_risk_type)
-            for etype, label in _RISK_TYPE_BY_ETYPE.items():
-                rt = F.when(F.col("exposure_type") == etype, label).otherwise(rt)
-            _fill["risk_type"] = rt
-        else:
-            _fill["risk_type"] = F.lit(default_risk_type)
-    if "class_reason" not in cols:
-        _fill["class_reason"] = F.lit("CLS_BRANCH_DIRECT")
-    if "country" not in cols:
-        _fill["country"] = F.lit(None).cast("string")
-    if "g_class" not in cols:
-        _fill["g_class"] = F.lit(None).cast("string")
-    if "model_id" not in cols:
-        _fill["model_id"] = F.lit(None).cast("string")
-    if "fx_rate" not in cols:
-        _fill["fx_rate"] = F.lit(None).cast("double")
-    if "slot_category" not in cols:
-        _fill["slot_category"] = F.lit(None).cast("string")
-    # round-5 carriers: copy from the stage column where the frame went
-    # through the hierarchy/classify/crm stages, else honest null
-    if "ultimate_parent_reference" not in cols:
-        _fill["ultimate_parent_reference"] = (
-            F.col("group_reference")
-            if "group_reference" in cols
-            else F.lit(None).cast("string")
-        )
-    for name, dtype in (
-        ("hierarchy_depth", "int"),
-        ("lending_group_reference", "string"),
-        ("group_exposure", "double"),
-        ("retail_threshold_applied", "boolean"),
-        ("retail_subtype", "string"),
-        ("is_commercial_re", "boolean"),
-        ("is_defaulted", "boolean"),
-        ("exposure_type", "string"),
-        ("currency", "string"),
-        ("parent_counterparty_reference", "string"),
-        ("counterparty_has_parent", "boolean"),
-        ("retail_eligible_via_group", "boolean"),
-        ("exposure_has_parent", "boolean"),
-        ("parent_facility_reference", "string"),
-        ("ancestor_facilities", "array<string>"),
-        ("root_facility_reference", "string"),
-        ("facility_hierarchy_depth", "int"),
-        ("facility_hierarchy_path", "array<string>"),
-        ("collateral_source_level", "string"),
-        ("collateral_inherited_from", "string"),
-        ("collateral_allocation_method", "string"),
-        ("guarantee_source_level", "string"),
-        ("guarantee_inherited_from", "string"),
-        ("provision_source_level", "string"),
-        ("provision_inherited_from", "string"),
-        ("crm_allocation_notes", "string"),
-        ("data_quality_flags", "array<string>"),
-        ("calculation_warnings", "array<string>"),
-        ("sme_supporting_factor", "double"),
-        ("infra_supporting_factor", "double"),
-        ("supporting_factor_benefit", "double"),
-        ("ccf_source", "string"),
-        ("guarantor_reference", "string"),
-        ("approach_reason", "string"),
-        ("book_code", "string"),
-        ("original_maturity_date", "date"),
-        ("approach_permitted", "string"),
-        ("borrower_income_currency", "string"),
-        ("netting_agreement_reference", "string"),
-        ("internal_pd", "double"),
-        ("external_cqs", "int"),
-        ("ava_amount", "double"),
-        ("other_own_funds_reductions", "double"),
-        ("sa_rating_source", "string"),
-        ("sa_rw_adjustment_reason", "string"),
-        ("sa_rw_regulatory_ref", "string"),
-        ("collateral_references", "array<string>"),
-        ("collateral_types", "array<string>"),
-        ("collateral_financial_value", "double"),
-        ("collateral_cash_value", "double"),
-        ("collateral_re_value", "double"),
-        ("collateral_receivables_value", "double"),
-        ("collateral_other_physical_value", "double"),
-        ("protection_type", "string"),
-        ("guarantee_fx_haircut", "double"),
-        ("guarantee_restructuring_haircut", "double"),
-        ("guarantor_risk_weight", "double"),
-        ("is_guaranteed", "boolean"),
-        ("guaranteed_portion", "double"),
-        ("unguaranteed_portion", "double"),
-        ("pre_crm_risk_weight", "double"),
-        ("guarantee_benefit_rw", "double"),
-        ("guarantee_benefit", "double"),
-        ("guarantee_status", "string"),
-        ("guarantee_method_used", "string"),
-        ("pre_crm_counterparty_reference", "string"),
-        ("pre_crm_exposure_class", "string"),
-        ("post_crm_counterparty_guaranteed", "string"),
-        ("post_crm_exposure_class_guaranteed", "string"),
-        ("provision_references", "array<string>"),
-        ("scra_provision_amount", "double"),
-        ("gcra_provision_amount", "double"),
-        ("provision_capped_amount", "double"),
-        ("converted_undrawn", "double"),
-        ("gross_ead", "double"),
-        ("ead_after_collateral", "double"),
-        ("ead_calculation_method", "string"),
-        ("irb_pd_original", "double"),
-        ("irb_pd_floor", "double"),
-        ("irb_pd_floored", "double"),
-        ("irb_lgd_type", "string"),
-        ("irb_lgd_original", "double"),
-        ("irb_lgd_floor", "double"),
-        ("irb_lgd_floored", "double"),
-        ("irb_maturity_m", "double"),
-        ("irb_correlation_r", "double"),
-        ("irb_maturity_adj_b", "double"),
-        ("irb_capital_k", "double"),
-        ("irb_risk_weight", "double"),
-        ("sa_cqs", "int"),
-        ("sa_base_risk_weight", "double"),
-        ("sa_final_risk_weight", "double"),
-        ("sa_rw_adjustment", "double"),
-        ("risk_weight_pre_currency_mismatch", "double"),
-        ("currency_mismatch_multiplier_applied", "boolean"),
-        ("property_type", "string"),
-        ("property_ltv", "double"),
-        ("ltv_band", "string"),
-        ("is_income_producing", "boolean"),
-        ("is_adc", "boolean"),
-        ("is_qualifying_re", "boolean"),
-        ("materially_dependent_on_property", "boolean"),
-        ("mortgage_risk_weight", "double"),
-        ("rwa_pre_adjustments", "double"),
-        ("mortgage_rw_floor_adjustment", "double"),
-        ("post_model_adjustment_rwa", "double"),
-        ("unrecognised_exposure_adjustment", "double"),
-        ("el_pre_adjustment", "double"),
-        ("post_model_adjustment_el", "double"),
-        ("el_after_adjustment", "double"),
-        ("fcsm_collateral_value", "double"),
-        ("fcsm_collateral_rw", "double"),
-        ("pre_fcsm_risk_weight", "double"),
-        ("sl_type", "string"),
-        ("sl_project_phase", "string"),
-        ("sl_risk_weight", "double"),
-        ("equity_type", "string"),
-        ("equity_risk_weight", "double"),
-        ("equity_higher_risk", "boolean"),
-        ("equity_transitional_approach", "string"),
-        ("equity_transitional_rw", "double"),
-        ("is_double_default_eligible", "boolean"),
-        ("double_default_unfunded_protection", "double"),
-        ("irb_lgd_double_default", "double"),
-    ):
-        if name not in cols:
-            _fill[name] = F.lit(None).cast(dtype)
-    if _fill:
-        exp = exp.withColumns(_fill)
-        cols |= _fill.keys()
-    # identity fills, one more batched withColumns (same plan-copy
-    # rationale as the null fill above):
+    own default."""
+    out: dict[str, Column] = {}
+    if "risk_type" not in carried:
+        rt = F.lit(default_risk_type)
+        for etype, label in _RISK_TYPE_BY_ETYPE.items():
+            rt = F.when(F.col("exposure_type") == etype, label).otherwise(rt)
+        out["risk_type"] = rt
+    # round-5 carrier: the resolved group apex where the frame went through
+    # the hierarchy stage, else null
+    if "ultimate_parent_reference" not in carried:
+        out["ultimate_parent_reference"] = F.col("group_reference")
+    # identity fills:
     # - source_exposure_reference: a never-split row is its own source
     # - facility-structure identities for bundles with no facility data
     #   (no parent, depth 0, own 1-element path; ref schemas.py:2911-2915)
-    # - guarantee_references: 0/1-element list from the crm stage's scalar
-    #   (single first-wins guarantee per exposure — recorded narrowing)
-    # - guarantee_coverage_pct carries the DECLARED '% guaranteed' (ref
-    #   contract); the Art.233(3) post-haircut figure seals separately as
-    #   guarantee_effective_coverage_pct
-    # - final_ead: the figure RWA actually priced on
-    _ident: dict[str, Column] = {}
-    has_ref = "exposure_reference" in cols
-    if has_ref:
-        _ident["source_exposure_reference"] = F.coalesce(
-            *(
-                [F.col("source_exposure_reference")]
-                if "source_exposure_reference" in cols
-                else []
-            ),
-            F.col("exposure_reference"),
+    # - parent_exposure_reference (ref :2885 "original exposure before
+    #   multi-guarantor split"): this engine never row-splits on guarantors
+    #   (portions stay on-row), so the parent IS the row's own reference
+    out["exposure_has_parent"] = F.coalesce("exposure_has_parent", F.lit(False))
+    out["facility_hierarchy_depth"] = F.coalesce("facility_hierarchy_depth", F.lit(0))
+    if "exposure_reference" in carried:
+        ref = F.col("exposure_reference")
+        out["source_exposure_reference"] = F.coalesce("source_exposure_reference", ref)
+        out["facility_hierarchy_path"] = F.coalesce(
+            "facility_hierarchy_path", F.array(ref)
         )
-    elif "source_exposure_reference" not in cols:
-        _ident["source_exposure_reference"] = F.lit(None).cast("string")
-    _ident["exposure_has_parent"] = F.coalesce(
-        "exposure_has_parent", F.lit(False)
-    )
-    _ident["facility_hierarchy_depth"] = F.coalesce(
-        "facility_hierarchy_depth", F.lit(0)
-    )
-    if has_ref:
-        _ident["facility_hierarchy_path"] = F.coalesce(
-            "facility_hierarchy_path", F.array(F.col("exposure_reference"))
-        )
-    # parent_exposure_reference (ref :2885 "original exposure before
-    # multi-guarantor split"): this engine never row-splits on guarantors
-    # (portions stay on-row), so the parent IS the row's own reference
-    if has_ref:
-        _ident["parent_exposure_reference"] = F.coalesce(
-            *(
-                [F.col("parent_exposure_reference")]
-                if "parent_exposure_reference" in cols
-                else []
-            ),
-            F.col("exposure_reference"),
-        )
-    elif "parent_exposure_reference" not in cols:
-        _ident["parent_exposure_reference"] = F.lit(None).cast("string")
+        out["parent_exposure_reference"] = F.coalesce("parent_exposure_reference", ref)
     # approach_permitted (ref :2935): the permission grant routing
     # consulted — model-permission grants where that stage ran, else the
     # bundle's blanket has_irb_permission flag
-    if "model_airb_permitted" in cols:
-        _ident["approach_permitted"] = (
+    if "model_airb_permitted" in carried:
+        out["approach_permitted"] = (
             F.when(F.coalesce("model_airb_permitted", F.lit(False)), "AIRB")
             .when(F.coalesce("model_firb_permitted", F.lit(False)), "FIRB")
             .when(F.coalesce("model_slotting_permitted", F.lit(False)), "SLOTTING")
             .otherwise("SA")
         )
-    elif "has_irb_permission" in cols:
-        _ident["approach_permitted"] = F.when(
+    elif "has_irb_permission" in carried:
+        out["approach_permitted"] = F.when(
             F.coalesce("has_irb_permission", F.lit(False)), "AIRB"
         ).otherwise("SA")
-    # guarantor id list (ref :2973 — 0/1-element, same narrowing as
-    # guarantee_references); guarantor_reference was null-filled above
-    _ident["guarantor_references"] = F.coalesce(
-        *(
-            [F.col("guarantor_references")]
-            if "guarantor_references" in cols
-            else []
-        ),
+    # guarantee id lists: the crm stack where present, else a 0/1-element
+    # list from the scalar (single first-wins guarantee — recorded narrowing)
+    out["guarantor_references"] = F.coalesce(
+        F.col("guarantor_references"),
         F.when(
             F.col("guarantor_reference").isNotNull(),
             F.array(F.col("guarantor_reference")),
         ),
     )
-    if "guarantee_references" not in cols:
-        _ident["guarantee_references"] = (
-            F.when(
-                F.col("guarantee_reference").isNotNull(),
-                F.array(F.col("guarantee_reference")),
-            )
-            if "guarantee_reference" in cols
-            else F.lit(None).cast("array<string>")
+    if "guarantee_references" not in carried:
+        out["guarantee_references"] = F.when(
+            F.col("guarantee_reference").isNotNull(),
+            F.array(F.col("guarantee_reference")),
         )
-    if "guarantee_coverage_pct" not in cols:
-        _ident["guarantee_coverage_pct"] = (
-            F.col("g_coverage_declared")
-            if "g_coverage_declared" in cols
-            else (
-                F.col("g_coverage")
-                if "g_coverage" in cols
-                else F.lit(None).cast("double")
-            )
+    # guarantee_coverage_pct carries the DECLARED '% guaranteed' (ref
+    # contract); the Art.233(3) post-haircut figure seals separately as
+    # guarantee_effective_coverage_pct
+    g = F.coalesce("g_coverage", F.lit(0.0))
+    if "guarantee_coverage_pct" not in carried:
+        out["guarantee_coverage_pct"] = (
+            F.col("g_coverage_declared") if "g_coverage_declared" in carried else g
         )
-    if "guarantee_effective_coverage_pct" not in cols:
-        _ident["guarantee_effective_coverage_pct"] = (
-            F.col("g_coverage")
-            if "g_coverage" in cols
-            else F.lit(None).cast("double")
-        )
-    if "final_ead" not in cols:
-        _ident["final_ead"] = (
+    if "guarantee_effective_coverage_pct" not in carried:
+        out["guarantee_effective_coverage_pct"] = g
+    # final_ead: the figure RWA actually priced on
+    if "final_ead" not in carried:
+        out["final_ead"] = (
             F.col("ead_after_crm")
-            if "ead_after_crm" in cols
-            else (
-                F.col("ead") if "ead" in cols else F.lit(None).cast("double")
-            )
+            if "ead_after_crm" in carried
+            else (F.col("ead") if "ead" in carried else F.lit(None).cast("double"))
         )
     # substitution-free branches: the hypothetical equals the actual (only
-    # frames that already carry rwa — SA/IRB set their own upstream)
-    if "rwa_pre_crm_substitution" not in cols and "rwa" in cols:
-        _ident["rwa_pre_crm_substitution"] = F.col("rwa")
-    return exp.withColumns(_ident)
+    # frames that already carry rwa — SA/IRB set their own downstream)
+    if "rwa_pre_crm_substitution" not in carried and "rwa" in carried:
+        out["rwa_pre_crm_substitution"] = F.col("rwa")
+    return out
 
 
-def _param_cols(
-    exp: DataFrame, pd_col=None, lgd_col=None, m_col=None, cols=None
-) -> DataFrame:
-    if cols is None:
-        cols = _colset(exp)
+def _provenance_cols(exp: DataFrame, default_risk_type: str = "CREDIT") -> DataFrame:
+    """Conform a ledger frame built outside the CRM edge (CIU, settlement)
+    to CALC_EDGE and seal its provenance carriers."""
+    exp, carried = conform_calc_edge(exp)
+    return exp.withColumns(_provenance(carried, default_risk_type))
+
+
+# CRM component amounts: zero when the branch input never went through
+# run_crm (equity) or a CRM frame was absent
+_CRM_AMOUNTS = (
+    "provision_allocated",
+    "collateral_value",
+    "g_coverage",
+    "collateral_value_gross",
+    "haircut_quality",
+    "haircut_fx",
+    "haircut_maturity_mismatch",
+    "on_bs_netting_amount",
+)
+
+
+def _calc_entry(
+    exp: DataFrame, default_risk_type: str = "CREDIT"
+) -> tuple[DataFrame, frozenset]:
+    """A calculator branch's entry: conform to CALC_EDGE, zero the CRM
+    amounts and seal the provenance carriers in one more projection.
+    Returns the frame and the columns the input carried."""
+    exp, carried = conform_calc_edge(exp)
+    fills = {c: F.coalesce(c, F.lit(0.0)) for c in _CRM_AMOUNTS}
+    fills.update(_provenance(carried, default_risk_type))
+    return exp.withColumns(fills), carried
+
+
+def _param_cols(exp: DataFrame, pd_col=None, lgd_col=None, m_col=None) -> DataFrame:
+    none = F.lit(None).cast("double")
     return exp.withColumns(
         {
-            "ccf": F.col("ccf").cast("double")
-            if "ccf" in cols
-            else F.lit(None).cast("double"),
-            "pd_used": pd_col if pd_col is not None else F.lit(None).cast("double"),
-            "lgd_used": lgd_col
-            if lgd_col is not None
-            else F.lit(None).cast("double"),
-            "maturity_used": m_col
-            if m_col is not None
-            else F.lit(None).cast("double"),
+            "ccf": F.col("ccf").cast("double"),
+            "pd_used": none if pd_col is None else pd_col,
+            "lgd_used": none if lgd_col is None else lgd_col,
+            "maturity_used": none if m_col is None else m_col,
         }
     )
-
-
-def _crm_carry(exp: DataFrame) -> DataFrame:
-    """Ensure the CRM component columns exist (zero when the branch input
-    never went through run_crm, e.g. equity)."""
-    cols = _colset(exp)
-    exp = exp.withColumns(
-        {
-            c: (F.coalesce(c, F.lit(0.0)) if c in cols else F.lit(0.0))
-            for c in (
-                "provision_allocated",
-                "collateral_value",
-                "g_coverage",
-                "collateral_value_gross",
-                "haircut_quality",
-                "haircut_fx",
-                "haircut_maturity_mismatch",
-                "on_bs_netting_amount",
-            )
-        }
-    )
-    return _provenance_cols(exp)
 
 
 def _el_columns(
-    exp: DataFrame, expected_loss: Column, pool_b_extras: bool = False, cols=None
+    exp: DataFrame, expected_loss: Column, pool_b_extras: bool = False
 ) -> DataFrame:
     """EL + shortfall/excess vs the CRR Art.159(1) Pool B: allocated
-    provisions plus, on the IRB legs only (pool_b_extras=True) and when the
-    loader supplied them, the per-exposure Art.159(1)(c)/(d) components —
-    additional value adjustments (Art.34/105 AVAs) and other own-funds
-    reductions (ref engine/irb/adjustments.py
-    compute_el_shortfall_excess:306-353 — components enter the pool exactly
-    once, at this stage; null inputs contribute 0 to the POOL but stay null
-    on their ledger carriers)."""
+    provisions plus, on the IRB legs only (pool_b_extras=True), the
+    per-exposure Art.159(1)(c)/(d) components — additional value
+    adjustments (Art.34/105 AVAs) and other own-funds reductions (ref
+    engine/irb/adjustments.py compute_el_shortfall_excess:306-353 —
+    components enter the pool exactly once, at this stage; null inputs
+    contribute 0 to the POOL but stay null on their ledger carriers)."""
     pool_b = F.coalesce("provision_allocated", F.lit(0.0))
     if pool_b_extras:
-        if cols is None:
-            cols = _colset(exp)
         for extra in ("ava_amount", "other_own_funds_reductions"):
-            if extra in cols:
-                pool_b = pool_b + F.coalesce(extra, F.lit(0.0))
+            pool_b = pool_b + F.coalesce(extra, F.lit(0.0))
     # shortfall/excess inline the expected_loss expression (identical
     # arithmetic DAG) so all three land in one projection
     return exp.withColumns(
@@ -760,7 +560,7 @@ def _el_columns(
     )
 
 
-def _pd_floor_class_expr(pack: RulePack, df: DataFrame, cols=None) -> Column:
+def _pd_floor_class_expr(pack: RulePack) -> Column:
     """Per-exposure-class IRB PD floor (ref engine/irb/formulas.py
     _pd_floor_expression + rulebook/packs "pd_floors"): under CRR the 0.03%
     floor reaches corporates/institutions (Art.160(1)) and retail
@@ -772,25 +572,11 @@ def _pd_floor_class_expr(pack: RulePack, df: DataFrame, cols=None) -> Column:
     has_transactor_col=False path); unknown classes default to the
     corporate floor (the reference's fill_null('CORPORATE'))."""
     f = pack.table_map("pd_floor_by_class")
-    if cols is None:
-        cols = _colset(df)
-    sub = (
-        F.col("retail_subtype")
-        if "retail_subtype" in cols
-        else F.lit(None).cast("string")
-    )
-    trans = (
-        F.coalesce(F.col("is_qrre_transactor"), F.lit(False))
-        if "is_qrre_transactor" in cols
-        else F.lit(False)
-    )
-    # Art.147(3)/(4)(b): floors key on the IRB-equivalent class where the
-    # caller has routed one (run_irb seals irb_exposure_class)
-    cls = (
-        F.col("irb_exposure_class")
-        if "irb_exposure_class" in cols
-        else F.col("exposure_class")
-    )
+    sub = F.col("retail_subtype")
+    trans = F.coalesce(F.col("is_qrre_transactor"), F.lit(False))
+    # Art.147(3)/(4)(b): floors key on the IRB-equivalent class run_irb
+    # seals before staging the floors
+    cls = F.col("irb_exposure_class")
     is_retail = cls == "retail"
     return (
         F.when(cls == "sovereign", F.lit(f["sovereign"]))
@@ -820,7 +606,7 @@ def _guarantor_pd_floor_expr(pack: RulePack, gclass: Column) -> Column:
     )
 
 
-def _lgd_floor_expr(pack: RulePack, df: DataFrame, cols=None) -> Column:
+def _lgd_floor_expr(pack: RulePack) -> Column:
     """A-IRB LGD input floor (feature-gated; ref engine/irb/formulas.py
     _lgd_floor_expression / _lgd_floor_blended_expression, PS1/26
     Art.161(5) corporate + Art.164(4) retail; CRR returns 0 — no A-IRB
@@ -836,17 +622,8 @@ def _lgd_floor_expr(pack: RulePack, df: DataFrame, cols=None) -> Column:
     if pack.scalar("airb_lgd_floor") < 1.0:
         return F.lit(0.0)
     f = pack.table_map("lgd_floors")
-    have = set(df.columns) if cols is None else cols
-    sub = (
-        F.col("retail_subtype")
-        if "retail_subtype" in have
-        else F.lit(None).cast("string")
-    )
-    cls = (
-        F.col("irb_exposure_class")
-        if "irb_exposure_class" in have
-        else F.col("exposure_class")
-    )
+    sub = F.col("retail_subtype")
+    cls = F.col("irb_exposure_class")
     is_retail = cls == "retail"
     is_mortgage = is_retail & (sub == "mortgage")
     lgdu = (
@@ -855,57 +632,35 @@ def _lgd_floor_expr(pack: RulePack, df: DataFrame, cols=None) -> Column:
         .when(is_retail, F.lit(f["retail_other_unsecured"]))
         .otherwise(F.lit(f["unsecured"]))
     )
-    floor = lgdu
-    if "collateral_value" in have and "collateral_financial_value" in have:
-        fin = F.coalesce("collateral_financial_value", F.lit(0.0))
-        recv = (
-            F.coalesce("collateral_receivables_value", F.lit(0.0))
-            if "collateral_receivables_value" in have
-            else F.lit(0.0)
-        )
-        oth = (
-            F.coalesce("collateral_other_physical_value", F.lit(0.0))
-            if "collateral_other_physical_value" in have
-            else F.lit(0.0)
-        )
-        re_v = (
-            F.coalesce("collateral_re_value", F.lit(0.0))
-            if "collateral_re_value" in have
-            else F.lit(0.0)
-        )
-        tot = F.coalesce("collateral_value", F.lit(0.0)) + re_v
-        raw_basis = (
-            F.coalesce("drawn_amount", F.lit(0.0))
-            + F.coalesce("undrawn_amount", F.lit(0.0))
-            if "drawn_amount" in have
-            else F.coalesce("ead", F.lit(0.0))
-        )
-        # convexity guard: allocations never exceed the basis they were
-        # allocated against, but a basis narrower than total protection
-        # (bundle shapes without drawn/undrawn carriers) must not produce
-        # negative unsecured weight
-        basis = F.greatest(raw_basis, tot)
-        unsec = F.greatest(basis - tot, F.lit(0.0))
-        blend = (
-            unsec * lgdu
-            + fin * F.lit(f["financial_collateral"])
-            + recv * F.lit(f["receivables"])
-            + re_v * F.lit(f["residential_real_estate"])
-            + oth * F.lit(f["other_physical"])
-        ) / F.nullif(basis, F.lit(0.0))
-        floor = F.when(
-            (tot > 0) & ~is_mortgage, F.coalesce(blend, lgdu)
-        ).otherwise(lgdu)
-    if "irb_subapproach" in have:
-        floor = F.when(
-            F.coalesce(F.col("irb_subapproach"), F.lit("airb")) == "firb",
-            F.lit(0.0),
-        ).otherwise(floor)
-    return floor
+    fin = F.coalesce("collateral_financial_value", F.lit(0.0))
+    recv = F.coalesce("collateral_receivables_value", F.lit(0.0))
+    oth = F.coalesce("collateral_other_physical_value", F.lit(0.0))
+    re_v = F.coalesce("collateral_re_value", F.lit(0.0))
+    tot = F.coalesce("collateral_value", F.lit(0.0)) + re_v
+    raw_basis = F.coalesce("drawn_amount", F.lit(0.0)) + F.coalesce(
+        "undrawn_amount", F.lit(0.0)
+    )
+    # convexity guard: allocations never exceed the basis they were
+    # allocated against, but a basis narrower than total protection must
+    # not produce negative unsecured weight
+    basis = F.greatest(raw_basis, tot)
+    unsec = F.greatest(basis - tot, F.lit(0.0))
+    blend = (
+        unsec * lgdu
+        + fin * F.lit(f["financial_collateral"])
+        + recv * F.lit(f["receivables"])
+        + re_v * F.lit(f["residential_real_estate"])
+        + oth * F.lit(f["other_physical"])
+    ) / F.nullif(basis, F.lit(0.0))
+    floor = F.when((tot > 0) & ~is_mortgage, F.coalesce(blend, lgdu)).otherwise(lgdu)
+    return F.when(
+        F.coalesce(F.col("irb_subapproach"), F.lit("airb")) == "firb",
+        F.lit(0.0),
+    ).otherwise(floor)
 
 
 def _irb_guarantee_adjust(
-    perf: DataFrame, pack: RulePack, spark, cols=None
+    perf: DataFrame, pack: RulePack, spark, carried: frozenset
 ) -> tuple[DataFrame, Column]:
     """IRB unfunded-protection treatment (ref engine/irb/guarantee.py
     apply_guarantee_substitution, 902 LoC distilled to its dataflow):
@@ -934,10 +689,6 @@ def _irb_guarantee_adjust(
     Returns the adjusted frame plus the EL expression for _el_columns.
     """
     el_own = F.col("pd_floored") * F.col("lgd_floored") * F.col("ead_after_crm")
-    if cols is None:
-        cols = _colset(perf)
-    if "g_class" not in cols:
-        return perf, el_own
     # rank-1 scalars price the n<=1 books bit-for-bit and feed the
     # priority-1 audit carriers; exposures with 2+ guarantees take the
     # multi-leg stack fold below (every leg through its own channel)
@@ -959,19 +710,11 @@ def _irb_guarantee_adjust(
         F.lit(None).cast("string")
     )
 
-    has_gpd = "guarantor_pd" in cols
+    has_gpd = "guarantor_pd" in carried
     has_dd_carrier = False  # _dd_elig is stage-internal: tracked, not probed
     if has_gpd:
-        sen = (
-            F.coalesce(F.col("guarantor_seniority"), F.lit("senior"))
-            if "guarantor_seniority" in cols
-            else F.lit("senior")
-        )
-        fse = (
-            F.coalesce(F.col("guarantor_is_fse"), F.lit(False))
-            if "guarantor_is_fse" in cols
-            else F.lit(False)
-        )
+        sen = F.coalesce(F.col("guarantor_seniority"), F.lit("senior"))
+        fse = F.coalesce(F.col("guarantor_is_fse"), F.lit(False))
         perf = perf.withColumns(
             {
                 "_pd_g_fl": F.greatest(
@@ -1001,11 +744,7 @@ def _irb_guarantee_adjust(
             method
         )
         if pack.scalar("double_default_available") >= 1.0:
-            is_airb = (
-                F.coalesce(F.col("irb_subapproach"), F.lit("")) == "airb"
-                if "irb_subapproach" in cols
-                else F.lit(False)
-            )
+            is_airb = F.coalesce(F.col("irb_subapproach"), F.lit("")) == "airb"
             elig_g_type = F.coalesce(F.col("g_class"), F.lit("")).isin(
                 "institution", "sovereign", "mdb"
             ) | (
@@ -1061,7 +800,7 @@ def _irb_guarantee_adjust(
     # carriers (guarantor_risk_weight, the method enums, the DD block)
     # keep describing the PRIORITY-1 leg — the stack's pricing is total,
     # its audit detail per-leg lives in guarantee_references order.
-    has_mg = "_mg" in cols
+    has_mg = "_mg" in carried
     if has_mg:
         from rwa_calculator_spark.functions.irb import correlation_v
         from rwa_calculator_spark.functions.jvm_kernel import (
@@ -1083,11 +822,7 @@ def _irb_guarantee_adjust(
         _is_multi = F.size(_mg_arr) > 1
         _own0 = F.col("risk_weight")
         _kern = ensure_jvm_kernel(spark)
-        _row_airb = (
-            F.coalesce(F.col("irb_subapproach"), F.lit("")) == "airb"
-            if "irb_subapproach" in cols
-            else F.lit(False)
-        )
+        _row_airb = F.coalesce(F.col("irb_subapproach"), F.lit("")) == "airb"
         _dd_pack = pack.scalar("double_default_available") >= 1.0
 
         def _leg_params(x):
@@ -1296,10 +1031,7 @@ def _irb_guarantee_adjust(
             "pre_crm_counterparty_reference": F.col("counterparty_reference"),
             "pre_crm_exposure_class": F.col("exposure_class"),
             "post_crm_counterparty_guaranteed": F.when(
-                g > 0,
-                F.col("guarantor_reference")
-                if "guarantor_reference" in cols
-                else F.lit(None).cast("string"),
+                g > 0, F.col("guarantor_reference")
             ),
             "post_crm_exposure_class_guaranteed": F.when(g > 0, F.col("g_class")),
         }
@@ -1350,7 +1082,7 @@ def _irb_guarantee_adjust(
     return perf, el
 
 
-def _supporting_factor_exprs(pack: RulePack, threshold_scale: float, columns):
+def _supporting_factor_exprs(pack: RulePack, threshold_scale: float, carried: frozenset):
     """CRR2 Art.501 tiered SME factor + Art.501a infrastructure factor
     (ref engine/supporting_factors.py SupportingFactorCalculator — the
     reference applies them on EVERY branch: sa/factors_output.py,
@@ -1365,10 +1097,10 @@ def _supporting_factor_exprs(pack: RulePack, threshold_scale: float, columns):
     f2 = pack.scalar("sme_factor_above_threshold")
     thr = pack.scalar("sme_exposure_threshold") * threshold_scale
     revenue_cap = pack.scalar("sme_revenue_cap") * threshold_scale
-    # column-presence guards: direct-call CRM-shaped frames (guarantee /
-    # double-default test books) skip classify and may not carry the
-    # group aggregate — they price factor 1.0 exactly as before
-    if not {"exposure_class", "annual_revenue", "is_defaulted"} <= set(columns):
+    # carrier gates: direct-call CRM-shaped frames (guarantee /
+    # double-default test books) skip classify and may carry neither the
+    # revenue nor the group aggregate — they price factor 1.0
+    if "annual_revenue" not in carried:
         return F.lit(1.0), F.lit(1.0), F.lit(1.0)
     sme_cond = (
         (F.col("exposure_class") == "corporate")
@@ -1376,7 +1108,7 @@ def _supporting_factor_exprs(pack: RulePack, threshold_scale: float, columns):
         & (F.col("annual_revenue") <= revenue_cap)
         & ~F.col("is_defaulted")
     )
-    if (f1 >= 1.0 and f2 >= 1.0) or "group_drawn" not in columns:
+    if (f1 >= 1.0 and f2 >= 1.0) or "group_drawn" not in carried:
         sme_f = F.lit(1.0)  # factors removed (B3.1) / no group aggregate
     else:
         gd = F.col("group_drawn")
@@ -1389,12 +1121,9 @@ def _supporting_factor_exprs(pack: RulePack, threshold_scale: float, columns):
             / gd,
         ).otherwise(F.lit(f1))
         sme_f = F.when(sme_cond, blended).otherwise(F.lit(1.0))
-    if "is_infrastructure" in columns:
-        infra_f = F.when(
-            F.col("is_infrastructure"), pack.lit("infra_supporting_factor")
-        ).otherwise(F.lit(1.0))
-    else:
-        infra_f = F.lit(1.0)
+    infra_f = F.when(
+        F.col("is_infrastructure"), pack.lit("infra_supporting_factor")
+    ).otherwise(F.lit(1.0))
     return sme_f, infra_f, F.least(sme_f, infra_f)
 
 
@@ -1405,13 +1134,13 @@ def run_sa(
     use_ig_assessment: bool = False,
 ) -> CalcOutput:
     spark = crm.exposures.sparkSession
-    exp = crm.exposures.where(
-        ~F.col("has_irb_permission")
-        & ~F.col("is_specialised")
-        & (F.col("exposure_class") != "securitisation")
+    exp, carried = _calc_entry(
+        crm.exposures.where(
+            ~F.col("has_irb_permission")
+            & ~F.col("is_specialised")
+            & (F.col("exposure_class") != "securitisation")
+        )
     )
-    exp = _crm_carry(exp)
-    cols = _colset(exp)
 
     rw_table = pack.broadcast_table(spark, "sa_rw")
     exp = exp.join(
@@ -1460,7 +1189,7 @@ def run_sa(
     # derivation table — the tables genuinely diverge (CRR (5)(b) maps a
     # 50% issuer weight to 20%, PS1/26 to 25%), which is why the table is
     # pack data, never shared code.
-    if "is_covered_bond" in cols:
+    if "is_covered_bond" in carried:
         cbt = pack.table_df(spark, "covered_bond_rw").select(
             F.col("cqs").alias("_cb_cqs_t"), F.col("rw").alias("_cb_rated_rw")
         )
@@ -1503,7 +1232,7 @@ def run_sa(
     # presence (CRR keeps flat Art.125/126) and carrier-gated on ltv;
     # bands compile to a when-chain from the pack rows (pure literals —
     # band-count work, never a join against the fact table).
-    if "re_ltv_rw" in pack.tables and "ltv" in cols:
+    if "re_ltv_rw" in pack.tables and "ltv" in carried:
         ltv = F.col("ltv")
         # the class gate; the LTV-dependent limbs (bands, split) require a
         # usable LTV on top — ADC and Art.124J other-RE price without one
@@ -1514,11 +1243,7 @@ def run_sa(
         ltv_ok = ltv.isNotNull() & (ltv > 0)
 
         def _flag(name):
-            return (
-                F.coalesce(F.col(name), F.lit(False))
-                if name in cols
-                else F.lit(False)
-            )
+            return F.coalesce(F.col(name), F.lit(False))
 
         commercial = _flag("is_commercial_re")
         explicit_income = _flag("is_income_producing")
@@ -1529,10 +1254,7 @@ def run_sa(
         # classify/attributes.py:560-598 _build_has_income_cover_expr;
         # strict > — count 3 stays owner-occupied, 4 re-routes; null
         # counts never breach; an explicit upstream income flag wins)
-        if (
-            "qualifying_property_count" in cols
-            and "b31_rre_three_property_limit" in pack.scalars
-        ):
+        if "b31_rre_three_property_limit" in pack.scalars:
             three_prop = (F.col("entity_type") == "individual") & (
                 F.coalesce(F.col("qualifying_property_count"), F.lit(0)).cast(
                     "double"
@@ -1545,11 +1267,7 @@ def run_sa(
         # Art.124F(2) prior/pari-passu charges: reduce the loan-split
         # secured threshold; a positive prior charge also marks the
         # position junior (ref b31_risk_weight_tables.py:526 is_junior)
-        prior_chg = (
-            F.coalesce(F.col("prior_charge_ltv"), F.lit(0.0))
-            if "prior_charge_ltv" in cols
-            else F.lit(0.0)
-        )
+        prior_chg = F.coalesce(F.col("prior_charge_ltv"), F.lit(0.0))
         junior = _flag("is_junior_lien") | (prior_chg > 0)
         # Art.124K ADC (land acquisition / development / construction):
         # 150% flat; 100% only for qualifying RESIDENTIAL pre-sold —
@@ -1737,7 +1455,7 @@ def run_sa(
         & ~F.col("is_defaulted")
     )
     if (
-        "sovereign_cqs" in cols
+        "sovereign_cqs" in carried
         and "sovereign_derived_institutions" in pack.scalars
         and pack.scalar("sovereign_derived_institutions") >= 1.0
     ):
@@ -1750,7 +1468,7 @@ def run_sa(
         sd_match = _unrated_inst & F.col("_sd_rw").isNotNull()
         base_rw = F.when(sd_match, F.col("_sd_rw")).otherwise(base_rw)
         rw_source = F.when(sd_match, "sa_sovereign_derived").otherwise(rw_source)
-    if "scra_grade" in cols and "institution_scra_rw" in pack.tables:
+    if "scra_grade" in carried and "institution_scra_rw" in pack.tables:
         sc = pack.table_df(spark, "institution_scra_rw").select(
             F.col("grade").alias("_scra_grade_t"), F.col("rw").alias("_scra_rw")
         )
@@ -1767,24 +1485,19 @@ def run_sa(
     # operational / 80% high-quality (rated SL keeps its Art.122A(3)
     # corporate CQS weight; ref engine/sa/risk_weights.py:1188-1196 +
     # b31_risk_weight_tables.py:716-747 b31_sa_sl_rw_expr). Pack-gated
-    # (CRR has no Art.122A — unrated SL stays at the corporate 100%) and
-    # carrier-gated on sl_type; weights compile from pack rows to literal
+    # (CRR has no Art.122A — unrated SL stays at the corporate 100%); a
+    # null sl_type is no SL row; weights compile from pack rows to literal
     # when-chains — never a fact-table join.
-    if "b31_sa_sl_rw" in pack.tables and "sl_type" in cols:
+    if "b31_sa_sl_rw" in pack.tables:
         slw = {k: float(v) for k, v in pack.tables["b31_sa_sl_rw"][1]}
         sl = F.lower(F.coalesce(F.col("sl_type"), F.lit("")))
-        phase = (
-            F.lower(F.coalesce(F.col("sl_project_phase"), F.lit("")))
-            if "sl_project_phase" in cols
-            else F.lit("")
-        )
+        phase = F.lower(F.coalesce(F.col("sl_project_phase"), F.lit("")))
         # Art.139(2B): an SL exposure whose only external assessment is
         # NOT issue-specific (inferred / issuer-level) is treated as
         # unrated for this routing — ordinary rated corporates untouched
         cqs_eff = F.coalesce(F.col("cqs"), F.lit(0))
         if (
-            "external_rating_is_issue_specific" in cols
-            and "sa_sl_inferred_rating_disapplied" in pack.scalars
+            "sa_sl_inferred_rating_disapplied" in pack.scalars
             and pack.scalar("sa_sl_inferred_rating_disapplied") >= 1.0
         ):
             cqs_eff = F.when(
@@ -1827,23 +1540,12 @@ def run_sa(
     _nd = ~F.col("is_defaulted")
     _rated = F.coalesce(F.col("cqs"), F.lit(0)) > 0
     _inst = F.col("exposure_class") == "institution"
-    _has_st_ecai = (
-        F.coalesce(F.col("has_short_term_ecai"), F.lit(False))
-        if "has_short_term_ecai" in cols
-        else F.lit(False)
-    )
-    if "original_maturity_years" in cols:
-        _om = F.coalesce(F.col("original_maturity_years"), F.lit(1.0))
-        _st_lc = (
-            F.coalesce(F.col("is_short_term_trade_lc"), F.lit(False))
-            if "is_short_term_trade_lc" in cols
-            else F.lit(False)
-        )
-        # Art.120(2)/121(5): original maturity <= 3m, or trade finance <= 6m
-        _st_window = (_om <= 0.25) | (_st_lc & (_om <= 0.5))
-    else:
-        _st_window = F.lit(False)
-    if "ecra_short_term_rw" in pack.tables and "original_maturity_years" in cols:
+    _has_st_ecai = F.coalesce(F.col("has_short_term_ecai"), F.lit(False))
+    _om = F.coalesce(F.col("original_maturity_years"), F.lit(1.0))
+    _st_lc = F.coalesce(F.col("is_short_term_trade_lc"), F.lit(False))
+    # Art.120(2)/121(5): original maturity <= 3m, or trade finance <= 6m
+    _st_window = (_om <= 0.25) | (_st_lc & (_om <= 0.5))
+    if "ecra_short_term_rw" in pack.tables and "original_maturity_years" in carried:
         t4 = pack.table_df(spark, "ecra_short_term_rw").select(
             F.col("cqs").alias("_t4_cqs"), F.col("rw").alias("_t4_rw")
         )
@@ -1855,7 +1557,7 @@ def run_sa(
             base_rw
         )
         rw_source = F.when(m_t4, "sa_ecra_short_term").otherwise(rw_source)
-    if "scra_short_term_rw" in pack.tables and "scra_grade" in cols:
+    if "scra_short_term_rw" in pack.tables and "scra_grade" in carried:
         sst = pack.table_df(spark, "scra_short_term_rw").select(
             F.col("grade").alias("_sst_grade"), F.col("rw").alias("_sst_rw")
         )
@@ -1871,10 +1573,7 @@ def run_sa(
         )
         base_rw = F.when(m_sst, F.col("_sst_rw")).otherwise(base_rw)
         rw_source = F.when(m_sst, "sa_scra_short_term").otherwise(rw_source)
-    if (
-        "ecra_short_term_ecai_rw" in pack.tables
-        and "has_short_term_ecai" in cols
-    ):
+    if "ecra_short_term_ecai_rw" in pack.tables and "has_short_term_ecai" in carried:
         t4a = pack.table_df(spark, "ecra_short_term_ecai_rw").select(
             F.col("cqs").alias("_t4a_cqs"), F.col("rw").alias("_t4a_rw")
         )
@@ -1886,7 +1585,7 @@ def run_sa(
             base_rw
         )
         rw_source = F.when(m_t4a, "sa_ecra_st_ecai").otherwise(rw_source)
-    if "corporate_st_ecai_rw" in pack.tables and "has_short_term_ecai" in cols:
+    if "corporate_st_ecai_rw" in pack.tables and "has_short_term_ecai" in carried:
         t6a = pack.table_df(spark, "corporate_st_ecai_rw").select(
             F.col("cqs").alias("_t6a_cqs"), F.col("rw").alias("_t6a_rw")
         )
@@ -1924,7 +1623,7 @@ def run_sa(
     if (
         use_ig_assessment
         and "corporate_ig_rw" in pack.scalars
-        and "is_investment_grade" in cols
+        and "is_investment_grade" in carried
     ):
         _ig = F.coalesce(F.col("is_investment_grade"), F.lit(False))
         m_ig = _unrated_corp & ~_is_sme & _ig
@@ -1945,11 +1644,11 @@ def run_sa(
     # only — transactor applied after payroll so it wins ties, mirroring
     # the reference chain order)
     _retail_nd = (F.col("exposure_class") == "retail") & _nd
-    if "retail_payroll_rw" in pack.scalars and "is_payroll_loan" in cols:
+    if "retail_payroll_rw" in pack.scalars:
         m_pay = _retail_nd & F.coalesce(F.col("is_payroll_loan"), F.lit(False))
         base_rw = F.when(m_pay, pack.lit("retail_payroll_rw")).otherwise(base_rw)
         rw_source = F.when(m_pay, "sa_retail_payroll").otherwise(rw_source)
-    if "retail_transactor_rw" in pack.scalars and "is_qrre_transactor" in cols:
+    if "retail_transactor_rw" in pack.scalars:
         m_tx = _retail_nd & F.coalesce(F.col("is_qrre_transactor"), F.lit(False))
         base_rw = F.when(m_tx, pack.lit("retail_transactor_rw")).otherwise(base_rw)
         rw_source = F.when(m_tx, "sa_retail_transactor").otherwise(rw_source)
@@ -1991,7 +1690,7 @@ def run_sa(
         exp = exp.join(
             F.broadcast(por), F.col("cqs") == F.col("_por_cqs"), "left"
         ).drop("_por_cqs")
-        if "sovereign_cqs" in cols:
+        if "sovereign_cqs" in carried:
             psd = pack.table_df(spark, "pse_sovereign_derived_rw").select(
                 F.col("cqs").alias("_psd_cqs"), F.col("rw").alias("_psd_rw")
             )
@@ -2006,16 +1705,8 @@ def run_sa(
         _pse = (F.col("exposure_class") == "pse") & _nd
         # Art.116(5): an EXPLICIT non-equivalence flag prices 100%; null is
         # permissive (no Treasury determination recorded ≠ negative one)
-        _pse_ne = (
-            ~F.coalesce(F.col("pse_jurisdiction_equivalent"), F.lit(True))
-            if "pse_jurisdiction_equivalent" in cols
-            else F.lit(False)
-        )
-        _pse_st = (
-            F.coalesce(F.col("original_maturity_years"), F.lit(1.0)) <= 0.25
-            if "original_maturity_years" in cols
-            else F.lit(False)
-        )
+        _pse_ne = ~F.coalesce(F.col("pse_jurisdiction_equivalent"), F.lit(True))
+        _pse_st = _om <= 0.25
         base_rw = (
             F.when(_pse & _pse_ne, pack.lit("pse_non_equivalent_rw"))
             .when(_pse & _pse_st, pack.lit("pse_short_term_rw"))
@@ -2043,7 +1734,7 @@ def run_sa(
         exp = exp.join(
             F.broadcast(r1b), F.col("cqs") == F.col("_1b_cqs"), "left"
         ).drop("_1b_cqs")
-        if "sovereign_cqs" in cols:
+        if "sovereign_cqs" in carried:
             r1a = pack.table_df(spark, "rgla_sovereign_derived_rw").select(
                 F.col("cqs").alias("_1a_cqs"), F.col("rw").alias("_1a_rw")
             )
@@ -2060,11 +1751,7 @@ def run_sa(
         # 'GB'/'GBP' carrier convention; non-UK domestic-currency RGLAs
         # fall through to the (1) rating tables (the reference deliberately
         # does NOT reuse the composite EU-domestic flag here)
-        _rgla_dom = (
-            (F.col("country") == "GB") & (F.col("currency") == "GBP")
-            if "country" in cols and "currency" in cols
-            else F.lit(False)
-        )
+        _rgla_dom = (F.col("country") == "GB") & (F.col("currency") == "GBP")
         base_rw = (
             F.when(_rgla & _rgla_dom, pack.lit("rgla_domestic_rw"))
             .when(
@@ -2083,7 +1770,7 @@ def run_sa(
             .when(_rgla, "sa_rgla_own_rating")
             .otherwise(rw_source)
         )
-    if "eca_meip_rw" in pack.tables and "eca_meip_score" in cols:
+    if "eca_meip_rw" in pack.tables and "eca_meip_score" in carried:
         eca = pack.table_df(spark, "eca_meip_rw").select(
             F.col("score").alias("_eca_score"), F.col("rw").alias("_eca_rw")
         )
@@ -2150,29 +1837,13 @@ def run_sa(
         )
         _re_sec = F.col("exposure_class") == "re_secured"
         if "defaulted_resi_re_non_income_rw" in pack.scalars:
-            _comm = (
-                F.coalesce(F.col("is_commercial_re"), F.lit(False))
-                if "is_commercial_re" in cols
-                else F.lit(False)
-            )
-            _inc = (
-                F.coalesce(F.col("is_income_producing"), F.lit(False))
-                if "is_income_producing" in cols
-                else F.lit(False)
-            )
+            _comm = F.coalesce(F.col("is_commercial_re"), F.lit(False))
+            _inc = F.coalesce(F.col("is_income_producing"), F.lit(False))
             # ADC / other-RE are their own classes in the reference's
             # Art.127(3) carve-out (residential only) — they join the
             # provision test like income/commercial rows
-            _adc = (
-                F.coalesce(F.col("is_adc"), F.lit(False))
-                if "is_adc" in cols
-                else F.lit(False)
-            )
-            _oth = (
-                F.coalesce(F.col("is_other_re"), F.lit(False))
-                if "is_other_re" in cols
-                else F.lit(False)
-            )
+            _adc = F.coalesce(F.col("is_adc"), F.lit(False))
+            _oth = F.coalesce(F.col("is_other_re"), F.lit(False))
             # general resi RE stays flat 100% (the base chain's secured
             # leg); income-producing / commercial / ADC / other-RE secured
             # rows join the provision test
@@ -2198,29 +1869,25 @@ def run_sa(
     # (ref engine/sa/central_bank.py ecb_rw_expr; 'central_bank_ecb' is
     # the documented entity-type convention — the ECB is supranational,
     # so no country code can identify it)
-    if "entity_type" in cols:
-        _is_ecb = F.col("entity_type") == "central_bank_ecb"
-        base_rw = F.when(_is_ecb, F.lit(0.0)).otherwise(base_rw)
-        rw_source = F.when(_is_ecb, "ecb_art114_3").otherwise(rw_source)
+    _is_ecb = F.col("entity_type") == "central_bank_ecb"
+    base_rw = F.when(_is_ecb, F.lit(0.0)).otherwise(base_rw)
+    rw_source = F.when(_is_ecb, "ecb_art114_3").otherwise(rw_source)
 
     # CRR Art.306(1) / BCBS CRE54.14-15: trade exposures to a QUALIFYING
     # CCP take 2% (clearing member's own trades, (1)(a)) or 4% (client-
     # cleared through a clearing member, (1)(c)), overriding the
     # institution ladder the Art.107(2)(a) class demotion put them on; a
     # non-qualifying CCP simply stays on that ladder (ref engine/ccr/
-    # ccp.py apply_ccp_risk_weight + engine/sa/cqs_lift.py). Carrier- and
-    # pack-gated; defaulted rows keep the defaulted treatment.
-    if "is_qccp" in cols and "qccp_trade_rw" in pack.scalars:
+    # ccp.py apply_ccp_risk_weight + engine/sa/cqs_lift.py). Pack-gated; a
+    # null is_qccp is non-qualifying; defaulted rows keep the defaulted
+    # treatment.
+    if "qccp_trade_rw" in pack.scalars:
         _qccp = (
             (F.col("entity_type") == "ccp")
             & ~F.col("is_defaulted")
             & F.coalesce("is_qccp", F.lit(False))
         )
-        _cleared = (
-            F.coalesce("is_client_cleared", F.lit(False))
-            if "is_client_cleared" in cols
-            else F.lit(False)
-        )
+        _cleared = F.coalesce("is_client_cleared", F.lit(False))
         base_rw = (
             F.when(_qccp & _cleared, pack.lit("qccp_client_cleared_rw"))
             .when(_qccp, pack.lit("qccp_trade_rw"))
@@ -2236,25 +1903,22 @@ def run_sa(
     # denominated in the member state's domestic currency take 0% RW,
     # overriding the CQS ladder (ref engine/eu_sovereign.py — consumed by
     # the SA risk-weight path; the country→currency map is pack data).
-    if "country" in cols and "currency" in cols:
-        eu = pack.broadcast_table(spark, "eu_domestic_ccy").select(
-            F.col("country").alias("_eu_country"),
-            F.col("domestic_ccy").alias("_eu_ccy"),
-        )
-        exp = exp.join(eu, exp.country == F.col("_eu_country"), "left")
-        eu_match = (
-            (F.col("exposure_class") == "sovereign")
-            & ~F.col("is_defaulted")
-            & F.col("_eu_ccy").isNotNull()
-            & (F.col("currency") == F.col("_eu_ccy"))
-        )
-        base_rw = F.when(eu_match, F.lit(0.0)).otherwise(base_rw)
-        rw_source = F.when(eu_match, "sovereign_eu_domestic").otherwise(rw_source)
-        exp = exp.withColumns({"own_rw": base_rw, "rw_source": rw_source}).drop(
-            "_eu_country", "_eu_ccy"
-        )
-    else:
-        exp = exp.withColumns({"own_rw": base_rw, "rw_source": rw_source})
+    eu = pack.broadcast_table(spark, "eu_domestic_ccy").select(
+        F.col("country").alias("_eu_country"),
+        F.col("domestic_ccy").alias("_eu_ccy"),
+    )
+    exp = exp.join(eu, exp.country == F.col("_eu_country"), "left")
+    eu_match = (
+        (F.col("exposure_class") == "sovereign")
+        & ~F.col("is_defaulted")
+        & F.col("_eu_ccy").isNotNull()
+        & (F.col("currency") == F.col("_eu_ccy"))
+    )
+    base_rw = F.when(eu_match, F.lit(0.0)).otherwise(base_rw)
+    rw_source = F.when(eu_match, "sovereign_eu_domestic").otherwise(rw_source)
+    exp = exp.withColumns({"own_rw": base_rw, "rw_source": rw_source}).drop(
+        "_eu_country", "_eu_ccy"
+    )
 
     # guarantee substitution on the covered share (ref crm/guarantees.py)
     g_rw_table = pack.table_df(spark, "sa_rw").select(
@@ -2277,25 +1941,14 @@ def run_sa(
     # exposure's currency when the guarantee declares none; the funding
     # limb is null-PERMISSIVE (funding_currency absent = funded in the
     # denomination). Carrier-gated on the guarantor country column.
-    if "g_country" in cols:
+    if "g_country" in carried:
         _gd = pack.broadcast_table(spark, "eu_domestic_ccy").select(
             F.col("country").alias("_gd_country"),
             F.col("domestic_ccy").alias("_gd_ccy"),
         )
         exp = exp.join(_gd, F.col("g_country") == F.col("_gd_country"), "left")
-        _den_cands = [
-            c for c in ("g_currency", "currency") if c in cols
-        ]
-        _g_den = (
-            F.coalesce(*[F.col(c) for c in _den_cands])
-            if _den_cands
-            else F.lit(None).cast("string")
-        )
-        _g_fund = (
-            F.coalesce(F.col("funding_currency"), _g_den)
-            if "funding_currency" in cols
-            else _g_den
-        )
+        _g_den = F.coalesce(F.col("g_currency"), F.col("currency"))
+        _g_fund = F.coalesce(F.col("funding_currency"), _g_den)
         _g_dom = (
             (F.col("g_class") == "sovereign")
             & F.col("_gd_ccy").isNotNull()
@@ -2312,7 +1965,7 @@ def run_sa(
     # guarantee. Gated on size>1 so single-guarantee books keep the
     # legacy expressions bit-for-bit.
     _own = F.col("own_rw")
-    if "_mg" in cols:
+    if "_mg" in carried:
         _fold = F.aggregate(
             F.coalesce(F.col("_mg"), F.array().cast(exp.schema["_mg"].dataType)),
             F.struct(F.lit(0.0).alias("g"), F.lit(0.0).alias("t")),
@@ -2398,10 +2051,7 @@ def run_sa(
             "pre_crm_counterparty_reference": F.col("counterparty_reference"),
             "pre_crm_exposure_class": F.col("exposure_class"),
             "post_crm_counterparty_guaranteed": F.when(
-                _g_has,
-                F.col("guarantor_reference")
-                if "guarantor_reference" in cols
-                else F.lit(None).cast("string"),
+                _g_has, F.col("guarantor_reference")
             ),
             "post_crm_exposure_class_guaranteed": F.when(_g_has, F.col("g_class")),
         }
@@ -2413,7 +2063,7 @@ def run_sa(
     # the blend composes as a subtraction of each channel's benefit from
     # the guarantee-blended RW; channels claim the unguaranteed remainder
     # in order (life insurance, third-party deposit, FCSM)
-    if "li_value" in cols:
+    if "li_value" in carried:
         own = F.col("own_rw")
         ead_nz = F.nullif(F.col("ead_after_crm"), F.lit(0.0))
         avail = F.greatest(1 - _g_total, F.lit(0.0))
@@ -2457,33 +2107,17 @@ def run_sa(
     # current drawn balance) is rescaled onto the fully-drawn committed
     # base per Art.123B(2A) (ref engine/sa/rw_adjustments.py
     # apply_currency_mismatch_multiplier).
-    if (
-        pack.scalar("sa_currency_mismatch_multiplier") >= 1.0
-        and "borrower_income_currency" in cols
-        and "currency" in cols
-    ):
+    if pack.scalar("sa_currency_mismatch_multiplier") >= 1.0:
         in_scope = F.col("exposure_class").isin("retail", "re_secured")
         mismatch = F.col("borrower_income_currency").isNotNull() & (
             F.col("borrower_income_currency") != F.col("currency")
         )
-        hedged = (
-            F.coalesce("is_hedged", F.lit(False))
-            if "is_hedged" in cols
-            else F.lit(False)
-        )
-        if "hedge_coverage_ratio" in cols:
+        hedged = F.coalesce("is_hedged", F.lit(False))
+        if "hedge_coverage_ratio" in carried:
             raw_cov = F.coalesce("hedge_coverage_ratio", F.lit(0.0))
-            revolving = (
-                F.coalesce("is_revolving", F.lit(False))
-                if "is_revolving" in cols
-                else F.lit(False)
-            )
+            revolving = F.coalesce("is_revolving", F.lit(False))
             drawn = F.coalesce("drawn_amount", F.lit(0.0))
-            limit = (
-                F.coalesce(F.col("facility_limit"), drawn)
-                if "facility_limit" in cols
-                else drawn
-            )
+            limit = F.coalesce(F.col("facility_limit"), drawn)
             full_draw = F.greatest(drawn, limit)
             eff_cov = F.when(
                 revolving & (full_draw > 0), raw_cov * drawn / full_draw
@@ -2529,10 +2163,7 @@ def run_sa(
     # firm-assessed override replaces it — increase-only, applied after
     # every standard RW step but BEFORE the Art.113(6) intragroup
     # override, which is a hard permission and deliberately wins.
-    if (
-        pack.scalar("sa_due_diligence_override") >= 1.0
-        and "due_diligence_override_rw" in cols
-    ):
+    if pack.scalar("sa_due_diligence_override") >= 1.0:
         ddq = F.col("due_diligence_override_rw").isNotNull() & (
             F.col("due_diligence_override_rw") > F.col("risk_weight")
         )
@@ -2561,24 +2192,23 @@ def run_sa(
     # individual-basis run. The carrier is set (and authoritatively
     # cleared) ONLY by resolve_scope — see engine/stages/scope.py (ref
     # engine/sa/rw_adjustments.py apply_intragroup_zero_rw).
-    if "intragroup_zero_rw_eligible" in cols:
-        elig = F.coalesce("intragroup_zero_rw_eligible", F.lit(False))
-        # a hard permission, not a substitution — the hypothetical is
-        # 0% too (CR7 must not report phantom CD relief on Art.113(6));
-        # all three read pre-block columns — one batched projection
-        exp = exp.withColumns(
-            {
-                "risk_weight": F.when(
-                    elig, pack.lit("intragroup_zero_rw_pct")
-                ).otherwise(F.col("risk_weight")),
-                "_rw_nosubst": F.when(
-                    elig, pack.lit("intragroup_zero_rw_pct")
-                ).otherwise(F.col("_rw_nosubst")),
-                "rw_source": F.when(elig, "intragroup_art113_6").otherwise(
-                    F.col("rw_source")
-                ),
-            }
-        )
+    elig = F.coalesce("intragroup_zero_rw_eligible", F.lit(False))
+    # a hard permission, not a substitution — the hypothetical is 0% too
+    # (CR7 must not report phantom CD relief on Art.113(6)); all three read
+    # pre-block columns — one batched projection
+    exp = exp.withColumns(
+        {
+            "risk_weight": F.when(elig, pack.lit("intragroup_zero_rw_pct")).otherwise(
+                F.col("risk_weight")
+            ),
+            "_rw_nosubst": F.when(elig, pack.lit("intragroup_zero_rw_pct")).otherwise(
+                F.col("_rw_nosubst")
+            ),
+            "rw_source": F.when(elig, "intragroup_art113_6").otherwise(
+                F.col("rw_source")
+            ),
+        }
+    )
 
     # CRR2 Art.501 tiered SME factor blended over the group drawn amount,
     # combined with the Art.501a infrastructure factor by most-beneficial
@@ -2586,18 +2216,16 @@ def run_sa(
     # shared helper adds the Art.501(2)(b) defaulted exclusion and is the
     # SAME expression the IRB and slotting branches now apply — the
     # reference runs SupportingFactorCalculator on every branch.
-    sme_f, infra_f, sf = _supporting_factor_exprs(
-        pack, threshold_scale, cols
-    )
+    sme_f, infra_f, sf = _supporting_factor_exprs(pack, threshold_scale, carried)
 
     # routing provenance: the permission stage's diagnostic / PPU reason
     # where it ran (ref permissions.py approach_selection), else the
     # pipeline's default SA routing rule
-    reason = F.lit("sa_no_irb_permission")
-    if "ppu_reason" in cols:
-        reason = F.coalesce(F.col("ppu_reason"), reason)
-    if "permission_diagnostic" in cols:
-        reason = F.coalesce(F.col("permission_diagnostic"), reason)
+    reason = F.coalesce(
+        F.col("permission_diagnostic"),
+        F.col("ppu_reason"),
+        F.lit("sa_no_irb_permission"),
+    )
     # one batched projection; supporting_factor_benefit inlines the exact
     # rwa_before_sf/rwa expressions (identical arithmetic DAG, bit-equal)
     exp = exp.withColumns(
@@ -2627,7 +2255,7 @@ def run_sa(
         }
     )
     exp = _el_columns(exp, F.lit(0.0))  # EL treatment is IRB-only; SA deducts
-    exp = _param_cols(exp, cols=cols)  # SA uses CCF only
+    exp = _param_cols(exp)  # SA uses CCF only
     # SA decision block, final leg (ref :3024-3025): the weight every
     # adjustment landed on and its delta from the base ladder value —
     # batched with the decision strings below into one projection
@@ -2636,13 +2264,10 @@ def run_sa(
     # pick's agency where the ratings channel resolved the CQS, "internal"
     # where the counterparty-supplied mapping was consulted, null unrated.
     _rated = F.col("sa_cqs") > 0
-    if "external_rating_agency" in cols:
-        _rating_src = F.when(
-            F.col("external_rating_agency").isNotNull() & _rated,
-            F.col("external_rating_agency"),
-        ).when(_rated, F.lit("internal"))
-    else:
-        _rating_src = F.when(_rated, F.lit("internal"))
+    _rating_src = F.when(
+        F.col("external_rating_agency").isNotNull() & _rated,
+        F.col("external_rating_agency"),
+    ).when(_rated, F.lit("internal"))
     # sa_rw_adjustment_reason: the branch that moved the weight off the
     # base ladder (rw_source IS the which-branch carrier, incl. the
     # +guarantee substitution suffix), plus the Art.123A currency-mismatch
@@ -2729,19 +2354,17 @@ def run_sa(
                 F.when(
                     F.coalesce(F.col("is_commercial_re"), F.lit(False)),
                     "commercial",
-                ).otherwise("residential")
-                if "is_commercial_re" in cols
-                else F.lit("residential"),
+                ).otherwise("residential"),
             ),
             "property_ltv": F.when(_re, F.col("ltv"))
-            if "ltv" in cols
+            if "ltv" in carried
             else F.lit(None).cast("double"),
         }
     )
     return CalcOutput(results=exp.select(*_RESULT_COLS))
 
 
-def _apply_pma(df: DataFrame, pack: RulePack, pma, cols=None) -> DataFrame:
+def _apply_pma(df: DataFrame, pack: RulePack, pma) -> DataFrame:
     """PS1/26 Art.153(5A)/154(4A)/158(6A) post-model adjustments on the
     IRB branch (ref engine/irb/adjustments.py:122-279
     apply_post_model_adjustments). B3.1-only (pack Feature); CRR rows
@@ -2776,18 +2399,13 @@ def _apply_pma(df: DataFrame, pack: RulePack, pma, cols=None) -> DataFrame:
     # Art.154(4A)(b) scopes the 10% floor to RESIDENTIAL mortgages only
     # (ref irb/adjustments.py is_mortgage = class contains
     # MORTGAGE|RESIDENTIAL): a commercial-RE-secured re_secured row is out.
-    is_mortgage = F.col("exposure_class") == "re_secured"
-    if cols is None:
-        cols = _colset(df)
-    if "is_commercial_re" in cols:
-        is_mortgage = is_mortgage & ~F.coalesce(
-            F.col("is_commercial_re"), F.lit(False)
-        )
-    if "retail_subtype" in cols:
-        is_mortgage = is_mortgage | (
-            (F.col("exposure_class") == "retail")
-            & (F.col("retail_subtype") == "mortgage")
-        )
+    is_mortgage = (
+        (F.col("exposure_class") == "re_secured")
+        & ~F.coalesce(F.col("is_commercial_re"), F.lit(False))
+    ) | (
+        (F.col("exposure_class") == "retail")
+        & (F.col("retail_subtype") == "mortgage")
+    )
     mortgage_adj = F.when(
         is_mortgage,
         F.greatest(zero, floor - F.col("risk_weight")) * F.col("ead_after_crm"),
@@ -2825,16 +2443,13 @@ def run_irb(
     threshold_scale: float = 1.0,
 ) -> CalcOutput:
     spark = crm.exposures.sparkSession
-    exp = crm.exposures.where(
-        F.col("has_irb_permission")
-        & ~F.col("is_specialised")
-        & (F.col("exposure_class") != "securitisation")
+    exp, carried = _calc_entry(
+        crm.exposures.where(
+            F.col("has_irb_permission")
+            & ~F.col("is_specialised")
+            & (F.col("exposure_class") != "securitisation")
+        )
     )
-    exp = _crm_carry(exp)
-    cols = set(_colset(exp))
-    if "el_be" not in cols:
-        exp = exp.withColumn("el_be", F.lit(None).cast("double"))
-        cols.add("el_be")
     # CRR Art.147(3)/(4)(b) IRB class equivalence (ref rulebook/packs/
     # common.py entity_type_to_irb_class + engine/entity_class_maps.py):
     # MDBs and international organisations take the central-government
@@ -2851,7 +2466,6 @@ def run_irb(
         .when(F.col("exposure_class").isin("pse", "rgla"), F.lit("institution"))
         .otherwise(F.col("exposure_class")),
     )
-    cols.add("irb_exposure_class")
 
     # standardised-equivalent RWA for the Art.92(3) output floor: the SAME
     # SA ladder the SA branch runs (class × CQS lookup + overrides), so the
@@ -2883,8 +2497,8 @@ def run_irb(
     # _lgd_floor_blended_expression in engine/irb/formulas.py)
     exp = exp.withColumns(
         {
-            "_pd_floor_in": _pd_floor_class_expr(pack, exp, cols=cols),
-            "_lgd_floor_in": _lgd_floor_expr(pack, exp, cols=cols),
+            "_pd_floor_in": _pd_floor_class_expr(pack),
+            "_lgd_floor_in": _lgd_floor_expr(pack),
         }
     )
     # F-IRB supervisory LGD for rows with no own estimate (ref
@@ -2897,29 +2511,20 @@ def run_irb(
     # for the Art.160(2)/(6) top-down population: a row carrying a subtype
     # with no own LGD is that population by construction, and the ref
     # records that gating them on approach==FIRB was anti-conservative.
-    _sen_sub = (
-        F.coalesce(F.col("seniority"), F.lit("senior")).contains("sub")
-        if "seniority" in cols
-        else F.lit(False)
-    )
-    _fse_flag = (
-        F.coalesce(F.col("is_financial_sector_entity"), F.lit(False))
-        if "is_financial_sector_entity" in cols
-        else F.lit(False)
-    )
+    _sen_sub = F.coalesce(F.col("seniority"), F.lit("senior")).contains("sub")
+    _fse_flag = F.coalesce(F.col("is_financial_sector_entity"), F.lit(False))
     _supervisory_lgd = F.when(_sen_sub, pack.lit("firb_lgd_subordinated")).otherwise(
         F.when(_fse_flag, pack.lit("firb_lgd_senior_fse")).otherwise(
             pack.lit("firb_lgd_senior")
         )
     )
-    if "purchased_receivables_subtype" in cols:
-        _prs = F.col("purchased_receivables_subtype")
-        _supervisory_lgd = (
-            F.when(_prs == "senior", pack.lit("firb_lgd_pr_senior"))
-            .when(_prs == "subordinated", pack.lit("firb_lgd_pr_subordinated"))
-            .when(_prs == "dilution_risk", pack.lit("firb_lgd_dilution"))
-            .otherwise(_supervisory_lgd)
-        )
+    _prs = F.col("purchased_receivables_subtype")
+    _supervisory_lgd = (
+        F.when(_prs == "senior", pack.lit("firb_lgd_pr_senior"))
+        .when(_prs == "subordinated", pack.lit("firb_lgd_pr_subordinated"))
+        .when(_prs == "dilution_risk", pack.lit("firb_lgd_dilution"))
+        .otherwise(_supervisory_lgd)
+    )
     _floored_cols = {
         "pd_floored": F.when(F.col("is_defaulted"), F.lit(1.0)).otherwise(
             F.greatest(F.coalesce("pd", F.lit(1.0)), F.col("_pd_floor_in"))
@@ -2941,32 +2546,16 @@ def run_irb(
     #   4. F-IRB fixed supervisory 2.5y (CRR Art.162(1) first sentence;
     #      only under the firm's Art.143 election — config, default off)
     #   5. fallback 2.5y
-    _one_day = (
-        F.coalesce("has_one_day_maturity_floor", F.lit(False))
-        if "has_one_day_maturity_floor" in cols
-        else F.lit(False)
-    )
-    if (
-        pack.scalar("one_day_maturity_floor") >= 1.0
-        and "is_short_term_trade_lc" in cols
-    ):
-        _resid_cands = [
-            c
-            for c in ("residual_maturity_years", "original_maturity_years")
-            if c in cols
-        ]
-        if _resid_cands:
-            _resid = F.coalesce(*[F.col(c) for c in _resid_cands])
-            _one_day = _one_day | (
-                F.coalesce("is_short_term_trade_lc", F.lit(False))
-                & (_resid <= 1.0)
-            )
+    _one_day = F.coalesce("has_one_day_maturity_floor", F.lit(False))
+    if pack.scalar("one_day_maturity_floor") >= 1.0:
+        _resid = F.coalesce("residual_maturity_years", "original_maturity_years")
+        _one_day = _one_day | (
+            F.coalesce("is_short_term_trade_lc", F.lit(False)) & (_resid <= 1.0)
+        )
     _m_base = F.lit(2.5)
     if (
         pack.scalar("revolving_uses_termination_maturity") >= 1.0
         and reporting_date is not None
-        and "is_revolving" in cols
-        and "facility_termination_date" in cols
     ):
         _term_y = (
             F.datediff(
@@ -2982,7 +2571,6 @@ def run_irb(
     if (
         firb_fixed_maturity
         and pack.scalar("firb_fixed_supervisory_maturity") >= 1.0
-        and "irb_subapproach" in cols
     ):
         _m_base = F.when(
             F.col("irb_subapproach") == "firb",
@@ -3022,20 +2610,15 @@ def run_irb(
         & (F.col("annual_revenue") <= 50_000_000.0),
         spark_sme_size_adjustment("(annual_revenue / 1000000.0D)"),
     ).otherwise(F.lit(0.0))
-    if "retail_subtype" in cols:
-        r_retail = (
-            F.when(F.col("retail_subtype") == "mortgage", F.lit(R_RETAIL_MORTGAGE))
-            .when(F.col("retail_subtype") == "qrre", F.lit(R_RETAIL_QRRE))
-            .otherwise(r_other_retail)
-        )
-    else:
-        r_retail = r_other_retail
-    r_nonretail = r_corp - sme_adj
-    if "is_large_financial" in cols:
-        r_nonretail = F.when(
-            F.coalesce(F.col("is_large_financial"), F.lit(False)),
-            r_nonretail * F.lit(FI_CORRELATION_MULTIPLIER),
-        ).otherwise(r_nonretail)
+    r_retail = (
+        F.when(F.col("retail_subtype") == "mortgage", F.lit(R_RETAIL_MORTGAGE))
+        .when(F.col("retail_subtype") == "qrre", F.lit(R_RETAIL_QRRE))
+        .otherwise(r_other_retail)
+    )
+    r_nonretail = F.when(
+        F.coalesce(F.col("is_large_financial"), F.lit(False)),
+        (r_corp - sme_adj) * F.lit(FI_CORRELATION_MULTIPLIER),
+    ).otherwise(r_corp - sme_adj)
     perf = perf.withColumns(
         {
             "_irb_r_in": F.when(
@@ -3086,25 +2669,17 @@ def run_irb(
             # permission-routed runs record WHICH IRB variant priced the
             # row (airb = own LGD, firb = supervisory LGD) — the
             # model-permissions stage sets irb_subapproach
-            "rw_source": (
-                F.when(
-                    F.col("irb_subapproach").isNotNull(),
-                    F.concat(F.lit("irb_vasicek_"), F.col("irb_subapproach")),
-                ).otherwise("irb_vasicek")
-                if "irb_subapproach" in cols
-                else F.lit("irb_vasicek")
-            ),
+            "rw_source": F.when(
+                F.col("irb_subapproach").isNotNull(),
+                F.concat(F.lit("irb_vasicek_"), F.col("irb_subapproach")),
+            ).otherwise("irb_vasicek"),
         }
     )
     # the rest of the decomposition block (ref :3026-3041): raw-vs-floor
     # parameter provenance, the LGD basis, and the kernel outputs K and
     # the pre-substitution Vasicek weight — every value the kernel already
     # computed, surfaced instead of dropped
-    _sub = (
-        F.coalesce(F.col("irb_subapproach"), F.lit(""))
-        if "irb_subapproach" in cols
-        else F.lit("")
-    )
+    _sub = F.coalesce(F.col("irb_subapproach"), F.lit(""))
     # one batched withColumns — every carrier copies a pre-existing column,
     # so a per-column chain would re-analyse the wide plan 10× for nothing
     perf = perf.withColumns(
@@ -3128,8 +2703,8 @@ def run_irb(
     # The pre-blend Vasicek weight is stashed first — it is the CR7/CR7-A
     # "RWEA without substitution effects" hypothetical
     perf = perf.withColumn("_rw_pre_subst", F.col("risk_weight"))
-    perf, el_expr = _irb_guarantee_adjust(perf, pack, spark, cols=cols)
-    perf = _el_columns(perf, el_expr, pool_b_extras=True, cols=cols)
+    perf, el_expr = _irb_guarantee_adjust(perf, pack, spark, carried)
+    perf = _el_columns(perf, el_expr, pool_b_extras=True)
 
     # defaulted bypasses Vasicek (CRR Art.153(1)(ii)/154(1)(i), CRE31.3):
     # A-IRB (own BEEL supplied): K = max(0, LGD − BEEL), no MA, no 1.06;
@@ -3169,7 +2744,6 @@ def run_irb(
         dflt,
         F.coalesce("el_be", F.col("lgd_floored")) * F.col("ead_after_crm"),
         pool_b_extras=True,
-        cols=cols,
     )
 
     # defaulted rows never substitute — the hypothetical equals the actual
@@ -3178,16 +2752,12 @@ def run_irb(
     def _finish(df):
         # routing provenance: which IRB variant the permission stage
         # granted (airb/firb), else the bundle-level permission flag
-        irb_reason = (
-            F.concat(
-                F.lit("irb_permission_"),
-                F.coalesce(F.col("irb_subapproach"), F.lit("granted")),
-            )
-            if "irb_subapproach" in cols
-            else F.lit("irb_permission_granted")
+        irb_reason = F.concat(
+            F.lit("irb_permission_"),
+            F.coalesce(F.col("irb_subapproach"), F.lit("granted")),
         )
         _sme_f, _infra_f, _sf = _supporting_factor_exprs(
-            pack, threshold_scale, cols
+            pack, threshold_scale, carried
         )
         # one batched projection; supporting_factor_benefit inlines the
         # exact rwa_before_sf/rwa expressions (identical DAG, bit-equal)
@@ -3216,9 +2786,8 @@ def run_irb(
             pd_col=F.col("pd_floored"),
             lgd_col=F.col("lgd_floored"),
             m_col=F.col("m_eff"),
-            cols=cols,
         )
-        df = _apply_pma(df, pack, pma, cols=cols)
+        df = _apply_pma(df, pack, pma)
         return df.select(*_RESULT_COLS)
 
     return CalcOutput(results=_finish(perf).unionByName(_finish(dflt)))
@@ -3235,25 +2804,23 @@ def run_secsa(crm: CRMOutput, pack: RulePack) -> CalcOutput:
     take the FULL SSFA closed form (BCBS CRE41 / CRR Art.261-262,
     functions/secsa.py) — beyond the reference. Pure exp/arithmetic, so
     the branch stays inside whole-stage codegen."""
-    exp = _crm_carry(crm.exposures.where(F.col("exposure_class") == "securitisation"))
-    cols = _colset(exp)
+    exp, carried = _calc_entry(
+        crm.exposures.where(F.col("exposure_class") == "securitisation")
+    )
     flat_rw = F.greatest(
         pack.lit("secsa_floor_rw"),
         pack.lit("secsa_ksa") * F.lit(12.5) * pack.lit("secsa_p"),
     )
-    if "attachment" in cols:
+    approach_col = F.lit("SEC-SA")
+    if "attachment" in carried:
         from rwa_calculator_spark.functions.secsa import (
             ssfa_risk_weight_cols,
         )
 
         # STS pools take the halved supervisory p (CRR Art.262(1));
         # column-valued so STS and non-STS tranches share one plan
-        p_sa = (
-            F.when(F.col("is_sts"), pack.lit("secsa_p_sts")).otherwise(
-                pack.lit("secsa_p")
-            )
-            if "is_sts" in cols
-            else pack.lit("secsa_p")
+        p_sa = F.when(F.col("is_sts"), pack.lit("secsa_p_sts")).otherwise(
+            pack.lit("secsa_p")
         )
         rw_sa = ssfa_risk_weight_cols(
             F.col("attachment"),
@@ -3270,7 +2837,7 @@ def run_secsa(crm: CRMOutput, pack: RulePack) -> CalcOutput:
         # Art.92(3) floor base: SEC-IRBA rows floor against their SEC-SA
         # equivalent, so the SA-side RW is kept regardless of routing
         sa_equiv_rw = rw
-        if "k_irb" in cols:
+        if "k_irb" in carried:
             # SEC-IRBA (CRR Art.259): same SSFA closed form with the
             # pool's own K_IRB and the supervisory p-formula
             # p = max(floor, A + B/N + C·K_IRB + D·LGD + E·M_T).
@@ -3302,8 +2869,6 @@ def run_secsa(crm: CRMOutput, pack: RulePack) -> CalcOutput:
         rw = flat_rw
         rw_src = F.lit("sec_sa")
         sa_equiv_rw = rw
-    if "k_irb" not in cols:
-        approach_col = F.lit("SEC-SA")
     exp = exp.withColumns(
         {
             "approach": approach_col,
@@ -3314,7 +2879,7 @@ def run_secsa(crm: CRMOutput, pack: RulePack) -> CalcOutput:
         }
     )
     exp = _el_columns(exp, F.lit(0.0))
-    exp = _param_cols(exp, cols=cols)
+    exp = _param_cols(exp)
     exp = exp.withColumns(
         {
             "rwa_sa_equivalent": F.col("ead_after_crm") * sa_equiv_rw,
@@ -3332,8 +2897,7 @@ def run_slotting(
     rulepack, with the table's EL rate feeding expected loss
     (CRR Art.153(5)/158(6); ref engine/slotting/)."""
     spark = crm.exposures.sparkSession
-    exp = _crm_carry(crm.exposures.where(F.col("is_specialised")))
-    cols = _colset(exp)
+    exp, carried = _calc_entry(crm.exposures.where(F.col("is_specialised")))
     # Art.153(5) Table A keys on (category, maturity band, HVCRE): the
     # preferential short row applies below 2.5y remaining maturity;
     # unknown maturity conservatively takes the long row. Joining on the
@@ -3342,14 +2906,7 @@ def run_slotting(
     exp = exp.withColumn(
         "_sl_short",
         F.coalesce(F.col("effective_maturity") < F.lit(2.5), F.lit(False)),
-    ).withColumn(
-        "_sl_hvcre",
-        (
-            F.coalesce("is_hvcre", F.lit(False))
-            if "is_hvcre" in cols
-            else F.lit(False)
-        ),
-    )
+    ).withColumn("_sl_hvcre", F.coalesce("is_hvcre", F.lit(False)))
     slot_rw = pack.table_df(spark, "slotting_rw").select(
         F.col("slot_category").alias("_sl_cat_t"),
         F.col("is_short").alias("_sl_short_t"),
@@ -3389,9 +2946,7 @@ def run_slotting(
     # CRR Art.501/501a on the slotting branch (ref slotting/calculator.py
     # :146 _apply_supporting_factors — infrastructure project finance in
     # slotting qualifies for the 0.75 factor; B3.1 disables both)
-    _sme_f, _infra_f, _sf = _supporting_factor_exprs(
-        pack, threshold_scale, cols
-    )
+    _sme_f, _infra_f, _sf = _supporting_factor_exprs(pack, threshold_scale, carried)
     # one batched projection: supporting_factor_benefit inlines the exact
     # post-factor rwa expression (identical arithmetic DAG, bit-equal to
     # reading the chained column)
@@ -3409,7 +2964,7 @@ def run_slotting(
     )
     # carry the maturity the band keyed on (Pillar 3 CR10 splits every
     # category into <2.5y / ≥2.5y rows on exactly this input)
-    exp = _param_cols(exp, cols=cols, m_col=F.col("effective_maturity").cast("double"))
+    exp = _param_cols(exp, m_col=F.col("effective_maturity").cast("double"))
     exp = exp.withColumns(
         {
             "rwa_sa_equivalent": F.col("rwa"),
@@ -3432,16 +2987,8 @@ def _equity_pd_lgd(equity: DataFrame, pack: RulePack) -> DataFrame:
     rwa is capped."""
     mv = F.coalesce("market_value", F.lit(0.0))
     listed = F.coalesce("is_exchange_traded", F.lit(False))
-    pe_div = (
-        F.coalesce("is_diversified_pe", F.lit(False))
-        if "is_diversified_pe" in equity.columns
-        else F.lit(False)
-    )
-    has_dd = (
-        F.coalesce("has_default_definition_info", F.lit(False))
-        if "has_default_definition_info" in equity.columns
-        else F.lit(False)
-    )
+    pe_div = F.coalesce("is_diversified_pe", F.lit(False))
+    has_dd = F.coalesce("has_default_definition_info", F.lit(False))
     eq = equity.withColumn(
         "_pd_eq",
         F.when(listed, pack.lit("equity_pdlgd_pd_floor_listed")).otherwise(
@@ -3517,31 +3064,36 @@ def run_equity(
     phases the weights in from 2027 (ref calculator.py:1023
     _apply_transitional_floor + rulebook/packs/b31.py:740 schedules).
     """
-    if (
-        "use_pd_lgd" in equity.columns
-        and pack.scalar("equity_irb_available") >= 1.0
-    ):
+    equity, carried = conform_calc_edge(equity, _EQUITY_CARRIERS)
+    if "use_pd_lgd" in carried and pack.scalar("equity_irb_available") >= 1.0:
         elect = F.coalesce("use_pd_lgd", F.lit(False))
-        simple_out = _equity_simple(equity.where(~elect), pack, reporting_date)
-        pdlgd_out = _equity_pd_lgd(equity.where(elect), pack)
-        return CalcOutput(
-            results=_crm_carry(
-                _provenance_cols(
-                    # the PD/LGD leg carries no netting/transitional
-                    # columns (it bypasses both) — union fills them null
-                    simple_out.unionByName(pdlgd_out, allowMissingColumns=True),
-                    "EQUITY",
-                )
-            ).select(*_RESULT_COLS)
+        simple_out = _equity_simple(equity.where(~elect), pack, reporting_date, carried)
+        # the PD/LGD leg carries no netting/transitional columns (it
+        # bypasses both) — the union fills them null
+        out = simple_out.unionByName(
+            _equity_pd_lgd(equity.where(elect), pack), allowMissingColumns=True
         )
-    return CalcOutput(
-        results=_crm_carry(
-            _provenance_cols(_equity_simple(equity, pack, reporting_date), "EQUITY")
-        ).select(*_RESULT_COLS)
-    )
+    else:
+        out = _equity_simple(equity, pack, reporting_date, carried)
+    return CalcOutput(results=_calc_entry(out, "EQUITY")[0].select(*_RESULT_COLS))
 
 
-def _net_short_ead(equity: DataFrame) -> DataFrame:
+# the equity-holdings carriers of CALC_EDGE (the holdings frame is no CRM
+# edge: it conforms to these alone)
+_EQUITY_CARRIERS = (
+    "is_diversified_pe",
+    "has_default_definition_info",
+    "is_speculative",
+    "is_explicitly_hedged",
+    "business_age_years",
+    "equity_subtype",
+    "use_pd_lgd",
+    "position_value",
+    "issuer_reference",
+)
+
+
+def _net_short_ead(equity: DataFrame, carried: frozenset) -> DataFrame:
     """CRR Art.155(2) non-trading-book net-short netting (ref
     engine/equity/calculator.py:829-894 _net_short_positions): an
     explicitly-hedged (≥1y) short may offset longs in the SAME individual
@@ -3552,16 +3104,9 @@ def _net_short_ead(equity: DataFrame) -> DataFrame:
     `_eq_ead`; column-absence defensive — without position_value/
     issuer_reference the frame passes through unchanged."""
     mv = F.coalesce("market_value", F.lit(0.0))
-    if (
-        "position_value" not in equity.columns
-        or "issuer_reference" not in equity.columns
-    ):
+    if "position_value" not in carried or "issuer_reference" not in carried:
         return equity.withColumn("_eq_ead", mv)
-    hedged = (
-        F.coalesce("is_explicitly_hedged", F.lit(False))
-        if "is_explicitly_hedged" in equity.columns
-        else F.lit(False)
-    )
+    hedged = F.coalesce("is_explicitly_hedged", F.lit(False))
     eligible = (
         F.col("issuer_reference").isNotNull()
         & F.col("position_value").isNotNull()
@@ -3605,30 +3150,21 @@ def _equity_transitional_schedule(
 
 
 def _equity_simple(
-    equity: DataFrame, pack: RulePack, reporting_date: str | None = None
+    equity: DataFrame, pack: RulePack, reporting_date: str | None, carried: frozenset
 ) -> DataFrame:
     # Art.155(2) net-short netting is IRB-Simple machinery: the PD/LGD
     # branch bypasses it (ref calculator.py:249-251) and the B3.1 SA
     # weights fn never calls it (ref calculator.py:775 — the call sits
     # inside _apply_equity_weights_irb_simple only)
     if pack.scalar("equity_irb_available") >= 1.0:
-        equity = _net_short_ead(equity)
+        equity = _net_short_ead(equity, carried)
     else:
         equity = equity.withColumn(
             "_eq_ead", F.coalesce("market_value", F.lit(0.0))
         )
     listed = F.coalesce("is_exchange_traded", F.lit(False))
-    # optional flags (absent in minimal bundles → default false)
-    pe_div = (
-        F.coalesce("is_diversified_pe", F.lit(False))
-        if "is_diversified_pe" in equity.columns
-        else F.lit(False)
-    )
-    spec = (
-        F.coalesce("is_speculative", F.lit(False))
-        if "is_speculative" in equity.columns
-        else F.lit(False)
-    )
+    pe_div = F.coalesce("is_diversified_pe", F.lit(False))
+    spec = F.coalesce("is_speculative", F.lit(False))
     if pack.scalar("equity_irb_available") >= 1.0:
         rw = (
             F.when(pe_div, pack.lit("equity_pe_diversified_rw"))
@@ -3654,18 +3190,11 @@ def _equity_simple(
     trans = _equity_transitional_schedule(pack, reporting_date)
     if trans is not None:
         std_rw, hr_rw = trans
-        age_hr = (
-            F.col("business_age_years").isNull()
-            | (F.col("business_age_years") < 5.0)
-            if "business_age_years" in equity.columns
-            else F.lit(True)
+        age_hr = F.col("business_age_years").isNull() | (
+            F.col("business_age_years") < 5.0
         )
         is_hr = spec | (pe_div & ~listed & age_hr)
-        sub = (
-            F.lower(F.coalesce("equity_subtype", F.lit("")))
-            if "equity_subtype" in equity.columns
-            else F.lit("")
-        )
+        sub = F.lower(F.coalesce("equity_subtype", F.lit("")))
         excluded = sub.isin("central_bank", "subordinated_debt")
         trans_rw = (
             F.when(excluded, F.lit(0.0))

@@ -24,7 +24,7 @@ from rwa_calculator_spark.engine.stages.ratings import (
     resolve_external_cqs,
     resolve_internal_pd,
 )
-from rwa_calculator_spark.operators.graph import resolve_ultimate_parent_iterative
+from rwa_calculator_spark.operators.graph import org_walk as build_org_walk
 
 
 def _fx_factor(df: DataFrame, fx_rates: DataFrame | None):
@@ -62,11 +62,13 @@ def run_hierarchy(
     raw: RawBundle,
     pack: RulePack = CRR_PACK,
     extra_exposures: list[DataFrame] | None = None,
+    org_walk: DataFrame | None = None,
 ) -> HierarchyOutput:
     """extra_exposures: already-shaped synthetic frames (CCR netting sets,
     SFT netting sets, securitisation pools) unioned into the ledger before
     enrichment — ref engine/stages/hierarchy/unify.py:107 diagonal concat
-    of every exposure source."""
+    of every exposure source. org_walk: the walk over raw.org_mappings
+    (operators/graph.org_walk) when the caller already built one."""
     loans_src = _fx_factor(raw.loans, raw.fx_rates)
     loan_cols = [
         F.col("loan_reference").alias("exposure_reference"),
@@ -444,12 +446,11 @@ def run_hierarchy(
         # edge table — cheaper than pointer jumping here, whose per-round
         # self-join re-broadcasts a growing unmaterialised plan (use
         # resolve_ultimate_parent_pointer_jumping only over materialised
-        # maps with depth ≫ 10)
-        up = resolve_ultimate_parent_iterative(
-            raw.org_mappings.select(
-                F.col("child_reference").alias("child"), F.col("parent_reference").alias("parent")
-            )
-        ).select(
+        # maps with depth ≫ 10). Validation hands over the walk it built
+        # for DQ013 over the same edges; without validation it is built here.
+        if org_walk is None:
+            org_walk = build_org_walk(raw.org_mappings)
+        up = org_walk.select(
             F.col("node").alias("counterparty_reference"),
             F.col("ultimate_parent").alias("group_reference"),
             # ledger carrier (ref CALCULATION_OUTPUT_SCHEMA

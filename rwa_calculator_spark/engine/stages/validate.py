@@ -35,7 +35,9 @@ scrub); every other check tests the scrubbed values, so a NaN pd raises
 DQ011 and no DQ006, and a -inf drawn_amount DQ011 and no DQ012.
 
 The org-edge dedup is checkpointed once with its edge count: DQ004 edge
-warnings and the DQ013 depth-cap/cycle walk both read the checkpoint.
+warnings and the DQ013 depth-cap/cycle walk both read the checkpoint, and
+the walk is returned so the hierarchy stage reuses it instead of building
+a second one.
 Errors merge onto AggregatedOutput.errors; halt="immediate" makes
 run_pipeline raise PipelineHalt on the first error instead (the one
 deliberate driver-side action in the pipeline, documented at the call
@@ -51,6 +53,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rwa_calculator_spark.engine.bundles import RawBundle
+from rwa_calculator_spark.operators.graph import org_walk
 
 _NUMERIC_SCRUB_COLS = ("drawn_amount", "nominal_amount", "pd", "lgd", "effective_maturity", "el_be")
 
@@ -373,9 +376,15 @@ def _dimensions(raw: RawBundle) -> dict[str, list[tuple[DataFrame, str]]]:
     }
 
 
-def run_validation(raw: RawBundle) -> tuple[RawBundle, DataFrame]:
+class Validated(NamedTuple):
+    raw: RawBundle  # scrubbed bundle, org edges deduplicated
+    errors: DataFrame  # in ERRORS_SCHEMA
+    org_walk: DataFrame | None  # the org walk DQ013 read (None: no org edges)
+
+
+def run_validation(raw: RawBundle) -> Validated:
     """Scrub non-finite numerics, dedup the org edges and evaluate the check
-    registry. Returns (scrubbed bundle, error frame in ERRORS_SCHEMA)."""
+    registry."""
     # the frames the checks read: the bundle's own, except where validation
     # derives one (the pre-scrub flag, the org-edge dedup, the org walk)
     frames = {f.name: getattr(raw, f.name) for f in fields(raw)}
@@ -401,16 +410,7 @@ def run_validation(raw: RawBundle) -> tuple[RawBundle, DataFrame]:
             .localCheckpoint(eager=False)
         )
         org_mappings = frames["org_mappings"].select("child_reference", "parent_reference")
-        from rwa_calculator_spark.operators.graph import (
-            resolve_ultimate_parent_iterative,
-        )
-
-        frames["org_walk"] = resolve_ultimate_parent_iterative(
-            org_mappings.select(
-                F.col("child_reference").alias("child"),
-                F.col("parent_reference").alias("parent"),
-            )
-        )
+        frames["org_walk"] = org_walk(org_mappings)
 
     # --- every registry check: one inline per table, one shared groupBy --
     dims = _dimensions(raw)
@@ -446,7 +446,8 @@ def run_validation(raw: RawBundle) -> tuple[RawBundle, DataFrame]:
         "'stage', 'validate', 'key', key, 'message', message), "
         "IF(_grain = 'row', CAST(_n AS INT), 1)))"
     )
-    return (
+    return Validated(
         replace(raw, loans=loans, contingents=contingents, org_mappings=org_mappings),
         errors,
+        frames.get("org_walk"),
     )

@@ -2,9 +2,12 @@
 
 A stage edge that gets localCheckpointed materialises every output column
 into serialized InternalRows — including columns the optimizer already
-knows are constants (the engine lit-fills contract carriers when their
+knows are constants (the CRM stage lit-fills its carriers when their
 source frame is absent: no guarantees frame → ``g_coverage = 0.0``,
-``g_class = NULL``, …). Serialising a constant per row is pure waste, and
+``g_class = NULL``, …). Carriers no stage emits never reach the barrier:
+each calculator branch fills them after it from the declared calculator
+edge (``contracts.schemas.CALC_EDGE``). Serialising a constant per row is
+pure waste, and
 worse, the barrier HIDES the constant from Catalyst: downstream pricing
 branches like ``F.when(g_coverage > 0, …)`` read an opaque checkpointed
 attribute instead of folding to ``false`` at plan time.

@@ -86,6 +86,19 @@ def resolve_ultimate_parent_iterative(edges: DataFrame, max_depth: int = 10) -> 
     return final
 
 
+def org_walk(org_mappings: DataFrame) -> DataFrame:
+    """The counterparty org walk over (child_reference, parent_reference)
+    edges: (node, ultimate_parent, depth, truncated). One run builds it
+    once — validation's DQ013 check and the hierarchy's group apex read
+    the same plan."""
+    return resolve_ultimate_parent_iterative(
+        org_mappings.select(
+            F.col("child_reference").alias("child"),
+            F.col("parent_reference").alias("parent"),
+        )
+    )
+
+
 def resolve_ultimate_parent_pointer_jumping(
     edges: DataFrame, max_depth: int = 16
 ) -> DataFrame:

@@ -13,6 +13,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
+from rwa_calculator_spark.session import apply_session_tuning
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -34,13 +36,9 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), benc
             raise ValueError(f"duplicate query name: {name}")
 
         def run(spark: SparkSession, sf_dir: str, /, *args, **kwargs) -> DataFrame:
-            # Session hygiene for harness-built sessions (the round driver):
-            # our own build_session sets this at builder time; external
-            # sessions get the same documented conf here, guarded to one
-            # round trip per call. See utils.allow_cached_plan_repartitioning.
-            from rwa_calculator_spark.utils import allow_cached_plan_repartitioning
-
-            allow_cached_plan_repartitioning(spark)
+            # harness-built sessions (the round driver's) get the engine's
+            # runtime tuning here; a tuned session pays one conf read
+            apply_session_tuning(spark)
             return fn(spark, sf_dir, *args, **kwargs)
 
         run.__name__ = fn.__name__
@@ -54,12 +52,9 @@ def query(name: str, oracle: str | None = None, tags: tuple[str, ...] = (), benc
 
 def load_all() -> dict[str, QuerySpec]:
     """Import every plans submodule so all @query decorators run."""
-    # Harnesses that build their own SparkSession (the round driver) can't
-    # set the static dataFrameDebugging conf — pre-seed its Python-side
-    # cache here, at the shared entry point of every query surface.
-    from rwa_calculator_spark.utils import disable_dataframe_debugging
-
-    disable_dataframe_debugging()
+    # the shared entry point of every query surface: process-level tuning
+    # before any session exists (see session.apply_session_tuning)
+    apply_session_tuning()
     from rwa_calculator_spark.plans import (  # noqa: F401
         ccr,
         corep_c08,

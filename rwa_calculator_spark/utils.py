@@ -33,65 +33,6 @@ def ensure_workers_can_import(spark: SparkSession) -> None:
     _SHIPPED.add(ctx_id)
 
 
-def disable_dataframe_debugging() -> None:
-    """Turn off PySpark's per-call DataFrame-debugging origin capture in
-    THIS Python process (the Python half of the public static conf
-    ``spark.python.sql.dataFrameDebugging.enabled``).
-
-    With the default (true), every wrapped DataFrame/Column API call walks
-    the Python stack and pays THREE extra py4j round trips (``conf.get`` of
-    the stack-depth conf + ``PySparkCurrentOrigin.set`` + ``.clear``) purely
-    to decorate potential error messages with user call sites. On a
-    160-column engine plan that is ~60% of all gateway traffic: one
-    measured pipeline-query build dropped from 29,699 to 12,269 py4j
-    commands with it off (guide §1.2 per-task work, applied to the driver).
-
-    ``build_session`` sets the static conf at builder time; sessions built
-    by EXTERNAL harnesses (the round driver's vanilla session) cannot — the
-    conf is static and pyspark caches its value in a module global on first
-    use. Pre-seeding that documented cache is the supported effect of the
-    same public conf, applied process-wide; results are unaffected (error
-    messages simply lose the Python call-site enrichment). Guarded so a
-    pyspark that renames the cache degrades to a no-op.
-    """
-    try:
-        import pyspark.errors.utils as _eu
-
-        if hasattr(_eu, "_enable_debugging_cache"):
-            _eu._enable_debugging_cache = False
-    except Exception:
-        pass  # observability-only tuning; never fail over it
-
-
-def allow_cached_plan_repartitioning(spark: SparkSession) -> None:
-    """Let AQE re-optimise the shuffles INSIDE cached plans
-    (``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``).
-
-    Engine stages persist dimension-sized frames (facility root lookup,
-    waterfall allocations, CRM membership edges). With the default (false),
-    every shuffle feeding a persisted frame materialises at the session's
-    full ``spark.sql.shuffle.partitions`` width — 200 near-empty cached
-    partitions per frame in a default session — and every consumer stage
-    (and the final branch union) pays that task count. With it on, AQE
-    coalesces those shuffles from runtime sizes exactly as it already does
-    for uncached plans (guide §2.2: fewer, larger partitions; derived from
-    data size, not a constant).
-
-    Results are unaffected: partitioning only. Every registered query is
-    partitioning-independent by construction (exact integer-cents sums,
-    explicit total orderings — SURVEY §7.2 hard-parts 1-3). Measured:
-    ``facility_undrawn_waterfall`` 8.5 s → 4.3 s per run (vanilla local[8],
-    sf0.01, interleaved A/B, 4 reps); engine/corep families neutral.
-    Guarded conf.get so sessions that already set it pay one round trip.
-    """
-    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
-    try:
-        if spark.conf.get(key, None) != "true":
-            spark.conf.set(key, "true")
-    except Exception:  # noqa: BLE001 — tuning, never fail a query over it
-        pass
-
-
 def release_cached_blocks(spark: SparkSession) -> None:
     """Unpersist every cached DataFrame and persistent RDD left by EARLIER
     queries in this session.

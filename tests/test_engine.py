@@ -2068,9 +2068,9 @@ def test_dq005_orphan_collateral_links(spark):
         [("COL1", "L1"), ("COLX", "L1"), ("COL1", "LX")],
         "collateral_reference string, exposure_reference string",
     )
-    _bundle, errors = run_validation(
+    errors = run_validation(
         RawBundle(counterparties=cps, loans=loans, collateral=coll, collateral_links=links)
-    )
+    ).errors
     dq5 = {(r.key) for r in errors.collect() if r.code == "DQ005"}
     assert dq5 == {"COLX", "LX"}
 
@@ -2696,7 +2696,7 @@ def test_validation_domain_breadth(spark):
         sft_trades=sft,
         securitisation_allocations=allocs,
     )
-    _, errors = run_validation(bundle)
+    errors = run_validation(bundle).errors
     rows = errors.collect()
     by_code = {}
     for r in rows:
@@ -2768,7 +2768,7 @@ def test_dq013_hierarchy_cycle_surfaces(spark):
         [("CP1", "CP2"), ("CP2", "CP1")],  # 2-cycle
         "child_reference string, parent_reference string",
     )
-    sealed, errors = run_validation(
+    sealed, errors, _ = run_validation(
         RawBundle(counterparties=cps, loans=loans, org_mappings=org)
     )
     dq13 = [r for r in errors.collect() if r.code == "DQ013"]
@@ -2873,7 +2873,7 @@ def test_validation_categorical_long_tail(spark):
         securitisation_allocations=allocs,
         collateral=collateral,
     )
-    _raw, errors = run_validation(bundle)
+    errors = run_validation(bundle).errors
     errs = {(r.code, r.key) for r in errors.collect()}
     expected = {
         ("DQ003", "Z_GRADE"),           # counterparties.scra_grade

@@ -227,7 +227,7 @@ EXPECTED = [
 
 
 def test_validation_error_multiset_is_exact(book):
-    _, errors = run_validation(book)
+    errors = run_validation(book).errors
     got = Counter(tuple(r) for r in errors.collect())
     want = Counter(EXPECTED)
     assert got == want, (
@@ -236,7 +236,7 @@ def test_validation_error_multiset_is_exact(book):
 
 
 def test_validation_scrubs_and_dedups(book):
-    scrubbed, _ = run_validation(book)
+    scrubbed = run_validation(book).raw
     loans = {
         (r.loan_reference, r.drawn_amount, r.pd) for r in scrubbed.loans.collect()
     }
@@ -254,3 +254,25 @@ def test_validation_scrubs_and_dedups(book):
 def test_immediate_validation_halts(book):
     with pytest.raises(PipelineHalt):
         run_pipeline(book, PipelineConfig(pack=CRR_PACK, validation="immediate"))
+
+
+@pytest.mark.parametrize("validation", ["merged", "off"])
+def test_org_walk_is_built_once_per_run(spark, monkeypatch, validation):
+    """Validation's DQ013 check and the hierarchy's group apex read one
+    walk; without validation the hierarchy builds it, still once."""
+    from rwa_calculator_spark.operators import graph
+    from tests.engine_fixtures import build_bundle
+
+    built = []
+    real = graph.resolve_ultimate_parent_iterative
+
+    def counting(edges, *args, **kwargs):
+        built.append(edges)
+        return real(edges, *args, **kwargs)
+
+    monkeypatch.setattr(graph, "resolve_ultimate_parent_iterative", counting)
+    out = run_pipeline(
+        build_bundle(spark, n_cp=30), PipelineConfig(pack=CRR_PACK, validation=validation)
+    )
+    assert len(built) == 1
+    assert out.results.where("ultimate_parent_reference IS NOT NULL").count() > 0
