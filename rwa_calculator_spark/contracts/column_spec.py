@@ -11,10 +11,11 @@ data/column_spec.py:33-126, contracts/edges.py) on Spark DataFrames:
 
 All of this is pure `select` — Catalyst folds the literals, so a contract
 costs nothing at 100 TB. The projection is rendered as SQL text and
-applied as one `selectExpr`: building it from Column objects costs three
-to four py4j round trips per column (lit, cast, alias, list element),
-which on a ~200-carrier edge is hundreds of driver calls per use
-(`operators/localrel.py` applies the same idea to literal tables).
+applied as one `selectExpr` whose list crosses to the JVM as one string
+(`functions.sqltext.select_sql`): building it from Column objects costs
+three to four py4j round trips per column (lit, cast, alias, list
+element), which on a ~200-carrier edge is hundreds of driver calls per
+use (`operators/localrel.py` applies the same idea to literal tables).
 """
 
 from __future__ import annotations
@@ -25,7 +26,13 @@ from typing import Any, Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from rwa_calculator_spark.operators.localrel import _sql_literal
+from rwa_calculator_spark.functions.sqltext import (
+    Expr,
+    Projection,
+    quote,
+    select_sql,
+    sql_literal,
+)
 
 
 @dataclass(frozen=True)
@@ -35,15 +42,11 @@ class ColumnSpec:
     required: bool = False
 
 
-def _quote(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _cast_sql(name: str, spec: ColumnSpec, present: bool) -> str:
-    value = _quote(name) if present else _sql_literal(spec.default)
+    value = quote(name) if present else sql_literal(spec.default)
     if value is None:
         raise ValueError(f"default of {name!r} has no SQL literal form: {spec.default!r}")
-    return f"CAST({value} AS {spec.dtype.simpleString()}) AS {_quote(name)}"
+    return f"CAST({value} AS {spec.dtype.simpleString()})"
 
 
 def ensure_columns(df: DataFrame, specs: Mapping[str, ColumnSpec]) -> DataFrame:
@@ -55,22 +58,25 @@ def ensure_columns(df: DataFrame, specs: Mapping[str, ColumnSpec]) -> DataFrame:
     missing_required = [c for c, s in specs.items() if s.required and c not in present]
     if missing_required:
         raise ValueError(f"missing required columns: {missing_required}")
-    exprs = [_cast_sql(name, spec, name in present) for name, spec in specs.items()]
+    exprs = [
+        f"{_cast_sql(name, spec, name in present)} AS {quote(name)}"
+        for name, spec in specs.items()
+    ]
     passthrough = [c for c in present if c not in specs]
     if len(passthrough) == len(present):
-        return df.selectExpr(*exprs, "*")
-    return df.selectExpr(*exprs, *map(_quote, passthrough))
+        return select_sql(df, exprs + ["*"])
+    return select_sql(df, exprs + [quote(c) for c in passthrough])
 
 
-def fill_absent(
-    df: DataFrame, specs: Mapping[str, ColumnSpec]
-) -> tuple[DataFrame, frozenset[str]]:
-    """Inject every absent spec column as its typed default and leave the
-    present ones untouched (no cast). Returns the frame and the set of
-    columns the input carried."""
-    carried = frozenset(df.columns)
-    absent = {n: s for n, s in specs.items() if n not in carried}
-    return (ensure_columns(df, absent) if absent else df), carried
+def fill_absent(frame: Projection, specs: Mapping[str, ColumnSpec]) -> frozenset[str]:
+    """Add every absent spec column to the pending projection as its typed
+    default and leave the present ones untouched (no cast). Returns the
+    set of columns the input carried."""
+    carried = frozenset(frame.columns)
+    frame.with_columns(
+        {n: Expr(_cast_sql(n, s, False)) for n, s in specs.items() if n not in carried}
+    )
+    return carried
 
 
 def conform(df: DataFrame, specs: Mapping[str, ColumnSpec]) -> DataFrame:

@@ -37,6 +37,7 @@ from rwa_calculator_spark.contracts.column_spec import (
 
 if TYPE_CHECKING:  # the engine package imports this module's CALC_EDGE
     from rwa_calculator_spark.engine.bundles import RawBundle
+    from rwa_calculator_spark.functions.sqltext import Projection
 
 _S = T.StringType()
 _D = T.DoubleType()
@@ -342,6 +343,10 @@ def _falses(*names: str) -> dict[str, ColumnSpec]:
     return {n: ColumnSpec(_B, False) for n in names}
 
 
+def _zeros(*names: str) -> dict[str, ColumnSpec]:
+    return {n: ColumnSpec(_D, 0.0) for n in names}
+
+
 #: The CRM stage's multi-guarantee stack: one priority-ordered struct per
 #: guarantee leg (tranche slice, SA weight, modelled guarantor carriers).
 MG_STACK = T.ArrayType(
@@ -367,9 +372,9 @@ MG_STACK = T.ArrayType(
 #: absent and default price the same there, and the calculators test them
 #: against the set the input really carried only to skip the build.
 CALC_EDGE: Mapping[str, ColumnSpec] = {
-    # CRM components; the branches read them as coalesce(c, 0.0)
-    **_nulls(
-        _D,
+    # CRM components: zero where no CRM frame fed them (the branches
+    # coalesce a carried amount's nulls to 0.0 as well)
+    **_zeros(
         "provision_allocated",
         "collateral_value",
         "g_coverage",
@@ -644,14 +649,14 @@ CALC_EDGE_GATES: Mapping[str, T.DataType] = {
 
 
 def conform_calc_edge(
-    df: DataFrame, names: tuple[str, ...] | None = None
-) -> tuple[DataFrame, frozenset[str]]:
+    frame: "Projection", names: tuple[str, ...] | None = None
+) -> frozenset[str]:
     """Fill every absent `CALC_EDGE` carrier (or the `names` subset) with
-    its typed default in one projection. Returns the conformed frame and
-    the columns the input really carried — the only presence test the
-    calculators make."""
+    its typed default, as one more step of the frame's pending projection
+    (`functions.sqltext.Projection`). Returns the columns the input really
+    carried — the only presence test the calculators make."""
     specs = CALC_EDGE if names is None else {n: CALC_EDGE[n] for n in names}
-    return fill_absent(df, specs)
+    return fill_absent(frame, specs)
 
 #: Vendor-header → canonical-name translation (ref engine/loader.py alias
 #: translation). Keys are POST-normalisation (lowercased, separators

@@ -59,6 +59,12 @@ class RulePack:
     def lit(self, name: str):
         return F.lit(self.scalar(name))
 
+    def sql_lit(self, name: str):
+        """The scalar as a SQL-text literal (`functions.sqltext`)."""
+        from rwa_calculator_spark.functions.sqltext import lit
+
+        return lit(self.scalar(name))
+
     def table_map(self, name: str) -> dict:
         """A 2-column lookup table as a plain {key: float} dict — for
         dimension-sized tables the stages compile into when-chains
@@ -76,6 +82,24 @@ class RulePack:
 
     def broadcast_table(self, spark: SparkSession, name: str) -> DataFrame:
         return F.broadcast(self.table_df(spark, name))
+
+    def dim(
+        self, spark: SparkSession, name: str, select: str, where: str | None = None
+    ) -> DataFrame:
+        """A pack table shaped for a broadcast join in one ``spark.sql``:
+        ``select``/``where`` are SQL over its columns (rename the join keys
+        apart from the fact side's)."""
+        from rwa_calculator_spark.operators.localrel import local_literal_df
+
+        schema, rows = self.tables[name]
+        return local_literal_df(
+            spark,
+            schema,
+            [tuple(_to_py(v) for v in r) for r in rows],
+            select=select,
+            where=where,
+            broadcast=True,
+        )
 
     def audit_rows(self) -> list[tuple]:
         """The full rule catalogue as provenance rows (ref rulebook/audit.py

@@ -25,7 +25,7 @@ projection fills the absent carriers with typed literals and reports the
 set the input really carried. Two kinds of carrier follow from that:
 
 - fills: a carrier whose absent path is its default is read directly
-  (``F.col(x)``); Catalyst folds the literal wherever the input lacked it.
+  (``S.col(x)``); Catalyst folds the literal wherever the input lacked it.
 - gates: a carrier whose absence selects a cheaper plan (a broadcast join
   not built, an array fold not run: covered bonds, the SCRA, sovereign-
   derived and short-term tables, the ``_mg`` stack, SEC tranche grain) is
@@ -34,29 +34,43 @@ set the input really carried. Two kinds of carrier follow from that:
   The carriers of `CALC_EDGE_GATES` (RE-LTV bands, the guarantor-PD
   Vasicek leg, the other-funded-protection channels, model-permission
   routing, ...) have no default at all: they are never filled and are
-  read only where ``carried`` holds them.
+  read only where ``carried`` holds them. A gate decides which SQL
+  fragments are rendered at all; a fill is always rendered.
+
+Build shape (``functions/sqltext.py``): every expression is SQL text built
+in Python — ``S.when``/``S.coalesce``/``S.col`` mirror the Column API, the
+Φ/Φ⁻¹ kernels are the JVM UDFs called by name, the multi-guarantee folds
+are SQL lambdas — and a branch's frame is a `Projection` whose column
+steps apply as one ``selectExpr`` per run of steps (lateral aliases carry
+a step's columns to the next). DataFrame calls remain only where the plan
+changes shape: the branch filter, the CALC_EDGE conform, each pack-table
+or dictionary join (the pack side built, renamed and broadcast-hinted in
+one ``spark.sql``), the IRB defaulted/performing split and its union.
+Built this way the SA and IRB branches of a sealed run cost ~220 py4j
+round trips and 46 frame-building calls (27 of them ``selectExpr`` steps),
+against ~7,200 and 95 as Columns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window as W
+from pyspark.sql import DataFrame
 
-from rwa_calculator_spark.contracts.schemas import conform_calc_edge
+from rwa_calculator_spark.contracts.schemas import CALC_EDGE, conform_calc_edge
 from rwa_calculator_spark.engine.bundles import CalcOutput, CRMOutput
 from rwa_calculator_spark.engine.rulepack import RulePack
+from rwa_calculator_spark.functions import sqltext as S
 from rwa_calculator_spark.functions.irb import (
     FI_CORRELATION_MULTIPLIER,
     R_RETAIL_MORTGAGE,
     R_RETAIL_QRRE,
-    irb_maturity_adj,
-    irb_maturity_b,
-    spark_correlation,
-    spark_correlation_other_retail,
-    spark_sme_size_adjustment,
+    correlation_other_retail_v,
+    correlation_v,
+    maturity_adj_v,
+    maturity_b_v,
+    sme_size_adjustment_v,
     with_irb_k_r,
 )
+from rwa_calculator_spark.functions.sqltext import Expr, Projection
 from rwa_calculator_spark.functions.stats import with_normal_ppf
 from rwa_calculator_spark.operators.dictionary import dictionary_apply
 
@@ -404,7 +418,7 @@ _RISK_TYPE_BY_ETYPE = {
 }
 
 
-def _provenance(carried: frozenset, default_risk_type: str) -> dict[str, Column]:
+def _provenance(carried: frozenset, default_risk_type: str) -> dict[str, Expr]:
     """The provenance carriers a conformed branch frame derives from its
     other columns (the null-default ones arrive from CALC_EDGE).
 
@@ -412,16 +426,21 @@ def _provenance(carried: frozenset, default_risk_type: str) -> dict[str, Column]
     one (CCR/SFT synthetic netting-set rows, securitisation pools); branches
     built outside the hierarchy union (equity, CIU, settlement) pass their
     own default."""
-    out: dict[str, Column] = {}
+    out: dict[str, Expr] = {}
+
+    def own(c: str) -> Expr:
+        # a carrier replaced below: absent, it reads as its null default
+        return S.col(c) if c in carried else S.null(CALC_EDGE[c].dtype.simpleString())
+
     if "risk_type" not in carried:
-        rt = F.lit(default_risk_type)
+        rt = S.lit(default_risk_type)
         for etype, label in _RISK_TYPE_BY_ETYPE.items():
-            rt = F.when(F.col("exposure_type") == etype, label).otherwise(rt)
+            rt = S.when(S.col("exposure_type") == etype, label).otherwise(rt)
         out["risk_type"] = rt
     # round-5 carrier: the resolved group apex where the frame went through
     # the hierarchy stage, else null
     if "ultimate_parent_reference" not in carried:
-        out["ultimate_parent_reference"] = F.col("group_reference")
+        out["ultimate_parent_reference"] = S.col("group_reference")
     # identity fills:
     # - source_exposure_reference: a never-split row is its own source
     # - facility-structure identities for bundles with no facility data
@@ -429,76 +448,87 @@ def _provenance(carried: frozenset, default_risk_type: str) -> dict[str, Column]
     # - parent_exposure_reference (ref :2885 "original exposure before
     #   multi-guarantor split"): this engine never row-splits on guarantors
     #   (portions stay on-row), so the parent IS the row's own reference
-    out["exposure_has_parent"] = F.coalesce("exposure_has_parent", F.lit(False))
-    out["facility_hierarchy_depth"] = F.coalesce("facility_hierarchy_depth", F.lit(0))
+    out["exposure_has_parent"] = S.coalesce(own("exposure_has_parent"), S.lit(False))
+    out["facility_hierarchy_depth"] = S.coalesce(own("facility_hierarchy_depth"), S.lit(0))
     if "exposure_reference" in carried:
-        ref = F.col("exposure_reference")
-        out["source_exposure_reference"] = F.coalesce("source_exposure_reference", ref)
-        out["facility_hierarchy_path"] = F.coalesce(
-            "facility_hierarchy_path", F.array(ref)
+        ref = S.col("exposure_reference")
+        out["source_exposure_reference"] = S.coalesce(own("source_exposure_reference"), ref)
+        out["facility_hierarchy_path"] = S.coalesce(
+            own("facility_hierarchy_path"), S.array(ref)
         )
-        out["parent_exposure_reference"] = F.coalesce("parent_exposure_reference", ref)
+        out["parent_exposure_reference"] = S.coalesce(own("parent_exposure_reference"), ref)
     # approach_permitted (ref :2935): the permission grant routing
     # consulted — model-permission grants where that stage ran, else the
     # bundle's blanket has_irb_permission flag
     if "model_airb_permitted" in carried:
         out["approach_permitted"] = (
-            F.when(F.coalesce("model_airb_permitted", F.lit(False)), "AIRB")
-            .when(F.coalesce("model_firb_permitted", F.lit(False)), "FIRB")
-            .when(F.coalesce("model_slotting_permitted", F.lit(False)), "SLOTTING")
+            S.when(S.coalesce("model_airb_permitted", S.lit(False)), "AIRB")
+            .when(S.coalesce("model_firb_permitted", S.lit(False)), "FIRB")
+            .when(S.coalesce("model_slotting_permitted", S.lit(False)), "SLOTTING")
             .otherwise("SA")
         )
     elif "has_irb_permission" in carried:
-        out["approach_permitted"] = F.when(
-            F.coalesce("has_irb_permission", F.lit(False)), "AIRB"
+        out["approach_permitted"] = S.when(
+            S.coalesce("has_irb_permission", S.lit(False)), "AIRB"
         ).otherwise("SA")
     # guarantee id lists: the crm stack where present, else a 0/1-element
     # list from the scalar (single first-wins guarantee — recorded narrowing)
-    out["guarantor_references"] = F.coalesce(
-        F.col("guarantor_references"),
-        F.when(
-            F.col("guarantor_reference").isNotNull(),
-            F.array(F.col("guarantor_reference")),
+    out["guarantor_references"] = S.coalesce(
+        own("guarantor_references"),
+        S.when(
+            S.col("guarantor_reference").isNotNull(),
+            S.array(S.col("guarantor_reference")),
         ),
     )
     if "guarantee_references" not in carried:
-        out["guarantee_references"] = F.when(
-            F.col("guarantee_reference").isNotNull(),
-            F.array(F.col("guarantee_reference")),
+        out["guarantee_references"] = S.when(
+            S.col("guarantee_reference").isNotNull(),
+            S.array(S.col("guarantee_reference")),
         )
     # guarantee_coverage_pct carries the DECLARED '% guaranteed' (ref
     # contract); the Art.233(3) post-haircut figure seals separately as
     # guarantee_effective_coverage_pct
-    g = F.coalesce("g_coverage", F.lit(0.0))
+    g = S.coalesce("g_coverage", S.lit(0.0))
     if "guarantee_coverage_pct" not in carried:
         out["guarantee_coverage_pct"] = (
-            F.col("g_coverage_declared") if "g_coverage_declared" in carried else g
+            S.col("g_coverage_declared") if "g_coverage_declared" in carried else g
         )
     if "guarantee_effective_coverage_pct" not in carried:
         out["guarantee_effective_coverage_pct"] = g
     # final_ead: the figure RWA actually priced on
     if "final_ead" not in carried:
         out["final_ead"] = (
-            F.col("ead_after_crm")
+            S.col("ead_after_crm")
             if "ead_after_crm" in carried
-            else (F.col("ead") if "ead" in carried else F.lit(None).cast("double"))
+            else (S.col("ead") if "ead" in carried else S.null("double"))
         )
     # substitution-free branches: the hypothetical equals the actual (only
     # frames that already carry rwa — SA/IRB set their own downstream)
     if "rwa_pre_crm_substitution" not in carried and "rwa" in carried:
-        out["rwa_pre_crm_substitution"] = F.col("rwa")
+        out["rwa_pre_crm_substitution"] = S.col("rwa")
     return out
 
 
-def _provenance_cols(exp: DataFrame, default_risk_type: str = "CREDIT") -> DataFrame:
+def _conform_with(exp: DataFrame, fills) -> tuple[Projection, frozenset]:
+    """Conform `exp` to CALC_EDGE and add ``fills(carried)`` in the same
+    step: the carriers the fills define are not conformed first (a
+    redefinition would start a second ``selectExpr``)."""
+    proj = Projection(exp)
+    carried = frozenset(proj.columns)
+    defs = fills(carried)
+    conform_calc_edge(proj, tuple(n for n in CALC_EDGE if n not in defs))
+    return proj.with_columns(defs), carried
+
+
+def _provenance_cols(exp: DataFrame, default_risk_type: str = "CREDIT") -> Projection:
     """Conform a ledger frame built outside the CRM edge (CIU, settlement)
     to CALC_EDGE and seal its provenance carriers."""
-    exp, carried = conform_calc_edge(exp)
-    return exp.withColumns(_provenance(carried, default_risk_type))
+    return _conform_with(exp, lambda carried: _provenance(carried, default_risk_type))[0]
 
 
 # CRM component amounts: zero when the branch input never went through
-# run_crm (equity) or a CRM frame was absent
+# run_crm (equity) or a CRM frame was absent (CALC_EDGE defaults them to
+# 0.0; carried ones coalesce their nulls)
 _CRM_AMOUNTS = (
     "provision_allocated",
     "collateral_value",
@@ -513,21 +543,24 @@ _CRM_AMOUNTS = (
 
 def _calc_entry(
     exp: DataFrame, default_risk_type: str = "CREDIT"
-) -> tuple[DataFrame, frozenset]:
+) -> tuple[Projection, frozenset]:
     """A calculator branch's entry: conform to CALC_EDGE, zero the CRM
     amounts and seal the provenance carriers in one more projection.
     Returns the frame and the columns the input carried."""
-    exp, carried = conform_calc_edge(exp)
-    fills = {c: F.coalesce(c, F.lit(0.0)) for c in _CRM_AMOUNTS}
-    fills.update(_provenance(carried, default_risk_type))
-    return exp.withColumns(fills), carried
+
+    def fills(carried):
+        # an absent amount arrives as its 0.0 default; a carried one may be null
+        out = {c: S.coalesce(c, S.lit(0.0)) for c in _CRM_AMOUNTS if c in carried}
+        return {**out, **_provenance(carried, default_risk_type)}
+
+    return _conform_with(exp, fills)
 
 
-def _param_cols(exp: DataFrame, pd_col=None, lgd_col=None, m_col=None) -> DataFrame:
-    none = F.lit(None).cast("double")
-    return exp.withColumns(
+def _param_cols(exp: Projection, pd_col=None, lgd_col=None, m_col=None) -> Projection:
+    none = S.null("double")
+    return exp.with_columns(
         {
-            "ccf": F.col("ccf").cast("double"),
+            "ccf": S.col("ccf").cast("double"),
             "pd_used": none if pd_col is None else pd_col,
             "lgd_used": none if lgd_col is None else lgd_col,
             "maturity_used": none if m_col is None else m_col,
@@ -536,8 +569,8 @@ def _param_cols(exp: DataFrame, pd_col=None, lgd_col=None, m_col=None) -> DataFr
 
 
 def _el_columns(
-    exp: DataFrame, expected_loss: Column, pool_b_extras: bool = False
-) -> DataFrame:
+    exp: Projection, expected_loss: Expr, pool_b_extras: bool = False
+) -> Projection:
     """EL + shortfall/excess vs the CRR Art.159(1) Pool B: allocated
     provisions plus, on the IRB legs only (pool_b_extras=True), the
     per-exposure Art.159(1)(c)/(d) components — additional value
@@ -545,22 +578,22 @@ def _el_columns(
     engine/irb/adjustments.py compute_el_shortfall_excess:306-353 —
     components enter the pool exactly once, at this stage; null inputs
     contribute 0 to the POOL but stay null on their ledger carriers)."""
-    pool_b = F.coalesce("provision_allocated", F.lit(0.0))
+    pool_b = S.coalesce("provision_allocated", S.lit(0.0))
     if pool_b_extras:
         for extra in ("ava_amount", "other_own_funds_reductions"):
-            pool_b = pool_b + F.coalesce(extra, F.lit(0.0))
+            pool_b = pool_b + S.coalesce(extra, S.lit(0.0))
     # shortfall/excess inline the expected_loss expression (identical
     # arithmetic DAG) so all three land in one projection
-    return exp.withColumns(
+    return exp.with_columns(
         {
             "expected_loss": expected_loss,
-            "el_shortfall": F.greatest(expected_loss - pool_b, F.lit(0.0)),
-            "el_excess": F.greatest(pool_b - expected_loss, F.lit(0.0)),
+            "el_shortfall": S.greatest(expected_loss - pool_b, S.lit(0.0)),
+            "el_excess": S.greatest(pool_b - expected_loss, S.lit(0.0)),
         }
     )
 
 
-def _pd_floor_class_expr(pack: RulePack) -> Column:
+def _pd_floor_class_expr(pack: RulePack) -> Expr:
     """Per-exposure-class IRB PD floor (ref engine/irb/formulas.py
     _pd_floor_expression + rulebook/packs "pd_floors"): under CRR the 0.03%
     floor reaches corporates/institutions (Art.160(1)) and retail
@@ -572,27 +605,27 @@ def _pd_floor_class_expr(pack: RulePack) -> Column:
     has_transactor_col=False path); unknown classes default to the
     corporate floor (the reference's fill_null('CORPORATE'))."""
     f = pack.table_map("pd_floor_by_class")
-    sub = F.col("retail_subtype")
-    trans = F.coalesce(F.col("is_qrre_transactor"), F.lit(False))
+    sub = S.col("retail_subtype")
+    trans = S.coalesce(S.col("is_qrre_transactor"), S.lit(False))
     # Art.147(3)/(4)(b): floors key on the IRB-equivalent class run_irb
     # seals before staging the floors
-    cls = F.col("irb_exposure_class")
+    cls = S.col("irb_exposure_class")
     is_retail = cls == "retail"
     return (
-        F.when(cls == "sovereign", F.lit(f["sovereign"]))
-        .when(is_retail & (sub == "mortgage"), F.lit(f["retail_mortgage"]))
+        S.when(cls == "sovereign", S.lit(f["sovereign"]))
+        .when(is_retail & (sub == "mortgage"), S.lit(f["retail_mortgage"]))
         .when(
             is_retail & (sub == "qrre") & trans,
-            F.lit(f["retail_qrre_transactor"]),
+            S.lit(f["retail_qrre_transactor"]),
         )
-        .when(is_retail & (sub == "qrre"), F.lit(f["retail_qrre_revolver"]))
-        .when(is_retail, F.lit(f["retail_other"]))
-        .when(cls == "institution", F.lit(f["institution"]))
-        .otherwise(F.lit(f["corporate"]))
+        .when(is_retail & (sub == "qrre"), S.lit(f["retail_qrre_revolver"]))
+        .when(is_retail, S.lit(f["retail_other"]))
+        .when(cls == "institution", S.lit(f["institution"]))
+        .otherwise(S.lit(f["corporate"]))
     )
 
 
-def _guarantor_pd_floor_expr(pack: RulePack, gclass: Column) -> Column:
+def _guarantor_pd_floor_expr(pack: RulePack, gclass: Expr) -> Expr:
     """PD floor for a substituted guarantor PD, keyed on the GUARANTOR's
     own class (CRR Art.160(4) / ref _pd_floor_expression's
     guarantor_exposure_class routing — the covered portion is a direct
@@ -600,13 +633,13 @@ def _guarantor_pd_floor_expr(pack: RulePack, gclass: Column) -> Column:
     sovereign guarantors are unfloored under CRR)."""
     f = pack.table_map("pd_floor_by_class")
     return (
-        F.when(gclass == "sovereign", F.lit(f["sovereign"]))
-        .when(gclass == "institution", F.lit(f["institution"]))
-        .otherwise(F.lit(f["corporate"]))
+        S.when(gclass == "sovereign", S.lit(f["sovereign"]))
+        .when(gclass == "institution", S.lit(f["institution"]))
+        .otherwise(S.lit(f["corporate"]))
     )
 
 
-def _lgd_floor_expr(pack: RulePack) -> Column:
+def _lgd_floor_expr(pack: RulePack) -> Expr:
     """A-IRB LGD input floor (feature-gated; ref engine/irb/formulas.py
     _lgd_floor_expression / _lgd_floor_blended_expression, PS1/26
     Art.161(5) corporate + Art.164(4) retail; CRR returns 0 — no A-IRB
@@ -620,48 +653,48 @@ def _lgd_floor_expr(pack: RulePack) -> Column:
     mortgages keep the flat 5% (Art.164(4)(a) — the reference's blend
     deny-list). F-IRB rows are never floored (supervisory LGDs)."""
     if pack.scalar("airb_lgd_floor") < 1.0:
-        return F.lit(0.0)
+        return S.lit(0.0)
     f = pack.table_map("lgd_floors")
-    sub = F.col("retail_subtype")
-    cls = F.col("irb_exposure_class")
+    sub = S.col("retail_subtype")
+    cls = S.col("irb_exposure_class")
     is_retail = cls == "retail"
     is_mortgage = is_retail & (sub == "mortgage")
     lgdu = (
-        F.when(is_mortgage, F.lit(f["retail_rre"]))
-        .when(is_retail & (sub == "qrre"), F.lit(f["retail_qrre_unsecured"]))
-        .when(is_retail, F.lit(f["retail_other_unsecured"]))
-        .otherwise(F.lit(f["unsecured"]))
+        S.when(is_mortgage, S.lit(f["retail_rre"]))
+        .when(is_retail & (sub == "qrre"), S.lit(f["retail_qrre_unsecured"]))
+        .when(is_retail, S.lit(f["retail_other_unsecured"]))
+        .otherwise(S.lit(f["unsecured"]))
     )
-    fin = F.coalesce("collateral_financial_value", F.lit(0.0))
-    recv = F.coalesce("collateral_receivables_value", F.lit(0.0))
-    oth = F.coalesce("collateral_other_physical_value", F.lit(0.0))
-    re_v = F.coalesce("collateral_re_value", F.lit(0.0))
-    tot = F.coalesce("collateral_value", F.lit(0.0)) + re_v
-    raw_basis = F.coalesce("drawn_amount", F.lit(0.0)) + F.coalesce(
-        "undrawn_amount", F.lit(0.0)
+    fin = S.coalesce("collateral_financial_value", S.lit(0.0))
+    recv = S.coalesce("collateral_receivables_value", S.lit(0.0))
+    oth = S.coalesce("collateral_other_physical_value", S.lit(0.0))
+    re_v = S.coalesce("collateral_re_value", S.lit(0.0))
+    tot = S.coalesce("collateral_value", S.lit(0.0)) + re_v
+    raw_basis = S.coalesce("drawn_amount", S.lit(0.0)) + S.coalesce(
+        "undrawn_amount", S.lit(0.0)
     )
     # convexity guard: allocations never exceed the basis they were
     # allocated against, but a basis narrower than total protection must
     # not produce negative unsecured weight
-    basis = F.greatest(raw_basis, tot)
-    unsec = F.greatest(basis - tot, F.lit(0.0))
+    basis = S.greatest(raw_basis, tot)
+    unsec = S.greatest(basis - tot, S.lit(0.0))
     blend = (
         unsec * lgdu
-        + fin * F.lit(f["financial_collateral"])
-        + recv * F.lit(f["receivables"])
-        + re_v * F.lit(f["residential_real_estate"])
-        + oth * F.lit(f["other_physical"])
-    ) / F.nullif(basis, F.lit(0.0))
-    floor = F.when((tot > 0) & ~is_mortgage, F.coalesce(blend, lgdu)).otherwise(lgdu)
-    return F.when(
-        F.coalesce(F.col("irb_subapproach"), F.lit("airb")) == "firb",
-        F.lit(0.0),
+        + fin * S.lit(f["financial_collateral"])
+        + recv * S.lit(f["receivables"])
+        + re_v * S.lit(f["residential_real_estate"])
+        + oth * S.lit(f["other_physical"])
+    ) / S.nullif(basis, S.lit(0.0))
+    floor = S.when((tot > 0) & ~is_mortgage, S.coalesce(blend, lgdu)).otherwise(lgdu)
+    return S.when(
+        S.coalesce(S.col("irb_subapproach"), S.lit("airb")) == "firb",
+        S.lit(0.0),
     ).otherwise(floor)
 
 
 def _irb_guarantee_adjust(
-    perf: DataFrame, pack: RulePack, spark, carried: frozenset
-) -> tuple[DataFrame, Column]:
+    perf: Projection, pack: RulePack, spark, carried: frozenset
+) -> tuple[Projection, Expr]:
     """IRB unfunded-protection treatment (ref engine/irb/guarantee.py
     apply_guarantee_substitution, 902 LoC distilled to its dataflow):
 
@@ -688,100 +721,99 @@ def _irb_guarantee_adjust(
 
     Returns the adjusted frame plus the EL expression for _el_columns.
     """
-    el_own = F.col("pd_floored") * F.col("lgd_floored") * F.col("ead_after_crm")
+    el_own = S.col("pd_floored") * S.col("lgd_floored") * S.col("ead_after_crm")
     # rank-1 scalars price the n<=1 books bit-for-bit and feed the
     # priority-1 audit carriers; exposures with 2+ guarantees take the
     # multi-leg stack fold below (every leg through its own channel)
-    g = F.coalesce("g_coverage", F.lit(0.0))
+    g = S.coalesce("g_coverage", S.lit(0.0))
 
-    grw = pack.table_df(spark, "sa_rw").select(
-        F.col("exposure_class").alias("_gi_class"),
-        F.col("cqs").alias("_gi_cqs"),
-        F.col("rw").alias("_g_rw_sa"),
+    grw = pack.dim(
+        spark,
+        "sa_rw",
+        "exposure_class AS _gi_class, cqs AS _gi_cqs, rw AS _g_rw_sa",
     )
     perf = perf.join(
-        F.broadcast(grw),
-        (F.col("g_class") == F.col("_gi_class"))
-        & (F.coalesce(F.col("g_cqs"), F.lit(0)) == F.col("_gi_cqs")),
+        grw,
+        (S.col("g_class") == S.col("_gi_class"))
+        & (S.coalesce(S.col("g_cqs"), S.lit(0)) == S.col("_gi_cqs")),
         "left",
     ).drop("_gi_class", "_gi_cqs")
-    guarantor_rw = F.col("_g_rw_sa")
-    method = F.when(F.col("_g_rw_sa").isNotNull(), F.lit("sub_sa")).otherwise(
-        F.lit(None).cast("string")
+    guarantor_rw = S.col("_g_rw_sa")
+    method = S.when(S.col("_g_rw_sa").isNotNull(), S.lit("sub_sa")).otherwise(
+        S.null("string")
     )
 
     has_gpd = "guarantor_pd" in carried
     has_dd_carrier = False  # _dd_elig is stage-internal: tracked, not probed
     if has_gpd:
-        sen = F.coalesce(F.col("guarantor_seniority"), F.lit("senior"))
-        fse = F.coalesce(F.col("guarantor_is_fse"), F.lit(False))
-        perf = perf.withColumns(
+        sen = S.coalesce(S.col("guarantor_seniority"), S.lit("senior"))
+        fse = S.coalesce(S.col("guarantor_is_fse"), S.lit(False))
+        perf = perf.with_columns(
             {
-                "_pd_g_fl": F.greatest(
-                    F.col("guarantor_pd"),
-                    _guarantor_pd_floor_expr(pack, F.col("g_class")),
+                "_pd_g_fl": S.greatest(
+                    S.col("guarantor_pd"),
+                    _guarantor_pd_floor_expr(pack, S.col("g_class")),
                 ),
-                "_lgd_g": F.when(
-                    sen == "subordinated", pack.lit("firb_lgd_subordinated")
+                "_lgd_g": S.when(
+                    sen == "subordinated", pack.sql_lit("firb_lgd_subordinated")
                 )
-                .when(fse, pack.lit("firb_lgd_senior_fse"))
-                .otherwise(pack.lit("firb_lgd_senior")),
+                .when(fse, pack.sql_lit("firb_lgd_senior_fse"))
+                .otherwise(pack.sql_lit("firb_lgd_senior")),
             }
         )
         perf = with_normal_ppf(perf, "_pd_g_fl", "_g_gpd")
-        perf = perf.withColumn("_r_g", spark_correlation("_pd_g_fl"))
+        perf = perf.with_column("_r_g", S.kernel(correlation_v, S.col("_pd_g_fl")))
         perf = with_irb_k_r(perf, "_pd_g_fl", "_lgd_g", "_g_gpd", "_r_g", "_k_g")
         rw_irb_g = (
-            F.col("_k_g")
-            * irb_maturity_adj(F.col("_pd_g_fl"), F.col("m_eff"))
-            * F.lit(12.5)
-            * pack.lit("irb_scaling_factor")
+            S.col("_k_g")
+            * S.kernel(maturity_adj_v, S.col("_pd_g_fl"), S.col("m_eff"))
+            * S.lit(12.5)
+            * pack.sql_lit("irb_scaling_factor")
         )
-        guarantor_rw = F.when(F.col("guarantor_pd").isNotNull(), rw_irb_g).otherwise(
+        guarantor_rw = S.when(S.col("guarantor_pd").isNotNull(), rw_irb_g).otherwise(
             guarantor_rw
         )
-        method = F.when(F.col("guarantor_pd").isNotNull(), F.lit("sub_pd")).otherwise(
+        method = S.when(S.col("guarantor_pd").isNotNull(), S.lit("sub_pd")).otherwise(
             method
         )
         if pack.scalar("double_default_available") >= 1.0:
-            is_airb = F.coalesce(F.col("irb_subapproach"), F.lit("")) == "airb"
-            elig_g_type = F.coalesce(F.col("g_class"), F.lit("")).isin(
+            is_airb = S.coalesce(S.col("irb_subapproach"), S.lit("")) == "airb"
+            elig_g_type = S.coalesce(S.col("g_class"), S.lit("")).isin(
                 "institution", "sovereign", "mdb"
             ) | (
-                (F.col("g_class") == "corporate")
-                & (F.coalesce(F.col("g_cqs"), F.lit(99)) <= 2)
+                (S.col("g_class") == "corporate")
+                & (S.coalesce(S.col("g_cqs"), S.lit(99)) <= 2)
             )
             dd_elig = (
                 (g > 0)
-                & (F.col("exposure_class") == "corporate")
+                & (S.col("exposure_class") == "corporate")
                 & elig_g_type
-                & F.col("guarantor_pd").isNotNull()
+                & S.col("guarantor_pd").isNotNull()
                 & is_airb
             )
-            rw_dd = F.col("risk_weight") * (
-                pack.lit("dd_k_base") + pack.lit("dd_k_slope") * F.col("_pd_g_fl")
+            rw_dd = S.col("risk_weight") * (
+                pack.sql_lit("dd_k_base") + pack.sql_lit("dd_k_slope") * S.col("_pd_g_fl")
             )
             dd_applies = dd_elig & (
-                rw_dd < F.coalesce(guarantor_rw, F.lit(float("inf")))
+                rw_dd < S.coalesce(guarantor_rw, S.POS_INF)
             )
-            guarantor_rw = F.when(dd_applies, rw_dd).otherwise(guarantor_rw)
-            method = F.when(dd_applies, F.lit("dd")).otherwise(method)
+            guarantor_rw = S.when(dd_applies, rw_dd).otherwise(guarantor_rw)
+            method = S.when(dd_applies, S.lit("dd")).otherwise(method)
             # eligibility carrier staged here (where the gate is known);
             # the APPLIED carriers seal after the Art.193(1) benefit test
             # below, which can still decline the guarantee
-            perf = perf.withColumn("_dd_elig", dd_elig)
+            perf = perf.with_column("_dd_elig", dd_elig)
             has_dd_carrier = True
 
-    # _g_ben re-uses the guarantor_rw Column object (same JVM expression,
-    # identical value to reading the _g_rw column) so all three land in one
-    # projection
-    perf = perf.withColumns(
+    # _g_ben re-uses the guarantor_rw expression (identical value to
+    # reading the _g_rw column) so all three land in one projection
+    perf = perf.with_columns(
         {
             "_g_rw": guarantor_rw,
             "_g_method": method,
             "_g_ben": (g > 0)
             & guarantor_rw.isNotNull()
-            & (guarantor_rw < F.col("risk_weight")),
+            & (guarantor_rw < S.col("risk_weight")),
         }
     )
 
@@ -794,7 +826,7 @@ def _irb_guarantee_adjust(
     # the leg's floored PD + Art.161(1) LGD, double default per leg where
     # Art.202/203 eligible — entirely in array expressions (zero new
     # shuffle; the per-leg Φ/Φ⁻¹ route through the same generated-Java
-    # kernel as the scalar path, pure-Column Cody/Acklam fallback).
+    # kernel as the scalar path, pure-SQL Cody/Acklam fallback).
     # Gated on size>1: books with at most one guarantee per exposure keep
     # the legacy rank-1 expressions bit-for-bit. The rank-1 scalar
     # carriers (guarantor_risk_weight, the method enums, the DD block)
@@ -802,116 +834,99 @@ def _irb_guarantee_adjust(
     # its audit detail per-leg lives in guarantee_references order.
     has_mg = "_mg" in carried
     if has_mg:
-        from rwa_calculator_spark.functions.irb import correlation_v
         from rwa_calculator_spark.functions.jvm_kernel import (
             CDF_FN,
             PPF_FN,
             ensure_jvm_kernel,
         )
-        from rwa_calculator_spark.functions.stats import (
-            G_999,
-            SparkB,
-            V,
-            norm_cdf_v,
-            norm_ppf_v,
-        )
+        from rwa_calculator_spark.functions.stats import G_999, norm_cdf_v, norm_ppf_v
 
-        _mg_arr = F.coalesce(
-            F.col("_mg"), F.array().cast(perf.schema["_mg"].dataType)
-        )
-        _is_multi = F.size(_mg_arr) > 1
-        _own0 = F.col("risk_weight")
+        _mg_arr = S.coalesce(S.col("_mg"), S.array().cast(perf.dtype("_mg")))
+        _is_multi = S.size(_mg_arr) > 1
+        _own0 = S.col("risk_weight")
         _kern = ensure_jvm_kernel(spark)
-        _row_airb = F.coalesce(F.col("irb_subapproach"), F.lit("")) == "airb"
+        _row_airb = S.coalesce(S.col("irb_subapproach"), S.lit("")) == "airb"
         _dd_pack = pack.scalar("double_default_available") >= 1.0
 
         def _leg_params(x):
-            pdfl = F.when(
+            pdfl = S.when(
                 x["pd"].isNotNull(),
-                F.greatest(x["pd"], _guarantor_pd_floor_expr(pack, x["gclass"])),
+                S.greatest(x["pd"], _guarantor_pd_floor_expr(pack, x["gclass"])),
             )
             lgdg = (
-                F.when(
-                    F.coalesce(x["sen"], F.lit("senior")) == "subordinated",
-                    pack.lit("firb_lgd_subordinated"),
+                S.when(
+                    S.coalesce(x["sen"], S.lit("senior")) == "subordinated",
+                    pack.sql_lit("firb_lgd_subordinated"),
                 )
                 .when(
-                    F.coalesce(x["fse"], F.lit(False)),
-                    pack.lit("firb_lgd_senior_fse"),
+                    S.coalesce(x["fse"], S.lit(False)),
+                    pack.sql_lit("firb_lgd_senior_fse"),
                 )
-                .otherwise(pack.lit("firb_lgd_senior"))
+                .otherwise(pack.sql_lit("firb_lgd_senior"))
             )
-            gq = (
-                F.call_function(PPF_FN, pdfl)
-                if _kern
-                else norm_ppf_v(V(SparkB, pdfl)).v
-            )
-            return F.struct(
-                x["slice"].alias("slice"),
-                x["rw"].alias("rw"),
-                pdfl.alias("pdfl"),
-                lgdg.alias("lgdg"),
-                x["gclass"].alias("gclass"),
-                x["gcqs"].alias("gcqs"),
-                gq.alias("gq"),
-                correlation_v(V(SparkB, pdfl)).v.alias("r"),
+            gq = S.call(PPF_FN, pdfl) if _kern else S.kernel(norm_ppf_v, pdfl)
+            return S.struct(
+                slice=x["slice"],
+                rw=x["rw"],
+                pdfl=pdfl,
+                lgdg=lgdg,
+                gclass=x["gclass"],
+                gcqs=x["gcqs"],
+                gq=gq,
+                r=S.kernel(correlation_v, pdfl),
             )
 
-        perf = perf.withColumn(
-            "_mgl", F.when(_is_multi, F.transform(_mg_arr, _leg_params))
+        perf = perf.with_column(
+            "_mgl", S.when(_is_multi, S.transform(_mg_arr, _leg_params))
         )
 
         def _leg_rw(x):
-            arg = (x["gq"] + F.sqrt(x["r"]) * F.lit(G_999)) / F.sqrt(
-                F.lit(1.0) - x["r"]
+            arg = (x["gq"] + S.sqrt(x["r"]) * S.lit(G_999)) / S.sqrt(
+                S.lit(1.0) - x["r"]
             )
-            phi = (
-                F.call_function(CDF_FN, arg)
-                if _kern
-                else norm_cdf_v(V(SparkB, arg)).v
-            )
+            phi = S.call(CDF_FN, arg) if _kern else S.kernel(norm_cdf_v, arg)
             k_leg = x["lgdg"] * phi - x["pdfl"] * x["lgdg"]
             rw_irb = (
                 k_leg
-                * irb_maturity_adj(x["pdfl"], F.col("m_eff"))
-                * F.lit(12.5)
-                * pack.lit("irb_scaling_factor")
+                * S.kernel(maturity_adj_v, x["pdfl"], S.col("m_eff"))
+                * S.lit(12.5)
+                * pack.sql_lit("irb_scaling_factor")
             )
-            rw_sub = F.when(x["pdfl"].isNotNull(), rw_irb).otherwise(x["rw"])
-            meth = F.when(x["pdfl"].isNotNull(), F.lit("sub_pd")).otherwise(
-                F.when(x["rw"].isNotNull(), F.lit("sub_sa"))
+            rw_sub = S.when(x["pdfl"].isNotNull(), rw_irb).otherwise(x["rw"])
+            meth = S.when(x["pdfl"].isNotNull(), S.lit("sub_pd")).otherwise(
+                S.when(x["rw"].isNotNull(), S.lit("sub_sa"))
             )
             if _dd_pack:
-                elig_t = F.coalesce(x["gclass"], F.lit("")).isin(
+                elig_t = S.coalesce(x["gclass"], S.lit("")).isin(
                     "institution", "sovereign", "mdb"
                 ) | (
                     (x["gclass"] == "corporate")
-                    & (F.coalesce(x["gcqs"], F.lit(99)) <= 2)
+                    & (S.coalesce(x["gcqs"], S.lit(99)) <= 2)
                 )
                 dd_elig = (
                     (x["slice"] > 0)
-                    & (F.col("exposure_class") == "corporate")
+                    & (S.col("exposure_class") == "corporate")
                     & elig_t
                     & x["pdfl"].isNotNull()
                     & _row_airb
                 )
                 rw_dd = _own0 * (
-                    pack.lit("dd_k_base") + pack.lit("dd_k_slope") * x["pdfl"]
+                    pack.sql_lit("dd_k_base") + pack.sql_lit("dd_k_slope") * x["pdfl"]
                 )
                 dd_app = dd_elig & (
-                    rw_dd < F.coalesce(rw_sub, F.lit(float("inf")))
+                    rw_dd < S.coalesce(rw_sub, S.POS_INF)
                 )
-                rw_sub = F.when(dd_app, rw_dd).otherwise(rw_sub)
-                meth = F.when(dd_app, F.lit("dd")).otherwise(meth)
-            return F.struct(
-                x["slice"].alias("slice"),
-                rw_sub.alias("rwl"),
-                x["pdfl"].alias("pdfl"),
-                x["lgdg"].alias("lgdg"),
-                meth.alias("meth"),
+                rw_sub = S.when(dd_app, rw_dd).otherwise(rw_sub)
+                meth = S.when(dd_app, S.lit("dd")).otherwise(meth)
+            return S.struct(
+                slice=x["slice"],
+                rwl=rw_sub,
+                pdfl=x["pdfl"],
+                lgdg=x["lgdg"],
+                meth=meth,
             )
 
-        perf = perf.withColumn("_mgl", F.transform(F.col("_mgl"), _leg_rw))
+        perf = perf.with_column("_mgl", S.transform(S.col("_mgl"), _leg_rw))
 
         # priority-ordered left fold (deterministic addition order — the
         # oracle mirrors it term-by-term): per leg the covered slice takes
@@ -920,64 +935,56 @@ def _irb_guarantee_adjust(
         # DD retains full obligor EL, parameter substitution re-prices the
         # slice at PD_g·LGD_g, SA substitution drops the slice's EL,
         # a non-beneficial leg keeps the obligor rate.
-        _el_rate_own = F.col("pd_floored") * F.col("lgd_floored")
-        _mg_fold = F.aggregate(
-            F.coalesce(F.col("_mgl"), F.array().cast(perf.schema["_mgl"].dataType)),
-            F.struct(
-                F.lit(0.0).alias("g"),
-                F.lit(0.0).alias("t"),
-                F.lit(0.0).alias("el"),
-            ),
-            lambda acc, x: F.struct(
-                (acc["g"] + x["slice"]).alias("g"),
-                (
-                    acc["t"]
-                    + x["slice"] * F.least(_own0, F.coalesce(x["rwl"], _own0))
-                ).alias("t"),
-                (
-                    acc["el"]
-                    + F.when(
-                        F.coalesce(x["rwl"] < _own0, F.lit(False)),
-                        F.when(x["meth"] == "dd", x["slice"] * _el_rate_own)
-                        .when(
-                            x["meth"] == "sub_pd",
-                            x["slice"] * x["pdfl"] * x["lgdg"],
-                        )
-                        .otherwise(F.lit(0.0)),
-                    ).otherwise(x["slice"] * _el_rate_own)
-                ).alias("el"),
+        _el_rate_own = S.col("pd_floored") * S.col("lgd_floored")
+        # the empty-stack default takes the leg array's type by coercion
+        _mg_fold = S.aggregate(
+            S.coalesce(S.col("_mgl"), S.array()),
+            S.struct(g=S.lit(0.0), t=S.lit(0.0), el=S.lit(0.0)),
+            lambda acc, x: S.struct(
+                g=acc["g"] + x["slice"],
+                t=acc["t"] + x["slice"] * S.least(_own0, S.coalesce(x["rwl"], _own0)),
+                el=acc["el"]
+                + S.when(
+                    S.coalesce(x["rwl"] < _own0, S.lit(False)),
+                    S.when(x["meth"] == "dd", x["slice"] * _el_rate_own)
+                    .when(
+                        x["meth"] == "sub_pd",
+                        x["slice"] * x["pdfl"] * x["lgdg"],
+                    )
+                    .otherwise(S.lit(0.0)),
+                ).otherwise(x["slice"] * _el_rate_own),
             ),
         )
-        perf = perf.withColumn("_mgf", F.when(_is_multi, _mg_fold))
-        _mg_g = F.col("_mgf").getField("g")
-        _mg_t = F.col("_mgf").getField("t")
+        perf = perf.with_column("_mgf", S.when(_is_multi, _mg_fold))
+        _mg_g = S.col("_mgf").getField("g")
+        _mg_t = S.col("_mgf").getField("t")
     else:
-        _is_multi = F.lit(False)
-        _mg_g = F.lit(0.0)
-        _mg_t = F.lit(0.0)
+        _is_multi = S.lit(False)
+        _mg_g = S.lit(0.0)
+        _mg_t = S.lit(0.0)
 
-    perf = perf.withColumn("pre_crm_risk_weight", F.col("risk_weight"))
+    perf = perf.with_column("pre_crm_risk_weight", S.col("risk_weight"))
     # every expression BELOW the blend references the sealed snapshot —
-    # F.col("risk_weight") would re-resolve to the mutated value
-    _own_p = F.col("pre_crm_risk_weight")
+    # S.col("risk_weight") would re-resolve to the mutated value
+    _own_p = S.col("pre_crm_risk_weight")
     _mg_ben = _is_multi & (_mg_t < _mg_g * _own_p)
     # both expressions read the PRE-blend risk_weight/rw_source — one
-    # batched projection preserves that (withColumns evaluates against the
+    # batched projection preserves that (with_columns evaluates against the
     # input frame)
-    perf = perf.withColumns(
+    perf = perf.with_columns(
         {
-            "risk_weight": F.when(_is_multi, _mg_t + (F.lit(1.0) - _mg_g) * _own_p)
+            "risk_weight": S.when(_is_multi, _mg_t + (S.lit(1.0) - _mg_g) * _own_p)
             .when(
-                F.col("_g_ben"),
-                (F.lit(1.0) - g) * F.col("risk_weight") + g * F.col("_g_rw"),
+                S.col("_g_ben"),
+                (S.lit(1.0) - g) * S.col("risk_weight") + g * S.col("_g_rw"),
             )
-            .otherwise(F.col("risk_weight")),
-            "rw_source": F.when(
-                _mg_ben, F.concat(F.col("rw_source"), F.lit("+gmulti"))
+            .otherwise(S.col("risk_weight")),
+            "rw_source": S.when(
+                _mg_ben, S.concat(S.col("rw_source"), S.lit("+gmulti"))
             )
-            .when(_is_multi | ~F.col("_g_ben"), F.col("rw_source"))
+            .when(_is_multi | ~S.col("_g_ben"), S.col("rw_source"))
             .otherwise(
-                F.concat(F.col("rw_source"), F.lit("+g"), F.col("_g_method"))
+                S.concat(S.col("rw_source"), S.lit("+g"), S.col("_g_method"))
             ),
         }
     )
@@ -989,7 +996,7 @@ def _irb_guarantee_adjust(
     # Art.236(1)(a)), independent of the Art.193(1) benefit outcome — the
     # non-beneficial signal lives on guarantee_status; DD and SA RW
     # substitution report only where they actually repriced the row.
-    _g_m = F.coalesce(F.col("_g_method"), F.lit(""))
+    _g_m = S.coalesce(S.col("_g_method"), S.lit(""))
     # is_guaranteed means protection EXISTS (ref crm/guarantees.py:183
     # guaranteed_portion > 0; aggregator.py:706-707 warns the beneficial
     # test is a separate downstream gate) — the Art.193(1) benefit outcome
@@ -998,42 +1005,42 @@ def _irb_guarantee_adjust(
     # stack (Σ slices, aggregate RW relief); the method/status enums and
     # guarantor_risk_weight keep describing the priority-1 leg (same
     # convention as the SA channel).
-    _g_eff = F.when(_is_multi, _mg_g).otherwise(g)
-    _ben_eff = F.when(_is_multi, _mg_ben).otherwise(F.col("_g_ben"))
+    _g_eff = S.when(_is_multi, _mg_g).otherwise(g)
+    _ben_eff = S.when(_is_multi, _mg_ben).otherwise(S.col("_g_ben"))
     # guarantee_benefit re-uses guarantee_benefit_rw's expression inline
     # (same value) so the whole carrier block lands in ONE projection —
     # every other expression reads only pre-block columns
-    _ben_rw = F.when(
-        _ben_eff, F.col("pre_crm_risk_weight") - F.col("risk_weight")
+    _ben_rw = S.when(
+        _ben_eff, S.col("pre_crm_risk_weight") - S.col("risk_weight")
     ).otherwise(0.0)
-    perf = perf.withColumns(
+    perf = perf.with_columns(
         {
             "is_guaranteed": _g_eff > 0,
-            "guaranteed_portion": F.when(
-                _g_eff > 0, _g_eff * F.col("ead_after_crm")
+            "guaranteed_portion": S.when(
+                _g_eff > 0, _g_eff * S.col("ead_after_crm")
             ).otherwise(0.0),
-            "unguaranteed_portion": F.col("ead_after_crm")
-            - F.when(_g_eff > 0, _g_eff * F.col("ead_after_crm")).otherwise(0.0),
-            "guarantor_risk_weight": F.when(_g_eff > 0, F.col("_g_rw")),
+            "unguaranteed_portion": S.col("ead_after_crm")
+            - S.when(_g_eff > 0, _g_eff * S.col("ead_after_crm")).otherwise(0.0),
+            "guarantor_risk_weight": S.when(_g_eff > 0, S.col("_g_rw")),
             "guarantee_benefit_rw": _ben_rw,
-            "guarantee_benefit": _ben_rw * F.col("ead_after_crm"),
-            "guarantee_status": F.when(~(_g_eff > 0), "NO_GUARANTEE")
+            "guarantee_benefit": _ben_rw * S.col("ead_after_crm"),
+            "guarantee_status": S.when(~(_g_eff > 0), "NO_GUARANTEE")
             .when(~_ben_eff, "GUARANTEE_NOT_APPLIED_NON_BENEFICIAL")
             .when(_g_m == "dd", "DOUBLE_DEFAULT")
             .when(_g_m == "sub_pd", "PD_PARAMETER_SUBSTITUTION")
             .otherwise("SA_RW_SUBSTITUTION"),
-            "guarantee_method_used": F.when(
+            "guarantee_method_used": S.when(
                 _ben_eff & (_g_m == "dd"), "DOUBLE_DEFAULT"
             )
             .when((_g_eff > 0) & (_g_m == "sub_pd"), "PD_PARAMETER_SUBSTITUTION")
             .when(_ben_eff, "SA_RW_SUBSTITUTION")
             .otherwise("NO_SUBSTITUTION"),
-            "pre_crm_counterparty_reference": F.col("counterparty_reference"),
-            "pre_crm_exposure_class": F.col("exposure_class"),
-            "post_crm_counterparty_guaranteed": F.when(
-                g > 0, F.col("guarantor_reference")
+            "pre_crm_counterparty_reference": S.col("counterparty_reference"),
+            "pre_crm_exposure_class": S.col("exposure_class"),
+            "post_crm_counterparty_guaranteed": S.when(
+                g > 0, S.col("guarantor_reference")
             ),
-            "post_crm_exposure_class_guaranteed": F.when(g > 0, F.col("g_class")),
+            "post_crm_exposure_class_guaranteed": S.when(g > 0, S.col("g_class")),
         }
     )
 
@@ -1044,41 +1051,41 @@ def _irb_guarantee_adjust(
     # (g × EAD, the COREP 0220 figure) and the LGD the DD formula used
     # (= the obligor's own floored LGD; DD modifies K through PD_g, not LGD)
     if has_dd_carrier:
-        dd_on = F.col("_g_ben") & (F.col("_g_method") == "dd")
-        perf = perf.withColumns(
+        dd_on = S.col("_g_ben") & (S.col("_g_method") == "dd")
+        perf = perf.with_columns(
             {
-                "is_double_default_eligible": F.coalesce(
-                    F.col("_dd_elig"), F.lit(False)
+                "is_double_default_eligible": S.coalesce(
+                    S.col("_dd_elig"), S.lit(False)
                 ),
-                "double_default_unfunded_protection": F.when(
-                    dd_on, g * F.col("ead_after_crm")
+                "double_default_unfunded_protection": S.when(
+                    dd_on, g * S.col("ead_after_crm")
                 ),
-                "irb_lgd_double_default": F.when(dd_on, F.col("lgd_floored")),
+                "irb_lgd_double_default": S.when(dd_on, S.col("lgd_floored")),
             }
         ).drop("_dd_elig")
 
     if has_gpd:
         el = (
-            F.when(F.col("_g_ben") & (F.col("_g_method") == "dd"), el_own)
+            S.when(S.col("_g_ben") & (S.col("_g_method") == "dd"), el_own)
             .when(
-                F.col("_g_ben") & (F.col("_g_method") == "sub_pd"),
-                (F.lit(1.0) - g) * el_own
-                + F.col("_pd_g_fl") * F.col("_lgd_g") * g * F.col("ead_after_crm"),
+                S.col("_g_ben") & (S.col("_g_method") == "sub_pd"),
+                (S.lit(1.0) - g) * el_own
+                + S.col("_pd_g_fl") * S.col("_lgd_g") * g * S.col("ead_after_crm"),
             )
-            .when(F.col("_g_ben"), (F.lit(1.0) - g) * el_own)
+            .when(S.col("_g_ben"), (S.lit(1.0) - g) * el_own)
             .otherwise(el_own)
         )
     else:
-        el = F.when(F.col("_g_ben"), (F.lit(1.0) - g) * el_own).otherwise(el_own)
+        el = S.when(S.col("_g_ben"), (S.lit(1.0) - g) * el_own).otherwise(el_own)
     if has_mg:
         # stack EL: the fold accumulated per-unit-EAD rates leg by leg in
         # priority order; the uncovered remainder keeps the obligor rate
         _el_multi = (
-            F.col("_mgf").getField("el")
-            + (F.lit(1.0) - _mg_g)
-            * (F.col("pd_floored") * F.col("lgd_floored"))
-        ) * F.col("ead_after_crm")
-        el = F.when(_is_multi, _el_multi).otherwise(el)
+            S.col("_mgf").getField("el")
+            + (S.lit(1.0) - _mg_g)
+            * (S.col("pd_floored") * S.col("lgd_floored"))
+        ) * S.col("ead_after_crm")
+        el = S.when(_is_multi, _el_multi).otherwise(el)
     return perf, el
 
 
@@ -1101,30 +1108,30 @@ def _supporting_factor_exprs(pack: RulePack, threshold_scale: float, carried: fr
     # double-default test books) skip classify and may carry neither the
     # revenue nor the group aggregate — they price factor 1.0
     if "annual_revenue" not in carried:
-        return F.lit(1.0), F.lit(1.0), F.lit(1.0)
+        return S.lit(1.0), S.lit(1.0), S.lit(1.0)
     sme_cond = (
-        (F.col("exposure_class") == "corporate")
-        & (F.col("annual_revenue") > 0)
-        & (F.col("annual_revenue") <= revenue_cap)
-        & ~F.col("is_defaulted")
+        (S.col("exposure_class") == "corporate")
+        & (S.col("annual_revenue") > 0)
+        & (S.col("annual_revenue") <= revenue_cap)
+        & ~S.col("is_defaulted")
     )
     if (f1 >= 1.0 and f2 >= 1.0) or "group_drawn" not in carried:
-        sme_f = F.lit(1.0)  # factors removed (B3.1) / no group aggregate
+        sme_f = S.lit(1.0)  # factors removed (B3.1) / no group aggregate
     else:
-        gd = F.col("group_drawn")
-        blended = F.when(
+        gd = S.col("group_drawn")
+        blended = S.when(
             gd > 0,
             (
-                F.least(gd, F.lit(thr)) * F.lit(f1)
-                + F.greatest(gd - F.lit(thr), F.lit(0.0)) * F.lit(f2)
+                S.least(gd, S.lit(thr)) * S.lit(f1)
+                + S.greatest(gd - S.lit(thr), S.lit(0.0)) * S.lit(f2)
             )
             / gd,
-        ).otherwise(F.lit(f1))
-        sme_f = F.when(sme_cond, blended).otherwise(F.lit(1.0))
-    infra_f = F.when(
-        F.col("is_infrastructure"), pack.lit("infra_supporting_factor")
-    ).otherwise(F.lit(1.0))
-    return sme_f, infra_f, F.least(sme_f, infra_f)
+        ).otherwise(S.lit(f1))
+        sme_f = S.when(sme_cond, blended).otherwise(S.lit(1.0))
+    infra_f = S.when(
+        S.col("is_infrastructure"), pack.sql_lit("infra_supporting_factor")
+    ).otherwise(S.lit(1.0))
+    return sme_f, infra_f, S.least(sme_f, infra_f)
 
 
 def run_sa(
@@ -1136,39 +1143,46 @@ def run_sa(
     spark = crm.exposures.sparkSession
     exp, carried = _calc_entry(
         crm.exposures.where(
-            ~F.col("has_irb_permission")
-            & ~F.col("is_specialised")
-            & (F.col("exposure_class") != "securitisation")
+            (
+                ~S.col("has_irb_permission")
+                & ~S.col("is_specialised")
+                & (S.col("exposure_class") != "securitisation")
+            ).sql
         )
     )
 
-    rw_table = pack.broadcast_table(spark, "sa_rw")
+    rw_table = pack.dim(
+        spark,
+        "sa_rw",
+        "exposure_class AS _rw_class, cqs AS _rw_cqs, rw",
+    )
     exp = exp.join(
         rw_table,
-        (exp.exposure_class == rw_table.exposure_class) & (F.coalesce(exp.cqs, F.lit(0)) == rw_table.cqs),
+        (S.col("exposure_class") == S.col("_rw_class"))
+        & (S.coalesce("cqs", S.lit(0)) == S.col("_rw_cqs")),
         "left",
-    ).drop(rw_table.exposure_class).drop(rw_table.cqs)
+    ).drop("_rw_class", "_rw_cqs")
 
     base_rw = (
-        F.when(
-            F.col("is_defaulted") & (F.col("exposure_class") == "re_secured"),
-            pack.lit("defaulted_rw_secured"),
+        S.when(
+            S.col("is_defaulted") & (S.col("exposure_class") == "re_secured"),
+            pack.sql_lit("defaulted_rw_secured"),
         )
-        .when(F.col("is_defaulted"), pack.lit("defaulted_rw"))
-        .when(F.col("exposure_class") == "re_secured", pack.lit("re_secured_rw"))
-        .when(F.col("exposure_class") == "retail", pack.lit("retail_rw"))
-        .when(F.col("rw").isNotNull(), F.col("rw"))
-        .otherwise(pack.lit("unrated_corp_rw"))
+        .when(S.col("is_defaulted"), pack.sql_lit("defaulted_rw"))
+        .when(S.col("exposure_class") == "re_secured", pack.sql_lit("re_secured_rw"))
+        .when(S.col("exposure_class") == "retail", pack.sql_lit("retail_rw"))
+        .when(S.col("rw").isNotNull(), S.col("rw"))
+        .otherwise(pack.sql_lit("unrated_corp_rw"))
     )
     rw_source = (
-        F.when(
-            F.col("is_defaulted") & (F.col("exposure_class") == "re_secured"),
+        S.when(
+            S.col("is_defaulted") & (S.col("exposure_class") == "re_secured"),
             "sa_defaulted_secured",
         )
-        .when(F.col("is_defaulted"), "sa_defaulted")
-        .when(F.col("exposure_class") == "re_secured", "sa_re_secured")
-        .when(F.col("exposure_class") == "retail", "sa_retail")
-        .when(F.col("rw").isNotNull(), "sa_cqs_lookup")
+        .when(S.col("is_defaulted"), "sa_defaulted")
+        .when(S.col("exposure_class") == "re_secured", "sa_re_secured")
+        .when(S.col("exposure_class") == "retail", "sa_retail")
+        .when(S.col("rw").isNotNull(), "sa_cqs_lookup")
         .otherwise("sa_unrated")
     )
     # SA decision-block carriers (ref :3021-3025): the CQS consulted and
@@ -1176,9 +1190,9 @@ def run_sa(
     # and their delta seal at the end of this function, after every
     # adjustment (covered-bond/RE/sovereign-derived/ccymm/due-diligence/
     # intragroup) has run; rw_source remains the adjustment-reason carrier
-    exp = exp.withColumns(
+    exp = exp.with_columns(
         {
-            "sa_cqs": F.coalesce(F.col("cqs"), F.lit(0)),
+            "sa_cqs": S.coalesce(S.col("cqs"), S.lit(0)),
             "sa_base_risk_weight": base_rw,
         }
     )
@@ -1190,32 +1204,31 @@ def run_sa(
     # 50% issuer weight to 20%, PS1/26 to 25%), which is why the table is
     # pack data, never shared code.
     if "is_covered_bond" in carried:
-        cbt = pack.table_df(spark, "covered_bond_rw").select(
-            F.col("cqs").alias("_cb_cqs_t"), F.col("rw").alias("_cb_rated_rw")
-        )
+        cbt = pack.dim(spark, "covered_bond_rw", "cqs AS _cb_cqs_t, rw AS _cb_rated_rw")
         exp = exp.join(
-            F.broadcast(cbt),
-            F.coalesce(F.col("cb_cqs"), F.lit(0)) == F.col("_cb_cqs_t"),
+            cbt,
+            S.coalesce(S.col("cb_cqs"), S.lit(0)) == S.col("_cb_cqs_t"),
             "left",
         ).drop("_cb_cqs_t")
-        der = pack.table_df(spark, "covered_bond_unrated_derivation").select(
-            F.col("issuer_rw").alias("_cb_issuer_rw"),
-            F.col("cb_rw").alias("_cb_derived"),
+        der = pack.dim(
+            spark,
+            "covered_bond_unrated_derivation",
+            "issuer_rw AS _cb_issuer_rw, cb_rw AS _cb_derived",
         )
         exp = exp.join(
-            F.broadcast(der), F.col("rw") == F.col("_cb_issuer_rw"), "left"
+            der, S.col("rw") == S.col("_cb_issuer_rw"), "left"
         ).drop("_cb_issuer_rw")
-        is_cb = F.coalesce(F.col("is_covered_bond"), F.lit(False)) & ~F.col(
+        is_cb = S.coalesce(S.col("is_covered_bond"), S.lit(False)) & ~S.col(
             "is_defaulted"
         )
         base_rw = (
-            F.when(is_cb & F.col("_cb_rated_rw").isNotNull(), F.col("_cb_rated_rw"))
+            S.when(is_cb & S.col("_cb_rated_rw").isNotNull(), S.col("_cb_rated_rw"))
             # derivation default 1.00 (CRR Art.129(5) residual sub-para)
-            .when(is_cb, F.coalesce(F.col("_cb_derived"), F.lit(1.0)))
+            .when(is_cb, S.coalesce(S.col("_cb_derived"), S.lit(1.0)))
             .otherwise(base_rw)
         )
         rw_source = (
-            F.when(is_cb & F.col("_cb_rated_rw").isNotNull(), "sa_covered_bond_rated")
+            S.when(is_cb & S.col("_cb_rated_rw").isNotNull(), "sa_covered_bond_rated")
             .when(is_cb, "sa_covered_bond_unrated_derived")
             .otherwise(rw_source)
         )
@@ -1233,17 +1246,17 @@ def run_sa(
     # bands compile to a when-chain from the pack rows (pure literals —
     # band-count work, never a join against the fact table).
     if "re_ltv_rw" in pack.tables and "ltv" in carried:
-        ltv = F.col("ltv")
+        ltv = S.col("ltv")
         # the class gate; the LTV-dependent limbs (bands, split) require a
         # usable LTV on top — ADC and Art.124J other-RE price without one
         # (a non-qualifying property may carry NO independent valuation),
         # and a qualifying-RE row with no LTV falls through to the pack's
         # flat re_secured weight rather than guessing a band
-        re_row = (F.col("exposure_class") == "re_secured") & ~F.col("is_defaulted")
+        re_row = (S.col("exposure_class") == "re_secured") & ~S.col("is_defaulted")
         ltv_ok = ltv.isNotNull() & (ltv > 0)
 
         def _flag(name):
-            return F.coalesce(F.col(name), F.lit(False))
+            return S.coalesce(S.col(name), S.lit(False))
 
         commercial = _flag("is_commercial_re")
         explicit_income = _flag("is_income_producing")
@@ -1255,19 +1268,19 @@ def run_sa(
         # strict > — count 3 stays owner-occupied, 4 re-routes; null
         # counts never breach; an explicit upstream income flag wins)
         if "b31_rre_three_property_limit" in pack.scalars:
-            three_prop = (F.col("entity_type") == "individual") & (
-                F.coalesce(F.col("qualifying_property_count"), F.lit(0)).cast(
+            three_prop = (S.col("entity_type") == "individual") & (
+                S.coalesce(S.col("qualifying_property_count"), S.lit(0)).cast(
                     "double"
                 )
-                > pack.lit("b31_rre_three_property_limit")
+                > pack.sql_lit("b31_rre_three_property_limit")
             )
         else:
-            three_prop = F.lit(False)
+            three_prop = S.lit(False)
         income = explicit_income | three_prop
         # Art.124F(2) prior/pari-passu charges: reduce the loan-split
         # secured threshold; a positive prior charge also marks the
         # position junior (ref b31_risk_weight_tables.py:526 is_junior)
-        prior_chg = F.coalesce(F.col("prior_charge_ltv"), F.lit(0.0))
+        prior_chg = S.coalesce(S.col("prior_charge_ltv"), S.lit(0.0))
         junior = _flag("is_junior_lien") | (prior_chg > 0)
         # Art.124K ADC (land acquisition / development / construction):
         # 150% flat; 100% only for qualifying RESIDENTIAL pre-sold —
@@ -1289,25 +1302,25 @@ def run_sa(
             rows = sorted(
                 ((float(u), float(w)) for t, u, w in pack.tables["re_ltv_rw"][1] if t == track),
             )
-            chain = F.lit(rows[-1][1])  # open catch-all band
+            chain = S.lit(rows[-1][1])  # open catch-all band
             for upper, w in reversed(rows[:-1]):
-                chain = F.when(ltv <= F.lit(upper), F.lit(w)).otherwise(chain)
+                chain = S.when(ltv <= S.lit(upper), S.lit(w)).otherwise(chain)
             return chain
 
-        rre_income_rw = _band_chain("rre_income") * F.when(
-            junior & (ltv > pack.lit("b31_re_income_junior_ltv_threshold")),
-            pack.lit("b31_re_income_junior_multiplier"),
-        ).otherwise(F.lit(1.0))
+        rre_income_rw = _band_chain("rre_income") * S.when(
+            junior & (ltv > pack.sql_lit("b31_re_income_junior_ltv_threshold")),
+            pack.sql_lit("b31_re_income_junior_multiplier"),
+        ).otherwise(S.lit(1.0))
         cre_income_base = _band_chain("cre_income")
         # Art.124I(3): junior income-CRE takes ABSOLUTE risk weights that
         # replace the base bands (not multipliers — contrast Art.124G(2)
         # RRE; ref b31_risk_weight_tables.py:605-613)
         if "b31_cre_income_junior_rw_low" in pack.scalars:
-            cre_income_rw = F.when(
+            cre_income_rw = S.when(
                 junior,
-                F.when(ltv <= F.lit(0.60), pack.lit("b31_cre_income_junior_rw_low"))
-                .when(ltv <= F.lit(0.80), pack.lit("b31_cre_income_junior_rw_mid"))
-                .otherwise(pack.lit("b31_cre_income_junior_rw_high")),
+                S.when(ltv <= S.lit(0.60), pack.sql_lit("b31_cre_income_junior_rw_low"))
+                .when(ltv <= S.lit(0.80), pack.sql_lit("b31_cre_income_junior_rw_mid"))
+                .otherwise(pack.sql_lit("b31_cre_income_junior_rw_high")),
             ).otherwise(cre_income_base)
         else:
             cre_income_rw = cre_income_base
@@ -1315,18 +1328,21 @@ def run_sa(
         # — retail for natural persons, the CORPORATE ladder for the
         # obligor's CQS otherwise (the class-ladder join above keyed on
         # 're_secured', which the sa_rw table deliberately has no row for)
-        cp_ladder = pack.table_df(spark, "sa_rw").where(
-            F.col("exposure_class") == "corporate"
-        ).select(F.col("cqs").alias("_re_cqs"), F.col("rw").alias("_re_cp_rw"))
+        cp_ladder = pack.dim(
+            spark,
+            "sa_rw",
+            "cqs AS _re_cqs, rw AS _re_cp_rw",
+            where="exposure_class = 'corporate'",
+        )
         exp = exp.join(
-            F.broadcast(cp_ladder),
-            F.coalesce(exp.cqs, F.lit(0)) == F.col("_re_cqs"),
+            cp_ladder,
+            S.coalesce("cqs", S.lit(0)) == S.col("_re_cqs"),
             "left",
         ).drop("_re_cqs")
-        cp_rw = F.when(
-            (F.col("entity_type") == "individual") | F.col("is_managed_as_retail"),
-            pack.lit("retail_rw"),
-        ).otherwise(F.coalesce(F.col("_re_cp_rw"), pack.lit("unrated_corp_rw")))
+        cp_rw = S.when(
+            (S.col("entity_type") == "individual") | S.col("is_managed_as_retail"),
+            pack.sql_lit("retail_rw"),
+        ).otherwise(S.coalesce(S.col("_re_cp_rw"), pack.sql_lit("unrated_corp_rw")))
         # Art.124L counterparty-type table for the split RESIDUAL and the
         # Art.124J non-dependent other-RE weight (ref
         # b31_risk_weight_tables.py:760-799 _b31_art_124l_cp_rw_expr):
@@ -1336,31 +1352,31 @@ def run_sa(
         # is_sme / qualifies_as_retail inputs are the classify stage's CRR
         # Art.4(1)(128D) size test and Art.123 outcome; pack-gated so the
         # CRR regime (no Art.124L) keeps the plain residual.
-        is_person = F.col("entity_type") == "individual"
+        is_person = S.col("entity_type") == "individual"
         sme = _flag("is_sme")
         retail_q = _flag("qualifies_as_retail")
         social = _flag("is_social_housing")
         if "b31_rre_residual_rw_person" in pack.scalars:
             cp_rw_124l = (
-                F.when(is_person | (sme & retail_q), pack.lit("b31_rre_residual_rw_person"))
-                .when(sme, pack.lit("b31_rre_residual_rw_other_sme"))
+                S.when(is_person | (sme & retail_q), pack.sql_lit("b31_rre_residual_rw_person"))
+                .when(sme, pack.sql_lit("b31_rre_residual_rw_other_sme"))
                 .when(
                     social,
-                    F.greatest(pack.lit("b31_rre_residual_rw_social_floor"), cp_rw),
+                    S.greatest(pack.sql_lit("b31_rre_residual_rw_social_floor"), cp_rw),
                 )
                 .otherwise(cp_rw)
             )
         else:
             cp_rw_124l = cp_rw
         # Art.124F(2): prior charges shrink the preferential secured cap
-        eff_cap = F.greatest(F.lit(0.0), pack.lit("b31_re_split_cap") - prior_chg)
-        secured_share = F.least(eff_cap / ltv, F.lit(1.0))
+        eff_cap = S.greatest(S.lit(0.0), pack.sql_lit("b31_re_split_cap") - prior_chg)
+        secured_share = S.least(eff_cap / ltv, S.lit(1.0))
         split_rw = (
-            F.when(commercial, pack.lit("b31_cre_split_secured_rw")).otherwise(
-                pack.lit("b31_rre_split_secured_rw")
+            S.when(commercial, pack.sql_lit("b31_cre_split_secured_rw")).otherwise(
+                pack.sql_lit("b31_rre_split_secured_rw")
             )
             * secured_share
-            + cp_rw_124l * (F.lit(1.0) - secured_share)
+            + cp_rw_124l * (S.lit(1.0) - secured_share)
         )
         # Art.124H(3): general CRE to counterparties OTHER than natural
         # persons / SMEs takes max(60%, min(counterparty RW, Art.124I(1)/(2)
@@ -1372,23 +1388,23 @@ def run_sa(
         # ref :594 is_person_or_sme), with the retail-managed carrier kept
         # as a person-equivalent alias for bundles that declare no sizes.
         person_or_sme = (
-            (F.col("entity_type") == "individual")
-            | F.coalesce(F.col("is_managed_as_retail"), F.lit(False))
+            (S.col("entity_type") == "individual")
+            | S.coalesce(S.col("is_managed_as_retail"), S.lit(False))
             | sme
         )
-        cre_h3_rw = F.greatest(
-            pack.lit("b31_cre_split_secured_rw"), F.least(cp_rw, cre_income_base)
+        cre_h3_rw = S.greatest(
+            pack.sql_lit("b31_cre_split_secured_rw"), S.least(cp_rw, cre_income_base)
         )
         base_rw = (
-            F.when(re_row & adc & ~commercial & presold, pack.lit("b31_adc_presold_rw"))
-            .when(re_row & adc, pack.lit("b31_adc_rw"))
-            .when(re_row & other_re & income, pack.lit("b31_other_re_income_rw"))
+            S.when(re_row & adc & ~commercial & presold, pack.sql_lit("b31_adc_presold_rw"))
+            .when(re_row & adc, pack.sql_lit("b31_adc_rw"))
+            .when(re_row & other_re & income, pack.sql_lit("b31_other_re_income_rw"))
             # Art.124J non-dependent limbs price at the Art.124L
             # counterparty-type weight (ref b31_risk_weight_tables.py:
             # 674-683) — CRE floored at 60%, RESI unfloored
             .when(
                 re_row & other_re & commercial,
-                F.greatest(pack.lit("b31_other_re_cre_floor_rw"), cp_rw_124l),
+                S.greatest(pack.sql_lit("b31_other_re_cre_floor_rw"), cp_rw_124l),
             )
             .when(re_row & other_re, cp_rw_124l)
             .when(re_row & ltv_ok & income & commercial, cre_income_rw)
@@ -1398,7 +1414,7 @@ def run_sa(
             .otherwise(base_rw)
         )
         rw_source = (
-            F.when(re_row & adc & ~commercial & presold, "b31_adc_presold")
+            S.when(re_row & adc & ~commercial & presold, "b31_adc_presold")
             .when(re_row & adc, "b31_adc")
             .when(re_row & other_re & income, "b31_other_re_income")
             .when(re_row & other_re & commercial, "b31_other_re_cre")
@@ -1425,23 +1441,23 @@ def run_sa(
                 for t, u, w in pack.tables["re_ltv_rw"][1]
                 if t == track
             )
-            chain = F.lit(f"{track}:>{rows[-2][0]:g}")
+            chain = S.lit(f"{track}:>{rows[-2][0]:g}")
             for upper, _w in reversed(rows[:-1]):
-                chain = F.when(
-                    ltv <= F.lit(upper), F.lit(f"{track}:<={upper:g}")
+                chain = S.when(
+                    ltv <= S.lit(upper), S.lit(f"{track}:<={upper:g}")
                 ).otherwise(chain)
             return chain
 
         exp = (
-            exp.withColumn(
+            exp.with_column(
                 "ltv_band",
-                F.when(
+                S.when(
                     re_row & ltv_ok & income & commercial, _band_label("cre_income")
                 ).when(re_row & ltv_ok & income, _band_label("rre_income")),
             )
-            .withColumn("is_qualifying_re", F.when(re_row, ~other_re))
-            .withColumn(
-                "materially_dependent_on_property", F.when(re_row, income)
+            .with_column("is_qualifying_re", S.when(re_row, ~other_re))
+            .with_column(
+                "materially_dependent_on_property", S.when(re_row, income)
             )
         )
 
@@ -1450,34 +1466,38 @@ def run_sa(
     # that method in favour of SCRA grading (PS1/26 Art.121A: Grade A 40%,
     # B 75%, C 150%). Feature-gated per pack, column-gated per bundle.
     _unrated_inst = (
-        (F.col("exposure_class") == "institution")
-        & (F.coalesce(F.col("cqs"), F.lit(0)) == 0)
-        & ~F.col("is_defaulted")
+        (S.col("exposure_class") == "institution")
+        & (S.coalesce(S.col("cqs"), S.lit(0)) == 0)
+        & ~S.col("is_defaulted")
     )
     if (
         "sovereign_cqs" in carried
         and "sovereign_derived_institutions" in pack.scalars
         and pack.scalar("sovereign_derived_institutions") >= 1.0
     ):
-        sd = pack.table_df(spark, "institution_rw_sovereign_derived").select(
-            F.col("cqs").alias("_sd_cqs"), F.col("rw").alias("_sd_rw")
+        sd = pack.dim(
+            spark,
+            "institution_rw_sovereign_derived",
+            "cqs AS _sd_cqs, rw AS _sd_rw",
         )
         exp = exp.join(
-            F.broadcast(sd), F.col("sovereign_cqs") == F.col("_sd_cqs"), "left"
+            sd, S.col("sovereign_cqs") == S.col("_sd_cqs"), "left"
         ).drop("_sd_cqs")
-        sd_match = _unrated_inst & F.col("_sd_rw").isNotNull()
-        base_rw = F.when(sd_match, F.col("_sd_rw")).otherwise(base_rw)
-        rw_source = F.when(sd_match, "sa_sovereign_derived").otherwise(rw_source)
+        sd_match = _unrated_inst & S.col("_sd_rw").isNotNull()
+        base_rw = S.when(sd_match, S.col("_sd_rw")).otherwise(base_rw)
+        rw_source = S.when(sd_match, "sa_sovereign_derived").otherwise(rw_source)
     if "scra_grade" in carried and "institution_scra_rw" in pack.tables:
-        sc = pack.table_df(spark, "institution_scra_rw").select(
-            F.col("grade").alias("_scra_grade_t"), F.col("rw").alias("_scra_rw")
+        sc = pack.dim(
+            spark,
+            "institution_scra_rw",
+            "grade AS _scra_grade_t, rw AS _scra_rw",
         )
         exp = exp.join(
-            F.broadcast(sc), F.col("scra_grade") == F.col("_scra_grade_t"), "left"
+            sc, S.col("scra_grade") == S.col("_scra_grade_t"), "left"
         ).drop("_scra_grade_t")
-        scra_match = _unrated_inst & F.col("_scra_rw").isNotNull()
-        base_rw = F.when(scra_match, F.col("_scra_rw")).otherwise(base_rw)
-        rw_source = F.when(scra_match, "sa_scra").otherwise(rw_source)
+        scra_match = _unrated_inst & S.col("_scra_rw").isNotNull()
+        base_rw = S.when(scra_match, S.col("_scra_rw")).otherwise(base_rw)
+        rw_source = S.when(scra_match, "sa_scra").otherwise(rw_source)
 
     # PS1/26 Art.122A-122B: UNRATED SA specialised lending takes type-
     # specific risk weights instead of the unrated-corporate 100% — object/
@@ -1490,43 +1510,43 @@ def run_sa(
     # when-chains — never a fact-table join.
     if "b31_sa_sl_rw" in pack.tables:
         slw = {k: float(v) for k, v in pack.tables["b31_sa_sl_rw"][1]}
-        sl = F.lower(F.coalesce(F.col("sl_type"), F.lit("")))
-        phase = F.lower(F.coalesce(F.col("sl_project_phase"), F.lit("")))
+        sl = S.lower(S.coalesce(S.col("sl_type"), S.lit("")))
+        phase = S.lower(S.coalesce(S.col("sl_project_phase"), S.lit("")))
         # Art.139(2B): an SL exposure whose only external assessment is
         # NOT issue-specific (inferred / issuer-level) is treated as
         # unrated for this routing — ordinary rated corporates untouched
-        cqs_eff = F.coalesce(F.col("cqs"), F.lit(0))
+        cqs_eff = S.coalesce(S.col("cqs"), S.lit(0))
         if (
             "sa_sl_inferred_rating_disapplied" in pack.scalars
             and pack.scalar("sa_sl_inferred_rating_disapplied") >= 1.0
         ):
-            cqs_eff = F.when(
-                ~F.coalesce(F.col("external_rating_is_issue_specific"), F.lit(True)),
-                F.lit(0),
+            cqs_eff = S.when(
+                ~S.coalesce(S.col("external_rating_is_issue_specific"), S.lit(True)),
+                S.lit(0),
             ).otherwise(cqs_eff)
         sl_row = (
-            (F.col("exposure_class") == "corporate")
+            (S.col("exposure_class") == "corporate")
             & (sl != "")
             & (cqs_eff <= 0)
-            & ~F.col("is_defaulted")
+            & ~S.col("is_defaulted")
         )
         sl_key = (
-            F.when(sl.contains("object"), F.lit("object_finance"))
-            .when(sl.contains("commodit"), F.lit("commodities_finance"))
+            S.when(sl.contains("object"), S.lit("object_finance"))
+            .when(sl.contains("commodit"), S.lit("commodities_finance"))
             .when(
                 sl.contains("project"),
-                F.when(phase.contains("pre"), F.lit("project_finance_pre_operational"))
-                .when(phase.contains("high"), F.lit("project_finance_high_quality"))
-                .otherwise(F.lit("project_finance_operational")),
+                S.when(phase.contains("pre"), S.lit("project_finance_pre_operational"))
+                .when(phase.contains("high"), S.lit("project_finance_high_quality"))
+                .otherwise(S.lit("project_finance_operational")),
             )
-            .otherwise(F.lit("unknown"))
+            .otherwise(S.lit("unknown"))
         )
-        sl_rw = F.lit(1.0)  # unknown SL type falls back to corporate 100%
+        sl_rw = S.lit(1.0)  # unknown SL type falls back to corporate 100%
         for key, w in sorted(slw.items()):
-            sl_rw = F.when(sl_key == key, F.lit(w)).otherwise(sl_rw)
-        base_rw = F.when(sl_row, sl_rw).otherwise(base_rw)
-        rw_source = F.when(
-            sl_row, F.concat(F.lit("b31_sa_sl_"), sl_key)
+            sl_rw = S.when(sl_key == key, S.lit(w)).otherwise(sl_rw)
+        base_rw = S.when(sl_row, sl_rw).otherwise(base_rw)
+        rw_source = S.when(
+            sl_row, S.concat(S.lit("b31_sa_sl_"), sl_key)
         ).otherwise(rw_source)
 
     # --- PS1/26 short-term institution / corporate ECAI routing (ref
@@ -1537,104 +1557,104 @@ def run_sa(
     # dedicated short-term ECAI (Table 4A) beats the long-term-rating
     # short-term window (Table 4); SCRA-ST beats the long-term SCRA
     # override above (applied later wins).
-    _nd = ~F.col("is_defaulted")
-    _rated = F.coalesce(F.col("cqs"), F.lit(0)) > 0
-    _inst = F.col("exposure_class") == "institution"
-    _has_st_ecai = F.coalesce(F.col("has_short_term_ecai"), F.lit(False))
-    _om = F.coalesce(F.col("original_maturity_years"), F.lit(1.0))
-    _st_lc = F.coalesce(F.col("is_short_term_trade_lc"), F.lit(False))
+    _nd = ~S.col("is_defaulted")
+    _rated = S.coalesce(S.col("cqs"), S.lit(0)) > 0
+    _inst = S.col("exposure_class") == "institution"
+    _has_st_ecai = S.coalesce(S.col("has_short_term_ecai"), S.lit(False))
+    _om = S.coalesce(S.col("original_maturity_years"), S.lit(1.0))
+    _st_lc = S.coalesce(S.col("is_short_term_trade_lc"), S.lit(False))
     # Art.120(2)/121(5): original maturity <= 3m, or trade finance <= 6m
     _st_window = (_om <= 0.25) | (_st_lc & (_om <= 0.5))
     if "ecra_short_term_rw" in pack.tables and "original_maturity_years" in carried:
-        t4 = pack.table_df(spark, "ecra_short_term_rw").select(
-            F.col("cqs").alias("_t4_cqs"), F.col("rw").alias("_t4_rw")
-        )
+        t4 = pack.dim(spark, "ecra_short_term_rw", "cqs AS _t4_cqs, rw AS _t4_rw")
         exp = exp.join(
-            F.broadcast(t4), F.col("cqs") == F.col("_t4_cqs"), "left"
+            t4, S.col("cqs") == S.col("_t4_cqs"), "left"
         ).drop("_t4_cqs")
         m_t4 = _inst & _rated & ~_has_st_ecai & _st_window & _nd
-        base_rw = F.when(m_t4, F.coalesce(F.col("_t4_rw"), F.lit(1.5))).otherwise(
+        base_rw = S.when(m_t4, S.coalesce(S.col("_t4_rw"), S.lit(1.5))).otherwise(
             base_rw
         )
-        rw_source = F.when(m_t4, "sa_ecra_short_term").otherwise(rw_source)
+        rw_source = S.when(m_t4, "sa_ecra_short_term").otherwise(rw_source)
     if "scra_short_term_rw" in pack.tables and "scra_grade" in carried:
-        sst = pack.table_df(spark, "scra_short_term_rw").select(
-            F.col("grade").alias("_sst_grade"), F.col("rw").alias("_sst_rw")
+        sst = pack.dim(
+            spark,
+            "scra_short_term_rw",
+            "grade AS _sst_grade, rw AS _sst_rw",
         )
         exp = exp.join(
-            F.broadcast(sst), F.col("scra_grade") == F.col("_sst_grade"), "left"
+            sst, S.col("scra_grade") == S.col("_sst_grade"), "left"
         ).drop("_sst_grade")
         m_sst = (
             _inst
-            & (F.coalesce(F.col("cqs"), F.lit(0)) == 0)
+            & (S.coalesce(S.col("cqs"), S.lit(0)) == 0)
             & _st_window
             & _nd
-            & F.col("_sst_rw").isNotNull()
+            & S.col("_sst_rw").isNotNull()
         )
-        base_rw = F.when(m_sst, F.col("_sst_rw")).otherwise(base_rw)
-        rw_source = F.when(m_sst, "sa_scra_short_term").otherwise(rw_source)
+        base_rw = S.when(m_sst, S.col("_sst_rw")).otherwise(base_rw)
+        rw_source = S.when(m_sst, "sa_scra_short_term").otherwise(rw_source)
     if "ecra_short_term_ecai_rw" in pack.tables and "has_short_term_ecai" in carried:
-        t4a = pack.table_df(spark, "ecra_short_term_ecai_rw").select(
-            F.col("cqs").alias("_t4a_cqs"), F.col("rw").alias("_t4a_rw")
+        t4a = pack.dim(
+            spark,
+            "ecra_short_term_ecai_rw",
+            "cqs AS _t4a_cqs, rw AS _t4a_rw",
         )
         exp = exp.join(
-            F.broadcast(t4a), F.col("cqs") == F.col("_t4a_cqs"), "left"
+            t4a, S.col("cqs") == S.col("_t4a_cqs"), "left"
         ).drop("_t4a_cqs")
         m_t4a = _inst & _rated & _has_st_ecai & _nd
-        base_rw = F.when(m_t4a, F.coalesce(F.col("_t4a_rw"), F.lit(1.5))).otherwise(
+        base_rw = S.when(m_t4a, S.coalesce(S.col("_t4a_rw"), S.lit(1.5))).otherwise(
             base_rw
         )
-        rw_source = F.when(m_t4a, "sa_ecra_st_ecai").otherwise(rw_source)
+        rw_source = S.when(m_t4a, "sa_ecra_st_ecai").otherwise(rw_source)
     if "corporate_st_ecai_rw" in pack.tables and "has_short_term_ecai" in carried:
-        t6a = pack.table_df(spark, "corporate_st_ecai_rw").select(
-            F.col("cqs").alias("_t6a_cqs"), F.col("rw").alias("_t6a_rw")
-        )
+        t6a = pack.dim(spark, "corporate_st_ecai_rw", "cqs AS _t6a_cqs, rw AS _t6a_rw")
         exp = exp.join(
-            F.broadcast(t6a), F.col("cqs") == F.col("_t6a_cqs"), "left"
+            t6a, S.col("cqs") == S.col("_t6a_cqs"), "left"
         ).drop("_t6a_cqs")
         # SME corporates stay on the dedicated 85% path (ref excludes the
         # SME class from Table 6A)
         m_t6a = (
-            (F.col("exposure_class") == "corporate")
+            (S.col("exposure_class") == "corporate")
             & _rated
             & _has_st_ecai
-            & ~F.coalesce(F.col("is_sme"), F.lit(False))
+            & ~S.coalesce(S.col("is_sme"), S.lit(False))
             & _nd
         )
-        base_rw = F.when(m_t6a, F.coalesce(F.col("_t6a_rw"), F.lit(1.5))).otherwise(
+        base_rw = S.when(m_t6a, S.coalesce(S.col("_t6a_rw"), S.lit(1.5))).otherwise(
             base_rw
         )
-        rw_source = F.when(m_t6a, "sa_corp_st_ecai").otherwise(rw_source)
+        rw_source = S.when(m_t6a, "sa_corp_st_ecai").otherwise(rw_source)
 
     # --- PS1/26 Art.122(11) unrated corporate SME 85% and Art.122(6)/(8)
     # investment-grade assessment (65% IG / 135% non-IG, active only under
     # the firm's PRA permission — use_ig_assessment). Pack-gated: the CRR
     # prices unrated corporates flat at Art.122(2) 100%.
     _unrated_corp = (
-        (F.col("exposure_class") == "corporate")
-        & (F.coalesce(F.col("cqs"), F.lit(0)) == 0)
+        (S.col("exposure_class") == "corporate")
+        & (S.coalesce(S.col("cqs"), S.lit(0)) == 0)
         & _nd
     )
-    _is_sme = F.coalesce(F.col("is_sme"), F.lit(False))
+    _is_sme = S.coalesce(S.col("is_sme"), S.lit(False))
     if "corporate_sme_rw" in pack.scalars:
         m_sme = _unrated_corp & _is_sme
-        base_rw = F.when(m_sme, pack.lit("corporate_sme_rw")).otherwise(base_rw)
-        rw_source = F.when(m_sme, "sa_corporate_sme").otherwise(rw_source)
+        base_rw = S.when(m_sme, pack.sql_lit("corporate_sme_rw")).otherwise(base_rw)
+        rw_source = S.when(m_sme, "sa_corporate_sme").otherwise(rw_source)
     if (
         use_ig_assessment
         and "corporate_ig_rw" in pack.scalars
         and "is_investment_grade" in carried
     ):
-        _ig = F.coalesce(F.col("is_investment_grade"), F.lit(False))
+        _ig = S.coalesce(S.col("is_investment_grade"), S.lit(False))
         m_ig = _unrated_corp & ~_is_sme & _ig
         m_nig = _unrated_corp & ~_is_sme & ~_ig
         base_rw = (
-            F.when(m_ig, pack.lit("corporate_ig_rw"))
-            .when(m_nig, pack.lit("corporate_non_ig_rw"))
+            S.when(m_ig, pack.sql_lit("corporate_ig_rw"))
+            .when(m_nig, pack.sql_lit("corporate_non_ig_rw"))
             .otherwise(base_rw)
         )
         rw_source = (
-            F.when(m_ig, "sa_corporate_ig")
+            S.when(m_ig, "sa_corporate_ig")
             .when(m_nig, "sa_corporate_non_ig")
             .otherwise(rw_source)
         )
@@ -1643,150 +1663,146 @@ def run_sa(
     # PS1/26 Art.123(4)), QRRE transactor 45% (PS1/26 Art.123(2), B3.1
     # only — transactor applied after payroll so it wins ties, mirroring
     # the reference chain order)
-    _retail_nd = (F.col("exposure_class") == "retail") & _nd
+    _retail_nd = (S.col("exposure_class") == "retail") & _nd
     if "retail_payroll_rw" in pack.scalars:
-        m_pay = _retail_nd & F.coalesce(F.col("is_payroll_loan"), F.lit(False))
-        base_rw = F.when(m_pay, pack.lit("retail_payroll_rw")).otherwise(base_rw)
-        rw_source = F.when(m_pay, "sa_retail_payroll").otherwise(rw_source)
+        m_pay = _retail_nd & S.coalesce(S.col("is_payroll_loan"), S.lit(False))
+        base_rw = S.when(m_pay, pack.sql_lit("retail_payroll_rw")).otherwise(base_rw)
+        rw_source = S.when(m_pay, "sa_retail_payroll").otherwise(rw_source)
     if "retail_transactor_rw" in pack.scalars:
-        m_tx = _retail_nd & F.coalesce(F.col("is_qrre_transactor"), F.lit(False))
-        base_rw = F.when(m_tx, pack.lit("retail_transactor_rw")).otherwise(base_rw)
-        rw_source = F.when(m_tx, "sa_retail_transactor").otherwise(rw_source)
+        m_tx = _retail_nd & S.coalesce(S.col("is_qrre_transactor"), S.lit(False))
+        base_rw = S.when(m_tx, pack.sql_lit("retail_transactor_rw")).otherwise(base_rw)
+        rw_source = S.when(m_tx, "sa_retail_transactor").otherwise(rw_source)
 
     # --- CRR Art.116-118 / Art.137 sovereign-family branches (ref
     # engine/sa/risk_weights.py PSE/RGLA/MDB/IO chain + _eca_meip_rw_expr).
     # All lookups are pack-dim broadcast joins; fallbacks are the cited
     # Art.116(1)/117(1) conservative defaults.
     if "io_rw" in pack.scalars:
-        m_io = (F.col("exposure_class") == "international_organisation") & _nd
-        base_rw = F.when(m_io, pack.lit("io_rw")).otherwise(base_rw)
-        rw_source = F.when(m_io, "sa_art118_io").otherwise(rw_source)
+        m_io = (S.col("exposure_class") == "international_organisation") & _nd
+        base_rw = S.when(m_io, pack.sql_lit("io_rw")).otherwise(base_rw)
+        rw_source = S.when(m_io, "sa_art118_io").otherwise(rw_source)
     if "mdb_rw_table2b" in pack.tables:
-        t2b = pack.table_df(spark, "mdb_rw_table2b").select(
-            F.col("cqs").alias("_2b_cqs"), F.col("rw").alias("_2b_rw")
-        )
+        t2b = pack.dim(spark, "mdb_rw_table2b", "cqs AS _2b_cqs, rw AS _2b_rw")
         exp = exp.join(
-            F.broadcast(t2b),
-            F.coalesce(F.col("cqs"), F.lit(0)) == F.col("_2b_cqs"),
+            t2b,
+            S.coalesce(S.col("cqs"), S.lit(0)) == S.col("_2b_cqs"),
             "left",
         ).drop("_2b_cqs")
-        _mdb = (F.col("exposure_class") == "mdb") & _nd
-        m_named = _mdb & (F.col("entity_type") == "mdb_named")
-        m_2b = _mdb & (F.col("entity_type") != "mdb_named")
+        _mdb = (S.col("exposure_class") == "mdb") & _nd
+        m_named = _mdb & (S.col("entity_type") == "mdb_named")
+        m_2b = _mdb & (S.col("entity_type") != "mdb_named")
         base_rw = (
-            F.when(m_named, pack.lit("mdb_named_rw"))
-            .when(m_2b, F.coalesce(F.col("_2b_rw"), pack.lit("mdb_unrated_rw")))
+            S.when(m_named, pack.sql_lit("mdb_named_rw"))
+            .when(m_2b, S.coalesce(S.col("_2b_rw"), pack.sql_lit("mdb_unrated_rw")))
             .otherwise(base_rw)
         )
         rw_source = (
-            F.when(m_named, "sa_mdb_named")
+            S.when(m_named, "sa_mdb_named")
             .when(m_2b, "sa_mdb_table2b")
             .otherwise(rw_source)
         )
     if "pse_own_rating_rw" in pack.tables:
-        por = pack.table_df(spark, "pse_own_rating_rw").select(
-            F.col("cqs").alias("_por_cqs"), F.col("rw").alias("_por_rw")
-        )
+        por = pack.dim(spark, "pse_own_rating_rw", "cqs AS _por_cqs, rw AS _por_rw")
         exp = exp.join(
-            F.broadcast(por), F.col("cqs") == F.col("_por_cqs"), "left"
+            por, S.col("cqs") == S.col("_por_cqs"), "left"
         ).drop("_por_cqs")
         if "sovereign_cqs" in carried:
-            psd = pack.table_df(spark, "pse_sovereign_derived_rw").select(
-                F.col("cqs").alias("_psd_cqs"), F.col("rw").alias("_psd_rw")
+            psd = pack.dim(
+                spark,
+                "pse_sovereign_derived_rw",
+                "cqs AS _psd_cqs, rw AS _psd_rw",
             )
             exp = exp.join(
-                F.broadcast(psd),
-                F.col("sovereign_cqs") == F.col("_psd_cqs"),
+                psd,
+                S.col("sovereign_cqs") == S.col("_psd_cqs"),
                 "left",
             ).drop("_psd_cqs")
-            _psd_rw = F.col("_psd_rw")
+            _psd_rw = S.col("_psd_rw")
         else:
-            _psd_rw = F.lit(None).cast("double")
-        _pse = (F.col("exposure_class") == "pse") & _nd
+            _psd_rw = S.null("double")
+        _pse = (S.col("exposure_class") == "pse") & _nd
         # Art.116(5): an EXPLICIT non-equivalence flag prices 100%; null is
         # permissive (no Treasury determination recorded ≠ negative one)
-        _pse_ne = ~F.coalesce(F.col("pse_jurisdiction_equivalent"), F.lit(True))
+        _pse_ne = ~S.coalesce(S.col("pse_jurisdiction_equivalent"), S.lit(True))
         _pse_st = _om <= 0.25
         base_rw = (
-            F.when(_pse & _pse_ne, pack.lit("pse_non_equivalent_rw"))
-            .when(_pse & _pse_st, pack.lit("pse_short_term_rw"))
+            S.when(_pse & _pse_ne, pack.sql_lit("pse_non_equivalent_rw"))
+            .when(_pse & _pse_st, pack.sql_lit("pse_short_term_rw"))
             .when(
-                _pse & (F.coalesce(F.col("cqs"), F.lit(0)) == 0),
-                F.coalesce(_psd_rw, pack.lit("pse_unrated_rw")),
+                _pse & (S.coalesce(S.col("cqs"), S.lit(0)) == 0),
+                S.coalesce(_psd_rw, pack.sql_lit("pse_unrated_rw")),
             )
-            .when(_pse, F.coalesce(F.col("_por_rw"), pack.lit("pse_unrated_rw")))
+            .when(_pse, S.coalesce(S.col("_por_rw"), pack.sql_lit("pse_unrated_rw")))
             .otherwise(base_rw)
         )
         rw_source = (
-            F.when(_pse & _pse_ne, "sa_pse_non_equivalent")
+            S.when(_pse & _pse_ne, "sa_pse_non_equivalent")
             .when(_pse & _pse_st, "sa_pse_short_term")
             .when(
-                _pse & (F.coalesce(F.col("cqs"), F.lit(0)) == 0),
+                _pse & (S.coalesce(S.col("cqs"), S.lit(0)) == 0),
                 "sa_pse_sovereign_derived",
             )
             .when(_pse, "sa_pse_own_rating")
             .otherwise(rw_source)
         )
     if "rgla_own_rating_rw" in pack.tables:
-        r1b = pack.table_df(spark, "rgla_own_rating_rw").select(
-            F.col("cqs").alias("_1b_cqs"), F.col("rw").alias("_1b_rw")
-        )
+        r1b = pack.dim(spark, "rgla_own_rating_rw", "cqs AS _1b_cqs, rw AS _1b_rw")
         exp = exp.join(
-            F.broadcast(r1b), F.col("cqs") == F.col("_1b_cqs"), "left"
+            r1b, S.col("cqs") == S.col("_1b_cqs"), "left"
         ).drop("_1b_cqs")
         if "sovereign_cqs" in carried:
-            r1a = pack.table_df(spark, "rgla_sovereign_derived_rw").select(
-                F.col("cqs").alias("_1a_cqs"), F.col("rw").alias("_1a_rw")
+            r1a = pack.dim(
+                spark,
+                "rgla_sovereign_derived_rw",
+                "cqs AS _1a_cqs, rw AS _1a_rw",
             )
             exp = exp.join(
-                F.broadcast(r1a),
-                F.col("sovereign_cqs") == F.col("_1a_cqs"),
+                r1a,
+                S.col("sovereign_cqs") == S.col("_1a_cqs"),
                 "left",
             ).drop("_1a_cqs")
-            _r1a_rw = F.col("_1a_rw")
+            _r1a_rw = S.col("_1a_rw")
         else:
-            _r1a_rw = F.lit(None).cast("double")
-        _rgla = (F.col("exposure_class") == "rgla") & _nd
+            _r1a_rw = S.null("double")
+        _rgla = (S.col("exposure_class") == "rgla") & _nd
         # Art.115(5): sterling-domestic UK RGLAs take the flat 20% — the
         # 'GB'/'GBP' carrier convention; non-UK domestic-currency RGLAs
         # fall through to the (1) rating tables (the reference deliberately
         # does NOT reuse the composite EU-domestic flag here)
-        _rgla_dom = (F.col("country") == "GB") & (F.col("currency") == "GBP")
+        _rgla_dom = (S.col("country") == "GB") & (S.col("currency") == "GBP")
         base_rw = (
-            F.when(_rgla & _rgla_dom, pack.lit("rgla_domestic_rw"))
+            S.when(_rgla & _rgla_dom, pack.sql_lit("rgla_domestic_rw"))
             .when(
-                _rgla & (F.coalesce(F.col("cqs"), F.lit(0)) == 0),
-                F.coalesce(_r1a_rw, pack.lit("pse_unrated_rw")),
+                _rgla & (S.coalesce(S.col("cqs"), S.lit(0)) == 0),
+                S.coalesce(_r1a_rw, pack.sql_lit("pse_unrated_rw")),
             )
-            .when(_rgla, F.coalesce(F.col("_1b_rw"), pack.lit("pse_unrated_rw")))
+            .when(_rgla, S.coalesce(S.col("_1b_rw"), pack.sql_lit("pse_unrated_rw")))
             .otherwise(base_rw)
         )
         rw_source = (
-            F.when(_rgla & _rgla_dom, "sa_rgla_domestic")
+            S.when(_rgla & _rgla_dom, "sa_rgla_domestic")
             .when(
-                _rgla & (F.coalesce(F.col("cqs"), F.lit(0)) == 0),
+                _rgla & (S.coalesce(S.col("cqs"), S.lit(0)) == 0),
                 "sa_rgla_sovereign_derived",
             )
             .when(_rgla, "sa_rgla_own_rating")
             .otherwise(rw_source)
         )
     if "eca_meip_rw" in pack.tables and "eca_meip_score" in carried:
-        eca = pack.table_df(spark, "eca_meip_rw").select(
-            F.col("score").alias("_eca_score"), F.col("rw").alias("_eca_rw")
-        )
+        eca = pack.dim(spark, "eca_meip_rw", "score AS _eca_score, rw AS _eca_rw")
         exp = exp.join(
-            F.broadcast(eca),
-            F.col("eca_meip_score") == F.col("_eca_score"),
+            eca,
+            S.col("eca_meip_score") == S.col("_eca_score"),
             "left",
         ).drop("_eca_score")
         m_eca = (
-            (F.col("exposure_class") == "sovereign")
-            & (F.coalesce(F.col("cqs"), F.lit(0)) == 0)
+            (S.col("exposure_class") == "sovereign")
+            & (S.coalesce(S.col("cqs"), S.lit(0)) == 0)
             & _nd
-            & F.col("_eca_rw").isNotNull()
+            & S.col("_eca_rw").isNotNull()
         )
-        base_rw = F.when(m_eca, F.col("_eca_rw")).otherwise(base_rw)
-        rw_source = F.when(m_eca, "sa_eca_meip").otherwise(rw_source)
+        base_rw = S.when(m_eca, S.col("_eca_rw")).otherwise(base_rw)
+        rw_source = S.when(m_eca, "sa_eca_meip").otherwise(rw_source)
 
     # --- Art.112 Table A2 rows 3-4: subordinated debt / high-risk classes.
     # Both outrank the defaulted rule (priority 3/4 > 5, ref
@@ -1796,16 +1812,16 @@ def run_sa(
     # CRR omitted Art.128 — its high-risk rows take the residual 100%,
     # including defaulted ones (the Table A2 precedence, not an oversight).
     if "subordinated_debt_rw" in pack.scalars:
-        m_sd = F.col("exposure_class") == "subordinated_debt"
-        base_rw = F.when(m_sd, pack.lit("subordinated_debt_rw")).otherwise(base_rw)
-        rw_source = F.when(m_sd, "sa_subordinated_debt").otherwise(rw_source)
-    m_hr = F.col("exposure_class") == "high_risk"
+        m_sd = S.col("exposure_class") == "subordinated_debt"
+        base_rw = S.when(m_sd, pack.sql_lit("subordinated_debt_rw")).otherwise(base_rw)
+        rw_source = S.when(m_sd, "sa_subordinated_debt").otherwise(rw_source)
+    m_hr = S.col("exposure_class") == "high_risk"
     if "high_risk_rw" in pack.scalars:
-        base_rw = F.when(m_hr, pack.lit("high_risk_rw")).otherwise(base_rw)
-        rw_source = F.when(m_hr, "sa_high_risk").otherwise(rw_source)
+        base_rw = S.when(m_hr, pack.sql_lit("high_risk_rw")).otherwise(base_rw)
+        rw_source = S.when(m_hr, "sa_high_risk").otherwise(rw_source)
     else:
-        base_rw = F.when(m_hr, pack.lit("unrated_corp_rw")).otherwise(base_rw)
-        rw_source = F.when(m_hr, "sa_unrated").otherwise(rw_source)
+        base_rw = S.when(m_hr, pack.sql_lit("unrated_corp_rw")).otherwise(base_rw)
+        rw_source = S.when(m_hr, "sa_unrated").otherwise(rw_source)
 
     # --- Art.127 defaulted provision test (ref engine/sa/risk_weights.py
     # _apply_defaulted_risk_weight): the unsecured defaulted part takes
@@ -1820,47 +1836,47 @@ def run_sa(
     # overrides every non-defaulted branch above, like the reference's
     # unconditional Art.127 overwrite.
     if "defaulted_provision_threshold" in pack.scalars:
-        _prov = F.coalesce(F.col("provision_allocated"), F.lit(0.0))
+        _prov = S.coalesce(S.col("provision_allocated"), S.lit(0.0))
         _gross_basis = (
             "defaulted_denom_gross_outstanding" in pack.scalars
             and pack.scalar("defaulted_denom_gross_outstanding") >= 1.0
         )
         _denom = (
-            F.col("gross_ead")
+            S.col("gross_ead")
             if _gross_basis
-            else F.col("ead_after_crm")
-            + F.coalesce(F.col("provision_capped_amount"), F.lit(0.0))
+            else S.col("ead_after_crm")
+            + S.coalesce(S.col("provision_capped_amount"), S.lit(0.0))
         )
-        _high = _prov >= pack.lit("defaulted_provision_threshold") * _denom
-        _prov_rw = F.when(_high, pack.lit("defaulted_rw_high_provision")).otherwise(
-            pack.lit("defaulted_rw_low_provision")
+        _high = _prov >= pack.sql_lit("defaulted_provision_threshold") * _denom
+        _prov_rw = S.when(_high, pack.sql_lit("defaulted_rw_high_provision")).otherwise(
+            pack.sql_lit("defaulted_rw_low_provision")
         )
-        _re_sec = F.col("exposure_class") == "re_secured"
+        _re_sec = S.col("exposure_class") == "re_secured"
         if "defaulted_resi_re_non_income_rw" in pack.scalars:
-            _comm = F.coalesce(F.col("is_commercial_re"), F.lit(False))
-            _inc = F.coalesce(F.col("is_income_producing"), F.lit(False))
+            _comm = S.coalesce(S.col("is_commercial_re"), S.lit(False))
+            _inc = S.coalesce(S.col("is_income_producing"), S.lit(False))
             # ADC / other-RE are their own classes in the reference's
             # Art.127(3) carve-out (residential only) — they join the
             # provision test like income/commercial rows
-            _adc = F.coalesce(F.col("is_adc"), F.lit(False))
-            _oth = F.coalesce(F.col("is_other_re"), F.lit(False))
+            _adc = S.coalesce(S.col("is_adc"), S.lit(False))
+            _oth = S.coalesce(S.col("is_other_re"), S.lit(False))
             # general resi RE stays flat 100% (the base chain's secured
             # leg); income-producing / commercial / ADC / other-RE secured
             # rows join the provision test
-            m_prov = F.col("is_defaulted") & ~(
+            m_prov = S.col("is_defaulted") & ~(
                 _re_sec & ~_comm & ~_inc & ~_adc & ~_oth
             )
         else:
-            m_prov = F.col("is_defaulted") & ~_re_sec
+            m_prov = S.col("is_defaulted") & ~_re_sec
         # Table A2 rows 3-4 outrank the defaulted rule (see above)
-        m_prov = m_prov & ~F.col("exposure_class").isin(
+        m_prov = m_prov & ~S.col("exposure_class").isin(
             "high_risk", "subordinated_debt"
         )
-        base_rw = F.when(m_prov, _prov_rw).otherwise(base_rw)
-        rw_source = F.when(
+        base_rw = S.when(m_prov, _prov_rw).otherwise(base_rw)
+        rw_source = S.when(
             m_prov,
-            F.when(_high, F.lit("sa_defaulted_high_provision")).otherwise(
-                F.lit("sa_defaulted")
+            S.when(_high, S.lit("sa_defaulted_high_provision")).otherwise(
+                S.lit("sa_defaulted")
             ),
         ).otherwise(rw_source)
 
@@ -1869,9 +1885,9 @@ def run_sa(
     # (ref engine/sa/central_bank.py ecb_rw_expr; 'central_bank_ecb' is
     # the documented entity-type convention — the ECB is supranational,
     # so no country code can identify it)
-    _is_ecb = F.col("entity_type") == "central_bank_ecb"
-    base_rw = F.when(_is_ecb, F.lit(0.0)).otherwise(base_rw)
-    rw_source = F.when(_is_ecb, "ecb_art114_3").otherwise(rw_source)
+    _is_ecb = S.col("entity_type") == "central_bank_ecb"
+    base_rw = S.when(_is_ecb, S.lit(0.0)).otherwise(base_rw)
+    rw_source = S.when(_is_ecb, "ecb_art114_3").otherwise(rw_source)
 
     # CRR Art.306(1) / BCBS CRE54.14-15: trade exposures to a QUALIFYING
     # CCP take 2% (clearing member's own trades, (1)(a)) or 4% (client-
@@ -1883,18 +1899,18 @@ def run_sa(
     # treatment.
     if "qccp_trade_rw" in pack.scalars:
         _qccp = (
-            (F.col("entity_type") == "ccp")
-            & ~F.col("is_defaulted")
-            & F.coalesce("is_qccp", F.lit(False))
+            (S.col("entity_type") == "ccp")
+            & ~S.col("is_defaulted")
+            & S.coalesce("is_qccp", S.lit(False))
         )
-        _cleared = F.coalesce("is_client_cleared", F.lit(False))
+        _cleared = S.coalesce("is_client_cleared", S.lit(False))
         base_rw = (
-            F.when(_qccp & _cleared, pack.lit("qccp_client_cleared_rw"))
-            .when(_qccp, pack.lit("qccp_trade_rw"))
+            S.when(_qccp & _cleared, pack.sql_lit("qccp_client_cleared_rw"))
+            .when(_qccp, pack.sql_lit("qccp_trade_rw"))
             .otherwise(base_rw)
         )
         rw_source = (
-            F.when(_qccp & _cleared, "sa_qccp_client_cleared_art306_1c")
+            S.when(_qccp & _cleared, "sa_qccp_client_cleared_art306_1c")
             .when(_qccp, "sa_qccp_trade_art306_1a")
             .otherwise(rw_source)
         )
@@ -1903,33 +1919,34 @@ def run_sa(
     # denominated in the member state's domestic currency take 0% RW,
     # overriding the CQS ladder (ref engine/eu_sovereign.py — consumed by
     # the SA risk-weight path; the country→currency map is pack data).
-    eu = pack.broadcast_table(spark, "eu_domestic_ccy").select(
-        F.col("country").alias("_eu_country"),
-        F.col("domestic_ccy").alias("_eu_ccy"),
+    eu = pack.dim(
+        spark,
+        "eu_domestic_ccy",
+        "country AS _eu_country, domestic_ccy AS _eu_ccy",
     )
-    exp = exp.join(eu, exp.country == F.col("_eu_country"), "left")
+    exp = exp.join(eu, S.col("country") == S.col("_eu_country"), "left")
     eu_match = (
-        (F.col("exposure_class") == "sovereign")
-        & ~F.col("is_defaulted")
-        & F.col("_eu_ccy").isNotNull()
-        & (F.col("currency") == F.col("_eu_ccy"))
+        (S.col("exposure_class") == "sovereign")
+        & ~S.col("is_defaulted")
+        & S.col("_eu_ccy").isNotNull()
+        & (S.col("currency") == S.col("_eu_ccy"))
     )
-    base_rw = F.when(eu_match, F.lit(0.0)).otherwise(base_rw)
-    rw_source = F.when(eu_match, "sovereign_eu_domestic").otherwise(rw_source)
-    exp = exp.withColumns({"own_rw": base_rw, "rw_source": rw_source}).drop(
+    base_rw = S.when(eu_match, S.lit(0.0)).otherwise(base_rw)
+    rw_source = S.when(eu_match, "sovereign_eu_domestic").otherwise(rw_source)
+    exp = exp.with_columns({"own_rw": base_rw, "rw_source": rw_source}).drop(
         "_eu_country", "_eu_ccy"
     )
 
     # guarantee substitution on the covered share (ref crm/guarantees.py)
-    g_rw_table = pack.table_df(spark, "sa_rw").select(
-        F.col("exposure_class").alias("g_class_t"),
-        F.col("cqs").alias("g_cqs_t"),
-        F.col("rw").alias("g_rw"),
+    g_rw_table = pack.dim(
+        spark,
+        "sa_rw",
+        "exposure_class AS g_class_t, cqs AS g_cqs_t, rw AS g_rw",
     )
     exp = exp.join(
-        F.broadcast(g_rw_table),
-        (F.col("g_class") == F.col("g_class_t"))
-        & (F.coalesce(F.col("g_cqs"), F.lit(0)) == F.col("g_cqs_t")),
+        g_rw_table,
+        (S.col("g_class") == S.col("g_class_t"))
+        & (S.coalesce(S.col("g_cqs"), S.lit(0)) == S.col("g_cqs_t")),
         "left",
     ).drop("g_class_t", "g_cqs_t")
     # CRR Art.235(3) + Art.114(4)/(7): a central-government guarantee from
@@ -1942,21 +1959,22 @@ def run_sa(
     # limb is null-PERMISSIVE (funding_currency absent = funded in the
     # denomination). Carrier-gated on the guarantor country column.
     if "g_country" in carried:
-        _gd = pack.broadcast_table(spark, "eu_domestic_ccy").select(
-            F.col("country").alias("_gd_country"),
-            F.col("domestic_ccy").alias("_gd_ccy"),
+        _gd = pack.dim(
+            spark,
+            "eu_domestic_ccy",
+            "country AS _gd_country, domestic_ccy AS _gd_ccy",
         )
-        exp = exp.join(_gd, F.col("g_country") == F.col("_gd_country"), "left")
-        _g_den = F.coalesce(F.col("g_currency"), F.col("currency"))
-        _g_fund = F.coalesce(F.col("funding_currency"), _g_den)
+        exp = exp.join(_gd, S.col("g_country") == S.col("_gd_country"), "left")
+        _g_den = S.coalesce(S.col("g_currency"), S.col("currency"))
+        _g_fund = S.coalesce(S.col("funding_currency"), _g_den)
         _g_dom = (
-            (F.col("g_class") == "sovereign")
-            & F.col("_gd_ccy").isNotNull()
-            & (_g_den == F.col("_gd_ccy"))
-            & (_g_fund == F.col("_gd_ccy"))
+            (S.col("g_class") == "sovereign")
+            & S.col("_gd_ccy").isNotNull()
+            & (_g_den == S.col("_gd_ccy"))
+            & (_g_fund == S.col("_gd_ccy"))
         )
-        exp = exp.withColumn(
-            "g_rw", F.when(_g_dom, F.lit(0.0)).otherwise(F.col("g_rw"))
+        exp = exp.with_column(
+            "g_rw", S.when(_g_dom, S.lit(0.0)).otherwise(S.col("g_rw"))
         ).drop("_gd_country", "_gd_ccy")
     # multi-guarantee fold (crm stage `_mg`: priority-ordered (slice, rw)
     # structs, slices capped at 100% coverage): G = Σ slice, and the
@@ -1964,47 +1982,44 @@ def run_sa(
     # neutral-or-beneficial, exactly the legacy least() semantics per
     # guarantee. Gated on size>1 so single-guarantee books keep the
     # legacy expressions bit-for-bit.
-    _own = F.col("own_rw")
+    _own = S.col("own_rw")
     if "_mg" in carried:
-        _fold = F.aggregate(
-            F.coalesce(F.col("_mg"), F.array().cast(exp.schema["_mg"].dataType)),
-            F.struct(F.lit(0.0).alias("g"), F.lit(0.0).alias("t")),
-            lambda acc, x: F.struct(
-                (acc.g + x.slice).alias("g"),
-                (
-                    acc.t
-                    + x.slice * F.least(_own, F.coalesce(x.rw, _own))
-                ).alias("t"),
+        _fold = S.aggregate(
+            S.coalesce(S.col("_mg"), S.array().cast(exp.dtype("_mg"))),
+            S.struct(g=S.lit(0.0), t=S.lit(0.0)),
+            lambda acc, x: S.struct(
+                g=acc["g"] + x["slice"],
+                t=acc["t"] + x["slice"] * S.least(_own, S.coalesce(x["rw"], _own)),
             ),
         )
-        _is_multi = F.size(F.coalesce(F.col("_mg"), F.array())) > 1
+        _is_multi = S.size(S.coalesce(S.col("_mg"), S.array())) > 1
         _mg_g, _mg_t = _fold.getField("g"), _fold.getField("t")
     else:
-        _is_multi = F.lit(False)
-        _mg_g, _mg_t = F.lit(0.0), F.lit(0.0)
+        _is_multi = S.lit(False)
+        _mg_g, _mg_t = S.lit(0.0), S.lit(0.0)
     # total coverage / covered-term for the ledger portions below: the
     # rank-1 scalars on the n≤1 path, the fold on the multi path
-    _g_total = F.when(_is_multi, _mg_g).otherwise(F.col("g_coverage"))
-    eff_rw = F.when(_is_multi, _mg_t + (1 - _mg_g) * _own).otherwise(
-        F.col("g_coverage") * F.least(F.col("own_rw"), F.coalesce("g_rw", F.col("own_rw")))
-        + (1 - F.col("g_coverage")) * F.col("own_rw")
+    _g_total = S.when(_is_multi, _mg_g).otherwise(S.col("g_coverage"))
+    eff_rw = S.when(_is_multi, _mg_t + (1 - _mg_g) * _own).otherwise(
+        S.col("g_coverage") * S.least(S.col("own_rw"), S.coalesce("g_rw", S.col("own_rw")))
+        + (1 - S.col("g_coverage")) * S.col("own_rw")
     )
     # the hypothetical no-substitution weight starts at the own ladder and
     # tracks every NON-substitution adjustment below (ccymm multiplier,
     # due-diligence override, Art.113(6) intragroup) in lockstep — only
     # the guarantee/OFCP substitution steps themselves are undone, so
     # CR7/CR7-A never misattribute a post-base override to CRM relief
-    exp = exp.withColumns(
+    exp = exp.with_columns(
         {
             "risk_weight": eff_rw,
-            "_rw_nosubst": F.col("own_rw"),
-            "rw_source": F.when(
-                F.when(_is_multi, _mg_t < _mg_g * _own).otherwise(
-                    (F.col("g_coverage") > 0)
-                    & (F.coalesce("g_rw", F.col("own_rw")) < F.col("own_rw"))
+            "_rw_nosubst": S.col("own_rw"),
+            "rw_source": S.when(
+                S.when(_is_multi, _mg_t < _mg_g * _own).otherwise(
+                    (S.col("g_coverage") > 0)
+                    & (S.coalesce("g_rw", S.col("own_rw")) < S.col("own_rw"))
                 ),
-                F.concat(F.col("rw_source"), F.lit("+guarantee")),
-            ).otherwise(F.col("rw_source")),
+                S.concat(S.col("rw_source"), S.lit("+guarantee")),
+            ).otherwise(S.col("rw_source")),
         }
     )
     # guarantee-impact ledger block (ref CALCULATION_OUTPUT_SCHEMA
@@ -2017,43 +2032,43 @@ def run_sa(
     # substitution tracking: the borrower-side identity and the
     # guarantor-side destination the CRM-substitution router reports.
     _g_has = _g_total > 0
-    _g_ben_sa = F.when(_is_multi, _mg_t < _mg_g * _own).otherwise(
-        (F.col("g_coverage") > 0)
-        & (F.coalesce("g_rw", F.col("own_rw")) < F.col("own_rw"))
+    _g_ben_sa = S.when(_is_multi, _mg_t < _mg_g * _own).otherwise(
+        (S.col("g_coverage") > 0)
+        & (S.coalesce("g_rw", S.col("own_rw")) < S.col("own_rw"))
     )
     # is_guaranteed = protection exists (ref crm/guarantees.py:183); the
     # beneficial outcome is guarantee_status's job (aggregator.py:706-707).
     # one batched projection: guarantee_benefit inlines benefit_rw's
     # expression (same value); everything else reads pre-block columns only
     _ben_rw_sa = (
-        F.when(_is_multi, F.greatest(_mg_g * _own - _mg_t, F.lit(0.0)))
-        .when(_g_ben_sa, F.col("g_coverage") * (F.col("own_rw") - F.col("g_rw")))
+        S.when(_is_multi, S.greatest(_mg_g * _own - _mg_t, S.lit(0.0)))
+        .when(_g_ben_sa, S.col("g_coverage") * (S.col("own_rw") - S.col("g_rw")))
         .otherwise(0.0)
     )
-    exp = exp.withColumns(
+    exp = exp.with_columns(
         {
             "is_guaranteed": _g_has,
-            "guaranteed_portion": F.when(
-                _g_has, _g_total * F.col("ead_after_crm")
+            "guaranteed_portion": S.when(
+                _g_has, _g_total * S.col("ead_after_crm")
             ).otherwise(0.0),
-            "unguaranteed_portion": F.col("ead_after_crm")
-            - F.when(_g_has, _g_total * F.col("ead_after_crm")).otherwise(0.0),
-            "guarantor_risk_weight": F.when(_g_has, F.col("g_rw")),
-            "pre_crm_risk_weight": F.col("own_rw"),
+            "unguaranteed_portion": S.col("ead_after_crm")
+            - S.when(_g_has, _g_total * S.col("ead_after_crm")).otherwise(0.0),
+            "guarantor_risk_weight": S.when(_g_has, S.col("g_rw")),
+            "pre_crm_risk_weight": S.col("own_rw"),
             "guarantee_benefit_rw": _ben_rw_sa,
-            "guarantee_benefit": _ben_rw_sa * F.col("ead_after_crm"),
-            "guarantee_status": F.when(~_g_has, "NO_GUARANTEE")
+            "guarantee_benefit": _ben_rw_sa * S.col("ead_after_crm"),
+            "guarantee_status": S.when(~_g_has, "NO_GUARANTEE")
             .when(~_g_ben_sa, "GUARANTEE_NOT_APPLIED_NON_BENEFICIAL")
             .otherwise("SA_RW_SUBSTITUTION"),
-            "guarantee_method_used": F.when(
+            "guarantee_method_used": S.when(
                 _g_ben_sa, "SA_RW_SUBSTITUTION"
             ).otherwise("NO_SUBSTITUTION"),
-            "pre_crm_counterparty_reference": F.col("counterparty_reference"),
-            "pre_crm_exposure_class": F.col("exposure_class"),
-            "post_crm_counterparty_guaranteed": F.when(
-                _g_has, F.col("guarantor_reference")
+            "pre_crm_counterparty_reference": S.col("counterparty_reference"),
+            "pre_crm_exposure_class": S.col("exposure_class"),
+            "post_crm_counterparty_guaranteed": S.when(
+                _g_has, S.col("guarantor_reference")
             ),
-            "post_crm_exposure_class_guaranteed": F.when(_g_has, F.col("g_class")),
+            "post_crm_exposure_class_guaranteed": S.when(_g_has, S.col("g_class")),
         }
     )
 
@@ -2064,18 +2079,18 @@ def run_sa(
     # the guarantee-blended RW; channels claim the unguaranteed remainder
     # in order (life insurance, third-party deposit, FCSM)
     if "li_value" in carried:
-        own = F.col("own_rw")
-        ead_nz = F.nullif(F.col("ead_after_crm"), F.lit(0.0))
-        avail = F.greatest(1 - _g_total, F.lit(0.0))
-        benefit = F.lit(0.0)
+        own = S.col("own_rw")
+        ead_nz = S.nullif(S.col("ead_after_crm"), S.lit(0.0))
+        avail = S.greatest(1 - _g_total, S.lit(0.0))
+        benefit = S.lit(0.0)
         # FCSM decomposition carriers (ref :3016-3018): the simple-method
         # collateral value, its substitute weight, and the RW snapshot
         # before any funded-substitution channel subtracted its benefit
-        exp = exp.withColumns(
+        exp = exp.with_columns(
             {
-                "pre_fcsm_risk_weight": F.col("risk_weight"),
-                "fcsm_collateral_value": F.coalesce("fcsm_value", F.lit(0.0)),
-                "fcsm_collateral_rw": F.col("fcsm_rw"),
+                "pre_fcsm_risk_weight": S.col("risk_weight"),
+                "fcsm_collateral_value": S.coalesce("fcsm_value", S.lit(0.0)),
+                "fcsm_collateral_rw": S.col("fcsm_rw"),
             }
         )
         for vcol, rcol in (
@@ -2083,19 +2098,19 @@ def run_sa(
             ("tpd_value", "tpd_rw"),
             ("fcsm_value", "fcsm_rw"),
         ):
-            frac = F.least(
-                F.coalesce(F.col(vcol) / ead_nz, F.lit(0.0)), avail
+            frac = S.least(
+                S.coalesce(S.col(vcol) / ead_nz, S.lit(0.0)), avail
             )
-            benefit = benefit + frac * F.greatest(
-                own - F.coalesce(F.col(rcol), own), F.lit(0.0)
+            benefit = benefit + frac * S.greatest(
+                own - S.coalesce(S.col(rcol), own), S.lit(0.0)
             )
             avail = avail - frac
-        exp = exp.withColumns(
+        exp = exp.with_columns(
             {
-                "risk_weight": F.col("risk_weight") - benefit,
-                "rw_source": F.when(
-                    benefit > 0, F.concat(F.col("rw_source"), F.lit("+ofcp"))
-                ).otherwise(F.col("rw_source")),
+                "risk_weight": S.col("risk_weight") - benefit,
+                "rw_source": S.when(
+                    benefit > 0, S.concat(S.col("rw_source"), S.lit("+ofcp"))
+                ).otherwise(S.col("rw_source")),
             }
         )
 
@@ -2108,53 +2123,53 @@ def run_sa(
     # base per Art.123B(2A) (ref engine/sa/rw_adjustments.py
     # apply_currency_mismatch_multiplier).
     if pack.scalar("sa_currency_mismatch_multiplier") >= 1.0:
-        in_scope = F.col("exposure_class").isin("retail", "re_secured")
-        mismatch = F.col("borrower_income_currency").isNotNull() & (
-            F.col("borrower_income_currency") != F.col("currency")
+        in_scope = S.col("exposure_class").isin("retail", "re_secured")
+        mismatch = S.col("borrower_income_currency").isNotNull() & (
+            S.col("borrower_income_currency") != S.col("currency")
         )
-        hedged = F.coalesce("is_hedged", F.lit(False))
+        hedged = S.coalesce("is_hedged", S.lit(False))
         if "hedge_coverage_ratio" in carried:
-            raw_cov = F.coalesce("hedge_coverage_ratio", F.lit(0.0))
-            revolving = F.coalesce("is_revolving", F.lit(False))
-            drawn = F.coalesce("drawn_amount", F.lit(0.0))
-            limit = F.coalesce(F.col("facility_limit"), drawn)
-            full_draw = F.greatest(drawn, limit)
-            eff_cov = F.when(
+            raw_cov = S.coalesce("hedge_coverage_ratio", S.lit(0.0))
+            revolving = S.coalesce("is_revolving", S.lit(False))
+            drawn = S.coalesce("drawn_amount", S.lit(0.0))
+            limit = S.coalesce(S.col("facility_limit"), drawn)
+            full_draw = S.greatest(drawn, limit)
+            eff_cov = S.when(
                 revolving & (full_draw > 0), raw_cov * drawn / full_draw
             ).otherwise(raw_cov)
-            cov_ok = eff_cov >= pack.lit("currency_mismatch_hedge_floor")
+            cov_ok = eff_cov >= pack.sql_lit("currency_mismatch_hedge_floor")
         else:
-            cov_ok = F.lit(False)
+            cov_ok = S.lit(False)
         ccymm = in_scope & mismatch & ~(hedged | cov_ok)
         # ledger carriers (ref :3066-3068): the pre-multiplier snapshot and
         # whether the ×1.5 actually applied — every expression reads the
         # PRE-block columns, so the whole block is one batched projection
         # (the _rw_nosubst mirror is NOT a substitution effect)
-        exp = exp.withColumns(
+        exp = exp.with_columns(
             {
-                "risk_weight_pre_currency_mismatch": F.col("risk_weight"),
-                "currency_mismatch_multiplier_applied": F.coalesce(
-                    ccymm, F.lit(False)
+                "risk_weight_pre_currency_mismatch": S.col("risk_weight"),
+                "currency_mismatch_multiplier_applied": S.coalesce(
+                    ccymm, S.lit(False)
                 ),
-                "risk_weight": F.when(
+                "risk_weight": S.when(
                     ccymm,
-                    F.least(
-                        F.col("risk_weight")
-                        * pack.lit("currency_mismatch_multiplier"),
-                        pack.lit("currency_mismatch_cap"),
+                    S.least(
+                        S.col("risk_weight")
+                        * pack.sql_lit("currency_mismatch_multiplier"),
+                        pack.sql_lit("currency_mismatch_cap"),
                     ),
-                ).otherwise(F.col("risk_weight")),
-                "_rw_nosubst": F.when(
+                ).otherwise(S.col("risk_weight")),
+                "_rw_nosubst": S.when(
                     ccymm,
-                    F.least(
-                        F.col("_rw_nosubst")
-                        * pack.lit("currency_mismatch_multiplier"),
-                        pack.lit("currency_mismatch_cap"),
+                    S.least(
+                        S.col("_rw_nosubst")
+                        * pack.sql_lit("currency_mismatch_multiplier"),
+                        pack.sql_lit("currency_mismatch_cap"),
                     ),
-                ).otherwise(F.col("_rw_nosubst")),
-                "rw_source": F.when(
-                    ccymm, F.concat(F.col("rw_source"), F.lit("+ccymm"))
-                ).otherwise(F.col("rw_source")),
+                ).otherwise(S.col("_rw_nosubst")),
+                "rw_source": S.when(
+                    ccymm, S.concat(S.col("rw_source"), S.lit("+ccymm"))
+                ).otherwise(S.col("rw_source")),
             }
         )
 
@@ -2164,27 +2179,27 @@ def run_sa(
     # every standard RW step but BEFORE the Art.113(6) intragroup
     # override, which is a hard permission and deliberately wins.
     if pack.scalar("sa_due_diligence_override") >= 1.0:
-        ddq = F.col("due_diligence_override_rw").isNotNull() & (
-            F.col("due_diligence_override_rw") > F.col("risk_weight")
+        ddq = S.col("due_diligence_override_rw").isNotNull() & (
+            S.col("due_diligence_override_rw") > S.col("risk_weight")
         )
-        # one withColumns: both outputs must read the PRE-override weight
-        # (a second chained withColumn would re-evaluate ddq against the
+        # one with_columns: both outputs must read the PRE-override weight
+        # (a second chained step would re-evaluate ddq against the
         # already-overridden column and never tag the source)
-        exp = exp.withColumns(
+        exp = exp.with_columns(
             {
-                "risk_weight": F.when(
-                    ddq, F.col("due_diligence_override_rw")
-                ).otherwise(F.col("risk_weight")),
+                "risk_weight": S.when(
+                    ddq, S.col("due_diligence_override_rw")
+                ).otherwise(S.col("risk_weight")),
                 # NOT a substitution effect — mirrored onto the hypothetical
                 # (increase-only against ITS OWN level)
-                "_rw_nosubst": F.when(
-                    F.col("due_diligence_override_rw").isNotNull()
-                    & (F.col("due_diligence_override_rw") > F.col("_rw_nosubst")),
-                    F.col("due_diligence_override_rw"),
-                ).otherwise(F.col("_rw_nosubst")),
-                "rw_source": F.when(
-                    ddq, F.concat(F.col("rw_source"), F.lit("+ddq"))
-                ).otherwise(F.col("rw_source")),
+                "_rw_nosubst": S.when(
+                    S.col("due_diligence_override_rw").isNotNull()
+                    & (S.col("due_diligence_override_rw") > S.col("_rw_nosubst")),
+                    S.col("due_diligence_override_rw"),
+                ).otherwise(S.col("_rw_nosubst")),
+                "rw_source": S.when(
+                    ddq, S.concat(S.col("rw_source"), S.lit("+ddq"))
+                ).otherwise(S.col("rw_source")),
             }
         )
 
@@ -2192,20 +2207,20 @@ def run_sa(
     # individual-basis run. The carrier is set (and authoritatively
     # cleared) ONLY by resolve_scope — see engine/stages/scope.py (ref
     # engine/sa/rw_adjustments.py apply_intragroup_zero_rw).
-    elig = F.coalesce("intragroup_zero_rw_eligible", F.lit(False))
+    elig = S.coalesce("intragroup_zero_rw_eligible", S.lit(False))
     # a hard permission, not a substitution — the hypothetical is 0% too
     # (CR7 must not report phantom CD relief on Art.113(6)); all three read
     # pre-block columns — one batched projection
-    exp = exp.withColumns(
+    exp = exp.with_columns(
         {
-            "risk_weight": F.when(elig, pack.lit("intragroup_zero_rw_pct")).otherwise(
-                F.col("risk_weight")
+            "risk_weight": S.when(elig, pack.sql_lit("intragroup_zero_rw_pct")).otherwise(
+                S.col("risk_weight")
             ),
-            "_rw_nosubst": F.when(elig, pack.lit("intragroup_zero_rw_pct")).otherwise(
-                F.col("_rw_nosubst")
+            "_rw_nosubst": S.when(elig, pack.sql_lit("intragroup_zero_rw_pct")).otherwise(
+                S.col("_rw_nosubst")
             ),
-            "rw_source": F.when(elig, "intragroup_art113_6").otherwise(
-                F.col("rw_source")
+            "rw_source": S.when(elig, "intragroup_art113_6").otherwise(
+                S.col("rw_source")
             ),
         }
     )
@@ -2221,24 +2236,24 @@ def run_sa(
     # routing provenance: the permission stage's diagnostic / PPU reason
     # where it ran (ref permissions.py approach_selection), else the
     # pipeline's default SA routing rule
-    reason = F.coalesce(
-        F.col("permission_diagnostic"),
-        F.col("ppu_reason"),
-        F.lit("sa_no_irb_permission"),
+    reason = S.coalesce(
+        S.col("permission_diagnostic"),
+        S.col("ppu_reason"),
+        S.lit("sa_no_irb_permission"),
     )
     # one batched projection; supporting_factor_benefit inlines the exact
     # rwa_before_sf/rwa expressions (identical arithmetic DAG, bit-equal)
-    exp = exp.withColumns(
+    exp = exp.with_columns(
         {
-            "approach": F.lit("SA"),
+            "approach": S.lit("SA"),
             "approach_reason": reason,
-            "rwa_before_sf": F.col("ead_after_crm") * F.col("risk_weight"),
-            "rwa": F.col("ead_after_crm") * F.col("risk_weight") * sf,
+            "rwa_before_sf": S.col("ead_after_crm") * S.col("risk_weight"),
+            "rwa": S.col("ead_after_crm") * S.col("risk_weight") * sf,
             # the CR7/CR7-A hypothetical: the own-ladder RW with every
             # NON-substitution adjustment mirrored (_rw_nosubst tracks
             # ccymm/ddq/intragroup), at the same supporting factor
-            "rwa_pre_crm_substitution": F.col("ead_after_crm")
-            * F.col("_rw_nosubst")
+            "rwa_pre_crm_substitution": S.col("ead_after_crm")
+            * S.col("_rw_nosubst")
             * sf,
             # supporting-factor decomposition (ref CALCULATION_OUTPUT_SCHEMA
             # sme_supporting_factor / infra_supporting_factor /
@@ -2249,47 +2264,47 @@ def run_sa(
             "sme_supporting_factor": sme_f,
             "infra_supporting_factor": infra_f,
             "supporting_factor_benefit": (
-                F.col("ead_after_crm") * F.col("risk_weight")
+                S.col("ead_after_crm") * S.col("risk_weight")
             )
-            - (F.col("ead_after_crm") * F.col("risk_weight") * sf),
+            - (S.col("ead_after_crm") * S.col("risk_weight") * sf),
         }
     )
-    exp = _el_columns(exp, F.lit(0.0))  # EL treatment is IRB-only; SA deducts
+    exp = _el_columns(exp, S.lit(0.0))  # EL treatment is IRB-only; SA deducts
     exp = _param_cols(exp)  # SA uses CCF only
     # SA decision block, final leg (ref :3024-3025): the weight every
     # adjustment landed on and its delta from the base ladder value —
     # batched with the decision strings below into one projection
-    _sa_adj = F.col("risk_weight") - F.col("sa_base_risk_weight")
+    _sa_adj = S.col("risk_weight") - S.col("sa_base_risk_weight")
     # SA decision strings (ref :3025-3030). sa_rating_source: the Art.138
     # pick's agency where the ratings channel resolved the CQS, "internal"
     # where the counterparty-supplied mapping was consulted, null unrated.
-    _rated = F.col("sa_cqs") > 0
-    _rating_src = F.when(
-        F.col("external_rating_agency").isNotNull() & _rated,
-        F.col("external_rating_agency"),
-    ).when(_rated, F.lit("internal"))
+    _rated = S.col("sa_cqs") > 0
+    _rating_src = S.when(
+        S.col("external_rating_agency").isNotNull() & _rated,
+        S.col("external_rating_agency"),
+    ).when(_rated, S.lit("internal"))
     # sa_rw_adjustment_reason: the branch that moved the weight off the
     # base ladder (rw_source IS the which-branch carrier, incl. the
     # +guarantee substitution suffix), plus the Art.123A currency-mismatch
     # multiplier when it fired on top; null when nothing moved.
-    _adj_reason = F.when(
+    _adj_reason = S.when(
         _sa_adj != 0,
-        F.concat_ws(
+        S.concat_ws(
             "+",
-            F.col("rw_source"),
-            F.when(
-                F.coalesce("currency_mismatch_multiplier_applied", F.lit(False)),
-                F.lit("art123a_ccy_mismatch"),
+            S.col("rw_source"),
+            S.when(
+                S.coalesce("currency_mismatch_multiplier_applied", S.lit(False)),
+                S.lit("art123a_ccy_mismatch"),
             ),
         ),
     )
     # sa_rw_regulatory_ref: the CRR / PS1/26 article each pricing branch
     # carries (same citations as the branch comments above; the CQS-ladder
     # and unrated rows resolve per Art.112 class).
-    _src = F.regexp_replace(F.col("rw_source"), r"\+.*$", "")
-    _cls = F.col("exposure_class")
+    _src = S.regexp_replace(S.col("rw_source"), "[+].*$", "")
+    _cls = S.col("exposure_class")
     _reg_ref = (
-        F.when(_src == "sa_defaulted_secured", "CRR Art.127(1)(b)")
+        S.when(_src == "sa_defaulted_secured", "CRR Art.127(1)(b)")
         .when(_src == "sa_defaulted", "CRR Art.127(1)")
         .when(_src == "sa_re_secured", "CRR Art.125-126")
         .when(_src == "sa_retail", "CRR Art.123")
@@ -2316,26 +2331,26 @@ def run_sa(
             # the ladder table includes the unrated CQS-0 row, so split on
             # ratedness: rated rows cite the per-class assessment article,
             # unrated rows its unrated limb
-            F.when(
+            S.when(
                 _rated,
-                F.when(_cls == "sovereign", F.lit("CRR Art.114"))
-                .when(_cls == "institution", F.lit("CRR Art.120"))
-                .otherwise(F.lit("CRR Art.122")),
+                S.when(_cls == "sovereign", S.lit("CRR Art.114"))
+                .when(_cls == "institution", S.lit("CRR Art.120"))
+                .otherwise(S.lit("CRR Art.122")),
             )
-            .when(_cls == "institution", F.lit("CRR Art.121"))
-            .otherwise(F.lit("CRR Art.122(2)")),
+            .when(_cls == "institution", S.lit("CRR Art.121"))
+            .otherwise(S.lit("CRR Art.122(2)")),
         )
         .when(
             _src == "sa_unrated",
-            F.when(_cls == "institution", F.lit("CRR Art.121")).otherwise(
-                F.lit("CRR Art.122(2)")
+            S.when(_cls == "institution", S.lit("CRR Art.121")).otherwise(
+                S.lit("CRR Art.122(2)")
             ),
         )
     )
-    exp = exp.withColumns(
+    exp = exp.with_columns(
         {
-            "rwa_sa_equivalent": F.col("rwa"),
-            "sa_final_risk_weight": F.col("risk_weight"),
+            "rwa_sa_equivalent": S.col("rwa"),
+            "sa_final_risk_weight": S.col("risk_weight"),
             "sa_rw_adjustment": _sa_adj,
             "sa_rating_source": _rating_src,
             "sa_rw_adjustment_reason": _adj_reason,
@@ -2345,26 +2360,26 @@ def run_sa(
     # RE decision block (ref :3045-3053): sealed generically so the CRR
     # flat Art.125 branch carries them too; the LTV-band label seals in
     # the B3.1 block where the band chain runs
-    _re = F.col("exposure_class") == "re_secured"
-    exp = exp.withColumns(
+    _re = S.col("exposure_class") == "re_secured"
+    exp = exp.with_columns(
         {
-            "mortgage_risk_weight": F.when(_re, F.col("risk_weight")),
-            "property_type": F.when(
+            "mortgage_risk_weight": S.when(_re, S.col("risk_weight")),
+            "property_type": S.when(
                 _re,
-                F.when(
-                    F.coalesce(F.col("is_commercial_re"), F.lit(False)),
+                S.when(
+                    S.coalesce(S.col("is_commercial_re"), S.lit(False)),
                     "commercial",
                 ).otherwise("residential"),
             ),
-            "property_ltv": F.when(_re, F.col("ltv"))
+            "property_ltv": S.when(_re, S.col("ltv"))
             if "ltv" in carried
-            else F.lit(None).cast("double"),
+            else S.null("double"),
         }
     )
-    return CalcOutput(results=exp.select(*_RESULT_COLS))
+    return CalcOutput(results=exp.select(*_RESULT_COLS).df)
 
 
-def _apply_pma(df: DataFrame, pack: RulePack, pma) -> DataFrame:
+def _apply_pma(df: Projection, pack: RulePack, pma) -> Projection:
     """PS1/26 Art.153(5A)/154(4A)/158(6A) post-model adjustments on the
     IRB branch (ref engine/irb/adjustments.py:122-279
     apply_post_model_adjustments). B3.1-only (pack Feature); CRR rows
@@ -2379,57 +2394,55 @@ def _apply_pma(df: DataFrame, pack: RulePack, pma) -> DataFrame:
     and el_after_adjustment carries the adjusted figure, mirroring the
     reference's column contract."""
     pma_rwa, pma_el, pma_unrec = pma
-    zero = F.lit(0.0)
+    zero = S.lit(0.0)
     if (
         "post_model_adjustments" not in pack.scalars
         or pack.scalar("post_model_adjustments") < 1.0
     ):
-        return df.withColumns(
+        return df.with_columns(
             {
-                "rwa_pre_adjustments": F.col("rwa"),
+                "rwa_pre_adjustments": S.col("rwa"),
                 "mortgage_rw_floor_adjustment": zero,
                 "post_model_adjustment_rwa": zero,
                 "unrecognised_exposure_adjustment": zero,
-                "el_pre_adjustment": F.col("expected_loss"),
+                "el_pre_adjustment": S.col("expected_loss"),
                 "post_model_adjustment_el": zero,
-                "el_after_adjustment": F.col("expected_loss"),
+                "el_after_adjustment": S.col("expected_loss"),
             }
         )
-    floor = pack.lit("mortgage_rw_floor")
+    floor = pack.sql_lit("mortgage_rw_floor")
     # Art.154(4A)(b) scopes the 10% floor to RESIDENTIAL mortgages only
     # (ref irb/adjustments.py is_mortgage = class contains
     # MORTGAGE|RESIDENTIAL): a commercial-RE-secured re_secured row is out.
     is_mortgage = (
-        (F.col("exposure_class") == "re_secured")
-        & ~F.coalesce(F.col("is_commercial_re"), F.lit(False))
+        (S.col("exposure_class") == "re_secured")
+        & ~S.coalesce(S.col("is_commercial_re"), S.lit(False))
     ) | (
-        (F.col("exposure_class") == "retail")
-        & (F.col("retail_subtype") == "mortgage")
+        (S.col("exposure_class") == "retail")
+        & (S.col("retail_subtype") == "mortgage")
     )
-    mortgage_adj = F.when(
+    mortgage_adj = S.when(
         is_mortgage,
-        F.greatest(zero, floor - F.col("risk_weight")) * F.col("ead_after_crm"),
+        S.greatest(zero, floor - S.col("risk_weight")) * S.col("ead_after_crm"),
     ).otherwise(zero)
     # the Art.154(4A) sequencing is preserved by expression NESTING instead
     # of column chaining (same arithmetic DAG, bit-identical): rwa_floored
-    # is the (b) post-floor base, the (a) scalars multiply THAT base, and
-    # the reused Column objects keep one JVM expression per step — the
-    # whole adjustment block is one projection instead of nine chained
-    # withColumn re-analyses of the ~160-column plan
-    rwa_floored = F.col("rwa") + mortgage_adj
-    pma_rwa_col = rwa_floored * F.lit(pma_rwa)
-    unrec_col = rwa_floored * F.lit(pma_unrec)
-    el_pma = F.greatest(zero, F.col("expected_loss") * F.lit(pma_el))
-    return df.withColumns(
+    # is the (b) post-floor base and the (a) scalars multiply THAT base, so
+    # the whole adjustment block is one step
+    rwa_floored = S.col("rwa") + mortgage_adj
+    pma_rwa_col = rwa_floored * S.lit(pma_rwa)
+    unrec_col = rwa_floored * S.lit(pma_unrec)
+    el_pma = S.greatest(zero, S.col("expected_loss") * S.lit(pma_el))
+    return df.with_columns(
         {
-            "rwa_pre_adjustments": F.col("rwa"),
+            "rwa_pre_adjustments": S.col("rwa"),
             "mortgage_rw_floor_adjustment": mortgage_adj,
             "post_model_adjustment_rwa": pma_rwa_col,
             "unrecognised_exposure_adjustment": unrec_col,
             "rwa": rwa_floored + pma_rwa_col + unrec_col,
-            "el_pre_adjustment": F.col("expected_loss"),
+            "el_pre_adjustment": S.col("expected_loss"),
             "post_model_adjustment_el": el_pma,
-            "el_after_adjustment": F.col("expected_loss") + el_pma,
+            "el_after_adjustment": S.col("expected_loss") + el_pma,
         }
     )
 
@@ -2445,9 +2458,11 @@ def run_irb(
     spark = crm.exposures.sparkSession
     exp, carried = _calc_entry(
         crm.exposures.where(
-            F.col("has_irb_permission")
-            & ~F.col("is_specialised")
-            & (F.col("exposure_class") != "securitisation")
+            (
+                S.col("has_irb_permission")
+                & ~S.col("is_specialised")
+                & (S.col("exposure_class") != "securitisation")
+            ).sql
         )
     )
     # CRR Art.147(3)/(4)(b) IRB class equivalence (ref rulebook/packs/
@@ -2457,45 +2472,45 @@ def run_irb(
     # classes take the institution treatment (Art.147(4)(b)). The SA class
     # on exposure_class is untouched — this routes IRB floors/curves only
     # (the sovereign-equivalent RGLA leg already classifies as sovereign).
-    exp = exp.withColumn(
+    exp = exp.with_column(
         "irb_exposure_class",
-        F.when(
-            F.col("exposure_class").isin("mdb", "international_organisation"),
-            F.lit("sovereign"),
+        S.when(
+            S.col("exposure_class").isin("mdb", "international_organisation"),
+            S.lit("sovereign"),
         )
-        .when(F.col("exposure_class").isin("pse", "rgla"), F.lit("institution"))
-        .otherwise(F.col("exposure_class")),
+        .when(S.col("exposure_class").isin("pse", "rgla"), S.lit("institution"))
+        .otherwise(S.col("exposure_class")),
     )
 
     # standardised-equivalent RWA for the Art.92(3) output floor: the SAME
     # SA ladder the SA branch runs (class × CQS lookup + overrides), so the
     # floor base is a genuine dual-framework number, not a flat proxy
-    sa_rw_table = pack.table_df(spark, "sa_rw").select(
-        F.col("exposure_class").alias("_sa_class"),
-        F.col("cqs").alias("_sa_cqs"),
-        F.col("rw").alias("_sa_rw"),
+    sa_rw_table = pack.dim(
+        spark,
+        "sa_rw",
+        "exposure_class AS _sa_class, cqs AS _sa_cqs, rw AS _sa_rw",
     )
     exp = exp.join(
-        F.broadcast(sa_rw_table),
-        (exp.exposure_class == F.col("_sa_class"))
-        & (F.coalesce(exp.cqs, F.lit(0)) == F.col("_sa_cqs")),
+        sa_rw_table,
+        (S.col("exposure_class") == S.col("_sa_class"))
+        & (S.coalesce("cqs", S.lit(0)) == S.col("_sa_cqs")),
         "left",
     ).drop("_sa_class", "_sa_cqs")
     sa_equiv_rw = (
-        F.when(F.col("is_defaulted"), pack.lit("defaulted_rw"))
-        .when(F.col("exposure_class") == "re_secured", pack.lit("re_secured_rw"))
-        .when(F.col("exposure_class") == "retail", pack.lit("retail_rw"))
-        .when(F.col("_sa_rw").isNotNull(), F.col("_sa_rw"))
-        .otherwise(pack.lit("unrated_corp_rw"))
+        S.when(S.col("is_defaulted"), pack.sql_lit("defaulted_rw"))
+        .when(S.col("exposure_class") == "re_secured", pack.sql_lit("re_secured_rw"))
+        .when(S.col("exposure_class") == "retail", pack.sql_lit("retail_rw"))
+        .when(S.col("_sa_rw").isNotNull(), S.col("_sa_rw"))
+        .otherwise(pack.sql_lit("unrated_corp_rw"))
     )
-    exp = exp.withColumn(
-        "rwa_sa_equivalent", F.col("ead_after_crm") * sa_equiv_rw
+    exp = exp.with_column(
+        "rwa_sa_equivalent", S.col("ead_after_crm") * sa_equiv_rw
     ).drop("_sa_rw")
     # per-class PD floor + feature-gated A-IRB LGD floor, staged as real
     # columns so pd_floored/lgd_floored AND the irb_*_floor audit carriers
     # read the same expression (ref _pd_floor_expression /
     # _lgd_floor_blended_expression in engine/irb/formulas.py)
-    exp = exp.withColumns(
+    exp = exp.with_columns(
         {
             "_pd_floor_in": _pd_floor_class_expr(pack),
             "_lgd_floor_in": _lgd_floor_expr(pack),
@@ -2511,26 +2526,26 @@ def run_irb(
     # for the Art.160(2)/(6) top-down population: a row carrying a subtype
     # with no own LGD is that population by construction, and the ref
     # records that gating them on approach==FIRB was anti-conservative.
-    _sen_sub = F.coalesce(F.col("seniority"), F.lit("senior")).contains("sub")
-    _fse_flag = F.coalesce(F.col("is_financial_sector_entity"), F.lit(False))
-    _supervisory_lgd = F.when(_sen_sub, pack.lit("firb_lgd_subordinated")).otherwise(
-        F.when(_fse_flag, pack.lit("firb_lgd_senior_fse")).otherwise(
-            pack.lit("firb_lgd_senior")
+    _sen_sub = S.coalesce(S.col("seniority"), S.lit("senior")).contains("sub")
+    _fse_flag = S.coalesce(S.col("is_financial_sector_entity"), S.lit(False))
+    _supervisory_lgd = S.when(_sen_sub, pack.sql_lit("firb_lgd_subordinated")).otherwise(
+        S.when(_fse_flag, pack.sql_lit("firb_lgd_senior_fse")).otherwise(
+            pack.sql_lit("firb_lgd_senior")
         )
     )
-    _prs = F.col("purchased_receivables_subtype")
+    _prs = S.col("purchased_receivables_subtype")
     _supervisory_lgd = (
-        F.when(_prs == "senior", pack.lit("firb_lgd_pr_senior"))
-        .when(_prs == "subordinated", pack.lit("firb_lgd_pr_subordinated"))
-        .when(_prs == "dilution_risk", pack.lit("firb_lgd_dilution"))
+        S.when(_prs == "senior", pack.sql_lit("firb_lgd_pr_senior"))
+        .when(_prs == "subordinated", pack.sql_lit("firb_lgd_pr_subordinated"))
+        .when(_prs == "dilution_risk", pack.sql_lit("firb_lgd_dilution"))
         .otherwise(_supervisory_lgd)
     )
     _floored_cols = {
-        "pd_floored": F.when(F.col("is_defaulted"), F.lit(1.0)).otherwise(
-            F.greatest(F.coalesce("pd", F.lit(1.0)), F.col("_pd_floor_in"))
+        "pd_floored": S.when(S.col("is_defaulted"), S.lit(1.0)).otherwise(
+            S.greatest(S.coalesce("pd", S.lit(1.0)), S.col("_pd_floor_in"))
         ),
-        "lgd_floored": F.greatest(
-            F.coalesce(F.col("lgd"), _supervisory_lgd), F.col("_lgd_floor_in")
+        "lgd_floored": S.greatest(
+            S.coalesce(S.col("lgd"), _supervisory_lgd), S.col("_lgd_floor_in")
         ),
     }
     # Art.162 maturity priority chain (ref engine/irb/transforms.py
@@ -2546,52 +2561,52 @@ def run_irb(
     #   4. F-IRB fixed supervisory 2.5y (CRR Art.162(1) first sentence;
     #      only under the firm's Art.143 election — config, default off)
     #   5. fallback 2.5y
-    _one_day = F.coalesce("has_one_day_maturity_floor", F.lit(False))
+    _one_day = S.coalesce("has_one_day_maturity_floor", S.lit(False))
     if pack.scalar("one_day_maturity_floor") >= 1.0:
-        _resid = F.coalesce("residual_maturity_years", "original_maturity_years")
+        _resid = S.coalesce("residual_maturity_years", "original_maturity_years")
         _one_day = _one_day | (
-            F.coalesce("is_short_term_trade_lc", F.lit(False)) & (_resid <= 1.0)
+            S.coalesce("is_short_term_trade_lc", S.lit(False)) & (_resid <= 1.0)
         )
-    _m_base = F.lit(2.5)
+    _m_base = S.lit(2.5)
     if (
         pack.scalar("revolving_uses_termination_maturity") >= 1.0
         and reporting_date is not None
     ):
         _term_y = (
-            F.datediff(
-                F.col("facility_termination_date").cast("date"),
-                F.lit(reporting_date).cast("date"),
+            S.datediff(
+                S.col("facility_termination_date").cast("date"),
+                S.lit(reporting_date).cast("date"),
             )
-            / F.lit(365.0)
+            / S.lit(365.0)
         )
-        _m_base = F.when(
-            F.coalesce("is_revolving", F.lit(False)) & _term_y.isNotNull(),
-            F.least(F.greatest(_term_y, F.lit(1.0)), F.lit(5.0)),
+        _m_base = S.when(
+            S.coalesce("is_revolving", S.lit(False)) & _term_y.isNotNull(),
+            S.least(S.greatest(_term_y, S.lit(1.0)), S.lit(5.0)),
         ).otherwise(_m_base)
     if (
         firb_fixed_maturity
         and pack.scalar("firb_fixed_supervisory_maturity") >= 1.0
     ):
-        _m_base = F.when(
-            F.col("irb_subapproach") == "firb",
-            pack.lit("firb_fixed_supervisory_maturity_years"),
+        _m_base = S.when(
+            S.col("irb_subapproach") == "firb",
+            pack.sql_lit("firb_fixed_supervisory_maturity_years"),
         ).otherwise(_m_base)
     # pd_floored / lgd_floored / m_eff all read columns present after the
     # floor-in projection — one batched projection instead of three
     _floored_cols["m_eff"] = (
-        F.when(
-            F.col("effective_maturity").isNotNull(),
-            F.least(
-                F.greatest(F.col("effective_maturity"), F.lit(1.0 / 365.0)),
-                F.lit(5.0),
+        S.when(
+            S.col("effective_maturity").isNotNull(),
+            S.least(
+                S.greatest(S.col("effective_maturity"), S.lit(1.0 / 365.0)),
+                S.lit(5.0),
             ),
         )
-        .when(_one_day, F.lit(1.0 / 365.0))
+        .when(_one_day, S.lit(1.0 / 365.0))
         .otherwise(_m_base)
     )
-    exp = exp.withColumns(_floored_cols)
+    exp = exp.with_columns(_floored_cols)
 
-    perf = exp.where(F.col("pd_floored") < 1.0)
+    perf = exp.where(S.col("pd_floored") < 1.0)
 
     # Asset-class correlation routing (CRR Art.153(2)/(4), Art.154; ref
     # engine/irb/formulas.py _correlation_expr_from_pd + the retail
@@ -2602,29 +2617,29 @@ def run_irb(
     # (unknown sales ⇒ S=50 ⇒ zero adjustment); large/unregulated
     # financial-sector entities multiply R by 1.25 (Art.153(2),
     # is_large_financial carrier).
-    r_corp = spark_correlation("pd_floored")
-    r_other_retail = spark_correlation_other_retail("pd_floored")
-    sme_adj = F.when(
-        (F.col("exposure_class") == "corporate")
-        & (F.col("annual_revenue") > 0.0)
-        & (F.col("annual_revenue") <= 50_000_000.0),
-        spark_sme_size_adjustment("(annual_revenue / 1000000.0D)"),
-    ).otherwise(F.lit(0.0))
+    r_corp = S.kernel(correlation_v, S.col("pd_floored"))
+    r_other_retail = S.kernel(correlation_other_retail_v, S.col("pd_floored"))
+    sme_adj = S.when(
+        (S.col("exposure_class") == "corporate")
+        & (S.col("annual_revenue") > 0.0)
+        & (S.col("annual_revenue") <= 50_000_000.0),
+        S.kernel(sme_size_adjustment_v, S.col("annual_revenue") / 1000000.0),
+    ).otherwise(S.lit(0.0))
     r_retail = (
-        F.when(F.col("retail_subtype") == "mortgage", F.lit(R_RETAIL_MORTGAGE))
-        .when(F.col("retail_subtype") == "qrre", F.lit(R_RETAIL_QRRE))
+        S.when(S.col("retail_subtype") == "mortgage", S.lit(R_RETAIL_MORTGAGE))
+        .when(S.col("retail_subtype") == "qrre", S.lit(R_RETAIL_QRRE))
         .otherwise(r_other_retail)
     )
-    r_nonretail = F.when(
-        F.coalesce(F.col("is_large_financial"), F.lit(False)),
-        (r_corp - sme_adj) * F.lit(FI_CORRELATION_MULTIPLIER),
+    r_nonretail = S.when(
+        S.coalesce(S.col("is_large_financial"), S.lit(False)),
+        (r_corp - sme_adj) * S.lit(FI_CORRELATION_MULTIPLIER),
     ).otherwise(r_corp - sme_adj)
-    perf = perf.withColumns(
+    perf = perf.with_columns(
         {
-            "_irb_r_in": F.when(
-                F.col("exposure_class") == "retail", r_retail
+            "_irb_r_in": S.when(
+                S.col("exposure_class") == "retail", r_retail
             ).otherwise(r_nonretail),
-            "_no_ma": F.col("exposure_class") == "retail",
+            "_no_ma": S.col("exposure_class") == "retail",
         }
     )
 
@@ -2646,32 +2661,32 @@ def run_irb(
     # slope b, sealed HERE where the kernel inputs still exist as columns
     # (retail rows carry no b — they take no maturity adjustment).
     # ma and both carriers read pre-chain columns only — one projection
-    perf = perf.withColumns(
+    perf = perf.with_columns(
         {
-            "ma": F.when(F.col("_no_ma"), F.lit(1.0)).otherwise(
-                irb_maturity_adj(F.col("pd_floored"), F.col("m_eff"))
+            "ma": S.when(S.col("_no_ma"), S.lit(1.0)).otherwise(
+                S.kernel(maturity_adj_v, S.col("pd_floored"), S.col("m_eff"))
             ),
-            "irb_correlation_r": F.col("_irb_r_in"),
-            "irb_maturity_adj_b": F.when(
-                F.col("_no_ma"), F.lit(None).cast("double")
-            ).otherwise(irb_maturity_b(F.col("pd_floored"))),
+            "irb_correlation_r": S.col("_irb_r_in"),
+            "irb_maturity_adj_b": S.when(
+                S.col("_no_ma"), S.null("double")
+            ).otherwise(S.kernel(maturity_b_v, S.col("pd_floored"))),
         }
     )
     perf = perf.drop("g_pd", "_irb_r_in", "_no_ma")
     # CRR Art.153(1): ×1.06 scaling on non-defaulted IRB (B3.1 sets it to
     # 1.0 — the attribution waterfall decomposes exactly this removal)
-    perf = perf.withColumns(
+    perf = perf.with_columns(
         {
-            "risk_weight": F.col("k")
-            * F.col("ma")
+            "risk_weight": S.col("k")
+            * S.col("ma")
             * 12.5
-            * pack.lit("irb_scaling_factor"),
+            * pack.sql_lit("irb_scaling_factor"),
             # permission-routed runs record WHICH IRB variant priced the
             # row (airb = own LGD, firb = supervisory LGD) — the
             # model-permissions stage sets irb_subapproach
-            "rw_source": F.when(
-                F.col("irb_subapproach").isNotNull(),
-                F.concat(F.lit("irb_vasicek_"), F.col("irb_subapproach")),
+            "rw_source": S.when(
+                S.col("irb_subapproach").isNotNull(),
+                S.concat(S.lit("irb_vasicek_"), S.col("irb_subapproach")),
             ).otherwise("irb_vasicek"),
         }
     )
@@ -2679,41 +2694,40 @@ def run_irb(
     # parameter provenance, the LGD basis, and the kernel outputs K and
     # the pre-substitution Vasicek weight — every value the kernel already
     # computed, surfaced instead of dropped
-    _sub = F.coalesce(F.col("irb_subapproach"), F.lit(""))
-    # one batched withColumns — every carrier copies a pre-existing column,
-    # so a per-column chain would re-analyse the wide plan 10× for nothing
-    perf = perf.withColumns(
+    _sub = S.coalesce(S.col("irb_subapproach"), S.lit(""))
+    # one batched step — every carrier copies a pre-existing column
+    perf = perf.with_columns(
         {
-            "irb_pd_original": F.col("pd"),
-            "irb_pd_floor": F.col("_pd_floor_in"),
-            "irb_pd_floored": F.col("pd_floored"),
-            "irb_lgd_original": F.col("lgd"),
-            "irb_lgd_floor": F.col("_lgd_floor_in"),
-            "irb_lgd_floored": F.col("lgd_floored"),
-            "irb_lgd_type": F.when(
-                F.col("lgd").isNotNull() & (_sub != "firb"), "modelled"
+            "irb_pd_original": S.col("pd"),
+            "irb_pd_floor": S.col("_pd_floor_in"),
+            "irb_pd_floored": S.col("pd_floored"),
+            "irb_lgd_original": S.col("lgd"),
+            "irb_lgd_floor": S.col("_lgd_floor_in"),
+            "irb_lgd_floored": S.col("lgd_floored"),
+            "irb_lgd_type": S.when(
+                S.col("lgd").isNotNull() & (_sub != "firb"), "modelled"
             ).otherwise("supervisory"),
-            "irb_maturity_m": F.col("m_eff"),
-            "irb_capital_k": F.col("k"),
-            "irb_risk_weight": F.col("risk_weight"),
+            "irb_maturity_m": S.col("m_eff"),
+            "irb_capital_k": S.col("k"),
+            "irb_risk_weight": S.col("risk_weight"),
         }
     )
     # IRB unfunded protection: substitution / parameter substitution /
     # double default on the covered leg, Art.193 benefit gate, EL blend.
     # The pre-blend Vasicek weight is stashed first — it is the CR7/CR7-A
     # "RWEA without substitution effects" hypothetical
-    perf = perf.withColumn("_rw_pre_subst", F.col("risk_weight"))
+    perf = perf.with_column("_rw_pre_subst", S.col("risk_weight"))
     perf, el_expr = _irb_guarantee_adjust(perf, pack, spark, carried)
     perf = _el_columns(perf, el_expr, pool_b_extras=True)
 
     # defaulted bypasses Vasicek (CRR Art.153(1)(ii)/154(1)(i), CRE31.3):
     # A-IRB (own BEEL supplied): K = max(0, LGD − BEEL), no MA, no 1.06;
     # F-IRB: K = 0 — capital is held through provisions
-    dflt = exp.where(F.col("pd_floored") >= 1.0)
-    k_dflt = F.when(
-        F.col("el_be").isNotNull(),
-        F.greatest(F.col("lgd_floored") - F.col("el_be"), F.lit(0.0)),
-    ).otherwise(F.lit(0.0))
+    dflt = exp.where(S.col("pd_floored") >= 1.0)
+    k_dflt = S.when(
+        S.col("el_be").isNotNull(),
+        S.greatest(S.col("lgd_floored") - S.col("el_be"), S.lit(0.0)),
+    ).otherwise(S.lit(0.0))
     # decomposition carriers on the defaulted leg: PD is pinned at 1
     # (no floor consulted), the Vasicek quantities (R, b) never exist,
     # and K is the Art.153(1)(ii) max(0, LGD − E·L_BE) — sealed from
@@ -2721,54 +2735,54 @@ def run_irb(
     # irb_risk_weight reuses risk_weight's expression object (identical
     # arithmetic DAG, bit-equal to reading the chained column)
     _rw_dflt = k_dflt * 12.5
-    dflt = dflt.withColumns(
+    dflt = dflt.with_columns(
         {
             "risk_weight": _rw_dflt,
-            "rw_source": F.when(
-                F.col("el_be").isNotNull(), "irb_defaulted_airb"
+            "rw_source": S.when(
+                S.col("el_be").isNotNull(), "irb_defaulted_airb"
             ).otherwise("irb_defaulted_firb"),
-            "irb_pd_original": F.col("pd"),
-            "irb_pd_floored": F.col("pd_floored"),
-            "irb_lgd_original": F.col("lgd"),
-            "irb_lgd_floor": F.col("_lgd_floor_in"),
-            "irb_lgd_floored": F.col("lgd_floored"),
-            "irb_lgd_type": F.when(
-                F.col("el_be").isNotNull(), "modelled"
+            "irb_pd_original": S.col("pd"),
+            "irb_pd_floored": S.col("pd_floored"),
+            "irb_lgd_original": S.col("lgd"),
+            "irb_lgd_floor": S.col("_lgd_floor_in"),
+            "irb_lgd_floored": S.col("lgd_floored"),
+            "irb_lgd_type": S.when(
+                S.col("el_be").isNotNull(), "modelled"
             ).otherwise("supervisory"),
-            "irb_maturity_m": F.col("m_eff"),
+            "irb_maturity_m": S.col("m_eff"),
             "irb_capital_k": k_dflt,
             "irb_risk_weight": _rw_dflt,
         }
     )
     dflt = _el_columns(
         dflt,
-        F.coalesce("el_be", F.col("lgd_floored")) * F.col("ead_after_crm"),
+        S.coalesce("el_be", S.col("lgd_floored")) * S.col("ead_after_crm"),
         pool_b_extras=True,
     )
 
     # defaulted rows never substitute — the hypothetical equals the actual
-    dflt = dflt.withColumn("_rw_pre_subst", F.col("risk_weight"))
+    dflt = dflt.with_column("_rw_pre_subst", S.col("risk_weight"))
 
     def _finish(df):
         # routing provenance: which IRB variant the permission stage
         # granted (airb/firb), else the bundle-level permission flag
-        irb_reason = F.concat(
-            F.lit("irb_permission_"),
-            F.coalesce(F.col("irb_subapproach"), F.lit("granted")),
+        irb_reason = S.concat(
+            S.lit("irb_permission_"),
+            S.coalesce(S.col("irb_subapproach"), S.lit("granted")),
         )
         _sme_f, _infra_f, _sf = _supporting_factor_exprs(
             pack, threshold_scale, carried
         )
         # one batched projection; supporting_factor_benefit inlines the
         # exact rwa_before_sf/rwa expressions (identical DAG, bit-equal)
-        df = df.withColumns(
+        df = df.with_columns(
             {
-                "approach": F.lit("IRB"),
+                "approach": S.lit("IRB"),
                 "approach_reason": irb_reason,
-                "rwa_before_sf": F.col("ead_after_crm") * F.col("risk_weight"),
-                "rwa": F.col("ead_after_crm") * F.col("risk_weight") * _sf,
-                "rwa_pre_crm_substitution": F.col("ead_after_crm")
-                * F.col("_rw_pre_subst")
+                "rwa_before_sf": S.col("ead_after_crm") * S.col("risk_weight"),
+                "rwa": S.col("ead_after_crm") * S.col("risk_weight") * _sf,
+                "rwa_pre_crm_substitution": S.col("ead_after_crm")
+                * S.col("_rw_pre_subst")
                 * _sf,
                 # supporting-factor decomposition on the IRB branch (CRR
                 # Art.501/501a apply per RWEA regardless of approach — ref
@@ -2776,21 +2790,21 @@ def run_irb(
                 "sme_supporting_factor": _sme_f,
                 "infra_supporting_factor": _infra_f,
                 "supporting_factor_benefit": (
-                    F.col("ead_after_crm") * F.col("risk_weight")
+                    S.col("ead_after_crm") * S.col("risk_weight")
                 )
-                - (F.col("ead_after_crm") * F.col("risk_weight") * _sf),
+                - (S.col("ead_after_crm") * S.col("risk_weight") * _sf),
             }
         )
         df = _param_cols(
             df,
-            pd_col=F.col("pd_floored"),
-            lgd_col=F.col("lgd_floored"),
-            m_col=F.col("m_eff"),
+            pd_col=S.col("pd_floored"),
+            lgd_col=S.col("lgd_floored"),
+            m_col=S.col("m_eff"),
         )
         df = _apply_pma(df, pack, pma)
         return df.select(*_RESULT_COLS)
 
-    return CalcOutput(results=_finish(perf).unionByName(_finish(dflt)))
+    return CalcOutput(results=_finish(perf).df.unionByName(_finish(dflt).df))
 
 
 def run_secsa(crm: CRMOutput, pack: RulePack) -> CalcOutput:
@@ -2805,33 +2819,40 @@ def run_secsa(crm: CRMOutput, pack: RulePack) -> CalcOutput:
     functions/secsa.py) — beyond the reference. Pure exp/arithmetic, so
     the branch stays inside whole-stage codegen."""
     exp, carried = _calc_entry(
-        crm.exposures.where(F.col("exposure_class") == "securitisation")
+        crm.exposures.where((S.col("exposure_class") == "securitisation").sql)
     )
-    flat_rw = F.greatest(
-        pack.lit("secsa_floor_rw"),
-        pack.lit("secsa_ksa") * F.lit(12.5) * pack.lit("secsa_p"),
+    flat_rw = S.greatest(
+        pack.sql_lit("secsa_floor_rw"),
+        pack.sql_lit("secsa_ksa") * S.lit(12.5) * pack.sql_lit("secsa_p"),
     )
-    approach_col = F.lit("SEC-SA")
+    approach_col = S.lit("SEC-SA")
     if "attachment" in carried:
-        from rwa_calculator_spark.functions.secsa import (
-            ssfa_risk_weight_cols,
-        )
+        from rwa_calculator_spark.functions.secsa import ssfa_rw_v
+
+        def ssfa(attach, detach, w, k, p):
+            return S.kernel(
+                lambda *v: ssfa_rw_v(*v, pack.scalar("secsa_floor_rw")),
+                attach,
+                detach,
+                w,
+                k,
+                p,
+            )
 
         # STS pools take the halved supervisory p (CRR Art.262(1));
         # column-valued so STS and non-STS tranches share one plan
-        p_sa = F.when(F.col("is_sts"), pack.lit("secsa_p_sts")).otherwise(
-            pack.lit("secsa_p")
+        p_sa = S.when(S.col("is_sts"), pack.sql_lit("secsa_p_sts")).otherwise(
+            pack.sql_lit("secsa_p")
         )
-        rw_sa = ssfa_risk_weight_cols(
-            F.col("attachment"),
-            F.col("detachment"),
-            F.coalesce("w_delinquent", F.lit(0.0)),
-            pack.lit("secsa_ksa"),
+        rw_sa = ssfa(
+            S.col("attachment"),
+            S.col("detachment"),
+            S.coalesce("w_delinquent", S.lit(0.0)),
+            pack.sql_lit("secsa_ksa"),
             p_sa,
-            floor=pack.scalar("secsa_floor_rw"),
         )
-        rw = F.when(F.col("attachment").isNotNull(), rw_sa).otherwise(flat_rw)
-        rw_src = F.when(F.col("attachment").isNotNull(), "sec_sa_ssfa").otherwise(
+        rw = S.when(S.col("attachment").isNotNull(), rw_sa).otherwise(flat_rw)
+        rw_src = S.when(S.col("attachment").isNotNull(), "sec_sa_ssfa").otherwise(
             "sec_sa"
         )
         # Art.92(3) floor base: SEC-IRBA rows floor against their SEC-SA
@@ -2842,51 +2863,50 @@ def run_secsa(crm: CRMOutput, pack: RulePack) -> CalcOutput:
             # pool's own K_IRB and the supervisory p-formula
             # p = max(floor, A + B/N + C·K_IRB + D·LGD + E·M_T).
             # K_IRB already reflects pool quality, so W does not re-adjust.
-            p_irba = F.greatest(
-                pack.lit("secirba_p_floor"),
-                pack.lit("secirba_coef_a")
-                + pack.lit("secirba_coef_b") / F.col("pool_n")
-                + pack.lit("secirba_coef_c") * F.col("k_irb")
-                + pack.lit("secirba_coef_d") * F.col("pool_lgd")
-                + pack.lit("secirba_coef_e") * F.col("pool_maturity"),
+            p_irba = S.greatest(
+                pack.sql_lit("secirba_p_floor"),
+                pack.sql_lit("secirba_coef_a")
+                + pack.sql_lit("secirba_coef_b") / S.col("pool_n")
+                + pack.sql_lit("secirba_coef_c") * S.col("k_irb")
+                + pack.sql_lit("secirba_coef_d") * S.col("pool_lgd")
+                + pack.sql_lit("secirba_coef_e") * S.col("pool_maturity"),
             )
-            rw_irba = ssfa_risk_weight_cols(
-                F.col("attachment"),
-                F.col("detachment"),
-                F.lit(0.0),
-                F.col("k_irb"),
+            rw_irba = ssfa(
+                S.col("attachment"),
+                S.col("detachment"),
+                S.lit(0.0),
+                S.col("k_irb"),
                 p_irba,
-                floor=pack.scalar("secsa_floor_rw"),
             )
-            rw = F.when(F.col("k_irb").isNotNull(), rw_irba).otherwise(rw)
-            rw_src = F.when(F.col("k_irb").isNotNull(), "sec_irba_ssfa").otherwise(
+            rw = S.when(S.col("k_irb").isNotNull(), rw_irba).otherwise(rw)
+            rw_src = S.when(S.col("k_irb").isNotNull(), "sec_irba_ssfa").otherwise(
                 rw_src
             )
-            approach_col = F.when(F.col("k_irb").isNotNull(), "SEC-IRBA").otherwise(
-                F.lit("SEC-SA")
+            approach_col = S.when(S.col("k_irb").isNotNull(), "SEC-IRBA").otherwise(
+                S.lit("SEC-SA")
             )
     else:
         rw = flat_rw
-        rw_src = F.lit("sec_sa")
+        rw_src = S.lit("sec_sa")
         sa_equiv_rw = rw
-    exp = exp.withColumns(
+    exp = exp.with_columns(
         {
             "approach": approach_col,
             "risk_weight": rw,
             "rw_source": rw_src,
-            "rwa_before_sf": F.col("ead_after_crm") * rw,
-            "rwa": F.col("ead_after_crm") * rw,
+            "rwa_before_sf": S.col("ead_after_crm") * rw,
+            "rwa": S.col("ead_after_crm") * rw,
         }
     )
-    exp = _el_columns(exp, F.lit(0.0))
+    exp = _el_columns(exp, S.lit(0.0))
     exp = _param_cols(exp)
-    exp = exp.withColumns(
+    exp = exp.with_columns(
         {
-            "rwa_sa_equivalent": F.col("ead_after_crm") * sa_equiv_rw,
-            "rwa_pre_crm_substitution": F.col("rwa"),
+            "rwa_sa_equivalent": S.col("ead_after_crm") * sa_equiv_rw,
+            "rwa_pre_crm_substitution": S.col("rwa"),
         }
     )
-    return CalcOutput(results=exp.select(*_RESULT_COLS))
+    return CalcOutput(results=exp.select(*_RESULT_COLS).df)
 
 
 def run_slotting(
@@ -2897,50 +2917,49 @@ def run_slotting(
     rulepack, with the table's EL rate feeding expected loss
     (CRR Art.153(5)/158(6); ref engine/slotting/)."""
     spark = crm.exposures.sparkSession
-    exp, carried = _calc_entry(crm.exposures.where(F.col("is_specialised")))
+    exp, carried = _calc_entry(crm.exposures.where(S.col("is_specialised").sql))
     # Art.153(5) Table A keys on (category, maturity band, HVCRE): the
     # preferential short row applies below 2.5y remaining maturity;
     # unknown maturity conservatively takes the long row. Joining on the
     # full key matters — a category-only join against the 20-row table
     # fans every slotted exposure out 4×.
-    exp = exp.withColumn(
+    exp = exp.with_column(
         "_sl_short",
-        F.coalesce(F.col("effective_maturity") < F.lit(2.5), F.lit(False)),
-    ).withColumn("_sl_hvcre", F.coalesce("is_hvcre", F.lit(False)))
-    slot_rw = pack.table_df(spark, "slotting_rw").select(
-        F.col("slot_category").alias("_sl_cat_t"),
-        F.col("is_short").alias("_sl_short_t"),
-        F.col("is_hvcre").alias("_sl_hvcre_t"),
-        "rw",
-        "el_rate",
+        S.coalesce(S.col("effective_maturity") < S.lit(2.5), S.lit(False)),
+    ).with_column("_sl_hvcre", S.coalesce("is_hvcre", S.lit(False)))
+    slot_rw = pack.dim(
+        spark,
+        "slotting_rw",
+        "slot_category AS _sl_cat_t, is_short AS _sl_short_t,"
+        " is_hvcre AS _sl_hvcre_t, rw, el_rate",
     )
     exp = exp.join(
-        F.broadcast(slot_rw),
-        (F.col("slot_category") == F.col("_sl_cat_t"))
-        & (F.col("_sl_short") == F.col("_sl_short_t"))
-        & (F.col("_sl_hvcre") == F.col("_sl_hvcre_t")),
+        slot_rw,
+        (S.col("slot_category") == S.col("_sl_cat_t"))
+        & (S.col("_sl_short") == S.col("_sl_short_t"))
+        & (S.col("_sl_hvcre") == S.col("_sl_hvcre_t")),
         "left",
-    ).drop("_sl_cat_t", "_sl_short_t", "_sl_hvcre_t").withColumn(
+    ).drop("_sl_cat_t", "_sl_short_t", "_sl_hvcre_t").with_column(
         "risk_weight",
-        F.when(F.col("is_defaulted"), F.lit(0.0)).otherwise(
-            F.coalesce("rw", pack.lit("unrated_corp_rw"))
+        S.when(S.col("is_defaulted"), S.lit(0.0)).otherwise(
+            S.coalesce("rw", pack.sql_lit("unrated_corp_rw"))
         ),
     )
     # SL decomposition (ref :3042-3045): the category's assigned weight
     # under its own name (sl_type/sl_project_phase ride through as input
     # carriers where the bundle declares them). All read pre-chain columns
     # (risk_weight landed in the previous projection) — one batched call
-    exp = exp.withColumns(
+    exp = exp.with_columns(
         {
-            "exposure_class": F.lit("specialised"),
-            "approach": F.lit("SLOTTING"),
-            "approach_reason": F.lit("slotting_category_assigned"),
-            "rw_source": F.when(
-                F.col("is_defaulted"), "slotting_defaulted"
+            "exposure_class": S.lit("specialised"),
+            "approach": S.lit("SLOTTING"),
+            "approach_reason": S.lit("slotting_category_assigned"),
+            "rw_source": S.when(
+                S.col("is_defaulted"), "slotting_defaulted"
             ).otherwise("slotting"),
-            "rwa_before_sf": F.col("ead_after_crm") * F.col("risk_weight"),
-            "rwa": F.col("ead_after_crm") * F.col("risk_weight"),
-            "sl_risk_weight": F.col("risk_weight"),
+            "rwa_before_sf": S.col("ead_after_crm") * S.col("risk_weight"),
+            "rwa": S.col("ead_after_crm") * S.col("risk_weight"),
+            "sl_risk_weight": S.col("risk_weight"),
         }
     )
     # CRR Art.501/501a on the slotting branch (ref slotting/calculator.py
@@ -2950,28 +2969,28 @@ def run_slotting(
     # one batched projection: supporting_factor_benefit inlines the exact
     # post-factor rwa expression (identical arithmetic DAG, bit-equal to
     # reading the chained column)
-    _rwa_sf = F.col("rwa") * _sf
-    exp = exp.withColumns(
+    _rwa_sf = S.col("rwa") * _sf
+    exp = exp.with_columns(
         {
             "rwa": _rwa_sf,
             "sme_supporting_factor": _sme_f,
             "infra_supporting_factor": _infra_f,
-            "supporting_factor_benefit": F.col("rwa_before_sf") - _rwa_sf,
+            "supporting_factor_benefit": S.col("rwa_before_sf") - _rwa_sf,
         }
     )
     exp = _el_columns(
-        exp, F.coalesce("el_rate", F.lit(0.0)) * F.col("ead_after_crm")
+        exp, S.coalesce("el_rate", S.lit(0.0)) * S.col("ead_after_crm")
     )
     # carry the maturity the band keyed on (Pillar 3 CR10 splits every
     # category into <2.5y / ≥2.5y rows on exactly this input)
-    exp = _param_cols(exp, m_col=F.col("effective_maturity").cast("double"))
-    exp = exp.withColumns(
+    exp = _param_cols(exp, m_col=S.col("effective_maturity").cast("double"))
+    exp = exp.with_columns(
         {
-            "rwa_sa_equivalent": F.col("rwa"),
-            "rwa_pre_crm_substitution": F.col("rwa"),
+            "rwa_sa_equivalent": S.col("rwa"),
+            "rwa_pre_crm_substitution": S.col("rwa"),
         }
     )
-    return CalcOutput(results=exp.select(*_RESULT_COLS))
+    return CalcOutput(results=exp.select(*_RESULT_COLS).df)
 
 
 def _equity_pd_lgd(equity: DataFrame, pack: RulePack) -> DataFrame:
@@ -2985,62 +3004,70 @@ def _equity_pd_lgd(equity: DataFrame, pack: RulePack) -> DataFrame:
     cap EL·12.5 + RWEA ≤ EAD·12.5 clamped at zero. The risk_weight
     column stays uncapped (the reference discloses it that way); only
     rwa is capped."""
-    mv = F.coalesce("market_value", F.lit(0.0))
-    listed = F.coalesce("is_exchange_traded", F.lit(False))
-    pe_div = F.coalesce("is_diversified_pe", F.lit(False))
-    has_dd = F.coalesce("has_default_definition_info", F.lit(False))
-    eq = equity.withColumn(
+    mv = S.coalesce("market_value", S.lit(0.0))
+    listed = S.coalesce("is_exchange_traded", S.lit(False))
+    pe_div = S.coalesce("is_diversified_pe", S.lit(False))
+    has_dd = S.coalesce("has_default_definition_info", S.lit(False))
+    eq = Projection(equity).with_column(
         "_pd_eq",
-        F.when(listed, pack.lit("equity_pdlgd_pd_floor_listed")).otherwise(
-            pack.lit("equity_pdlgd_pd_floor_other")
+        S.when(listed, pack.sql_lit("equity_pdlgd_pd_floor_listed")).otherwise(
+            pack.sql_lit("equity_pdlgd_pd_floor_other")
         ),
-    ).withColumn(
+    ).with_column(
         "_lgd_eq",
-        F.when(pe_div, pack.lit("equity_pdlgd_lgd_diversified")).otherwise(
-            pack.lit("equity_pdlgd_lgd_other")
+        S.when(pe_div, pack.sql_lit("equity_pdlgd_lgd_diversified")).otherwise(
+            pack.sql_lit("equity_pdlgd_lgd_other")
         ),
     )
     eq = with_normal_ppf(eq, "_pd_eq", "_g_eq")
-    eq = eq.withColumn("_r_eq", spark_correlation("_pd_eq"))
+    eq = eq.with_column("_r_eq", S.kernel(correlation_v, S.col("_pd_eq")))
     eq = with_irb_k_r(eq, "_pd_eq", "_lgd_eq", "_g_eq", "_r_eq", "_k_eq")
     rw = (
         (
-            (F.col("_k_eq") * irb_maturity_adj(F.col("_pd_eq"), pack.lit("equity_pdlgd_maturity")))
-            * F.lit(12.5)
+            (
+                S.col("_k_eq")
+                * S.kernel(
+                    maturity_adj_v, S.col("_pd_eq"), pack.sql_lit("equity_pdlgd_maturity")
+                )
+            )
+            * S.lit(12.5)
         )
-        * pack.lit("irb_scaling_factor")
-    ) * F.when(has_dd, F.lit(1.0)).otherwise(pack.lit("equity_pdlgd_no_dd_scaling"))
-    el = (F.col("_pd_eq") * F.col("_lgd_eq")) * mv
-    eq = eq.withColumn("_rw_eq", rw).withColumn("_el_eq", el)
-    rwa_cap = F.greatest((mv * F.lit(12.5)) - (F.col("_el_eq") * F.lit(12.5)), F.lit(0.0))
-    rwa = F.least(F.col("_rw_eq") * mv, rwa_cap)
-    return eq.select(
-        "exposure_reference",
-        "counterparty_reference",
-        F.lit("equity").alias("exposure_class"),
-        F.lit("EQUITY").alias("approach"),
-        mv.alias("drawn_amount"),
-        F.lit(0.0).alias("undrawn_amount"),
-        mv.alias("ead"),
-        mv.alias("ead_after_crm"),
-        F.lit(0.0).alias("provision_allocated"),
-        F.lit(0.0).alias("collateral_value"),
-        F.lit(0.0).alias("g_coverage"),
-        F.col("_rw_eq").alias("risk_weight"),
-        F.lit("equity_pd_lgd").alias("rw_source"),
-        rwa.alias("rwa_before_sf"),
-        rwa.alias("rwa"),
-        F.col("_el_eq").alias("expected_loss"),
-        F.col("_el_eq").alias("el_shortfall"),
-        F.lit(0.0).alias("el_excess"),
-        F.lit(None).cast("double").alias("ccf"),
-        F.col("_pd_eq").alias("pd_used"),
-        F.col("_lgd_eq").alias("lgd_used"),
-        pack.lit("equity_pdlgd_maturity").alias("maturity_used"),
-        rwa.alias("rwa_sa_equivalent"),
-        F.lit("pd_lgd").alias("equity_type"),
-        F.col("_rw_eq").alias("equity_risk_weight"),
-        (F.col("_rw_eq") >= F.lit(4.0)).alias("equity_higher_risk"),
+        * pack.sql_lit("irb_scaling_factor")
+    ) * S.when(has_dd, S.lit(1.0)).otherwise(pack.sql_lit("equity_pdlgd_no_dd_scaling"))
+    el = (S.col("_pd_eq") * S.col("_lgd_eq")) * mv
+    eq = eq.with_column("_rw_eq", rw).with_column("_el_eq", el)
+    rwa_cap = S.greatest((mv * S.lit(12.5)) - (S.col("_el_eq") * S.lit(12.5)), S.lit(0.0))
+    rwa = S.least(S.col("_rw_eq") * mv, rwa_cap)
+    ledger = {
+        "exposure_class": S.lit("equity"),
+        "approach": S.lit("EQUITY"),
+        "drawn_amount": mv,
+        "undrawn_amount": S.lit(0.0),
+        "ead": mv,
+        "ead_after_crm": mv,
+        "provision_allocated": S.lit(0.0),
+        "collateral_value": S.lit(0.0),
+        "g_coverage": S.lit(0.0),
+        "risk_weight": S.col("_rw_eq"),
+        "rw_source": S.lit("equity_pd_lgd"),
+        "rwa_before_sf": rwa,
+        "rwa": rwa,
+        "expected_loss": S.col("_el_eq"),
+        "el_shortfall": S.col("_el_eq"),
+        "el_excess": S.lit(0.0),
+        "ccf": S.null("double"),
+        "pd_used": S.col("_pd_eq"),
+        "lgd_used": S.col("_lgd_eq"),
+        "maturity_used": pack.sql_lit("equity_pdlgd_maturity"),
+        "rwa_sa_equivalent": rwa,
+        "equity_type": S.lit("pd_lgd"),
+        "equity_risk_weight": S.col("_rw_eq"),
+        "equity_higher_risk": S.col("_rw_eq") >= S.lit(4.0),
+    }
+    return (
+        eq.with_columns(ledger)
+        .select("exposure_reference", "counterparty_reference", *ledger)
+        .df
     )
 
 
@@ -3064,18 +3091,24 @@ def run_equity(
     phases the weights in from 2027 (ref calculator.py:1023
     _apply_transitional_floor + rulebook/packs/b31.py:740 schedules).
     """
-    equity, carried = conform_calc_edge(equity, _EQUITY_CARRIERS)
+    conformed = Projection(equity)
+    carried = conform_calc_edge(conformed, _EQUITY_CARRIERS)
+    equity = conformed.df
     if "use_pd_lgd" in carried and pack.scalar("equity_irb_available") >= 1.0:
-        elect = F.coalesce("use_pd_lgd", F.lit(False))
-        simple_out = _equity_simple(equity.where(~elect), pack, reporting_date, carried)
+        elect = S.coalesce("use_pd_lgd", S.lit(False))
+        simple_out = _equity_simple(
+            equity.where((~elect).sql), pack, reporting_date, carried
+        )
         # the PD/LGD leg carries no netting/transitional columns (it
         # bypasses both) — the union fills them null
         out = simple_out.unionByName(
-            _equity_pd_lgd(equity.where(elect), pack), allowMissingColumns=True
+            _equity_pd_lgd(equity.where(elect.sql), pack), allowMissingColumns=True
         )
     else:
         out = _equity_simple(equity, pack, reporting_date, carried)
-    return CalcOutput(results=_calc_entry(out, "EQUITY")[0].select(*_RESULT_COLS))
+    return CalcOutput(
+        results=_calc_entry(out, "EQUITY")[0].select(*_RESULT_COLS).df
+    )
 
 
 # the equity-holdings carriers of CALC_EDGE (the holdings frame is no CRM
@@ -3093,7 +3126,7 @@ _EQUITY_CARRIERS = (
 )
 
 
-def _net_short_ead(equity: DataFrame, carried: frozenset) -> DataFrame:
+def _net_short_ead(equity: DataFrame, carried: frozenset) -> Projection:
     """CRR Art.155(2) non-trading-book net-short netting (ref
     engine/equity/calculator.py:829-894 _net_short_positions): an
     explicitly-hedged (≥1y) short may offset longs in the SAME individual
@@ -3103,28 +3136,30 @@ def _net_short_ead(equity: DataFrame, carried: frozenset) -> DataFrame:
     Ineligible rows keep the absolute-value market_value chain. Adds
     `_eq_ead`; column-absence defensive — without position_value/
     issuer_reference the frame passes through unchanged."""
-    mv = F.coalesce("market_value", F.lit(0.0))
+    mv = S.coalesce("market_value", S.lit(0.0))
     if "position_value" not in carried or "issuer_reference" not in carried:
-        return equity.withColumn("_eq_ead", mv)
-    hedged = F.coalesce("is_explicitly_hedged", F.lit(False))
+        return Projection(equity).with_column("_eq_ead", mv)
+    hedged = S.coalesce("is_explicitly_hedged", S.lit(False))
     eligible = (
-        F.col("issuer_reference").isNotNull()
-        & F.col("position_value").isNotNull()
+        S.col("issuer_reference").isNotNull()
+        & S.col("position_value").isNotNull()
         & hedged
     )
-    signed = F.coalesce("position_value", F.lit(0.0))
-    gross_long = F.when(eligible & (signed > 0), signed).otherwise(F.lit(0.0))
-    w_iss = W.partitionBy("issuer_reference")
-    net_long = F.greatest(
-        F.sum(F.when(eligible, signed).otherwise(F.lit(0.0))).over(w_iss),
-        F.lit(0.0),
+    signed = S.coalesce("position_value", S.lit(0.0))
+    gross_long = S.when(eligible & (signed > 0), signed).otherwise(S.lit(0.0))
+    net_long = S.greatest(
+        S.over(S.call("sum", S.when(eligible, signed).otherwise(S.lit(0.0))), "issuer_reference"),
+        S.lit(0.0),
     )
-    gross_long_iss = F.sum(gross_long).over(w_iss)
-    share = F.when(gross_long_iss > 0, gross_long / gross_long_iss).otherwise(
-        F.lit(0.0)
+    gross_long_iss = S.over(S.call("sum", gross_long), "issuer_reference")
+    share = S.when(gross_long_iss > 0, gross_long / gross_long_iss).otherwise(
+        S.lit(0.0)
     )
-    return equity.withColumn(
-        "_eq_ead", F.when(eligible, net_long * share).otherwise(mv)
+    # the window step applies on its own: the ledger step reads _eq_ead
+    return Projection(
+        Projection(equity)
+        .with_column("_eq_ead", S.when(eligible, net_long * share).otherwise(mv))
+        .df
     )
 
 
@@ -3159,28 +3194,28 @@ def _equity_simple(
     if pack.scalar("equity_irb_available") >= 1.0:
         equity = _net_short_ead(equity, carried)
     else:
-        equity = equity.withColumn(
-            "_eq_ead", F.coalesce("market_value", F.lit(0.0))
+        equity = Projection(equity).with_column(
+            "_eq_ead", S.coalesce("market_value", S.lit(0.0))
         )
-    listed = F.coalesce("is_exchange_traded", F.lit(False))
-    pe_div = F.coalesce("is_diversified_pe", F.lit(False))
-    spec = F.coalesce("is_speculative", F.lit(False))
+    listed = S.coalesce("is_exchange_traded", S.lit(False))
+    pe_div = S.coalesce("is_diversified_pe", S.lit(False))
+    spec = S.coalesce("is_speculative", S.lit(False))
     if pack.scalar("equity_irb_available") >= 1.0:
         rw = (
-            F.when(pe_div, pack.lit("equity_pe_diversified_rw"))
-            .when(listed, pack.lit("equity_exchange_traded_rw"))
-            .otherwise(pack.lit("equity_other_rw"))
+            S.when(pe_div, pack.sql_lit("equity_pe_diversified_rw"))
+            .when(listed, pack.sql_lit("equity_exchange_traded_rw"))
+            .otherwise(pack.sql_lit("equity_other_rw"))
         )
-        el_rate = F.when(pe_div | listed, pack.lit("equity_el_standard")).otherwise(
-            pack.lit("equity_el_other")
+        el_rate = S.when(pe_div | listed, pack.sql_lit("equity_el_standard")).otherwise(
+            pack.sql_lit("equity_el_other")
         )
-        src = F.lit("equity_irb_simple")
+        src = S.lit("equity_irb_simple")
     else:
-        rw = F.when(spec, pack.lit("equity_speculative_rw")).otherwise(
-            pack.lit("equity_standard_rw")
+        rw = S.when(spec, pack.sql_lit("equity_speculative_rw")).otherwise(
+            pack.sql_lit("equity_standard_rw")
         )
-        el_rate = F.lit(0.0)
-        src = F.lit("equity_sa")
+        el_rate = S.lit(0.0)
+        src = S.lit("equity_sa")
     # PRA Rules 4.1-4.10 transitional floor (B3.1 pack Feature + date
     # schedule; ref calculator.py:1023-1127): final RW = max(assigned,
     # transitional), with the higher-risk leg for speculative or young
@@ -3190,72 +3225,72 @@ def _equity_simple(
     trans = _equity_transitional_schedule(pack, reporting_date)
     if trans is not None:
         std_rw, hr_rw = trans
-        age_hr = F.col("business_age_years").isNull() | (
-            F.col("business_age_years") < 5.0
+        age_hr = S.col("business_age_years").isNull() | (
+            S.col("business_age_years") < 5.0
         )
         is_hr = spec | (pe_div & ~listed & age_hr)
-        sub = F.lower(F.coalesce("equity_subtype", F.lit("")))
+        sub = S.lower(S.coalesce("equity_subtype", S.lit("")))
         excluded = sub.isin("central_bank", "subordinated_debt")
         trans_rw = (
-            F.when(excluded, F.lit(0.0))
-            .when(is_hr, F.lit(hr_rw))
-            .otherwise(F.lit(std_rw))
+            S.when(excluded, S.lit(0.0))
+            .when(is_hr, S.lit(hr_rw))
+            .otherwise(S.lit(std_rw))
         )
-        rw = F.greatest(rw, trans_rw)
+        rw = S.greatest(rw, trans_rw)
         # B3.1 has no IRB equity approaches, so the COREP OF 07.00 label
         # is always the SA transitional leg (ref calculator.py:1111-1119)
-        trans_approach = F.lit("sa_transitional")
+        trans_approach = S.lit("sa_transitional")
         hr_flag = is_hr
     else:
-        trans_rw = F.lit(None).cast("double")
-        trans_approach = F.lit(None).cast("string")
+        trans_rw = S.null("double")
+        trans_approach = S.null("string")
         hr_flag = None
-    mv = F.col("_eq_ead")
-    out = equity.select(
-        "exposure_reference",
-        "counterparty_reference",
-        F.lit("equity").alias("exposure_class"),
-        F.lit("EQUITY").alias("approach"),
-        mv.alias("drawn_amount"),
-        F.lit(0.0).alias("undrawn_amount"),
-        mv.alias("ead"),
-        mv.alias("ead_after_crm"),
-        F.lit(0.0).alias("provision_allocated"),
-        F.lit(0.0).alias("collateral_value"),
-        F.lit(0.0).alias("g_coverage"),
-        rw.alias("risk_weight"),
-        src.alias("rw_source"),
-        (mv * rw).alias("rwa_before_sf"),
-        (mv * rw).alias("rwa"),
-        (mv * el_rate).alias("expected_loss"),
-        (mv * el_rate).alias("el_shortfall"),
-        F.lit(0.0).alias("el_excess"),
-        F.lit(None).cast("double").alias("ccf"),
-        F.lit(None).cast("double").alias("pd_used"),
-        F.lit(None).cast("double").alias("lgd_used"),
-        F.lit(None).cast("double").alias("maturity_used"),
-        (mv * rw).alias("rwa_sa_equivalent"),
+    mv = S.col("_eq_ead")
+    ledger = {
+        "exposure_class": S.lit("equity"),
+        "approach": S.lit("EQUITY"),
+        "drawn_amount": mv,
+        "undrawn_amount": S.lit(0.0),
+        "ead": mv,
+        "ead_after_crm": mv,
+        "provision_allocated": S.lit(0.0),
+        "collateral_value": S.lit(0.0),
+        "g_coverage": S.lit(0.0),
+        "risk_weight": rw,
+        "rw_source": src,
+        "rwa_before_sf": mv * rw,
+        "rwa": mv * rw,
+        "expected_loss": mv * el_rate,
+        "el_shortfall": mv * el_rate,
+        "el_excess": S.lit(0.0),
+        "ccf": S.null("double"),
+        "pd_used": S.null("double"),
+        "lgd_used": S.null("double"),
+        "maturity_used": S.null("double"),
+        "rwa_sa_equivalent": mv * rw,
         # equity decomposition (ref :3042-3045): WHICH category priced the
         # holding, its weight under its own name, and the higher-risk flag
         # (≥400% — speculative/venture under either regime)
-        (
-            F.when(pe_div, "diversified_pe")
+        "equity_type": (
+            S.when(pe_div, "diversified_pe")
             .when(listed, "exchange_traded")
             .otherwise("other")
             if pack.scalar("equity_irb_available") >= 1.0
-            else F.when(spec, "speculative").otherwise("standard")
-        ).alias("equity_type"),
-        rw.alias("equity_risk_weight"),
+            else S.when(spec, "speculative").otherwise("standard")
+        ),
+        "equity_risk_weight": rw,
         # when the transitional machinery ran, the higher-risk flag is the
         # Art.133(4) determination it used (ref calculator.py:1125);
         # otherwise the ≥400% heuristic stands
-        (hr_flag if hr_flag is not None else (rw >= F.lit(4.0))).alias(
-            "equity_higher_risk"
-        ),
+        "equity_higher_risk": hr_flag if hr_flag is not None else rw >= S.lit(4.0),
         # COREP OF 07.00 rows 0371-0374 annotation + the resolved floor
         # value itself (ref calculator.py:1110-1126 equity_transitional_
         # approach carrier)
-        trans_approach.alias("equity_transitional_approach"),
-        trans_rw.alias("equity_transitional_rw"),
+        "equity_transitional_approach": trans_approach,
+        "equity_transitional_rw": trans_rw,
+    }
+    return (
+        equity.with_columns(ledger)
+        .select("exposure_reference", "counterparty_reference", *ledger)
+        .df
     )
-    return out

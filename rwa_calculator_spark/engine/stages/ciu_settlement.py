@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 
 from rwa_calculator_spark.engine.bundles import CalcOutput
 from rwa_calculator_spark.engine.rulepack import RulePack
+from rwa_calculator_spark.functions import sqltext as S
+from rwa_calculator_spark.functions.sqltext import Projection
 
 _ZERO_LEDGER = {
     "provision_allocated": 0.0,
@@ -50,17 +52,12 @@ def _ledger(df: DataFrame, risk_type: str = "CREDIT") -> DataFrame:
         _provenance_cols,
     )
 
-    fills = {c: F.lit(v) for c, v in _ZERO_LEDGER.items()}
-    fills["rwa_sa_equivalent"] = F.col("rwa")
-    df = _provenance_cols(df.withColumns(fills), risk_type)
-    # one schema fetch; every ledger column still absent is a null double
-    cols = set(df.columns)
-    return df.select(
-        *(
-            c if c in cols else F.lit(None).cast("double").alias(c)
-            for c in _RESULT_COLS
-        )
-    )
+    fills = {c: S.lit(v) for c, v in _ZERO_LEDGER.items()}
+    fills["rwa_sa_equivalent"] = S.col("rwa")
+    ledger = _provenance_cols(Projection(df).with_columns(fills).df, risk_type)
+    # every ledger column still absent is a null double
+    absent = {c: S.null("double") for c in _RESULT_COLS if c not in ledger.columns}
+    return ledger.with_columns(absent).select(*_RESULT_COLS).df
 
 
 def run_ciu(ciu_holdings: DataFrame, pack: RulePack) -> CalcOutput:

@@ -22,7 +22,6 @@ from __future__ import annotations
 import math
 
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 from rwa_calculator_spark.functions.stats import (
     G_999,
@@ -101,93 +100,55 @@ def capital_k_v(pd: V, lgd: V, g_pd: V) -> V:
 # --- Spark Column surface --------------------------------------------------
 
 
-def irb_capital_k(pd: Column, lgd: Column, g_pd: Column) -> Column:
-    """Single-expression K. Prefer `with_irb_k` in plans: Φ textually repeats
-    its argument ~17× across the Cody branches, so inlining a large g_pd
-    tree multiplies Catalyst analysis cost; staging bounds it."""
-    return capital_k_v(V(SparkB, pd), V(SparkB, lgd), V(SparkB, g_pd)).v
-
-
 def irb_maturity_adj(pd: Column, m: Column) -> Column:
     return maturity_adj_v(V(SparkB, pd), V(SparkB, m)).v
-
-
-def irb_maturity_b(pd: Column) -> Column:
-    """The Art.153(1) maturity slope b = (0.11852 − 0.05478·ln PD)² alone —
-    the ledger's irb_maturity_adj_b decomposition carrier."""
-    return maturity_b_v(V(SparkB, pd)).v
 
 
 def irb_pd_floor(pd: Column) -> Column:
     return pd_floor_v(V(SparkB, pd)).v
 
 
-def with_irb_k(df, pd: str = "pd", lgd: str = "lgd", g_pd: str = "g_pd", out: str = "k"):
+# --- Spark SQL-text surface (functions/sqltext.py) ----------------------
+
+
+def with_irb_k(frame, pd: str = "pd", lgd: str = "lgd", g_pd: str = "g_pd", out: str = "k"):
     """Staged K: correlation and the Φ argument become real projection
     columns (leaf references downstream), keeping every expression tree
     small while computing bit-identical values to `capital_k_v` — column
     staging never rounds. CollapseProject won't re-inline them because they
-    are non-cheap and multiply-referenced. Expressions ship as parsed SQL
-    strings (one py4j call each — see SparkSqlB). Φ itself routes through
-    the generated-Java kernel when available (bit-identical — see
-    functions/jvm_kernel.py) so the stage stays inside whole-stage codegen
-    even when fused with the Φ⁻¹ producer."""
-    from rwa_calculator_spark.functions.jvm_kernel import CDF_FN, ensure_jvm_kernel
-    from rwa_calculator_spark.functions.stats import SparkSqlB, spark_expr_normal_cdf
+    are non-cheap and multiply-referenced. `frame` is a DataFrame or a
+    pending `sqltext.Projection` (the result is the same kind); every
+    expression is SQL text. Φ itself routes through the generated-Java
+    kernel when available (bit-identical — see functions/jvm_kernel.py) so
+    the stage stays inside whole-stage codegen even when fused with the
+    Φ⁻¹ producer."""
+    from rwa_calculator_spark.functions.sqltext import Projection, col, kernel
 
-    df = df.withColumn("_irb_r", F.expr(correlation_v(V(SparkSqlB, pd)).v))
-    arg = (F.col(g_pd) + F.sqrt(F.col("_irb_r")) * F.lit(G_999)) / F.sqrt(
-        F.lit(1.0) - F.col("_irb_r")
-    )
-    df = df.withColumn("_irb_arg", arg)
-    phi = (
-        F.expr(f"{CDF_FN}(_irb_arg)")
-        if ensure_jvm_kernel(df.sparkSession)
-        else spark_expr_normal_cdf("_irb_arg")
-    )
-    df = df.withColumn(out, F.col(lgd) * phi - F.col(pd) * F.col(lgd))
-    return df.drop("_irb_r", "_irb_arg")
+    proj = Projection.of(frame).with_column("_irb_r", kernel(correlation_v, col(pd)))
+    with_irb_k_r(proj, pd, lgd, g_pd, "_irb_r", out).drop("_irb_r")
+    return proj if isinstance(frame, Projection) else proj.df
 
 
 def with_irb_k_r(
-    df, pd: str = "pd", lgd: str = "lgd", g_pd: str = "g_pd",
+    frame, pd: str = "pd", lgd: str = "lgd", g_pd: str = "g_pd",
     r: str = "r", out: str = "k",
 ):
     """Staged K with a caller-supplied correlation column (asset-class
     routed R — CRR Art.153(4)/154). Same staging discipline as
     `with_irb_k`; identical values when `r` equals the corporate curve."""
     from rwa_calculator_spark.functions.jvm_kernel import CDF_FN, ensure_jvm_kernel
-    from rwa_calculator_spark.functions.stats import spark_expr_normal_cdf
+    from rwa_calculator_spark.functions.sqltext import Projection, call, col, kernel, lit, sqrt
 
-    arg = (F.col(g_pd) + F.sqrt(F.col(r)) * F.lit(G_999)) / F.sqrt(
-        F.lit(1.0) - F.col(r)
-    )
-    df = df.withColumn("_irb_arg", arg)
+    proj = Projection.of(frame)
+    arg = (col(g_pd) + sqrt(col(r)) * lit(G_999)) / sqrt(lit(1.0) - col(r))
+    proj.with_column("_irb_arg", arg)
     phi = (
-        F.expr(f"{CDF_FN}(_irb_arg)")
-        if ensure_jvm_kernel(df.sparkSession)
-        else spark_expr_normal_cdf("_irb_arg")
+        call(CDF_FN, "_irb_arg")
+        if ensure_jvm_kernel(proj.spark)
+        else kernel(norm_cdf_v, col("_irb_arg"))
     )
-    df = df.withColumn(out, F.col(lgd) * phi - F.col(pd) * F.col(lgd))
-    return df.drop("_irb_arg")
-
-
-def spark_correlation(pd_col: str) -> "F.Column":
-    from rwa_calculator_spark.functions.stats import SparkSqlB
-
-    return F.expr(correlation_v(V(SparkSqlB, pd_col)).v)
-
-
-def spark_correlation_other_retail(pd_col: str) -> "F.Column":
-    from rwa_calculator_spark.functions.stats import SparkSqlB
-
-    return F.expr(correlation_other_retail_v(V(SparkSqlB, pd_col)).v)
-
-
-def spark_sme_size_adjustment(sales_m_col: str) -> "F.Column":
-    from rwa_calculator_spark.functions.stats import SparkSqlB
-
-    return F.expr(sme_size_adjustment_v(V(SparkSqlB, sales_m_col)).v)
+    proj.with_column(out, col(lgd) * phi - col(pd) * col(lgd)).drop("_irb_arg")
+    return proj if isinstance(frame, Projection) else proj.df
 
 
 # --- DuckDB SQL surface ----------------------------------------------------

@@ -334,28 +334,31 @@ def normal_ppf(col: Column) -> Column:
     return norm_ppf_v(V(SparkB, col)).v
 
 
-def with_normal_ppf(df, p: str, out: str):
-    """Φ⁻¹ of column `p` into column `out`.
+def with_normal_ppf(frame, p: str, out: str):
+    """Φ⁻¹ of column `p` into column `out`, as SQL text.
+
+    `frame` is a DataFrame or a pending `sqltext.Projection`; the result is
+    the same kind (a Projection gains the column as one more step).
 
     Fast path: the generated-Java kernel (functions/jvm_kernel.py) when it
     registers on this session — a tiny codegen'd callsite instead of the
     64 KB-overflowing fused expression tree, bit-identical values (pinned by
-    tests/test_jvm_kernel.py). Fallback: staged pure-Column Acklam+Halley —
-    the seed becomes a projection column so every downstream expression tree
-    stays small; expressions ship as single SQL strings (SparkSqlB) so plan
-    construction is one py4j call. Both paths are bit-identical to
-    `normal_ppf` (column staging never rounds; the parsed expressions are
-    the same Catalyst nodes)."""
+    tests/test_jvm_kernel.py). Fallback: staged Acklam+Halley — the seed
+    becomes a projection column so every downstream expression tree stays
+    small. Both paths are bit-identical to `normal_ppf` (column staging
+    never rounds; the parsed expressions are the same Catalyst nodes)."""
     from rwa_calculator_spark.functions.jvm_kernel import PPF_FN, ensure_jvm_kernel
+    from rwa_calculator_spark.functions.sqltext import Projection, call, col, kernel, when
 
-    if ensure_jvm_kernel(df.sparkSession):
-        return df.withColumn(out, F.expr(f"{PPF_FN}({p})"))
-    df = df.withColumn("_ppf_x0", F.expr(acklam_raw_v(V(SparkSqlB, p)).v))
-    refined = F.expr(halley_step_v(V(SparkSqlB, "_ppf_x0"), V(SparkSqlB, p)).v)
-    df = df.withColumn(
-        out, F.when((F.col(p) > 0.0) & (F.col(p) < 1.0), refined)
-    )
-    return df.drop("_ppf_x0")
+    proj = Projection.of(frame)
+    if ensure_jvm_kernel(proj.spark):
+        proj.with_column(out, call(PPF_FN, p))
+    else:
+        proj.with_column("_ppf_x0", kernel(acklam_raw_v, col(p)))
+        refined = kernel(halley_step_v, col("_ppf_x0"), col(p))
+        proj.with_column(out, when((col(p) > 0.0) & (col(p) < 1.0), refined))
+        proj.drop("_ppf_x0")
+    return proj if isinstance(frame, Projection) else proj.df
 
 
 def spark_expr_normal_cdf(var: str) -> Column:

@@ -20,16 +20,27 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rwa_calculator_spark.functions.sqltext import Projection, quote, select_sql
+
 
 def dictionary_apply(
-    df: DataFrame,
+    frame: "DataFrame | Projection",
     keys: Sequence[str],
-    transform: Callable[[DataFrame], DataFrame],
-) -> DataFrame:
-    """Apply `transform` (adds derived columns) to the distinct key combos,
-    then broadcast-join the derived columns back onto `df`.
+    transform: Callable[[Projection], Projection],
+):
+    """Apply `transform` (adds derived columns to a pending projection) to
+    the distinct key combos, then broadcast-join the derived columns back
+    onto `frame` (a DataFrame or a pending `sqltext.Projection`; the
+    result is the same kind).
 
     Join keys may be doubles: both sides carry the *same* computed values,
     so equality is exact. Keys must be non-null (guard upstream)."""
-    dims = transform(df.select(*keys).distinct())
-    return df.join(F.broadcast(dims), on=list(keys), how="left")
+    proj = Projection.of(frame)
+    df, keys = proj.df, list(keys)
+    dims = transform(Projection(select_sql(df, [quote(k) for k in keys]).distinct(), keys))
+    out = df.join(F.broadcast(dims.df), on=keys, how="left")
+    if not isinstance(frame, Projection):
+        return out
+    # a USING join puts the keys first
+    rest = [c for c in proj.columns + dims.columns if c not in keys]
+    return Projection(out, keys + rest)

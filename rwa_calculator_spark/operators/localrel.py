@@ -23,49 +23,59 @@ cost, and large data should be data, not plan).
 
 from __future__ import annotations
 
-import math
 from typing import Iterable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from rwa_calculator_spark.functions.sqltext import quote, sql_literal
+
 # Dimension-sized tables only: beyond this the expression tree stops being
 # "a few literals" and plan build/optimize time outweighs the worker wins.
 MAX_LITERAL_ROWS = 1024
 
 
-def _sql_literal(v) -> str | None:
-    """Render one Python value as a SQL literal whose parse is bit-identical
-    to ``F.lit(v)`` after the column cast. None = not renderable (caller
-    falls back to the Column path)."""
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return "TRUE" if v else "FALSE"
-    if isinstance(v, int):
-        return str(v)
-    if isinstance(v, float):
-        if not math.isfinite(v):
-            return None
-        # repr round-trips binary64; the decimal parse keeps every digit and
-        # the cast to DOUBLE rounds back to the identical bits
-        return repr(v)
-    if isinstance(v, str):
-        if "\\" in v or "\0" in v:
-            return None  # escape-sequence semantics differ; fall back
-        return "'" + v.replace("'", "''") + "'"
-    return None
-
-
 def local_literal_df(
-    spark: SparkSession, schema: str | StructType, rows: Iterable[Sequence]
+    spark: SparkSession,
+    schema: str | StructType,
+    rows: Iterable[Sequence],
+    select: str = "*",
+    where: str | None = None,
+    broadcast: bool = False,
 ) -> DataFrame:
-    """A small lookup table as a JVM-side literal relation (no PythonRDD)."""
+    """A small lookup table as a JVM-side literal relation (no PythonRDD).
+
+    ``select``/``where`` are SQL over the table's columns and ``broadcast``
+    adds the broadcast hint, all inside the one ``spark.sql`` call: a pack
+    dimension renamed, filtered and hinted for a join costs one analysis,
+    not four."""
     rows = [tuple(r) for r in rows]
     st = StructType.fromDDL(schema) if isinstance(schema, str) else schema
-    if not rows or len(rows) > MAX_LITERAL_ROWS:
-        return spark.createDataFrame(rows, schema)
+    values = _values_sql(st, rows) if 0 < len(rows) <= MAX_LITERAL_ROWS else None
+    if values is None:
+        # too big, empty or not renderable: a data-backed frame, shaped by
+        # the same SQL through a frame parameter
+        df = (
+            _column_literal_df(spark, st, rows)
+            if 0 < len(rows) <= MAX_LITERAL_ROWS
+            else spark.createDataFrame(rows, schema)
+        )
+        if (select, where, broadcast) == ("*", None, False):
+            return df
+        return spark.sql(_shape_sql("{t}", select, where, broadcast), t=df)
+    return spark.sql(_shape_sql(values, select, where, broadcast))
+
+
+def _shape_sql(relation: str, select: str, where: str | None, broadcast: bool) -> str:
+    hint = "/*+ BROADCAST */ " if broadcast else ""
+    cond = f" WHERE {where}" if where else ""
+    return f"SELECT {hint}{select} FROM {relation}{cond}"
+
+
+def _values_sql(st: StructType, rows: list[tuple]) -> str | None:
+    """The rows as a ``VALUES`` relation, None when a value has no exact
+    SQL literal for its column type."""
     # Compile the whole relation into ONE SQL string: a row-by-row Column
     # build costs hundreds of py4j round-trips per table (lit + cast +
     # alias per value), which the round-9 build profile showed as ~0.3 s
@@ -79,24 +89,21 @@ def local_literal_df(
     # CAST(<literal> AS <type>) parses bit-identically in both shapes
     # (exactness audit in tests/test_localrel.py).
     types = [f.dataType.simpleString() for f in st.fields]
-    names = [f.name for f in st.fields]
     tuples = []
     for r in rows:
         cells = []
         for v, t in zip(r, types):
-            s = _sql_literal(v)
+            s = sql_literal(v)
             # The float rendering is bit-identical only when the target is a
             # floating-point column: for e.g. decimal(p,s), CAST('2.675')
             # rounds the exact decimal text while F.lit rounds the binary
             # double — different paths, different digits. Fall back.
             if s is None or (isinstance(v, float) and t not in ("double", "float")):
-                return _column_literal_df(spark, st, rows)
+                return None
             cells.append(f"CAST({s} AS {t})")
         tuples.append(f"({', '.join(cells)})")
-    cols = ", ".join("`{}`".format(n.replace("`", "``")) for n in names)
-    return spark.sql(
-        f"SELECT * FROM (VALUES {', '.join(tuples)}) AS _litrel({cols})"
-    )
+    cols = ", ".join(quote(f.name) for f in st.fields)
+    return f"(VALUES {', '.join(tuples)}) AS _litrel({cols})"
 
 
 def _column_literal_df(spark: SparkSession, st: StructType, rows) -> DataFrame:

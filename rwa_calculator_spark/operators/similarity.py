@@ -11,6 +11,12 @@ trees also bloated plan/codegen size in every similarity query.
 LSH hyperplanes are pseudo-random literals derived from md5 in *Python* at
 plan-build time, so both engines see identical constants (the rulepack
 compile-to-literals pattern, SURVEY §1.1).
+
+The Spark side renders as SQL text (`functions.sqltext`): the fold's
+lambdas take fixed parameter names, where pyspark's Python lambdas are
+named from a JVM-global counter (``x_9``, then ``x_21``), so two builds of
+one query print the same optimized plan. Inputs are SQL references to the
+array columns (``"embedding"``, ``"a.embedding"``).
 """
 
 from __future__ import annotations
@@ -20,10 +26,21 @@ import hashlib
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from rwa_calculator_spark.functions import sqltext as S
+
 EMBED_DIM = 64
 
 
-def spark_dot(a: Column, b: Column, dim: int = EMBED_DIM) -> Column:
+def _fold_sum(z: S.Expr, n: int) -> S.Expr:
+    """Σ z[i] seeded with z[1]: the left-associated chain order."""
+    return S.aggregate(
+        S.call("slice", z, S.lit(2), S.lit(n - 1)),
+        S.call("element_at", z, S.lit(1)),
+        lambda acc, x: acc + x,
+    )
+
+
+def spark_dot(a: str, b: str, dim: int = EMBED_DIM) -> Column:
     """Left-associated dot product as a zip_with/aggregate fold.
 
     Bit-identical to the unrolled chain ``(a0·b0 + a1·b1) + …`` (the fold
@@ -33,8 +50,8 @@ def spark_dot(a: Column, b: Column, dim: int = EMBED_DIM) -> Column:
     255-node tree: the unrolled form pays one virtual getItem/cast eval
     per term in the row-oriented evaluator, while the fold runs a tight
     loop over the zipped array (guide §1.2 per-task work)."""
-    z = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(F.slice(z, 2, dim - 1), F.element_at(z, 1), lambda acc, x: acc + x)
+    z = S.zip_with(S.expr(a), S.expr(b), lambda x, y: x.cast("double") * y.cast("double"))
+    return F.expr(_fold_sum(z, dim).sql)
 
 
 def sql_dot(a: str, b: str, dim: int = EMBED_DIM) -> str:
@@ -52,16 +69,14 @@ def hyperplane(j: int, dim: int = EMBED_DIM) -> list[float]:
     ]
 
 
-def spark_projection(v: Column, coeffs: list[float]) -> Column:
+def _projection(v: str, coeffs: list[float]) -> S.Expr:
     """Same fold rewrite as spark_dot (coeffs become an array literal);
     seeded with the first product so addition order matches the unrolled
     chain bit-for-bit."""
-    z = F.zip_with(
-        F.array(*[F.lit(c) for c in coeffs]), v, lambda c, x: c * x.cast("double")
+    z = S.zip_with(
+        S.array(*[S.lit(c) for c in coeffs]), S.expr(v), lambda c, x: c * x.cast("double")
     )
-    return F.aggregate(
-        F.slice(z, 2, len(coeffs) - 1), F.element_at(z, 1), lambda acc, x: acc + x
-    )
+    return _fold_sum(z, len(coeffs))
 
 
 def sql_projection(v: str, coeffs: list[float]) -> str:
@@ -71,12 +86,12 @@ def sql_projection(v: str, coeffs: list[float]) -> str:
     return out
 
 
-def spark_lsh_bucket(v: Column, n_planes: int, dim: int = EMBED_DIM) -> Column:
+def spark_lsh_bucket(v: str, n_planes: int, dim: int = EMBED_DIM) -> Column:
     bucket = None
     for j in range(n_planes):
-        bit = F.when(spark_projection(v, hyperplane(j, dim)) > 0, F.lit(1 << j)).otherwise(0)
+        bit = S.when(_projection(v, hyperplane(j, dim)) > 0, S.lit(1 << j)).otherwise(0)
         bucket = bit if bucket is None else bucket + bit
-    return bucket.cast("long")
+    return F.expr(bucket.cast("long").sql)
 
 
 def sql_lsh_bucket(v: str, n_planes: int, dim: int = EMBED_DIM) -> str:

@@ -209,13 +209,13 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "embedding",
         "label",
-        spark_lsh_bucket(F.col("embedding"), 8).alias("bucket"),
-        spark_dot(F.col("embedding"), F.col("embedding")).alias("n2"),
+        spark_lsh_bucket("embedding", 8).alias("bucket"),
+        spark_dot("embedding", "embedding").alias("n2"),
     )
     a = b.alias("a")
     c = b.alias("c")
     cos = F.round(
-        spark_dot(F.col("a.embedding"), F.col("c.embedding"))
+        spark_dot("a.embedding", "c.embedding")
         / F.sqrt(F.col("a.n2") * F.col("c.n2")),
         12,
     )

@@ -570,15 +570,15 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.where(F.col("vec_id") % 100 == 0).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qv")
     )
-    q = q.withColumn("nq2", spark_dot(F.col("qv"), F.col("qv")))
+    q = q.withColumn("nq2", spark_dot("qv", "qv"))
     q = guard_broadcast_query(q)
     c = e.select(
         F.col("vec_id").alias("cid"),
         F.col("embedding").alias("cv"),
-        spark_dot(F.col("embedding"), F.col("embedding")).alias("nc2"),
+        spark_dot("embedding", "embedding").alias("nc2"),
     )
     pairs = c.crossJoin(F.broadcast(q)).where(F.col("cid") != F.col("qid"))
-    dot = spark_dot(F.col("qv"), F.col("cv"))
+    dot = spark_dot("qv", "cv")
     scored = pairs.select(
         "qid", "cid", F.round(dot / F.sqrt(F.col("nq2") * F.col("nc2")), 12).alias("cosine")
     )
@@ -622,7 +622,7 @@ def ann_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Hyperplanes are plan-time literal constants — identical in the oracle."""
     e = load_table(spark, sf_dir, "embeddings")
     b = e.select(
-        "vec_id", "embedding", spark_lsh_bucket(F.col("embedding"), _N_PLANES).alias("bucket")
+        "vec_id", "embedding", spark_lsh_bucket("embedding", _N_PLANES).alias("bucket")
     )
     # per-vector self-norms computed once per side, not per candidate pair
     # (same rewrite as ann_cosine_topk — bit-identical arithmetic)
@@ -630,16 +630,16 @@ def ann_lsh_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qv"),
         "bucket",
-        spark_dot(F.col("embedding"), F.col("embedding")).alias("nq2"),
+        spark_dot("embedding", "embedding").alias("nq2"),
     )
     c = b.select(
         F.col("vec_id").alias("cid"),
         F.col("embedding").alias("cv"),
         F.col("bucket").alias("cbucket"),
-        spark_dot(F.col("embedding"), F.col("embedding")).alias("nc2"),
+        spark_dot("embedding", "embedding").alias("nc2"),
     )
     pairs = c.join(F.broadcast(q), (F.col("bucket") == F.col("cbucket")) & (F.col("cid") != F.col("qid")))
-    dot = spark_dot(F.col("qv"), F.col("cv"))
+    dot = spark_dot("qv", "cv")
     scored = pairs.select(
         "qid", "cid", "bucket", F.round(dot / F.sqrt(F.col("nq2") * F.col("nc2")), 12).alias("cosine")
     )
@@ -739,14 +739,14 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-vector self-norms once per side — the assignment cross-join was
     # re-evaluating the row's own 64-term norm for each of the 16 centroids
     # (and the centroid's for every row); bit-identical arithmetic
-    e = e.withColumn("n2", spark_dot(F.col("embedding"), F.col("embedding")))
+    e = e.withColumn("n2", spark_dot("embedding", "embedding"))
     cent = e.where(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("cv"),
         F.col("n2").alias("cn2"),
     )
     sim = F.round(
-        spark_dot(F.col("embedding"), F.col("cv"))
+        spark_dot("embedding", "cv")
         / F.sqrt(F.col("n2") * F.col("cn2")),
         12,
     )
@@ -785,7 +785,7 @@ def ann_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = cells.join(F.broadcast(probes), "cell").where(F.col("cid") != F.col("qid"))
     cosine = F.round(
-        spark_dot(F.col("qv"), F.col("cand_v"))
+        spark_dot("qv", "cand_v")
         / F.sqrt(F.col("q_n2") * F.col("cand_n2")),
         12,
     )
@@ -1334,14 +1334,14 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     # per-vector self-norm once, reused by the centroid assignment AND both
     # sides of the within-cell pair pass (bit-identical arithmetic)
-    e = e.withColumn("n2", spark_dot(F.col("embedding"), F.col("embedding")))
+    e = e.withColumn("n2", spark_dot("embedding", "embedding"))
     cent = e.where(F.col("vec_id") < _SEMDEDUP_K).select(
         F.col("vec_id").alias("centroid_id"),
         F.col("embedding").alias("cv"),
         F.col("n2").alias("cn2"),
     )
     sim = F.round(
-        spark_dot(F.col("embedding"), F.col("cv"))
+        spark_dot("embedding", "cv")
         / F.sqrt(F.col("n2") * F.col("cn2")),
         12,
     )
@@ -1369,7 +1369,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n2").alias("b_n2"),
     )
     pair_cos = F.round(
-        spark_dot(F.col("av"), F.col("bv"))
+        spark_dot("av", "bv")
         / F.sqrt(F.col("a_n2") * F.col("b_n2")),
         12,
     )
@@ -1427,14 +1427,20 @@ def _km_dist_spark(vec, cvec):
     # the first term = the unrolled chain's exact left-associated addition
     # order (the operators/similarity.py spark_dot rewrite) in a 4-node
     # expression instead of a 255-node tree.
+    # (SQL lambdas with fixed names: two builds print the same plan)
+    from rwa_calculator_spark.functions import sqltext as S
+
     def _sq(x, y):
         d = x.cast("double") - y.cast("double")
         return d * d
 
-    z = F.zip_with(vec, cvec, _sq)
-    return F.aggregate(
-        F.slice(z, 2, _KM_DIM - 1), F.element_at(z, 1), lambda acc, t: acc + t
+    z = S.zip_with(S.expr(vec), S.expr(cvec), _sq)
+    fold = S.aggregate(
+        S.call("slice", z, S.lit(2), S.lit(_KM_DIM - 1)),
+        S.call("element_at", z, S.lit(1)),
+        lambda acc, t: acc + t,
     )
+    return F.expr(fold.sql)
 
 
 def _km_dist_sql(v: str, c: str) -> str:
@@ -1506,7 +1512,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _assign(e: DataFrame, c: DataFrame) -> DataFrame:
         pairs = e.crossJoin(F.broadcast(c)).withColumn(
-            "dist", _km_dist_spark(F.col("embedding"), F.col("cvec"))
+            "dist", _km_dist_spark("embedding", "cvec")
         )
         w = W.partitionBy("vec_id").orderBy(F.col("dist").asc(), F.col("cid").asc())
         return (

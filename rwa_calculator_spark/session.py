@@ -42,6 +42,15 @@ def apply_session_tuning(spark: SparkSession | None = None) -> None:
       explicit total orderings). Measured: ``facility_undrawn_waterfall``
       8.5 s → 4.3 s per run (vanilla local[8], sf0.01, 4 interleaved reps).
 
+    JVM level (once per gateway; every session of the process shares it):
+    - single-type imports of ``org.apache.spark.sql.functions`` and
+      ``org.apache.spark.api.python.PythonUtils``. PySpark resolves both by
+      simple name on every ``F.lit``/``F.col``/unary-operator call and
+      every list-to-``Seq`` conversion; resolved through its wildcard
+      imports, each lookup first searches the classpath's jars for a
+      missing class. The names resolve to the same classes either way
+      (tests/test_pins.py).
+
     Static confs — ``spark.sql.codegen.cache.maxEntries``, the JVM side of
     the debugging conf, driver memory — are fixed when the SparkContext or
     session state is created: only `build_session` can set them, at
@@ -57,12 +66,30 @@ def apply_session_tuning(spark: SparkSession | None = None) -> None:
         pass
     if spark is None:
         return
+    _import_jvm_classes(spark.sparkContext._jvm)
     key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
     try:
         if spark.conf.get(key, None) != "true":
             spark.conf.set(key, "true")
     except Exception:  # noqa: BLE001 — tuning, never fail a query over it
         pass
+
+
+_IMPORTED_INTO: list = []  # the JVM views already given the imports below
+
+
+def _import_jvm_classes(jvm) -> None:
+    if any(v is jvm for v in _IMPORTED_INTO):
+        return
+    try:
+        from py4j.java_gateway import java_import
+
+        java_import(jvm, "org.apache.spark.sql.functions")
+        java_import(jvm, "org.apache.spark.api.python.PythonUtils")
+        _IMPORTED_INTO.append(jvm)
+    except Exception:  # noqa: BLE001 — tuning, never fail over it
+        pass
+
 
 def default_parallelism() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -77,7 +104,7 @@ def codegen_compiles(spark: SparkSession) -> int:
     The counter is process-wide: every session and every concurrent job in
     the JVM adds to it, so a delta taken around one call is exact only when
     nothing else runs beside it."""
-    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    metrics = getattr(spark.sparkContext._jvm, "org.apache.spark.metrics.source.CodegenMetrics")
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
@@ -145,9 +172,9 @@ def build_session(
     # stderr. Quiet that one logger; every other RDD warning still shows.
     try:
         jvm = spark.sparkContext._jvm
-        jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
+        getattr(jvm, "org.apache.logging.log4j.core.config.Configurator").setLevel(
             "org.apache.spark.rdd.MapPartitionsRDD",
-            jvm.org.apache.logging.log4j.Level.ERROR,
+            getattr(jvm, "org.apache.logging.log4j.Level").ERROR,
         )
     except Exception:
         pass  # logging-only tuning; never fail session build over it

@@ -11,19 +11,27 @@ Usage:
       physical plan before execution and of the final adaptive plan after
       it, the result row count and an order-insensitive result-row hash.
       Run it at two commits and diff the output: a refactor that claims
-      identical output must print identical lines.
+      identical output must print identical lines. Each line also carries
+      the plan build's cost: its non-detach py4j commands (`build_py4j`)
+      and its top-level DataFrame calls (`build_df_calls`: DataFrame
+      method calls plus frames built straight from the JVM, such as
+      `spark.sql` or `sqltext.select_sql`; calls made inside another
+      DataFrame method are not counted).
 
 The data directory comes from SPARK_GRAFT_SF_DIR (default sf0.1 for plan
 capture, sf0.01 for parity).
 """
 from __future__ import annotations
 
+import functools
 import hashlib
 import json
 import os
 import re
 import sys
+import types
 from collections import Counter
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -76,12 +84,63 @@ def result_hash(df, rows) -> str:
     return hashlib.sha256("\n".join(lines).encode()).hexdigest()
 
 
+_DETACH = "m\nd\n"  # py4j memory-detach: handle GC, not program traffic
+
+
+@contextmanager
+def build_cost():
+    """Count non-detach py4j commands and top-level DataFrame method calls
+    made inside the block; yields a dict filled in on exit."""
+    from py4j.java_gateway import GatewayClient
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    cost = {"py4j": 0, "df_calls": 0}
+    depth = [0]
+    patched = [(GatewayClient, "send_command", GatewayClient.send_command)]
+    real_send = GatewayClient.send_command
+
+    def send_command(client, command, *a, **k):
+        if not command.startswith(_DETACH):
+            cost["py4j"] += 1
+        return real_send(client, command, *a, **k)
+
+    def wrap(fn):
+        @functools.wraps(fn)
+        def call(*a, **k):
+            # pyspark's DataFrame.__new__ runs __init__ on the new frame
+            # before Python runs it again: count each frame once
+            again = fn.__name__ == "__init__" and "_jdf" in vars(a[0])
+            if depth[0] == 0 and not again:
+                cost["df_calls"] += 1
+            depth[0] += 1
+            try:
+                return fn(*a, **k)
+            finally:
+                depth[0] -= 1
+
+        return call
+
+    GatewayClient.send_command = send_command
+    for name, fn in list(vars(DataFrame).items()):
+        if isinstance(fn, types.FunctionType) and (
+            not name.startswith("_") or name == "__init__"
+        ):
+            patched.append((DataFrame, name, fn))
+            setattr(DataFrame, name, wrap(fn))
+    try:
+        yield cost
+    finally:
+        for owner, name, fn in patched:
+            setattr(owner, name, fn)
+
+
 def parity(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     registry = load_all()
     spark = build_session(app_name="capture-plans-parity")
     for name in names:
-        df = registry[name].fn(spark, sf_dir)
+        with build_cost() as cost:
+            df = registry[name].fn(spark, sf_dir)
         before = operator_counts(_formatted(df))
         rows = df.collect()
         after = operator_counts(_formatted(df))
@@ -89,6 +148,8 @@ def parity(names: list[str]) -> None:
             json.dumps(
                 {
                     "query": name,
+                    "build_py4j": cost["py4j"],
+                    "build_df_calls": cost["df_calls"],
                     "rows": len(rows),
                     "hash": result_hash(df, rows),
                     "plan_before": before,

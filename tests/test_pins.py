@@ -26,6 +26,13 @@ instead of silently re-inflating cost or reshaping output
 - Input validation evaluates its check registry in one pass per table, so
   sealing the error channel runs a handful of Spark jobs, not one scan
   per check.
+- ``session.apply_session_tuning`` imports pyspark's two most-resolved
+  JVM classes by name; the simple names must still reach the classes
+  pyspark's wildcard imports found.
+- The SA and IRB branches build as SQL text (``functions.sqltext``): a
+  Column-built branch costs thousands of py4j round trips.
+- Building a bench query twice prints the same optimized plan, so a
+  repeat run reuses its generated classes.
 """
 
 from __future__ import annotations
@@ -218,3 +225,73 @@ def test_sealed_error_edge_job_count(spark, sf_dir, tmp_path):
     bus.waitUntilEmpty()
     jobs = set(tracker.getJobIdsForGroup("edge:errors")) - before
     assert 0 < len(jobs) <= 8, sorted(jobs)
+
+
+def test_jvm_class_imports_resolve_to_the_same_classes(spark):
+    jvm = spark.sparkContext._jvm
+    assert jvm.functions._fqn == "org.apache.spark.sql.functions"
+    assert jvm.PythonUtils._fqn == "org.apache.spark.api.python.PythonUtils"
+
+
+def _non_detach_commands(fn):
+    from py4j.java_gateway import GatewayClient
+
+    calls = [0]
+    real = GatewayClient.send_command
+
+    def counting(client, command, *a, **k):
+        if not command.startswith("m\nd\n"):  # memory-detach: handle GC
+            calls[0] += 1
+        return real(client, command, *a, **k)
+
+    GatewayClient.send_command = counting
+    try:
+        out = fn()
+    finally:
+        GatewayClient.send_command = real
+    return out, calls[0]
+
+
+def test_sa_and_irb_branches_build_in_few_py4j_commands(spark, sf_dir, monkeypatch):
+    """The star book's SA + IRB branches build in under 2,000 py4j
+    commands (~7k when each expression was a Column)."""
+    from rwa_calculator_spark.engine import pipeline
+    from rwa_calculator_spark.engine.rulepack import CRR_PACK
+    from rwa_calculator_spark.plans import rwa
+
+    counts = []
+    for name in ("run_sa", "run_irb"):
+        real = getattr(pipeline, name)
+
+        def counted(*a, _real=real, **k):
+            out, n = _non_detach_commands(lambda: _real(*a, **k))
+            counts.append(n)
+            return out
+
+        monkeypatch.setattr(pipeline, name, counted)
+    bundle = rwa._star_bundle(spark, sf_dir, irb=True)
+    pipeline.run_pipeline(bundle, pipeline.PipelineConfig(pack=CRR_PACK))
+    assert len(counts) == 2
+    assert sum(counts) <= 2000, counts
+
+
+def test_bench_query_plans_repeat_between_builds(spark, sf_dir):
+    import re
+
+    from rwa_calculator_spark.plans import load_all
+
+    registry = load_all()
+    engine = ("rwa_pipeline_irb", "rwa_pipeline_sa")
+    queries = sorted(n for n, s in registry.items() if s.bench and n not in engine)
+    assert len(queries) == 12
+
+    # expression ids differ by construction: attribute #ids, plan_id tags
+    # and the With-expression ids of _common_expr_N
+    ids = re.compile(r"#\d+L?|plan_id=\d+|(?<=_common_expr_)\d+")
+
+    def plan_text(name):
+        opt = registry[name].fn(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
+        return ids.sub("", opt.toString())
+
+    for name in queries:
+        assert plan_text(name) == plan_text(name), name
