@@ -26,13 +26,7 @@ from typing import Any, Mapping
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from rwa_calculator_spark.functions.sqltext import (
-    Expr,
-    Projection,
-    quote,
-    select_sql,
-    sql_literal,
-)
+from rwa_calculator_spark.functions.sqltext import Expr, quote, select_sql, sql_literal
 
 
 @dataclass(frozen=True)
@@ -68,15 +62,10 @@ def ensure_columns(df: DataFrame, specs: Mapping[str, ColumnSpec]) -> DataFrame:
     return select_sql(df, exprs + [quote(c) for c in passthrough])
 
 
-def fill_absent(frame: Projection, specs: Mapping[str, ColumnSpec]) -> frozenset[str]:
-    """Add every absent spec column to the pending projection as its typed
-    default and leave the present ones untouched (no cast). Returns the
-    set of columns the input carried."""
-    carried = frozenset(frame.columns)
-    frame.with_columns(
-        {n: Expr(_cast_sql(n, s, False)) for n, s in specs.items() if n not in carried}
-    )
-    return carried
+def absent_defaults(present, specs: Mapping[str, ColumnSpec]) -> dict[str, Expr]:
+    """The typed default of every spec column missing from `present`, as
+    a SQL expression (no cast of the present ones)."""
+    return {n: Expr(_cast_sql(n, s, False)) for n, s in specs.items() if n not in present}
 
 
 def conform(df: DataFrame, specs: Mapping[str, ColumnSpec]) -> DataFrame:

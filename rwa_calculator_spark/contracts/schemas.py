@@ -13,9 +13,8 @@ Sealing is OPT-IN at the bundle boundary: `seal_bundle(raw)` conforms every
 present frame; callers that build frames programmatically (tests, the
 driver queries) skip it. Inside the engine, the calculator input edge is
 declared once (`CALC_EDGE`, below): every calculator branch conforms its
-input to it, so an absent optional carrier arrives as its typed default,
-and only the few carriers whose absence selects a cheaper plan (a skipped
-join or array fold) are tested, against the set the input really carried.
+input to it, so an absent optional carrier reads as its typed default and
+prices exactly like a column holding that default.
 Cost at 100 TB: pure `select` + literal injection — Catalyst folds it into
 the scan projection; no shuffle, no UDF.
 """
@@ -31,13 +30,13 @@ from pyspark.sql import types as T
 
 from rwa_calculator_spark.contracts.column_spec import (
     ColumnSpec,
+    absent_defaults,
     ensure_columns,
-    fill_absent,
 )
 
 if TYPE_CHECKING:  # the engine package imports this module's CALC_EDGE
     from rwa_calculator_spark.engine.bundles import RawBundle
-    from rwa_calculator_spark.functions.sqltext import Projection
+    from rwa_calculator_spark.functions.sqltext import Expr
 
 _S = T.StringType()
 _D = T.DoubleType()
@@ -364,13 +363,10 @@ MG_STACK = T.ArrayType(
 )
 
 #: The calculator input edge: every optional carrier a calculator branch
-#: (SA, IRB, SEC-SA, slotting, equity, and the CIU/settlement ledger) reads
-#: and whose absent path is a default, with its dtype and that default.
-#: `conform_calc_edge` fills the absent ones in one projection, so branch
-#: code reads them directly. The carriers marked GATE select a cheaper plan
-#: when the input never carried them (no join, no array fold, no split);
-#: absent and default price the same there, and the calculators test them
-#: against the set the input really carried only to skip the build.
+#: (SA, IRB, SEC-SA, slotting, equity, and the CIU/settlement ledger) reads,
+#: with its dtype and its default. An absent carrier reads as its default
+#: (`calc_edge_defaults`), so a ledger value is a function of column values
+#: only; a null carrier's meaning is written out in the SQL that reads it.
 CALC_EDGE: Mapping[str, ColumnSpec] = {
     # CRM components: zero where no CRM frame fed them (the branches
     # coalesce a carried amount's nulls to 0.0 as well)
@@ -434,6 +430,9 @@ CALC_EDGE: Mapping[str, ColumnSpec] = {
         "sl_project_phase",
         "equity_type",
         "equity_transitional_approach",
+        # derived where null (calculators._provenance)
+        "risk_type",
+        "ultimate_parent_reference",
     ),
     **_nulls(
         _D,
@@ -497,6 +496,10 @@ CALC_EDGE: Mapping[str, ColumnSpec] = {
         "equity_transitional_rw",
         "double_default_unfunded_protection",
         "irb_lgd_double_default",
+        # derived where null (calculators._provenance)
+        "guarantee_coverage_pct",
+        "guarantee_effective_coverage_pct",
+        "final_ead",
     ),
     **_nulls(
         _B,
@@ -524,6 +527,7 @@ CALC_EDGE: Mapping[str, ColumnSpec] = {
         "collateral_references",
         "collateral_types",
         "provision_references",
+        "guarantee_references",
     ),
     "original_maturity_date": ColumnSpec(_DT),
     # -- SA / IRB / slotting inputs read as values --------------------------
@@ -581,7 +585,29 @@ CALC_EDGE: Mapping[str, ColumnSpec] = {
     ),
     "facility_termination_date": ColumnSpec(_DT),
     "guarantor_references": ColumnSpec(_AS),
-    # -- GATE carriers: absent selects a cheaper plan ----------------------
+    # B3.1 RE-LTV bands: a null LTV prices the LTV-free limbs (ADC, other
+    # RE) and leaves the band and loan-split limbs to the flat weight (with
+    # is_other_re, also a plan gate)
+    "ltv": ColumnSpec(_D),
+    # Art.122(6)/(8) under the IG election: no assessment is not
+    # investment grade (the reference's Boolean null-fill)
+    "is_investment_grade": ColumnSpec(_B, False),
+    # the declared '% guaranteed'; null reports the post-haircut figure
+    "g_coverage_declared": ColumnSpec(_D),
+    # the IRB guarantor-PD leg: a null PD substitutes no parameters and
+    # is not double-default eligible
+    "guarantor_pd": ColumnSpec(_D),
+    # other funded protection, one (value, substitute RW) pair per channel:
+    # a null value is no protection on that channel
+    **_nulls(_D, "li_value", "li_rw", "tpd_value", "tpd_rw", "fcsm_value", "fcsm_rw"),
+    # the SME factor's group aggregate: null prices the factor at 1.0
+    "group_drawn": ColumnSpec(_D),
+    # model-permission routing: all three grants null means the registry
+    # was not consulted, and approach_permitted comes from the bundle's
+    # blanket flag (false: standardised)
+    **_nulls(_B, "model_airb_permitted", "model_firb_permitted", "model_slotting_permitted"),
+    "has_irb_permission": ColumnSpec(_B, False),
+    # -- carriers that also gate a plan (calculators module docstring) ---
     # covered bonds (+ the bond's own CQS, emitted alongside by hierarchy)
     "is_covered_bond": ColumnSpec(_B, False),
     "cb_cqs": ColumnSpec(_I),
@@ -592,16 +618,17 @@ CALC_EDGE: Mapping[str, ColumnSpec] = {
     # short-term ECAI tables (original maturity also feeds value reads)
     "has_short_term_ecai": ColumnSpec(_B, False),
     "original_maturity_years": ColumnSpec(_D),
-    # Art.123B hedge waiver: no ratio, no coverage test
+    # Art.123B hedge waiver: a null ratio is no coverage test
     "hedge_coverage_ratio": ColumnSpec(_D),
     # EU-domestic guarantor ladder
     "g_country": ColumnSpec(_S),
     # the CRM stage's multi-guarantee stack
     "_mg": ColumnSpec(MG_STACK),
-    # supporting factors: no revenue carrier prices every factor at 1.0
-    # (the IRB SME correlation adjustment reads the 0.0 default)
+    # supporting factors (the IRB SME correlation adjustment reads the
+    # 0.0 default as unknown sales)
     "annual_revenue": ColumnSpec(_D, 0.0),
-    # SEC-SA tranche grain / SEC-IRBA pool parameters
+    # SEC-SA tranche grain / SEC-IRBA pool parameters: a null attachment
+    # is pool grain (flat SEC-SA), a null K_IRB is no SEC-IRBA
     **_nulls(_D, "attachment", "detachment", "k_irb", "pool_n", "pool_lgd", "pool_maturity"),
     # -- equity holdings ----------------------------------------------------
     **_falses(
@@ -612,51 +639,20 @@ CALC_EDGE: Mapping[str, ColumnSpec] = {
     ),
     "business_age_years": ColumnSpec(_D),
     "equity_subtype": ColumnSpec(_S),
-    # GATE: the PD/LGD election splits the branch; net-short netting needs
-    # both the signed position and its issuer
+    # the PD/LGD election; net-short netting needs both the signed
+    # position and its issuer
     "use_pd_lgd": ColumnSpec(_B, False),
     "position_value": ColumnSpec(_D),
     "issuer_reference": ColumnSpec(_S),
 }
 
 
-#: Optional calculator carriers with NO default: an absent one selects a
-#: different derivation than any value it could carry, so it is never
-#: filled, and the calculators read it only where `carried` holds it.
-#: Declared here for its dtype.
-CALC_EDGE_GATES: Mapping[str, T.DataType] = {
-    # B3.1 RE-LTV bands: an RE row with a null LTV still seals its
-    # Art.124A qualification carriers, an absent column seals null
-    "ltv": _D,
-    # Art.122(6)/(8): an absent grade is not "not investment grade"
-    "is_investment_grade": _B,
-    # the declared '% guaranteed'; absent, the coverage carrier reports
-    # the post-haircut figure
-    "g_coverage_declared": _D,
-    # the IRB guarantor-PD Vasicek leg: under CRR it seals the Art.202
-    # double-default eligibility (false) that an absent column leaves null
-    "guarantor_pd": _D,
-    # other funded protection: the CRM stage emits the three channels
-    # together; they seal the FCSM decomposition carriers
-    **{c: _D for c in ("li_value", "li_rw", "tpd_value", "tpd_rw", "fcsm_value", "fcsm_rw")},
-    # the SME factor's group aggregate: absent prices the factor at 1.0,
-    # a null aggregate at the tier-1 factor
-    "group_drawn": _D,
-    # model-permission routing (the three grants are emitted together);
-    # absent, approach_permitted comes from has_irb_permission
-    **{c: _B for c in ("model_airb_permitted", "model_firb_permitted", "model_slotting_permitted")},
-}
-
-
-def conform_calc_edge(
-    frame: "Projection", names: tuple[str, ...] | None = None
-) -> frozenset[str]:
-    """Fill every absent `CALC_EDGE` carrier (or the `names` subset) with
-    its typed default, as one more step of the frame's pending projection
-    (`functions.sqltext.Projection`). Returns the columns the input really
-    carried — the only presence test the calculators make."""
+def calc_edge_defaults(present, names=None) -> dict[str, "Expr"]:
+    """The typed default (SQL) of every `CALC_EDGE` carrier, or of the
+    `names` subset, that `present` lacks."""
     specs = CALC_EDGE if names is None else {n: CALC_EDGE[n] for n in names}
-    return fill_absent(frame, specs)
+    return absent_defaults(present, specs)
+
 
 #: Vendor-header → canonical-name translation (ref engine/loader.py alias
 #: translation). Keys are POST-normalisation (lowercased, separators

@@ -20,22 +20,33 @@ guarantee coverage, RW provenance, EL decomposition).
 
 Input contract (ref contracts/edges.py EdgeContract.conform): every branch
 entry conforms its input to `contracts.schemas.CALC_EDGE`, which declares
-each optional carrier a calculator reads with its dtype and default. One
-projection fills the absent carriers with typed literals and reports the
-set the input really carried. Two kinds of carrier follow from that:
+each optional carrier a calculator reads with its dtype and default. There
+is one kind of carrier: an absent one reads as its default — in the
+branch filter, in the provenance fills and in every expression after the
+entry — so a ledger value is a function of column values only, and an
+edge without a carrier prices exactly like one holding its default. Where
+a null carrier means something of its own (no guarantor PD, no funded-
+protection channel, no group aggregate, no model grants), the SQL that
+reads it writes that case out, so the literal an absent carrier gets
+folds the leg away and the optimised plan is the one that never rendered
+it.
 
-- fills: a carrier whose absent path is its default is read directly
-  (``S.col(x)``); Catalyst folds the literal wherever the input lacked it.
-- gates: a carrier whose absence selects a cheaper plan (a broadcast join
-  not built, an array fold not run: covered bonds, the SCRA, sovereign-
-  derived and short-term tables, the ``_mg`` stack, SEC tranche grain) is
-  tested against that ``carried`` set, passed down explicitly. Absent and
-  default give the same ledger there too; the gate only saves the build.
-  The carriers of `CALC_EDGE_GATES` (RE-LTV bands, the guarantor-PD
-  Vasicek leg, the other-funded-protection channels, model-permission
-  routing, ...) have no default at all: they are never filled and are
-  read only where ``carried`` holds them. A gate decides which SQL
-  fragments are rendered at all; a fill is always rendered.
+Plan gates: the branches still test which carriers their input really
+carried, but only to skip building what an absent carrier's default
+would leave unmatched, unread or folded away — the ledger is the same
+either way (tests/test_calc_edge.py). Pack-table joins in `run_sa`:
+``is_covered_bond`` (the covered-bond ladder and derivation tables),
+``ltv`` with ``is_other_re`` (the B3.1 counterparty ladder of the RE
+loan-split and other-RE limbs), ``sovereign_cqs`` (the sovereign-derived
+institution, PSE and RGLA tables), ``scra_grade`` (the SCRA and SCRA
+short-term tables), ``original_maturity_years`` (the ECRA short-term
+table), ``has_short_term_ecai`` (the short-term ECAI tables),
+``eca_meip_score`` (the ECA MEIP table) and ``g_country`` (the
+EU-domestic guarantor table). Large folds, which Catalyst would parse,
+analyse and then fold away on every build: the ``_mg`` stack folds
+(`run_sa`, `run_irb`), the guarantor-PD Vasicek leg (``guarantor_pd``,
+`run_irb`) and the SSFA closed forms (``attachment``, ``k_irb``,
+`run_secsa`).
 
 Build shape (``functions/sqltext.py``): every expression is SQL text built
 in Python — ``S.when``/``S.coalesce``/``S.col`` mirror the Column API, the
@@ -55,7 +66,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from rwa_calculator_spark.contracts.schemas import CALC_EDGE, conform_calc_edge
+from rwa_calculator_spark.contracts.schemas import MG_STACK, calc_edge_defaults
 from rwa_calculator_spark.engine.bundles import CalcOutput, CRMOutput
 from rwa_calculator_spark.engine.rulepack import RulePack
 from rwa_calculator_spark.functions import sqltext as S
@@ -418,142 +429,132 @@ _RISK_TYPE_BY_ETYPE = {
 }
 
 
-def _provenance(carried: frozenset, default_risk_type: str) -> dict[str, Expr]:
+def _provenance(default_risk_type: str) -> dict[str, Expr]:
     """The provenance carriers a conformed branch frame derives from its
-    other columns (the null-default ones arrive from CALC_EDGE).
+    other columns where it carries none.
 
     `risk_type` derives from exposure_type where the unified ledger carries
     one (CCR/SFT synthetic netting-set rows, securitisation pools); branches
     built outside the hierarchy union (equity, CIU, settlement) pass their
     own default."""
-    out: dict[str, Expr] = {}
-
-    def own(c: str) -> Expr:
-        # a carrier replaced below: absent, it reads as its null default
-        return S.col(c) if c in carried else S.null(CALC_EDGE[c].dtype.simpleString())
-
-    if "risk_type" not in carried:
-        rt = S.lit(default_risk_type)
-        for etype, label in _RISK_TYPE_BY_ETYPE.items():
-            rt = S.when(S.col("exposure_type") == etype, label).otherwise(rt)
-        out["risk_type"] = rt
-    # round-5 carrier: the resolved group apex where the frame went through
-    # the hierarchy stage, else null
-    if "ultimate_parent_reference" not in carried:
-        out["ultimate_parent_reference"] = S.col("group_reference")
-    # identity fills:
-    # - source_exposure_reference: a never-split row is its own source
-    # - facility-structure identities for bundles with no facility data
-    #   (no parent, depth 0, own 1-element path; ref schemas.py:2911-2915)
-    # - parent_exposure_reference (ref :2885 "original exposure before
-    #   multi-guarantor split"): this engine never row-splits on guarantors
-    #   (portions stay on-row), so the parent IS the row's own reference
-    out["exposure_has_parent"] = S.coalesce(own("exposure_has_parent"), S.lit(False))
-    out["facility_hierarchy_depth"] = S.coalesce(own("facility_hierarchy_depth"), S.lit(0))
-    if "exposure_reference" in carried:
-        ref = S.col("exposure_reference")
-        out["source_exposure_reference"] = S.coalesce(own("source_exposure_reference"), ref)
-        out["facility_hierarchy_path"] = S.coalesce(
-            own("facility_hierarchy_path"), S.array(ref)
-        )
-        out["parent_exposure_reference"] = S.coalesce(own("parent_exposure_reference"), ref)
-    # approach_permitted (ref :2935): the permission grant routing
-    # consulted — model-permission grants where that stage ran, else the
-    # bundle's blanket has_irb_permission flag
-    if "model_airb_permitted" in carried:
-        out["approach_permitted"] = (
-            S.when(S.coalesce("model_airb_permitted", S.lit(False)), "AIRB")
-            .when(S.coalesce("model_firb_permitted", S.lit(False)), "FIRB")
-            .when(S.coalesce("model_slotting_permitted", S.lit(False)), "SLOTTING")
-            .otherwise("SA")
-        )
-    elif "has_irb_permission" in carried:
-        out["approach_permitted"] = S.when(
-            S.coalesce("has_irb_permission", S.lit(False)), "AIRB"
-        ).otherwise("SA")
-    # guarantee id lists: the crm stack where present, else a 0/1-element
-    # list from the scalar (single first-wins guarantee — recorded narrowing)
-    out["guarantor_references"] = S.coalesce(
-        own("guarantor_references"),
-        S.when(
-            S.col("guarantor_reference").isNotNull(),
-            S.array(S.col("guarantor_reference")),
-        ),
-    )
-    if "guarantee_references" not in carried:
-        out["guarantee_references"] = S.when(
-            S.col("guarantee_reference").isNotNull(),
-            S.array(S.col("guarantee_reference")),
-        )
-    # guarantee_coverage_pct carries the DECLARED '% guaranteed' (ref
-    # contract); the Art.233(3) post-haircut figure seals separately as
-    # guarantee_effective_coverage_pct
+    rt = S.lit(default_risk_type)
+    for etype, label in _RISK_TYPE_BY_ETYPE.items():
+        rt = S.when(S.col("exposure_type") == etype, label).otherwise(rt)
+    ref = S.col("exposure_reference")
     g = S.coalesce("g_coverage", S.lit(0.0))
-    if "guarantee_coverage_pct" not in carried:
-        out["guarantee_coverage_pct"] = (
-            S.col("g_coverage_declared") if "g_coverage_declared" in carried else g
-        )
-    if "guarantee_effective_coverage_pct" not in carried:
-        out["guarantee_effective_coverage_pct"] = g
-    # final_ead: the figure RWA actually priced on
-    if "final_ead" not in carried:
-        out["final_ead"] = (
-            S.col("ead_after_crm")
-            if "ead_after_crm" in carried
-            else (S.col("ead") if "ead" in carried else S.null("double"))
-        )
-    # substitution-free branches: the hypothetical equals the actual (only
-    # frames that already carry rwa — SA/IRB set their own downstream)
-    if "rwa_pre_crm_substitution" not in carried and "rwa" in carried:
-        out["rwa_pre_crm_substitution"] = S.col("rwa")
-    return out
-
-
-def _conform_with(exp: DataFrame, fills) -> tuple[Projection, frozenset]:
-    """Conform `exp` to CALC_EDGE and add ``fills(carried)`` in the same
-    step: the carriers the fills define are not conformed first (a
-    redefinition would start a second ``selectExpr``)."""
-    proj = Projection(exp)
-    carried = frozenset(proj.columns)
-    defs = fills(carried)
-    conform_calc_edge(proj, tuple(n for n in CALC_EDGE if n not in defs))
-    return proj.with_columns(defs), carried
-
-
-def _provenance_cols(exp: DataFrame, default_risk_type: str = "CREDIT") -> Projection:
-    """Conform a ledger frame built outside the CRM edge (CIU, settlement)
-    to CALC_EDGE and seal its provenance carriers."""
-    return _conform_with(exp, lambda carried: _provenance(carried, default_risk_type))[0]
+    return {
+        "risk_type": S.coalesce(S.col("risk_type"), rt),
+        # round-5 carrier: the resolved group apex where the frame went
+        # through the hierarchy stage, else null
+        "ultimate_parent_reference": S.coalesce(
+            "ultimate_parent_reference", "group_reference"
+        ),
+        # identity fills:
+        # - source_exposure_reference: a never-split row is its own source
+        # - facility-structure identities for bundles with no facility data
+        #   (no parent, depth 0, own 1-element path; ref schemas.py:2911-2915)
+        # - parent_exposure_reference (ref :2885 "original exposure before
+        #   multi-guarantor split"): this engine never row-splits on
+        #   guarantors (portions stay on-row), so the parent IS the row's
+        #   own reference
+        "exposure_has_parent": S.coalesce("exposure_has_parent", S.lit(False)),
+        "facility_hierarchy_depth": S.coalesce("facility_hierarchy_depth", S.lit(0)),
+        "source_exposure_reference": S.coalesce("source_exposure_reference", ref),
+        "facility_hierarchy_path": S.coalesce("facility_hierarchy_path", S.array(ref)),
+        "parent_exposure_reference": S.coalesce("parent_exposure_reference", ref),
+        # guarantee id lists: the crm stack where present, else a 0/1-element
+        # list from the scalar (single first-wins guarantee — recorded
+        # narrowing)
+        "guarantor_references": S.coalesce(
+            "guarantor_references",
+            S.when(
+                S.col("guarantor_reference").isNotNull(),
+                S.array(S.col("guarantor_reference")),
+            ),
+        ),
+        "guarantee_references": S.coalesce(
+            "guarantee_references",
+            S.when(
+                S.col("guarantee_reference").isNotNull(),
+                S.array(S.col("guarantee_reference")),
+            ),
+        ),
+        # guarantee_coverage_pct carries the DECLARED '% guaranteed' (ref
+        # contract), else the Art.233(3) post-haircut figure, which seals
+        # separately as guarantee_effective_coverage_pct
+        "guarantee_coverage_pct": S.coalesce(
+            "guarantee_coverage_pct", "g_coverage_declared", g
+        ),
+        "guarantee_effective_coverage_pct": S.coalesce(
+            "guarantee_effective_coverage_pct", g
+        ),
+        # the figure RWA actually priced on
+        "final_ead": S.coalesce("final_ead", "ead_after_crm", "ead"),
+    }
 
 
 # CRM component amounts: zero when the branch input never went through
-# run_crm (equity) or a CRM frame was absent (CALC_EDGE defaults them to
-# 0.0; carried ones coalesce their nulls)
-_CRM_AMOUNTS = (
-    "provision_allocated",
-    "collateral_value",
-    "g_coverage",
-    "collateral_value_gross",
-    "haircut_quality",
-    "haircut_fx",
-    "haircut_maturity_mismatch",
-    "on_bs_netting_amount",
+# run_crm or a CRM frame was absent; a carried amount's nulls read as zero
+_CRM_AMOUNTS = {
+    c: S.coalesce(c, S.lit(0.0))
+    for c in (
+        "provision_allocated",
+        "collateral_value",
+        "g_coverage",
+        "collateral_value_gross",
+        "haircut_quality",
+        "haircut_fx",
+        "haircut_maturity_mismatch",
+        "on_bs_netting_amount",
+    )
+}
+
+# approach_permitted (ref :2935): the permission grant routing consulted —
+# the model-permission grants where that stage ran (it emits all three,
+# never null), else the bundle's blanket has_irb_permission flag
+_GRANTS = ("model_airb_permitted", "model_firb_permitted", "model_slotting_permitted")
+_APPROACH_PERMITTED = (
+    S.when(S.coalesce(_GRANTS[0], S.lit(False)), "AIRB")
+    .when(S.coalesce(_GRANTS[1], S.lit(False)), "FIRB")
+    .when(S.coalesce(_GRANTS[2], S.lit(False)), "SLOTTING")
+    .when(S.coalesce(*_GRANTS).isNotNull(), "SA")
+    .when(S.coalesce("has_irb_permission", S.lit(False)), "AIRB")
+    .otherwise("SA")
 )
 
 
-def _calc_entry(
-    exp: DataFrame, default_risk_type: str = "CREDIT"
-) -> tuple[Projection, frozenset]:
-    """A calculator branch's entry: conform to CALC_EDGE, zero the CRM
-    amounts and seal the provenance carriers in one more projection.
-    Returns the frame and the columns the input carried."""
+def _conform(
+    exp: DataFrame, fills: dict[str, Expr], where: Expr | None = None
+) -> Projection:
+    """Conform `exp` to CALC_EDGE in one projection: every absent carrier
+    reads as its typed default — in `where` and `fills` too, so both see
+    the same values a default-valued column would give them — and the
+    `fills` carriers are defined over the rest."""
+    proj = Projection(exp)
+    defaults = calc_edge_defaults(proj.columns)
+    if where is not None:
+        proj = proj.where(where.bind(defaults))
+    return proj.with_columns(
+        {**defaults, **{n: e.bind(defaults) for n, e in fills.items()}}
+    )
 
-    def fills(carried):
-        # an absent amount arrives as its 0.0 default; a carried one may be null
-        out = {c: S.coalesce(c, S.lit(0.0)) for c in _CRM_AMOUNTS if c in carried}
-        return {**out, **_provenance(carried, default_risk_type)}
 
-    return _conform_with(exp, fills)
+def _calc_entry(crm: CRMOutput, where: Expr) -> Projection:
+    """A calculator branch's entry: the CRM edge's `where` rows, conformed,
+    with the CRM amounts zeroed and the provenance and routing carriers
+    sealed."""
+    fills = {
+        **_CRM_AMOUNTS,
+        **_provenance("CREDIT"),
+        "approach_permitted": _APPROACH_PERMITTED,
+    }
+    return _conform(crm.exposures, fills, where)
+
+
+def _provenance_cols(exp: DataFrame, default_risk_type: str = "CREDIT") -> Projection:
+    """Conform a ledger frame built outside the CRM edge (equity, CIU,
+    settlement) to CALC_EDGE and seal its provenance carriers."""
+    return _conform(exp, _provenance(default_risk_type))
 
 
 def _param_cols(exp: Projection, pd_col=None, lgd_col=None, m_col=None) -> Projection:
@@ -700,7 +701,7 @@ def _irb_guarantee_adjust(
 
     - SA guarantor (no internal PD): RW substitution — the covered leg takes
       the guarantor's SA risk weight (CRR Art.235 / Basel 3.1 SA guarantors).
-    - IRB guarantor (``guarantor_pd`` supplied): parameter substitution —
+    - IRB guarantor (``guarantor_pd`` not null): parameter substitution —
       the covered leg re-prices through the full Vasicek kernel with the
       guarantor's floored PD, the Art.161(1) supervisory LGD selected by
       seniority/FSE status, and the guarantor-PD corporate correlation
@@ -743,16 +744,19 @@ def _irb_guarantee_adjust(
         S.null("string")
     )
 
-    has_gpd = "guarantor_pd" in carried
-    has_dd_carrier = False  # _dd_elig is stage-internal: tracked, not probed
-    if has_gpd:
+    # a null guarantor PD substitutes no parameters and is not DD
+    # eligible: every leg below reads it through `has_pd`, so an absent
+    # carrier's NULL folds the whole leg away
+    gpd = S.col("guarantor_pd")
+    has_pd = gpd.isNotNull()
+    if "guarantor_pd" in carried:
         sen = S.coalesce(S.col("guarantor_seniority"), S.lit("senior"))
         fse = S.coalesce(S.col("guarantor_is_fse"), S.lit(False))
         perf = perf.with_columns(
             {
-                "_pd_g_fl": S.greatest(
-                    S.col("guarantor_pd"),
-                    _guarantor_pd_floor_expr(pack, S.col("g_class")),
+                "_pd_g_fl": S.when(
+                    has_pd,
+                    S.greatest(gpd, _guarantor_pd_floor_expr(pack, S.col("g_class"))),
                 ),
                 "_lgd_g": S.when(
                     sen == "subordinated", pack.sql_lit("firb_lgd_subordinated")
@@ -770,40 +774,37 @@ def _irb_guarantee_adjust(
             * S.lit(12.5)
             * pack.sql_lit("irb_scaling_factor")
         )
-        guarantor_rw = S.when(S.col("guarantor_pd").isNotNull(), rw_irb_g).otherwise(
-            guarantor_rw
+        guarantor_rw = S.when(has_pd, rw_irb_g).otherwise(guarantor_rw)
+        method = S.when(has_pd, S.lit("sub_pd")).otherwise(method)
+        pd_g, lgd_g = S.col("_pd_g_fl"), S.col("_lgd_g")
+    else:  # plan gate: the Vasicek leg the null default folds away
+        pd_g = lgd_g = S.null("double")
+    dd_pack = pack.scalar("double_default_available") >= 1.0
+    if dd_pack:
+        is_airb = S.coalesce(S.col("irb_subapproach"), S.lit("")) == "airb"
+        elig_g_type = S.coalesce(S.col("g_class"), S.lit("")).isin(
+            "institution", "sovereign", "mdb"
+        ) | (
+            (S.col("g_class") == "corporate")
+            & (S.coalesce(S.col("g_cqs"), S.lit(99)) <= 2)
         )
-        method = S.when(S.col("guarantor_pd").isNotNull(), S.lit("sub_pd")).otherwise(
-            method
+        dd_elig = (
+            (g > 0)
+            & (S.col("exposure_class") == "corporate")
+            & elig_g_type
+            & has_pd
+            & is_airb
         )
-        if pack.scalar("double_default_available") >= 1.0:
-            is_airb = S.coalesce(S.col("irb_subapproach"), S.lit("")) == "airb"
-            elig_g_type = S.coalesce(S.col("g_class"), S.lit("")).isin(
-                "institution", "sovereign", "mdb"
-            ) | (
-                (S.col("g_class") == "corporate")
-                & (S.coalesce(S.col("g_cqs"), S.lit(99)) <= 2)
-            )
-            dd_elig = (
-                (g > 0)
-                & (S.col("exposure_class") == "corporate")
-                & elig_g_type
-                & S.col("guarantor_pd").isNotNull()
-                & is_airb
-            )
-            rw_dd = S.col("risk_weight") * (
-                pack.sql_lit("dd_k_base") + pack.sql_lit("dd_k_slope") * S.col("_pd_g_fl")
-            )
-            dd_applies = dd_elig & (
-                rw_dd < S.coalesce(guarantor_rw, S.POS_INF)
-            )
-            guarantor_rw = S.when(dd_applies, rw_dd).otherwise(guarantor_rw)
-            method = S.when(dd_applies, S.lit("dd")).otherwise(method)
-            # eligibility carrier staged here (where the gate is known);
-            # the APPLIED carriers seal after the Art.193(1) benefit test
-            # below, which can still decline the guarantee
-            perf = perf.with_column("_dd_elig", dd_elig)
-            has_dd_carrier = True
+        rw_dd = S.col("risk_weight") * (
+            pack.sql_lit("dd_k_base") + pack.sql_lit("dd_k_slope") * pd_g
+        )
+        dd_applies = dd_elig & (rw_dd < S.coalesce(guarantor_rw, S.POS_INF))
+        guarantor_rw = S.when(dd_applies, rw_dd).otherwise(guarantor_rw)
+        method = S.when(dd_applies, S.lit("dd")).otherwise(method)
+        # eligibility carrier staged here (where the gate is known);
+        # the APPLIED carriers seal after the Art.193(1) benefit test
+        # below, which can still decline the guarantee
+        perf = perf.with_column("_dd_elig", dd_elig)
 
     # _g_ben re-uses the guarantor_rw expression (identical value to
     # reading the _g_rw column) so all three land in one projection
@@ -832,8 +833,7 @@ def _irb_guarantee_adjust(
     # carriers (guarantor_risk_weight, the method enums, the DD block)
     # keep describing the PRIORITY-1 leg — the stack's pricing is total,
     # its audit detail per-leg lives in guarantee_references order.
-    has_mg = "_mg" in carried
-    if has_mg:
+    if "_mg" in carried:
         from rwa_calculator_spark.functions.jvm_kernel import (
             CDF_FN,
             PPF_FN,
@@ -841,12 +841,11 @@ def _irb_guarantee_adjust(
         )
         from rwa_calculator_spark.functions.stats import G_999, norm_cdf_v, norm_ppf_v
 
-        _mg_arr = S.coalesce(S.col("_mg"), S.array().cast(perf.dtype("_mg")))
+        _mg_arr = S.coalesce(S.col("_mg"), S.array().cast(MG_STACK))
         _is_multi = S.size(_mg_arr) > 1
         _own0 = S.col("risk_weight")
         _kern = ensure_jvm_kernel(spark)
         _row_airb = S.coalesce(S.col("irb_subapproach"), S.lit("")) == "airb"
-        _dd_pack = pack.scalar("double_default_available") >= 1.0
 
         def _leg_params(x):
             pdfl = S.when(
@@ -876,10 +875,6 @@ def _irb_guarantee_adjust(
                 r=S.kernel(correlation_v, pdfl),
             )
 
-        perf = perf.with_column(
-            "_mgl", S.when(_is_multi, S.transform(_mg_arr, _leg_params))
-        )
-
         def _leg_rw(x):
             arg = (x["gq"] + S.sqrt(x["r"]) * S.lit(G_999)) / S.sqrt(
                 S.lit(1.0) - x["r"]
@@ -896,7 +891,7 @@ def _irb_guarantee_adjust(
             meth = S.when(x["pdfl"].isNotNull(), S.lit("sub_pd")).otherwise(
                 S.when(x["rw"].isNotNull(), S.lit("sub_sa"))
             )
-            if _dd_pack:
+            if dd_pack:
                 elig_t = S.coalesce(x["gclass"], S.lit("")).isin(
                     "institution", "sovereign", "mdb"
                 ) | (
@@ -926,7 +921,10 @@ def _irb_guarantee_adjust(
                 meth=meth,
             )
 
-        perf = perf.with_column("_mgl", S.transform(S.col("_mgl"), _leg_rw))
+        perf = perf.with_column(
+            "_mgl",
+            S.when(_is_multi, S.transform(S.transform(_mg_arr, _leg_params), _leg_rw)),
+        )
 
         # priority-ordered left fold (deterministic addition order — the
         # oracle mirrors it term-by-term): per leg the covered slice takes
@@ -958,10 +956,9 @@ def _irb_guarantee_adjust(
         perf = perf.with_column("_mgf", S.when(_is_multi, _mg_fold))
         _mg_g = S.col("_mgf").getField("g")
         _mg_t = S.col("_mgf").getField("t")
-    else:
+    else:  # plan gate: what the empty-stack default folds to
         _is_multi = S.lit(False)
-        _mg_g = S.lit(0.0)
-        _mg_t = S.lit(0.0)
+        _mg_g = _mg_t = S.lit(0.0)
 
     perf = perf.with_column("pre_crm_risk_weight", S.col("risk_weight"))
     # every expression BELOW the blend references the sealed snapshot —
@@ -1050,8 +1047,10 @@ def _irb_guarantee_adjust(
     # passed AND the DD K beat substitution) — the guaranteed portion
     # (g × EAD, the COREP 0220 figure) and the LGD the DD formula used
     # (= the obligor's own floored LGD; DD modifies K through PD_g, not LGD)
-    if has_dd_carrier:
-        dd_on = S.col("_g_ben") & (S.col("_g_method") == "dd")
+    # `has_pd` leads each substitution condition: only a guarantor PD
+    # reaches the DD and PD-substitution methods
+    dd_on = has_pd & S.col("_g_ben") & (S.col("_g_method") == "dd")
+    if dd_pack:
         perf = perf.with_columns(
             {
                 "is_double_default_eligible": S.coalesce(
@@ -1064,32 +1063,28 @@ def _irb_guarantee_adjust(
             }
         ).drop("_dd_elig")
 
-    if has_gpd:
-        el = (
-            S.when(S.col("_g_ben") & (S.col("_g_method") == "dd"), el_own)
-            .when(
-                S.col("_g_ben") & (S.col("_g_method") == "sub_pd"),
-                (S.lit(1.0) - g) * el_own
-                + S.col("_pd_g_fl") * S.col("_lgd_g") * g * S.col("ead_after_crm"),
-            )
-            .when(S.col("_g_ben"), (S.lit(1.0) - g) * el_own)
-            .otherwise(el_own)
+    el = (
+        S.when(dd_on, el_own)
+        .when(
+            has_pd & S.col("_g_ben") & (S.col("_g_method") == "sub_pd"),
+            (S.lit(1.0) - g) * el_own
+            + pd_g * lgd_g * g * S.col("ead_after_crm"),
         )
-    else:
-        el = S.when(S.col("_g_ben"), (S.lit(1.0) - g) * el_own).otherwise(el_own)
-    if has_mg:
+        .when(S.col("_g_ben"), (S.lit(1.0) - g) * el_own)
+        .otherwise(el_own)
+    )
+    if "_mg" in carried:
         # stack EL: the fold accumulated per-unit-EAD rates leg by leg in
         # priority order; the uncovered remainder keeps the obligor rate
         _el_multi = (
             S.col("_mgf").getField("el")
-            + (S.lit(1.0) - _mg_g)
-            * (S.col("pd_floored") * S.col("lgd_floored"))
+            + (S.lit(1.0) - _mg_g) * (S.col("pd_floored") * S.col("lgd_floored"))
         ) * S.col("ead_after_crm")
         el = S.when(_is_multi, _el_multi).otherwise(el)
     return perf, el
 
 
-def _supporting_factor_exprs(pack: RulePack, threshold_scale: float, carried: frozenset):
+def _supporting_factor_exprs(pack: RulePack, threshold_scale: float):
     """CRR2 Art.501 tiered SME factor + Art.501a infrastructure factor
     (ref engine/supporting_factors.py SupportingFactorCalculator — the
     reference applies them on EVERY branch: sa/factors_output.py,
@@ -1099,26 +1094,24 @@ def _supporting_factor_exprs(pack: RulePack, threshold_scale: float, carried: fr
     Art.501(2)(b): defaulted exposures are excluded from the SME factor
     (ref supporting_factors.py sme_eligible ~is_defaulted); the
     infrastructure factor carries no defaulted exclusion. Both collapse to
-    1.0 under B3.1 (factors removed — pack scalars are 1.0)."""
+    1.0 under B3.1 (factors removed — pack scalars are 1.0). Without a
+    revenue (the 0.0 default) or a group aggregate (null) the SME factor
+    is 1.0."""
     f1 = pack.scalar("sme_supporting_factor")
     f2 = pack.scalar("sme_factor_above_threshold")
     thr = pack.scalar("sme_exposure_threshold") * threshold_scale
     revenue_cap = pack.scalar("sme_revenue_cap") * threshold_scale
-    # carrier gates: direct-call CRM-shaped frames (guarantee /
-    # double-default test books) skip classify and may carry neither the
-    # revenue nor the group aggregate — they price factor 1.0
-    if "annual_revenue" not in carried:
-        return S.lit(1.0), S.lit(1.0), S.lit(1.0)
+    gd = S.col("group_drawn")
     sme_cond = (
         (S.col("exposure_class") == "corporate")
         & (S.col("annual_revenue") > 0)
         & (S.col("annual_revenue") <= revenue_cap)
         & ~S.col("is_defaulted")
+        & gd.isNotNull()
     )
-    if (f1 >= 1.0 and f2 >= 1.0) or "group_drawn" not in carried:
-        sme_f = S.lit(1.0)  # factors removed (B3.1) / no group aggregate
+    if f1 >= 1.0 and f2 >= 1.0:
+        sme_f = S.lit(1.0)  # factors removed (B3.1)
     else:
-        gd = S.col("group_drawn")
         blended = S.when(
             gd > 0,
             (
@@ -1141,15 +1134,15 @@ def run_sa(
     use_ig_assessment: bool = False,
 ) -> CalcOutput:
     spark = crm.exposures.sparkSession
-    exp, carried = _calc_entry(
-        crm.exposures.where(
-            (
-                ~S.col("has_irb_permission")
-                & ~S.col("is_specialised")
-                & (S.col("exposure_class") != "securitisation")
-            ).sql
-        )
+    exp = _calc_entry(
+        crm,
+        ~S.col("has_irb_permission")
+        & ~S.col("is_specialised")
+        & (S.col("exposure_class") != "securitisation"),
     )
+    # the plan gates (module docstring): pack-table joins a carrier's
+    # absence makes redundant
+    carried = frozenset(crm.exposures.columns)
 
     rw_table = pack.dim(
         spark,
@@ -1242,10 +1235,10 @@ def run_sa(
     # (20% RRE / 60% CRE), the remainder prices as an exposure to the
     # counterparty (Art.124F(1)(b): retail weight for natural persons,
     # else the obligor's ladder weight). Pack-gated via the table's
-    # presence (CRR keeps flat Art.125/126) and carrier-gated on ltv;
-    # bands compile to a when-chain from the pack rows (pure literals —
-    # band-count work, never a join against the fact table).
-    if "re_ltv_rw" in pack.tables and "ltv" in carried:
+    # presence (CRR keeps flat Art.125/126); bands compile to a
+    # when-chain from the pack rows (pure literals — band-count work,
+    # never a join against the fact table).
+    if "re_ltv_rw" in pack.tables:
         ltv = S.col("ltv")
         # the class gate; the LTV-dependent limbs (bands, split) require a
         # usable LTV on top — ADC and Art.124J other-RE price without one
@@ -1328,21 +1321,27 @@ def run_sa(
         # — retail for natural persons, the CORPORATE ladder for the
         # obligor's CQS otherwise (the class-ladder join above keyed on
         # 're_secured', which the sa_rw table deliberately has no row for)
-        cp_ladder = pack.dim(
-            spark,
-            "sa_rw",
-            "cqs AS _re_cqs, rw AS _re_cp_rw",
-            where="exposure_class = 'corporate'",
-        )
-        exp = exp.join(
-            cp_ladder,
-            S.coalesce("cqs", S.lit(0)) == S.col("_re_cqs"),
-            "left",
-        ).drop("_re_cqs")
+        # only the loan-split (a usable LTV) and other-RE limbs read it: an
+        # input with neither carrier skips the join (plan gate)
+        if "ltv" in carried or "is_other_re" in carried:
+            cp_ladder = pack.dim(
+                spark,
+                "sa_rw",
+                "cqs AS _re_cqs, rw AS _re_cp_rw",
+                where="exposure_class = 'corporate'",
+            )
+            exp = exp.join(
+                cp_ladder,
+                S.coalesce("cqs", S.lit(0)) == S.col("_re_cqs"),
+                "left",
+            ).drop("_re_cqs")
+            ladder_rw = S.col("_re_cp_rw")
+        else:
+            ladder_rw = S.null("double")
         cp_rw = S.when(
             (S.col("entity_type") == "individual") | S.col("is_managed_as_retail"),
             pack.sql_lit("retail_rw"),
-        ).otherwise(S.coalesce(S.col("_re_cp_rw"), pack.sql_lit("unrated_corp_rw")))
+        ).otherwise(S.coalesce(ladder_rw, pack.sql_lit("unrated_corp_rw")))
         # Art.124L counterparty-type table for the split RESIDUAL and the
         # Art.124J non-dependent other-RE weight (ref
         # b31_risk_weight_tables.py:760-799 _b31_art_124l_cp_rw_expr):
@@ -1640,11 +1639,7 @@ def run_sa(
         m_sme = _unrated_corp & _is_sme
         base_rw = S.when(m_sme, pack.sql_lit("corporate_sme_rw")).otherwise(base_rw)
         rw_source = S.when(m_sme, "sa_corporate_sme").otherwise(rw_source)
-    if (
-        use_ig_assessment
-        and "corporate_ig_rw" in pack.scalars
-        and "is_investment_grade" in carried
-    ):
+    if use_ig_assessment and "corporate_ig_rw" in pack.scalars:
         _ig = S.coalesce(S.col("is_investment_grade"), S.lit(False))
         m_ig = _unrated_corp & ~_is_sme & _ig
         m_nig = _unrated_corp & ~_is_sme & ~_ig
@@ -1985,7 +1980,7 @@ def run_sa(
     _own = S.col("own_rw")
     if "_mg" in carried:
         _fold = S.aggregate(
-            S.coalesce(S.col("_mg"), S.array().cast(exp.dtype("_mg"))),
+            S.coalesce(S.col("_mg"), S.array().cast(MG_STACK)),
             S.struct(g=S.lit(0.0), t=S.lit(0.0)),
             lambda acc, x: S.struct(
                 g=acc["g"] + x["slice"],
@@ -1994,7 +1989,7 @@ def run_sa(
         )
         _is_multi = S.size(S.coalesce(S.col("_mg"), S.array())) > 1
         _mg_g, _mg_t = _fold.getField("g"), _fold.getField("t")
-    else:
+    else:  # plan gate: what the empty-stack default folds to
         _is_multi = S.lit(False)
         _mg_g, _mg_t = S.lit(0.0), S.lit(0.0)
     # total coverage / covered-term for the ledger portions below: the
@@ -2004,6 +1999,34 @@ def run_sa(
         S.col("g_coverage") * S.least(S.col("own_rw"), S.coalesce("g_rw", S.col("own_rw")))
         + (1 - S.col("g_coverage")) * S.col("own_rw")
     )
+    g_src = S.when(
+        S.when(_is_multi, _mg_t < _mg_g * _own).otherwise(
+            (S.col("g_coverage") > 0)
+            & (S.coalesce("g_rw", S.col("own_rw")) < S.col("own_rw"))
+        ),
+        S.concat(S.col("rw_source"), S.lit("+guarantee")),
+    ).otherwise(S.col("rw_source"))
+    # other-funded-protection RW substitution (CRR Art.222/232; ref
+    # engine/crm/{simple_method,life_insurance,third_party_deposit}.py):
+    # each channel's covered fraction takes min(own RW, substitute RW) —
+    # the blend composes as a subtraction of each channel's benefit from
+    # the guarantee-blended RW; channels claim the unguaranteed remainder
+    # in order (life insurance, third-party deposit, FCSM). A null channel
+    # value is no protection on that channel.
+    ead_nz = S.nullif(S.col("ead_after_crm"), S.lit(0.0))
+    avail = S.greatest(1 - _g_total, S.lit(0.0))
+    ofcp = S.lit(0.0)
+    for vcol, rcol in (
+        ("li_value", "li_rw"),
+        ("tpd_value", "tpd_rw"),
+        ("fcsm_value", "fcsm_rw"),
+    ):
+        frac = S.least(S.coalesce(S.col(vcol) / ead_nz, S.lit(0.0)), avail)
+        ofcp = ofcp + S.when(
+            S.col(vcol).isNotNull(),
+            frac * S.greatest(_own - S.coalesce(S.col(rcol), _own), S.lit(0.0)),
+        ).otherwise(S.lit(0.0))
+        avail = avail - frac
     # the hypothetical no-substitution weight starts at the own ladder and
     # tracks every NON-substitution adjustment below (ccymm multiplier,
     # due-diligence override, Art.113(6) intragroup) in lockstep — only
@@ -2011,15 +2034,17 @@ def run_sa(
     # CR7/CR7-A never misattribute a post-base override to CRM relief
     exp = exp.with_columns(
         {
-            "risk_weight": eff_rw,
+            "risk_weight": S.when(ofcp != 0, eff_rw - ofcp).otherwise(eff_rw),
             "_rw_nosubst": S.col("own_rw"),
             "rw_source": S.when(
-                S.when(_is_multi, _mg_t < _mg_g * _own).otherwise(
-                    (S.col("g_coverage") > 0)
-                    & (S.coalesce("g_rw", S.col("own_rw")) < S.col("own_rw"))
-                ),
-                S.concat(S.col("rw_source"), S.lit("+guarantee")),
-            ).otherwise(S.col("rw_source")),
+                ofcp > 0, S.concat(g_src, S.lit("+ofcp"))
+            ).otherwise(g_src),
+            # FCSM decomposition carriers (ref :3016-3018): the simple-
+            # method collateral value, its substitute weight, and the RW
+            # before any funded-substitution channel subtracted its benefit
+            "pre_fcsm_risk_weight": eff_rw,
+            "fcsm_collateral_value": S.coalesce("fcsm_value", S.lit(0.0)),
+            "fcsm_collateral_rw": S.col("fcsm_rw"),
         }
     )
     # guarantee-impact ledger block (ref CALCULATION_OUTPUT_SCHEMA
@@ -2072,48 +2097,6 @@ def run_sa(
         }
     )
 
-    # other-funded-protection RW substitution (CRR Art.222/232; ref
-    # engine/crm/{simple_method,life_insurance,third_party_deposit}.py):
-    # each channel's covered fraction takes min(own RW, substitute RW) —
-    # the blend composes as a subtraction of each channel's benefit from
-    # the guarantee-blended RW; channels claim the unguaranteed remainder
-    # in order (life insurance, third-party deposit, FCSM)
-    if "li_value" in carried:
-        own = S.col("own_rw")
-        ead_nz = S.nullif(S.col("ead_after_crm"), S.lit(0.0))
-        avail = S.greatest(1 - _g_total, S.lit(0.0))
-        benefit = S.lit(0.0)
-        # FCSM decomposition carriers (ref :3016-3018): the simple-method
-        # collateral value, its substitute weight, and the RW snapshot
-        # before any funded-substitution channel subtracted its benefit
-        exp = exp.with_columns(
-            {
-                "pre_fcsm_risk_weight": S.col("risk_weight"),
-                "fcsm_collateral_value": S.coalesce("fcsm_value", S.lit(0.0)),
-                "fcsm_collateral_rw": S.col("fcsm_rw"),
-            }
-        )
-        for vcol, rcol in (
-            ("li_value", "li_rw"),
-            ("tpd_value", "tpd_rw"),
-            ("fcsm_value", "fcsm_rw"),
-        ):
-            frac = S.least(
-                S.coalesce(S.col(vcol) / ead_nz, S.lit(0.0)), avail
-            )
-            benefit = benefit + frac * S.greatest(
-                own - S.coalesce(S.col(rcol), own), S.lit(0.0)
-            )
-            avail = avail - frac
-        exp = exp.with_columns(
-            {
-                "risk_weight": S.col("risk_weight") - benefit,
-                "rw_source": S.when(
-                    benefit > 0, S.concat(S.col("rw_source"), S.lit("+ofcp"))
-                ).otherwise(S.col("rw_source")),
-            }
-        )
-
     # PS1/26 Art.123B (B3.1 only, Feature-gated): ×1.5 RW multiplier for
     # retail / residential-RE exposures whose currency mismatches the
     # borrower's income currency, capped at 150%. Waived when hedged —
@@ -2128,18 +2111,18 @@ def run_sa(
             S.col("borrower_income_currency") != S.col("currency")
         )
         hedged = S.coalesce("is_hedged", S.lit(False))
-        if "hedge_coverage_ratio" in carried:
-            raw_cov = S.coalesce("hedge_coverage_ratio", S.lit(0.0))
-            revolving = S.coalesce("is_revolving", S.lit(False))
-            drawn = S.coalesce("drawn_amount", S.lit(0.0))
-            limit = S.coalesce(S.col("facility_limit"), drawn)
-            full_draw = S.greatest(drawn, limit)
-            eff_cov = S.when(
-                revolving & (full_draw > 0), raw_cov * drawn / full_draw
-            ).otherwise(raw_cov)
-            cov_ok = eff_cov >= pack.sql_lit("currency_mismatch_hedge_floor")
-        else:
-            cov_ok = S.lit(False)
+        # a null coverage ratio is no coverage test
+        raw_cov = S.col("hedge_coverage_ratio")
+        revolving = S.coalesce("is_revolving", S.lit(False))
+        drawn = S.coalesce("drawn_amount", S.lit(0.0))
+        limit = S.coalesce(S.col("facility_limit"), drawn)
+        full_draw = S.greatest(drawn, limit)
+        eff_cov = S.when(
+            revolving & (full_draw > 0), raw_cov * drawn / full_draw
+        ).otherwise(raw_cov)
+        cov_ok = raw_cov.isNotNull() & (
+            eff_cov >= pack.sql_lit("currency_mismatch_hedge_floor")
+        )
         ccymm = in_scope & mismatch & ~(hedged | cov_ok)
         # ledger carriers (ref :3066-3068): the pre-multiplier snapshot and
         # whether the ×1.5 actually applied — every expression reads the
@@ -2231,7 +2214,7 @@ def run_sa(
     # shared helper adds the Art.501(2)(b) defaulted exclusion and is the
     # SAME expression the IRB and slotting branches now apply — the
     # reference runs SupportingFactorCalculator on every branch.
-    sme_f, infra_f, sf = _supporting_factor_exprs(pack, threshold_scale, carried)
+    sme_f, infra_f, sf = _supporting_factor_exprs(pack, threshold_scale)
 
     # routing provenance: the permission stage's diagnostic / PPU reason
     # where it ran (ref permissions.py approach_selection), else the
@@ -2371,9 +2354,7 @@ def run_sa(
                     "commercial",
                 ).otherwise("residential"),
             ),
-            "property_ltv": S.when(_re, S.col("ltv"))
-            if "ltv" in carried
-            else S.null("double"),
+            "property_ltv": S.when(_re, S.col("ltv")),
         }
     )
     return CalcOutput(results=exp.select(*_RESULT_COLS).df)
@@ -2456,14 +2437,11 @@ def run_irb(
     threshold_scale: float = 1.0,
 ) -> CalcOutput:
     spark = crm.exposures.sparkSession
-    exp, carried = _calc_entry(
-        crm.exposures.where(
-            (
-                S.col("has_irb_permission")
-                & ~S.col("is_specialised")
-                & (S.col("exposure_class") != "securitisation")
-            ).sql
-        )
+    exp = _calc_entry(
+        crm,
+        S.col("has_irb_permission")
+        & ~S.col("is_specialised")
+        & (S.col("exposure_class") != "securitisation"),
     )
     # CRR Art.147(3)/(4)(b) IRB class equivalence (ref rulebook/packs/
     # common.py entity_type_to_irb_class + engine/entity_class_maps.py):
@@ -2717,7 +2695,9 @@ def run_irb(
     # The pre-blend Vasicek weight is stashed first — it is the CR7/CR7-A
     # "RWEA without substitution effects" hypothetical
     perf = perf.with_column("_rw_pre_subst", S.col("risk_weight"))
-    perf, el_expr = _irb_guarantee_adjust(perf, pack, spark, carried)
+    perf, el_expr = _irb_guarantee_adjust(
+        perf, pack, spark, frozenset(crm.exposures.columns)
+    )
     perf = _el_columns(perf, el_expr, pool_b_extras=True)
 
     # defaulted bypasses Vasicek (CRR Art.153(1)(ii)/154(1)(i), CRE31.3):
@@ -2770,9 +2750,7 @@ def run_irb(
             S.lit("irb_permission_"),
             S.coalesce(S.col("irb_subapproach"), S.lit("granted")),
         )
-        _sme_f, _infra_f, _sf = _supporting_factor_exprs(
-            pack, threshold_scale, carried
-        )
+        _sme_f, _infra_f, _sf = _supporting_factor_exprs(pack, threshold_scale)
         # one batched projection; supporting_factor_benefit inlines the
         # exact rwa_before_sf/rwa expressions (identical DAG, bit-equal)
         df = df.with_columns(
@@ -2818,32 +2796,33 @@ def run_secsa(crm: CRMOutput, pack: RulePack) -> CalcOutput:
     take the FULL SSFA closed form (BCBS CRE41 / CRR Art.261-262,
     functions/secsa.py) — beyond the reference. Pure exp/arithmetic, so
     the branch stays inside whole-stage codegen."""
-    exp, carried = _calc_entry(
-        crm.exposures.where((S.col("exposure_class") == "securitisation").sql)
-    )
+    from rwa_calculator_spark.functions.secsa import ssfa_rw_v
+
+    exp = _calc_entry(crm, S.col("exposure_class") == "securitisation")
+
+    def ssfa(attach, detach, w, k, p):
+        return S.kernel(
+            lambda *v: ssfa_rw_v(*v, pack.scalar("secsa_floor_rw")),
+            attach,
+            detach,
+            w,
+            k,
+            p,
+        )
+
     flat_rw = S.greatest(
         pack.sql_lit("secsa_floor_rw"),
         pack.sql_lit("secsa_ksa") * S.lit(12.5) * pack.sql_lit("secsa_p"),
     )
-    approach_col = S.lit("SEC-SA")
-    if "attachment" in carried:
-        from rwa_calculator_spark.functions.secsa import ssfa_rw_v
-
-        def ssfa(attach, detach, w, k, p):
-            return S.kernel(
-                lambda *v: ssfa_rw_v(*v, pack.scalar("secsa_floor_rw")),
-                attach,
-                detach,
-                w,
-                k,
-                p,
-            )
-
+    carried = frozenset(crm.exposures.columns)
+    rw, rw_src, approach_col = flat_rw, S.lit("sec_sa"), S.lit("SEC-SA")
+    if "attachment" in carried:  # plan gate: pool grain renders no SSFA
         # STS pools take the halved supervisory p (CRR Art.262(1));
         # column-valued so STS and non-STS tranches share one plan
         p_sa = S.when(S.col("is_sts"), pack.sql_lit("secsa_p_sts")).otherwise(
             pack.sql_lit("secsa_p")
         )
+        tranche = S.col("attachment").isNotNull()
         rw_sa = ssfa(
             S.col("attachment"),
             S.col("detachment"),
@@ -2851,44 +2830,32 @@ def run_secsa(crm: CRMOutput, pack: RulePack) -> CalcOutput:
             pack.sql_lit("secsa_ksa"),
             p_sa,
         )
-        rw = S.when(S.col("attachment").isNotNull(), rw_sa).otherwise(flat_rw)
-        rw_src = S.when(S.col("attachment").isNotNull(), "sec_sa_ssfa").otherwise(
-            "sec_sa"
+        rw = S.when(tranche, rw_sa).otherwise(flat_rw)
+        rw_src = S.when(tranche, "sec_sa_ssfa").otherwise(rw_src)
+    # Art.92(3) floor base: SEC-IRBA rows floor against their SEC-SA
+    # equivalent, so the SA-side RW is kept regardless of routing
+    sa_equiv_rw = rw
+    if "attachment" in carried and "k_irb" in carried:  # plan gate, as above
+        # SEC-IRBA (CRR Art.259): same SSFA closed form with the pool's own
+        # K_IRB and the supervisory p-formula
+        # p = max(floor, A + B/N + C·K_IRB + D·LGD + E·M_T); K_IRB already
+        # reflects pool quality, so W does not re-adjust. It needs the
+        # tranche grain: a pool row carrying K_IRB alone prices flat SEC-SA.
+        irba = tranche & S.col("k_irb").isNotNull()
+        p_irba = S.greatest(
+            pack.sql_lit("secirba_p_floor"),
+            pack.sql_lit("secirba_coef_a")
+            + pack.sql_lit("secirba_coef_b") / S.col("pool_n")
+            + pack.sql_lit("secirba_coef_c") * S.col("k_irb")
+            + pack.sql_lit("secirba_coef_d") * S.col("pool_lgd")
+            + pack.sql_lit("secirba_coef_e") * S.col("pool_maturity"),
         )
-        # Art.92(3) floor base: SEC-IRBA rows floor against their SEC-SA
-        # equivalent, so the SA-side RW is kept regardless of routing
-        sa_equiv_rw = rw
-        if "k_irb" in carried:
-            # SEC-IRBA (CRR Art.259): same SSFA closed form with the
-            # pool's own K_IRB and the supervisory p-formula
-            # p = max(floor, A + B/N + C·K_IRB + D·LGD + E·M_T).
-            # K_IRB already reflects pool quality, so W does not re-adjust.
-            p_irba = S.greatest(
-                pack.sql_lit("secirba_p_floor"),
-                pack.sql_lit("secirba_coef_a")
-                + pack.sql_lit("secirba_coef_b") / S.col("pool_n")
-                + pack.sql_lit("secirba_coef_c") * S.col("k_irb")
-                + pack.sql_lit("secirba_coef_d") * S.col("pool_lgd")
-                + pack.sql_lit("secirba_coef_e") * S.col("pool_maturity"),
-            )
-            rw_irba = ssfa(
-                S.col("attachment"),
-                S.col("detachment"),
-                S.lit(0.0),
-                S.col("k_irb"),
-                p_irba,
-            )
-            rw = S.when(S.col("k_irb").isNotNull(), rw_irba).otherwise(rw)
-            rw_src = S.when(S.col("k_irb").isNotNull(), "sec_irba_ssfa").otherwise(
-                rw_src
-            )
-            approach_col = S.when(S.col("k_irb").isNotNull(), "SEC-IRBA").otherwise(
-                S.lit("SEC-SA")
-            )
-    else:
-        rw = flat_rw
-        rw_src = S.lit("sec_sa")
-        sa_equiv_rw = rw
+        rw_irba = ssfa(
+            S.col("attachment"), S.col("detachment"), S.lit(0.0), S.col("k_irb"), p_irba
+        )
+        rw = S.when(irba, rw_irba).otherwise(rw)
+        rw_src = S.when(irba, "sec_irba_ssfa").otherwise(rw_src)
+        approach_col = S.when(irba, "SEC-IRBA").otherwise(approach_col)
     exp = exp.with_columns(
         {
             "approach": approach_col,
@@ -2917,7 +2884,7 @@ def run_slotting(
     rulepack, with the table's EL rate feeding expected loss
     (CRR Art.153(5)/158(6); ref engine/slotting/)."""
     spark = crm.exposures.sparkSession
-    exp, carried = _calc_entry(crm.exposures.where(S.col("is_specialised").sql))
+    exp = _calc_entry(crm, S.col("is_specialised"))
     # Art.153(5) Table A keys on (category, maturity band, HVCRE): the
     # preferential short row applies below 2.5y remaining maturity;
     # unknown maturity conservatively takes the long row. Joining on the
@@ -2965,7 +2932,7 @@ def run_slotting(
     # CRR Art.501/501a on the slotting branch (ref slotting/calculator.py
     # :146 _apply_supporting_factors — infrastructure project finance in
     # slotting qualifies for the 0.75 factor; B3.1 disables both)
-    _sme_f, _infra_f, _sf = _supporting_factor_exprs(pack, threshold_scale, carried)
+    _sme_f, _infra_f, _sf = _supporting_factor_exprs(pack, threshold_scale)
     # one batched projection: supporting_factor_benefit inlines the exact
     # post-factor rwa expression (identical arithmetic DAG, bit-equal to
     # reading the chained column)
@@ -3060,6 +3027,7 @@ def _equity_pd_lgd(equity: DataFrame, pack: RulePack) -> DataFrame:
         "lgd_used": S.col("_lgd_eq"),
         "maturity_used": pack.sql_lit("equity_pdlgd_maturity"),
         "rwa_sa_equivalent": rwa,
+        "rwa_pre_crm_substitution": rwa,
         "equity_type": S.lit("pd_lgd"),
         "equity_risk_weight": S.col("_rw_eq"),
         "equity_higher_risk": S.col("_rw_eq") >= S.lit(4.0),
@@ -3091,24 +3059,22 @@ def run_equity(
     phases the weights in from 2027 (ref calculator.py:1023
     _apply_transitional_floor + rulebook/packs/b31.py:740 schedules).
     """
-    conformed = Projection(equity)
-    carried = conform_calc_edge(conformed, _EQUITY_CARRIERS)
-    equity = conformed.df
-    if "use_pd_lgd" in carried and pack.scalar("equity_irb_available") >= 1.0:
+    equity = (
+        Projection(equity)
+        .with_columns(calc_edge_defaults(equity.columns, _EQUITY_CARRIERS))
+        .df
+    )
+    if pack.scalar("equity_irb_available") >= 1.0:
         elect = S.coalesce("use_pd_lgd", S.lit(False))
-        simple_out = _equity_simple(
-            equity.where((~elect).sql), pack, reporting_date, carried
-        )
+        simple_out = _equity_simple(equity.where((~elect).sql), pack, reporting_date)
         # the PD/LGD leg carries no netting/transitional columns (it
         # bypasses both) — the union fills them null
         out = simple_out.unionByName(
             _equity_pd_lgd(equity.where(elect.sql), pack), allowMissingColumns=True
         )
     else:
-        out = _equity_simple(equity, pack, reporting_date, carried)
-    return CalcOutput(
-        results=_calc_entry(out, "EQUITY")[0].select(*_RESULT_COLS).df
-    )
+        out = _equity_simple(equity, pack, reporting_date)
+    return CalcOutput(results=_provenance_cols(out, "EQUITY").select(*_RESULT_COLS).df)
 
 
 # the equity-holdings carriers of CALC_EDGE (the holdings frame is no CRM
@@ -3126,7 +3092,7 @@ _EQUITY_CARRIERS = (
 )
 
 
-def _net_short_ead(equity: DataFrame, carried: frozenset) -> Projection:
+def _net_short_ead(equity: DataFrame) -> Projection:
     """CRR Art.155(2) non-trading-book net-short netting (ref
     engine/equity/calculator.py:829-894 _net_short_positions): an
     explicitly-hedged (≥1y) short may offset longs in the SAME individual
@@ -3134,11 +3100,8 @@ def _net_short_ead(equity: DataFrame, carried: frozenset) -> Projection:
     eligible rows, redistributed pro-rata to each row's gross long value;
     absorbed shorts (and longs in a net-short group) collapse to 0.
     Ineligible rows keep the absolute-value market_value chain. Adds
-    `_eq_ead`; column-absence defensive — without position_value/
-    issuer_reference the frame passes through unchanged."""
+    `_eq_ead`."""
     mv = S.coalesce("market_value", S.lit(0.0))
-    if "position_value" not in carried or "issuer_reference" not in carried:
-        return Projection(equity).with_column("_eq_ead", mv)
     hedged = S.coalesce("is_explicitly_hedged", S.lit(False))
     eligible = (
         S.col("issuer_reference").isNotNull()
@@ -3185,14 +3148,14 @@ def _equity_transitional_schedule(
 
 
 def _equity_simple(
-    equity: DataFrame, pack: RulePack, reporting_date: str | None, carried: frozenset
+    equity: DataFrame, pack: RulePack, reporting_date: str | None
 ) -> DataFrame:
     # Art.155(2) net-short netting is IRB-Simple machinery: the PD/LGD
     # branch bypasses it (ref calculator.py:249-251) and the B3.1 SA
     # weights fn never calls it (ref calculator.py:775 — the call sits
     # inside _apply_equity_weights_irb_simple only)
     if pack.scalar("equity_irb_available") >= 1.0:
-        equity = _net_short_ead(equity, carried)
+        equity = _net_short_ead(equity)
     else:
         equity = Projection(equity).with_column(
             "_eq_ead", S.coalesce("market_value", S.lit(0.0))
@@ -3268,6 +3231,7 @@ def _equity_simple(
         "lgd_used": S.null("double"),
         "maturity_used": S.null("double"),
         "rwa_sa_equivalent": mv * rw,
+        "rwa_pre_crm_substitution": mv * rw,
         # equity decomposition (ref :3042-3045): WHICH category priced the
         # holding, its weight under its own name, and the higher-risk flag
         # (≥400% — speculative/venture under either regime)

@@ -53,7 +53,8 @@ def _ledger(df: DataFrame, risk_type: str = "CREDIT") -> DataFrame:
     )
 
     fills = {c: S.lit(v) for c, v in _ZERO_LEDGER.items()}
-    fills["rwa_sa_equivalent"] = S.col("rwa")
+    # SA-family and substitution-free: both hypotheticals are the actual
+    fills["rwa_sa_equivalent"] = fills["rwa_pre_crm_substitution"] = S.col("rwa")
     ledger = _provenance_cols(Projection(df).with_columns(fills).df, risk_type)
     # every ledger column still absent is a null double
     absent = {c: S.null("double") for c in _RESULT_COLS if c not in ledger.columns}

@@ -141,13 +141,13 @@ def with_irb_k_r(
 
     proj = Projection.of(frame)
     arg = (col(g_pd) + sqrt(col(r)) * lit(G_999)) / sqrt(lit(1.0) - col(r))
-    proj.with_column("_irb_arg", arg)
-    phi = (
-        call(CDF_FN, "_irb_arg")
-        if ensure_jvm_kernel(proj.spark)
-        else kernel(norm_cdf_v, col("_irb_arg"))
-    )
-    proj.with_column(out, col(lgd) * phi - col(pd) * col(lgd)).drop("_irb_arg")
+    if ensure_jvm_kernel(proj.spark):
+        proj.with_column(out, col(lgd) * call(CDF_FN, arg) - col(pd) * col(lgd))
+    else:
+        # the staged Φ repeats its argument ~20×: stage it as a column
+        proj.with_column("_irb_arg", arg)
+        phi = kernel(norm_cdf_v, col("_irb_arg"))
+        proj.with_column(out, col(lgd) * phi - col(pd) * col(lgd)).drop("_irb_arg")
     return proj if isinstance(frame, Projection) else proj.df
 
 

@@ -31,8 +31,8 @@ traps (divide-by-zero → ±Inf, log(neg) → NaN), so values are identical.
 
 Everything degrades gracefully: if javac is missing, compilation fails, or
 registration is rejected, callers fall back to the pure-Column staged path
-(still oracle-exact, just slower per-row). Kill switch:
-``RWA_SPARK_JVM_KERNEL=0``.
+(still oracle-exact, just slower per-row; tests/test_jvm_kernel.py pins the
+two bit-identical by making `ensure_jvm_kernel` report False).
 """
 
 from __future__ import annotations
@@ -231,8 +231,6 @@ def ensure_jvm_kernel(spark) -> bool:
     the pure-Column path. Works on vanilla sessions (the driver's): the jar
     lands via SQL ``ADD JAR`` at runtime, no launch-time classpath needed.
     """
-    if os.environ.get("RWA_SPARK_JVM_KERNEL", "1") == "0":
-        return False
     key = id(spark)
     cached = _SESSION_OK.get(key)
     if cached is not None:

@@ -185,6 +185,23 @@ class Expr:
 
     __getitem__ = getField
 
+    def bind(self, values: Mapping[str, "Expr"]) -> "Expr":
+        """This expression with every input column named in `values` read
+        as that expression instead (how a column the frame lacks reads as
+        its default). String literals and struct field names are left
+        alone."""
+        hit = sorted(self.refs & values.keys())
+        if not hit:
+            return self
+        names = "|".join(re.escape(quote(n)) for n in hit)
+        token = re.compile(rf"'(?:[^']|'')*'|(?<!\.)(?:{names})")
+
+        def swap(m: re.Match) -> str:
+            t = m.group(0)
+            return t if t[0] == "'" else values[t[1:-1].replace("``", "`")].sql
+
+        return Expr(token.sub(swap, self.sql), self.refs.difference(hit))
+
 
 class _Case(Expr):
     """``when(…).when(…)`` still open for more branches or an ``otherwise``."""

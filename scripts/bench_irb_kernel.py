@@ -14,7 +14,9 @@ shapes that matter:
   carries Φ/Φ⁻¹, so the stage compiles under whole-stage codegen (no janino
   64 KB overflow) and the kernel is JIT-compiled Java — bit-identical
   values to the pure-Column path.
-- ``per_row_pure_column`` — the round-5 shape (RWA_SPARK_JVM_KERNEL=0): the
+- ``per_row_pure_column`` — the round-5 shape (the staged SQL path taken
+  when javac or ``ADD JAR`` fails, forced here by patching
+  ``jvm_kernel.ensure_jvm_kernel`` to report False): the
   fused whole-stage-codegen method exceeds janino's limits, Spark falls
   back to INTERPRETED expression evaluation, and the figure records that
   fallback cost (the honest number for the expression-only path).
@@ -42,6 +44,7 @@ import json
 import os
 import sys
 import time
+from contextlib import contextmanager
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -53,6 +56,19 @@ def _median_of(fn, runs: int) -> tuple[float, list[float]]:
     fn()  # JIT/codegen warm-up, excluded
     timings = sorted(fn() for _ in range(runs))
     return timings[len(timings) // 2], [round(t, 4) for t in timings]
+
+
+@contextmanager
+def _kernel_unavailable():
+    """Run the staged pure-SQL Φ/Φ⁻¹ path, as on a host without javac."""
+    from rwa_calculator_spark.functions import jvm_kernel
+
+    real = jvm_kernel.ensure_jvm_kernel
+    jvm_kernel.ensure_jvm_kernel = lambda spark: False
+    try:
+        yield
+    finally:
+        jvm_kernel.ensure_jvm_kernel = real
 
 
 def _timed(thunk):
@@ -123,12 +139,9 @@ def main() -> None:
     med, ts = _median_of(_timed(lambda: full_chain(base)), runs)
     out["variants"]["per_row"] = {"median": round(med, 4), "runs": ts}
 
-    os.environ["RWA_SPARK_JVM_KERNEL"] = "0"
-    try:
+    with _kernel_unavailable():
         med, ts = _median_of(_timed(lambda: full_chain(base)), runs)
         out["variants"]["per_row_pure_column"] = {"median": round(med, 4), "runs": ts}
-    finally:
-        del os.environ["RWA_SPARK_JVM_KERNEL"]
 
     def banded():
         df = dictionary_apply(base, ["pd"], lambda d: with_normal_ppf(d, "pd", "g_pd"))
@@ -161,12 +174,9 @@ def main() -> None:
     # (per-operator codegen compiles where the fused method cannot)
     spark = session(**{"spark.sql.codegen.wholeStage": "false"})
     base = build_base(spark)
-    os.environ["RWA_SPARK_JVM_KERNEL"] = "0"
-    try:
+    with _kernel_unavailable():
         med, ts = _median_of(_timed(lambda: full_chain(base)), runs)
         out["variants"]["per_row_no_wscg"] = {"median": round(med, 4), "runs": ts}
-    finally:
-        del os.environ["RWA_SPARK_JVM_KERNEL"]
     spark.stop()
 
     out["value"] = out["variants"]["per_row"]["median"]

@@ -9,9 +9,11 @@ Usage:
   python scripts/capture_plans.py --parity [query ...]
       Print one JSON line per query: the per-operator node counts of the
       physical plan before execution and of the final adaptive plan after
-      it, the result row count and an order-insensitive result-row hash.
-      Run it at two commits and diff the output: a refactor that claims
-      identical output must print identical lines. Each line also carries
+      it, the result row count, an order-insensitive result-row hash and
+      one order-insensitive hash per result column (`columns`), so a
+      changed result names its changed columns. Run it at two commits and
+      diff the output: a refactor that claims identical output must print
+      identical lines. Each line also carries
       the plan build's cost: its non-detach py4j commands (`build_py4j`)
       and its top-level DataFrame calls (`build_df_calls`: DataFrame
       method calls plus frames built straight from the JVM, such as
@@ -84,6 +86,16 @@ def result_hash(df, rows) -> str:
     return hashlib.sha256("\n".join(lines).encode()).hexdigest()
 
 
+def column_hashes(df, rows) -> dict[str, str]:
+    """Per column: sha256 over its sorted values (12 hex digits)."""
+    return {
+        n: hashlib.sha256(
+            "\n".join(sorted(_cell(r[n]) for r in rows)).encode()
+        ).hexdigest()[:12]
+        for n in sorted(df.columns)
+    }
+
+
 _DETACH = "m\nd\n"  # py4j memory-detach: handle GC, not program traffic
 
 
@@ -152,6 +164,7 @@ def parity(names: list[str]) -> None:
                     "build_df_calls": cost["df_calls"],
                     "rows": len(rows),
                     "hash": result_hash(df, rows),
+                    "columns": column_hashes(df, rows),
                     "plan_before": before,
                     "plan_after": after,
                 },

@@ -9,13 +9,13 @@ extension (ref engine/irb/stats_backend.py:13-44) for exactly this reason.
 
 from __future__ import annotations
 
-import os
 import shutil
 import struct
 
 import pytest
 from pyspark.sql import functions as F
 
+from rwa_calculator_spark.functions import jvm_kernel
 from rwa_calculator_spark.functions.jvm_kernel import (
     CDF_FN,
     PPF_FN,
@@ -32,11 +32,14 @@ def _bits(x: float) -> bytes:
     return struct.pack("<d", x)
 
 
+def _kernel_unavailable(mp: pytest.MonkeyPatch) -> None:
+    """The javac / ADD JAR failure path: callers take the staged SQL."""
+    mp.setattr(jvm_kernel, "ensure_jvm_kernel", lambda spark: False)
+
+
 @pytest.fixture()
-def pure_column_env():
-    os.environ["RWA_SPARK_JVM_KERNEL"] = "0"
-    yield
-    del os.environ["RWA_SPARK_JVM_KERNEL"]
+def pure_column_env(monkeypatch):
+    _kernel_unavailable(monkeypatch)
 
 
 def test_registers_on_vanilla_session(spark):
@@ -65,11 +68,9 @@ def test_ppf_bit_identity_with_pure_column(spark):
     from rwa_calculator_spark.functions.stats import with_normal_ppf
 
     jvm = with_normal_ppf(df, "p", "g").collect()
-    os.environ["RWA_SPARK_JVM_KERNEL"] = "0"
-    try:
+    with pytest.MonkeyPatch.context() as mp:
+        _kernel_unavailable(mp)
         pure = with_normal_ppf(df, "p", "g").collect()
-    finally:
-        del os.environ["RWA_SPARK_JVM_KERNEL"]
     for a, b in zip(jvm, pure):
         assert (a.g is None) == (b.g is None), a.p
         if a.g is not None:
@@ -125,8 +126,9 @@ def test_irb_chain_compiles_under_wscg(spark):
 
 
 def test_kernel_falls_back_when_disabled(spark, pure_column_env):
-    """Kill switch: RWA_SPARK_JVM_KERNEL=0 routes through the staged
-    pure-Column path (no registered-function reference in the plan)."""
+    """Without the kernel (javac or ADD JAR failed) Φ⁻¹ routes through the
+    staged pure-Column path (no registered-function reference in the
+    plan)."""
     from rwa_calculator_spark.functions.stats import with_normal_ppf
 
     df = spark.createDataFrame([(0.01,)], "p double")
